@@ -219,7 +219,10 @@ def main() -> None:
     # per-pass stream rates: diagnostics, stderr (freed ~45 bytes of window)
     print("# stream_eps_passes: " + json.dumps([round(e) for e in stream_pass_eps]), file=sys.stderr)
     try:  # sidecar with both maps, for the committed evidence trail
-        side = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r11")
+        side = os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), "plans",
+            os.environ.get("PB_PLANS_ROUND", "r11"),
+        )
         os.makedirs(side, exist_ok=True)
         with open(os.path.join(side, "bench_cold_last.json"), "w") as f:
             json.dump({"queries": timings, "queries_cold": cold, "sf": sf}, f)

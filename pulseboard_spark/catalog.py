@@ -72,8 +72,7 @@ EAGER_QUERIES = frozenset(
         # _index_too_big runs a limit-probe count job during plan construction
         "embedding_decontamination",
         # rfm's routing size probe runs one memoized count job on first
-        # construction per session (value_deciles left this set in r11:
-        # the deterministic two-level rank runs no plan-time jobs at all)
+        # construction per session
         "rfm_scores",
         # runs the bpe_train driver loop at plan time
         "bpe_encode",

@@ -95,12 +95,25 @@ def value_outliers(ev: DataFrame, threshold: float = 3.0) -> DataFrame:
 #: pattern as similarity.MAX_BROADCAST_INDEX_ROWS.
 MAX_SINGLE_PARTITION_RANK_ROWS = 1_000_000
 
-#: Value bins for the deterministic two-level rank (r11).  Static — the
+#: Value bins for the deterministic two-level rank.  Static — the
 #: bin id must be a pure function of the row value and the broadcast
 #: (min, max) stats so recomputation is deterministic without a pinning
 #: checkpoint.  4096 bins × |groups| window partitions ≫ any core count,
 #: and the offsets table (|groups|·bins rows) stays broadcast-sized.
 NTILE_BINS = 4096
+
+
+def _broadcast_join_null_safe(df: DataFrame, small: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Inner join with ``small`` broadcast, matching ``keys`` with
+    ``eqNullSafe``; no keys is a cross join."""
+    if not keys:
+        return df.crossJoin(F.broadcast(small))
+    right = small.select(
+        *[F.col(k).alias(f"_r{k}") for k in keys],
+        *[c for c in small.columns if c not in keys],
+    )
+    cond = [F.col(k).eqNullSafe(F.col(f"_r{k}")) for k in keys]
+    return df.join(F.broadcast(right), cond).drop(*[f"_r{k}" for k in keys])
 
 
 def distributed_ntile(
@@ -118,7 +131,7 @@ def distributed_ntile(
     that is the classic 100 TB scale-killer.  This computes the identical
     bucket assignment with two-level ranking:
 
-    1. **deterministic value binning** (r11): the lead order column maps
+    1. **deterministic value binning**: the lead order column maps
        to one of :data:`NTILE_BINS` bins via a pure function of the value
        and a broadcast per-group (min, max) aggregate — equal-width over
        the monotone ``sign·log1p|v|`` transform, so heavy-tailed domains
@@ -134,24 +147,20 @@ def distributed_ntile(
        bit-identical to ``F.ntile`` and DuckDB ``ntile`` (pinned by
        test and by the value_deciles / rfm_scores oracles).
 
-    The r10 version range-partitioned on sampled boundaries, which made
-    partition ids depend on upstream row ORDER — unstable across
-    recomputation — and therefore had to pin the layout with an eager
-    ``localCheckpoint`` at plan-construction time (a per-build Spark job
-    that kept every caller out of the plan memo; r10 verdict item 5).
     Every stage above is a deterministic function of row VALUES and
     order-insensitive aggregates, so recomputation is stable with NO
     checkpoint and NO sampling: construction runs zero jobs, the fact
     flows through one exchange (the (group, bin) window) plus two tiny
-    aggregate passes, and every action recomputes from the source.
+    aggregate passes, and every action recomputes from the source.  Both
+    joins on ``by`` are null-safe: a NULL group key is a group, as in SQL
+    ``PARTITION BY``.
 
     Skew caveat (documented, not hit at any tested tier): a single value
     holding most of a group lands in ONE bin — the in-bin sort serializes
-    on that tie mass, where the sampled range partitioner would have split
-    the tie run by its tie-break columns.  The escape at that extreme is
-    one more level of the same trick keyed on an order-preserving encoding
-    of the tie-break; ``order_cols`` must already be a total order
-    (callers append a unique id — same contract as before).
+    on that tie mass.  The escape at that extreme is one more level of the
+    same trick keyed on an order-preserving encoding of the tie-break;
+    ``order_cols`` must already be a total order (callers append a unique
+    id).
     """
     by = list(by)
     order_cols = list(order_cols)
@@ -163,7 +172,7 @@ def distributed_ntile(
     stats = base.groupBy(*by).agg(
         F.min("_fv").alias("_lo"), F.max("_fv").alias("_hi")
     )
-    joined = base.join(F.broadcast(stats), by) if by else base.crossJoin(F.broadcast(stats))
+    joined = _broadcast_join_null_safe(base, stats, by)
     width = (F.col("_hi") - F.col("_lo")) / F.lit(float(NTILE_BINS))
     binned = joined.withColumn(
         "_bin",
@@ -200,7 +209,7 @@ def distributed_ntile(
         F.sum("_c").over(gw.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)).alias("_n"),
     )
     wloc = Window.partitionBy(*by, "_bin").orderBy(*[F.asc(c) for c in order_cols])
-    local = binned.join(F.broadcast(offsets), [*by, "_bin"]).withColumn(
+    local = _broadcast_join_null_safe(binned, offsets, [*by, "_bin"]).withColumn(
         "_lr", F.row_number().over(wloc)
     )
 
@@ -231,9 +240,7 @@ def quantile_bins(
     reproducible across engines and partitionings.  Routed through
     :func:`distributed_ntile`: a per-group window would gather each
     group into one partition (20 TB in one task for a 5-type fact at
-    100 TB); the two-level rank keeps every partition parallel (and since
-    r11 is checkpoint- and sampling-free: plan construction runs no jobs
-    and every action recomputes from the source)."""
+    100 TB); the two-level rank keeps every partition parallel."""
     return distributed_ntile(
         df.where(F.col(value).isNotNull()),
         [value, "event_id"],
@@ -246,7 +253,7 @@ def quantile_bins(
 def value_decile_profile(ev: DataFrame) -> DataFrame:
     """Per (type, decile) population and value range — the compact,
     query-shaped face of :func:`quantile_bins`.  Projects to the three
-    needed columns first so the ranked checkpoint stays narrow."""
+    needed columns first so the ranked rows stay narrow."""
     binned = quantile_bins(
         ev.select("type", "value", "event_id"), "value", ["type"], 10, "decile"
     )
@@ -405,27 +412,19 @@ def rfm_scores(ev: DataFrame, n_tiles: int = 5) -> DataFrame:
     into ``n_tiles`` buckets, plus the concatenated RFM segment label —
     the classic CDP-to-ML feature block.
 
-    One fact shuffle (the per-entity aggregate); the scoring routes on the
-    entity count — a small entity table takes the plain window ntile (one
-    task over a small table beats the two-level rank's extra stages), a
-    large one the exact :func:`distributed_ntile` two-level rank — a plain
-    ``ntile`` over ``Window.orderBy`` would gather every entity into ONE
-    partition, the 100 TB scale-killer for a 1e8+-entity corpus.  Both
-    paths are the same ANSI arithmetic (equivalence pinned by
-    ``test_distributed_ntile_matches_window_ntile``), and every ranking
-    carries an entity_id tie-break so equal metrics score identically on
-    any engine or partitioning.
-
-    r11 (verdict item 5): the per-build ``localCheckpoint`` + count probe
-    are gone.  The rankings are pure functions of the aggregate's
-    deterministic MULTISET (total-order tie-breaks make row order
-    irrelevant), and the two-level rank no longer needs a pinned layout
-    (deterministic value binning — see :func:`distributed_ntile`), so no
-    materialization is required for correctness; the routing count is a
-    session-memoized size probe (similarity's ``_plan_probe`` pattern —
-    one count job on first construction, plan-only after).  Construction
-    is job-free on every later build, every action recomputes from the
-    source, and the query is plan-memoizable.
+    The three rankings are ONE ranking: the per-entity aggregate unpivots
+    to (entity, metric) rows whose ``v`` is the metric as a double (order
+    key only — ``last_ms`` < 2^53, so the cast is exact; the typed output
+    columns ride along unchanged), ranks once per metric with the
+    entity_id tie-break (equal metrics score identically on any engine or
+    partitioning), and pivots back.  The kernel routes on the entity
+    count: a small table takes the window ntile (one task per metric
+    beats the two-level rank's extra stages), a large one the exact
+    :func:`distributed_ntile`, whose stages stay parallel at 1e8+
+    entities.  Both are the same ANSI arithmetic (equivalence pinned by
+    ``test_distributed_ntile_matches_window_ntile``).  The routing count
+    is a session-memoized size probe (similarity's ``_plan_probe``
+    pattern — one count job on first construction, plan-only after).
     """
     from pulseboard_spark.operators.similarity import _plan_probe
     agg = ev.groupBy("entity_id").agg(
@@ -436,33 +435,24 @@ def rfm_scores(ev: DataFrame, n_tiles: int = 5) -> DataFrame:
         # the cross-engine half-case drift class that failed round 1
         F.sum(F.col("value").cast("decimal(27,6)")).cast("double").alias("total_value"),
     ).withColumn("total_value", F.coalesce(F.col("total_value"), F.lit(0.0)))
-    base = agg
-    if _plan_probe(base, "rfm:n_entities", base.count) <= MAX_SINGLE_PARTITION_RANK_ROWS:
-        t = lambda col: F.ntile(n_tiles).over(  # noqa: E731
-            Window.orderBy(F.asc(col), F.asc("entity_id"))
-        ).cast("int")
-        scored = base.select(
-            "entity_id", "last_ms", "n_events", "total_value",
-            t("last_ms").alias("r_score"),
-            t("n_events").alias("f_score"),
-            t("total_value").alias("m_score"),
+    metrics = {"r_score": "last_ms", "f_score": "n_events", "m_score": "total_value"}
+    long = agg.select(
+        "*",
+        F.inline(F.array(*[
+            F.struct(F.lit(s).alias("metric"), F.col(c).cast("double").alias("v"))
+            for s, c in metrics.items()
+        ])),
+    )
+    if _plan_probe(agg, "rfm:n_entities", agg.count) <= MAX_SINGLE_PARTITION_RANK_ROWS:
+        ranked = long.withColumn(
+            "s", F.ntile(n_tiles).over(Window.partitionBy("metric").orderBy("v", "entity_id"))
         )
     else:
-        scored = distributed_ntile(base, ["last_ms", "entity_id"], n_tiles, "r_score")
-        scored = distributed_ntile(scored, ["n_events", "entity_id"], n_tiles, "f_score")
-        scored = distributed_ntile(scored, ["total_value", "entity_id"], n_tiles, "m_score")
-        scored = scored.select(
-            "entity_id", "last_ms", "n_events", "total_value",
-            "r_score", "f_score", "m_score",
-        )
-    return scored.withColumn(
-        "rfm",
-        F.concat(
-            F.col("r_score").cast("string"),
-            F.col("f_score").cast("string"),
-            F.col("m_score").cast("string"),
-        ),
-    )
+        ranked = distributed_ntile(long, ["v", "entity_id"], n_tiles, "s", by=["metric"])
+    scores = [F.max(F.when(F.col("metric") == s, F.col("s"))).cast("int").alias(s) for s in metrics]
+    return ranked.groupBy("entity_id").agg(
+        *[F.max(c).alias(c) for c in metrics.values()], *scores
+    ).withColumn("rfm", F.concat(*[F.col(s).cast("string") for s in metrics]))
 
 
 def value_drift_psi(

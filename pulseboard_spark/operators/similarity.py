@@ -172,57 +172,6 @@ def _topk_order(row: np.ndarray, ids: np.ndarray, k: int, keep: np.ndarray) -> n
     return idx[order]
 
 
-def _full_probe(df: DataFrame, n_cells: int) -> DataFrame:
-    """Explode every vector to one row per cell — the probe side of the
-    exact (full-probe) cogrouped kernels.  One shared implementation so
-    the replication contract has a single home; embeddings are gathered
-    with one vectorized numpy take, not a per-element Python loop."""
-
-    def probe(batches):
-        # replication factor is n_cells, so budget the input rows as if
-        # each were n_cells×dim cells wide — keeps the emitted frame
-        # (rows × n_cells replicated vectors) tens of MB, not GB.  dim is
-        # read off the batch itself (a hardcoded 64 under-budgets wider
-        # embedding columns proportionally).
-        for raw in batches:
-            if not len(raw):
-                continue
-            dim = len(raw["embedding"].iloc[0])
-            for pdf in _query_chunks(raw, n_cells * max(dim, 1)):
-                m = len(pdf)
-                rep = np.repeat(np.arange(m), n_cells)
-                emb = pdf["embedding"].to_numpy()
-                yield pd.DataFrame(
-                    {
-                        "vec_id": np.repeat(pdf["vec_id"].to_numpy(np.int64), n_cells),
-                        "embedding": list(emb[rep]),
-                        "cell": np.tile(np.arange(n_cells, dtype=np.int64), m),
-                    }
-                )
-
-    return df.select("vec_id", "embedding").mapInPandas(
-        probe, schema="vec_id bigint, embedding array<float>, cell bigint"
-    )
-
-
-def _chunked_pairs_above(left: pd.DataFrame, right: pd.DataFrame, threshold: float, canonical: bool):
-    """Shared chunked scorer for pairs-above-threshold cell kernels:
-    yields (a_ids, b_ids, cosines) per probe chunk.  ``canonical`` keeps
-    only a<b pairs (symmetric dedup); without it every (probe, member)
-    hit is emitted."""
-    M = _batch_matrix(right["embedding"])
-    m_ids = right["vec_id"].to_numpy(np.int64)
-    for chunk in _query_chunks(left, M.shape[0], cap=_SCORE_CHUNK):
-        A = _batch_matrix(chunk["embedding"])
-        a_ids = chunk["vec_id"].to_numpy(np.int64)
-        C = _cosine_block(A, M)
-        mask = C >= threshold
-        if canonical:
-            mask &= a_ids[:, None] < m_ids[None, :]
-        ii, jj = np.nonzero(mask)
-        yield a_ids[ii], m_ids[jj], C[ii, jj]
-
-
 #: Ceiling for driver-collected broadcast indexes: ~200k × (64-dim f64 +
 #: id + norm) ≈ 110 MB — the same order as Spark's own broadcast-join
 #: comfort zone.  Above it the exact kernels route to the distributed
@@ -520,44 +469,6 @@ def _sliced_pairs_above(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def _ivf_pairs_above(
-    embeddings: DataFrame, threshold: float, n_cells: int | None = None, iters: int = 0
-) -> DataFrame:
-    """Distributed twin of :func:`cosine_pairs_above`: full-probe IVF
-    cogroup, pairs emitted inside the cell kernel with the a<b canonical
-    filter (each unordered pair scored exactly once: when a probes b's
-    home cell).  No driver collect; exact ≡ the broadcast kernel.
-
-    Kept as a test-pinned equivalence twin, NOT a routing target: the
-    full probe replicates every vector to every cell (~√n data
-    amplification), which the 64x-amplified tier measured as fatal at
-    128k vectors — over-ceiling exact routing goes through
-    :func:`_sliced_pairs_above` instead."""
-    assigned, cent_bc = ivf_index(embeddings, n_cells=n_cells, iters=iters)
-    probes = _full_probe(embeddings, cent_bc.value[1].shape[0])
-
-    def score_cell(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        out_a, out_b, out_c = [], [], []
-        if len(left) and len(right):
-            for a_ids, b_ids, cos in _chunked_pairs_above(left, right, threshold, canonical=True):
-                out_a.append(a_ids)
-                out_b.append(b_ids)
-                out_c.append(cos)
-        return pd.DataFrame(
-            {
-                "vec_a": pd.Series(np.concatenate(out_a) if out_a else [], dtype="int64"),
-                "vec_b": pd.Series(np.concatenate(out_b) if out_b else [], dtype="int64"),
-                "cosine": pd.Series(np.concatenate(out_c) if out_c else [], dtype="float64"),
-            }
-        )
-
-    return (
-        probes.groupBy("cell")
-        .cogroup(assigned.groupBy("cell"))
-        .applyInPandas(score_cell, schema="vec_a bigint, vec_b bigint, cosine double")
-    )
 
 
 def cosine_pairs_above(

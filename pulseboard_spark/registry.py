@@ -146,8 +146,7 @@ def _value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the filter once per session.  Only queries whose ENTIRE input is the
     non-null slice ride it; anything that also counts null-value rows
     (R2's count_60s, rfm_scores' n_events, value_stats_per_type,
-    value_decile_profile's null-bucketed ntile, seasonal/weekly counts)
-    keeps the full silver.  Same dual posture as the other silvers: at
+    seasonal/weekly counts) keeps the full silver.  Same dual posture as the other silvers: at
     100 TB this is a predicate-pushed scan of the silver table, not a
     cache."""
     if not _silver_cache_enabled():
@@ -2564,10 +2563,9 @@ def _memo_query(name: str, fn: QueryFn) -> QueryFn:
 
 #: Queries whose CONSTRUCTION runs Spark jobs every time (driver-loop
 #: trainers, incremental twins that replay state, index/codebook builds not
-#: under a session memo, job-probing quantile builders).  Memoizing these
-#: would hide real per-invocation compute behind the plan memo — the line
-#: between a plan memo and a result cache — so they are excluded and build
-#: fresh on every call, exactly as before.  List derived empirically: build
+#: under a session memo).  Memoizing these would hide real per-invocation
+#: compute behind the plan memo — the line between a plan memo and a result
+#: cache — so they are excluded and build fresh on every call.  List derived empirically: build
 #: every registry query twice in one session and flag any that still runs
 #: jobs on the SECOND construction (first build warms the documented
 #: session memos: broadcast index, component map, near-dup artifacts).
@@ -2581,12 +2579,6 @@ _CONSTRUCTION_COMPUTE = {
     "identity_pagerank",     # per-iteration driver loop
     "ivf_topk",              # explicit-index kmeans build per call
     "pq_topk_rerank",        # PQ query-slice collect per call
-    # rfm_scores / value_deciles left this list in r11 (verdict item 5):
-    # distributed_ntile's deterministic value binning removed the per-build
-    # localCheckpoint, and rfm's routing count is a session-memoized
-    # _plan_probe (one job on first construction, exactly like
-    # hard_negatives' index guard) — construction is otherwise job-free,
-    # so the plan memo hides no per-invocation compute.
 }
 
 QUERIES = {

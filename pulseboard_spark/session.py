@@ -239,7 +239,7 @@ def get_spark(app_name: str = "pulseboard-spark", cpus: int | None = None,
     latency (see :func:`write_fair_allocation`).
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     # must precede getOrCreate(): the JVM (and therefore the executor env
     # the python daemon inherits) is launched by the first builder call
     _export_pythonpath()

@@ -1873,25 +1873,6 @@ class TestBroadcastSizeGuard:
         assert got == want
         assert any("precomputed IVF index is unused" in str(w.message) for w in caught)
 
-    def test_full_probe_budget_uses_actual_dim(self, spark):
-        """_full_probe's replication budget must derive the embedding dim
-        from the batch (a hardcoded 64 under-budgets wide vectors); the
-        exploded frame is exactly rows x n_cells with vectors intact."""
-        import numpy as np
-
-        from pulseboard_spark.operators.similarity import _full_probe
-
-        dim = 256
-        rows = [(i, [float(i)] * dim) for i in range(7)]
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        out = _full_probe(df, n_cells=5).collect()
-        assert len(out) == 7 * 5
-        by_vec = {}
-        for r in out:
-            by_vec.setdefault(r["vec_id"], set()).add(r["cell"])
-            assert len(r["embedding"]) == dim and r["embedding"][0] == float(r["vec_id"])
-        assert all(cells == set(range(5)) for cells in by_vec.values())
-
 
 class TestSeasonal:
     def test_planted_spike_flagged_against_hod_baseline(self, spark):

@@ -16,12 +16,12 @@ import pytest
 from pulseboard_spark.registry import QUERIES
 
 
-def _plan(spark, sf_dir, name: str) -> str:
+def _plan(spark, sf_dir, name: str, phase: str = "executedPlan") -> str:
     df = QUERIES[name](spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
+    return getattr(df._jdf.queryExecution(), phase)().toString()
 
 
-def _plan_uncached(spark, sf_dir, name: str) -> str:
+def _plan_uncached(spark, sf_dir, name: str, phase: str = "executedPlan") -> str:
     """Plan under the PB_SILVER_CACHE=0 (100 TB) posture: scan-level
     properties — predicate pushdown, ReadSchema pruning, single-scan
     pipelines — are only observable against parquet FileScans; the
@@ -37,7 +37,7 @@ def _plan_uncached(spark, sf_dir, name: str) -> str:
     # registry's _cached_memo re-persists the silver for later tests.
     spark.catalog.clearCache()
     try:
-        return _plan(spark, sf_dir, name)
+        return _plan(spark, sf_dir, name, phase)
     finally:
         if old is None:
             os.environ.pop("PB_SILVER_CACHE", None)
@@ -286,9 +286,9 @@ def test_mad_outliers_fact_never_shuffles(spark, sf_dir):
 
 def test_value_deciles_two_level_rank_stays_parallel(spark, sf_dir):
     """Equal-frequency binning must NOT run a per-group window ntile (one
-    partition per type = 20 TB tasks at scale): the plan ranks off the
-    pinned range layout, with no ntile WindowExec and no SinglePartition
-    exchange anywhere."""
+    partition per type = 20 TB tasks at scale): the plan ranks with the
+    two-level rank (value bins + per-bin row numbers + broadcast offsets),
+    with no ntile WindowExec and no SinglePartition exchange anywhere."""
     plan = _plan(spark, sf_dir, "value_deciles")
     # "ntile(" = the window-function call in a WindowExec spec (bare
     # "ntile" would also match unrelated strings in the plan text)
@@ -299,18 +299,23 @@ def test_value_deciles_two_level_rank_stays_parallel(spark, sf_dir):
 
 def test_rfm_large_path_avoids_global_window(spark, sf_dir, monkeypatch):
     """Above the size guard, rfm scoring must rank without an ntile window
-    over a global sort; the only SinglePartition allowed is the offsets
-    window over the |partitions|-row counts table."""
+    over a global sort, in ONE two-level rank over the unpivoted metrics:
+    its offsets window partitions by metric, so no SinglePartition
+    exchange is needed at all, and the plan stays small (one chained
+    ranking per metric nests each ranking's subtrees: ~10x the text)."""
     from pulseboard_spark.operators import mlprep
 
     monkeypatch.setattr(mlprep, "MAX_SINGLE_PARTITION_RANK_ROWS", 0)
     plan = _plan(spark, sf_dir, "rfm_scores")
     assert "ntile(" not in plan, "large path must use the two-level rank"
-    # the tiny offsets windows are the ONLY permitted single-partition
-    # exchanges (one per ranking over the |partitions|-row counts table);
-    # a fact-sized gather would add more
+    # a fact-sized gather would add SinglePartition exchanges
     assert plan.count("SinglePartition") <= 3, plan.count("SinglePartition")
     assert not PY_NODES.search(plan)
+    # plan size in the uncached posture: the cached one also prints the
+    # silver's own physical plan at every reference, and that text grows
+    # with the core count (the spread repartition fires at >= 4 slots)
+    optimized = _plan_uncached(spark, sf_dir, "rfm_scores", "optimizedPlan")
+    assert "ntile(" not in optimized and len(optimized) <= 20_000, len(optimized)
 
 
 def test_doc_split_assign_zero_shuffle(spark, sf_dir):
@@ -678,10 +683,9 @@ def test_query_plan_memo_semantics(spark, sf_dir, monkeypatch):
     sl = ent.storageLevel
     assert sl.useMemory or sl.useDisk, "silver must be re-persisted on memo hit"
 
-    # (d) construction-compute queries build fresh every call (rfm_scores
-    # and value_deciles LEFT this set in r11 — the deterministic two-level
-    # rank removed their per-build checkpoint jobs, so they memoize like
-    # any other query and every action still recomputes from the source)
+    # (d) construction-compute queries build fresh every call; rfm_scores
+    # and value_deciles construct job-free, so they memoize like any other
+    # query and every action still recomputes from the source
     assert "rfm_scores" not in _CONSTRUCTION_COMPUTE
     assert "value_deciles" not in _CONSTRUCTION_COMPUTE
     assert "ivf_topk" in _CONSTRUCTION_COMPUTE

@@ -265,31 +265,40 @@ def test_quantile_bins_match_ntile_model(spark):
 
 
 def test_distributed_ntile_matches_window_ntile(spark):
-    """The two-level rank (range partition + per-partition row_number +
-    offset join) must reproduce F.ntile over a global window EXACTLY —
-    including the ANSI first-(n%k)-buckets-get-one-extra arithmetic —
-    on data spread across many input partitions, for several k and n
-    (n < k, n % k == 0, and ragged)."""
+    """The two-level rank (value bins + per-bin row_number + offset join)
+    must reproduce F.ntile over the matching window EXACTLY — including
+    the ANSI first-(n%k)-buckets-get-one-extra arithmetic — on data spread
+    across many input partitions, for several k and n (n < k, n % k == 0,
+    and ragged), NULL/NaN/±inf leads (NULLS FIRST, NaN last), a
+    constant-value group, and grouped ranks with a NULL group key."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from pulseboard_spark.operators.mlprep import distributed_ntile
 
     rng = random.Random(7)
-    for n_rows, k in [(3, 7), (64, 8), (501, 5), (200, 3)]:
-        rows = [(i, float(rng.randint(0, 9))) for i in range(n_rows)]
-        df = spark.createDataFrame(rows, "entity_id long, v double").repartition(13)
+    special = [None, float("nan"), float("inf"), float("-inf")]
+    cases = [
+        ([(i, "a", float(rng.randint(0, 9))) for i in range(n_rows)], k, [])
+        for n_rows, k in [(3, 7), (64, 8), (501, 5), (200, 3)]
+    ]
+    cases.append(([(i, "a", rng.choice(special + [1.5, -2.0])) for i in range(60)], 4, []))
+    cases.append(([(i, "a", 3.0) for i in range(25)], 4, []))
+    cases.append((
+        [(i, rng.choice(["x", "y", None]), rng.choice(special + [float(rng.randint(0, 5))]))
+         for i in range(120)],
+        3,
+        ["g"],
+    ))
+    for rows, k, by in cases:
+        df = spark.createDataFrame(rows, "entity_id long, g string, v double").repartition(13)
         got = {
             (r.entity_id, r.b)
-            for r in distributed_ntile(df, ["v", "entity_id"], k, "b").collect()
+            for r in distributed_ntile(df, ["v", "entity_id"], k, "b", by=by).collect()
         }
-        want = {
-            (r.entity_id, r.b)
-            for r in df.withColumn(
-                "b", F.ntile(k).over(Window.orderBy("v", "entity_id"))
-            ).collect()
-        }
-        assert got == want, (n_rows, k)
+        w = Window.partitionBy(*by).orderBy("v", "entity_id")
+        want = {(r.entity_id, r.b) for r in df.withColumn("b", F.ntile(k).over(w)).collect()}
+        assert got == want, (len(rows), k, by)
 
 
 # --- SCD2 intervals vs a sequential Python model ----------------------------
