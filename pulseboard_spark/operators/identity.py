@@ -446,9 +446,9 @@ def pagerank(
       analysis goes exponential (measured: 12 lazy rounds pinned the
       driver for 30+ min before any job).  Checkpointed supersteps are
       how every production iterative-graph engine runs; K=2 bounds the
-      inter-checkpoint tree at 4 copies.  Because construction runs jobs,
-      the registry entry is in ``EAGER_QUERIES`` (same class as
-      ``bpe_train``).
+      inter-checkpoint tree at 4 copies.  Because every construction runs
+      jobs, the registry entry is in ``_CONSTRUCTION_COMPUTE`` (same class
+      as ``bpe_train``).
 
     Determinism: per-dst contribution sums (and the dangling-mass sum)
     are routed ``duck_round(x, 12) → DECIMAL(27,12) → sum → double`` —

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pulseboard_spark.functions.core import duck_round
-from pulseboard_spark.session import local_df
+from pulseboard_spark.session import local_df, memo
 
 
 def _as_double(col):
@@ -214,28 +214,18 @@ def _budgeted(batches, m_rows: int):
         yield from _query_chunks(pdf, m_rows)
 
 
-#: (applicationId, tag, semanticHash(analyzed plan), schema json) -> size
-#: verdict / broadcast index.  A session's source tables are immutable (the
-#: same assumption every silver cache in the registry makes), so the guard
-#: probe and the collected index are pure functions of the *plan* — yet both
-#: ran a Spark job on EVERY query invocation (the probe one count job, the
-#: index a full collect + broadcast, ~0.5-1 s warm at bench scale).  The
-#: 100 TB twin is a persisted index table (same posture as the registry's
-#: _IVF_CACHE); keying by the canonicalized plan's semanticHash + schema
-#: means semantically identical lineages share one probe / one index.
-_PLAN_PROBE_CACHE: dict = {}
-
-
 def _plan_probe(df: DataFrame, tag: str, compute):
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        tag,
-        df._jdf.queryExecution().analyzed().semanticHash(),
-        df.schema.json(),
-    )
-    if key not in _PLAN_PROBE_CACHE:
-        _PLAN_PROBE_CACHE[key] = compute()
-    return _PLAN_PROBE_CACHE[key]
+    """Size verdict / broadcast index memoized per session plan.  A
+    session's source tables are immutable (the same assumption every
+    silver cache in the registry makes), so the guard probe and the
+    collected index are pure functions of the *plan* — yet both ran a Spark
+    job on EVERY query invocation (the probe one count job, the index a
+    full collect + broadcast, ~0.5-1 s warm at bench scale).  The 100 TB
+    twin is a persisted index table; naming the entry by the canonicalized
+    plan's semanticHash + schema means semantically identical lineages
+    share one probe / one index."""
+    plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
+    return memo(df.sparkSession, None, f"{tag}:{plan_hash}:{df.schema.json()}", compute)
 
 
 def _index_too_big(embeddings: DataFrame, max_rows: int | None) -> bool:
@@ -254,7 +244,7 @@ def _broadcast_index(embeddings: DataFrame, id_col: str = "vec_id", vec_col: str
     """Collect the index side (small, broadcast-class — same memory contract
     as ``F.broadcast``) and ship it to executors once.  Callers are
     size-guarded (:func:`_index_too_big`) — this must never see an
-    unbounded table.  Memoized per session plan (:data:`_PLAN_PROBE_CACHE`)
+    unbounded table.  Memoized per session plan (:func:`_plan_probe`)
     so repeated queries share one collect and one executor broadcast."""
     return _plan_probe(
         embeddings,

@@ -8,17 +8,15 @@ sf0.001 before the driver ever runs it at sf0.01.
 
 from __future__ import annotations
 
-import os as _os
-
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pulseboard_spark.oracle.sql import ORACLE_SQL
-from pulseboard_spark.session import local_df, tune
+from pulseboard_spark.session import local_df, memo, silver_cache_enabled, tune
 from pulseboard_spark.sources.generator import rule_firing_events
-from pulseboard_spark.sources.tables import _plan_memo, load_table
+from pulseboard_spark.sources.tables import load_table
 from pulseboard_spark.sources.tables import cdp_events as _cdp_events_raw
 from pulseboard_spark.sources.tables import entity_events as _entity_events_raw
 from pulseboard_spark.functions.core import duck_round
@@ -58,61 +56,15 @@ def _dsum(expr) -> F.Column:
     return F.sum(expr.cast("decimal(27,6)")).cast("double")
 
 
-def _silver_cache_enabled() -> bool:
-    """Bench-scale posture switch for the silver views.
-
-    Default (unset / ``1``): ``cache()`` the silver — ~25 behavioral /
-    rule / time-series queries scan it per session and the projection
-    (regexp tag extraction, geo/device derivation, the degenerate-parquet
-    spread exchange) is worth paying once.  Set ``PB_SILVER_CACHE=0`` when
-    pointing the engine at a cluster-scale directory: at 100 TB you do
-    NOT cache the fact table — the correct twin is a materialized silver
-    table refreshed per corpus snapshot (same posture as ``_cvalid`` for
-    the CDP family), with each query scanning parquet directly so
-    predicate pushdown / partition pruning reach the files instead of an
-    all-columns InMemoryRelation."""
-    import os
-
-    return os.environ.get("PB_SILVER_CACHE", "1") != "0"
-
-
-#: Keys of _cached_memo registrations — the entries whose persistence the
-#: memo-hit repair (:func:`_ensure_silvers_persisted`) may restore.  The
-#: plan-ONLY memos sharing the ``silver:`` prefix (``silver:evprof``,
-#: ``silver:profiles``) must never be persisted by that repair: they ARE
-#: declared queries' own output plans, and caching a query's own result to
-#: serve its warm runs is result caching, not plan memoization (caught by
-#: the r10 bench A/B: cdp_profiles' warm run briefly read its own output
-#: cache).
-_CACHED_MEMO_KEYS: set = set()
-
-
-def _cached_memo(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    """Plan memo for the CACHED silver views: like ``_plan_memo`` but
-    re-registers the cache if something dropped it (``clearCache()`` /
-    ``unpersist`` leave the memoized plan object valid-but-uncached, which
-    silently degrades every silver consumer to re-scanning parquet — found
-    by test_silver_cache_opt_out after the r10 memoization).  The storage
-    probe is a cheap local lookup, no job."""
-    df = _plan_memo(spark, sf_dir, name, build)
-    _CACHED_MEMO_KEYS.add(
-        (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), name)
-    )
-    sl = df.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        df.persist()
-    return df
-
-
 def entity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity silver; cached per-session unless ``PB_SILVER_CACHE=0``
-    (see :func:`_silver_cache_enabled` for the 100 TB rationale).
+    (see :func:`silver_cache_enabled` for the 100 TB rationale).
     ``cache()`` is lazy — nothing plans or runs at registration — and
     Spark's CacheManager matches by canonicalized plan, so the one entry
     serves every query."""
-    if not _silver_cache_enabled():
+    if not silver_cache_enabled():
         return _entity_events_raw(spark, sf_dir)
-    return _cached_memo(
+    return memo(
         spark, sf_dir, "silver:entity_events",
         # select("*"): a fresh Dataset whose canonical plan DIFFERS from the
         # shared tables-layer view — otherwise (a) the cached and uncached
@@ -122,17 +74,19 @@ def entity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # canonical-plan match, hiding the parquet scan the opt-out exists
         # to expose (both found by test_silver_cache_opt_out, r10)
         lambda: _entity_events_raw(spark, sf_dir).select("*").cache(),
+        silver=True,
     )
 
 
 def cdp_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw-CDP silver (caching posture as :func:`entity_events`)."""
-    if not _silver_cache_enabled():
+    if not silver_cache_enabled():
         return _cdp_events_raw(spark, sf_dir)
-    return _cached_memo(
+    return memo(
         spark, sf_dir, "silver:cdp_events",
         # select("*"): see entity_events
         lambda: _cdp_events_raw(spark, sf_dir).select("*").cache(),
+        silver=True,
     )
 
 
@@ -149,9 +103,9 @@ def _value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     seasonal/weekly counts) keeps the full silver.  Same dual posture as the other silvers: at
     100 TB this is a predicate-pushed scan of the silver table, not a
     cache."""
-    if not _silver_cache_enabled():
+    if not silver_cache_enabled():
         return _entity_events_raw(spark, sf_dir).filter(F.col("value").isNotNull())
-    return _cached_memo(
+    return memo(
         spark, sf_dir, "silver:value_events",
         # built FROM the cached silver (one cheap pass when that is warm);
         # select("*"): see entity_events
@@ -159,6 +113,7 @@ def _value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select("*")
         .cache(),
+        silver=True,
     )
 
 
@@ -1112,36 +1067,31 @@ def _cvalid(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's CacheManager matches by canonicalized plan so the one cache entry
     is shared across all CDP queries in a session.  The 100 TB twin is a
     materialized silver table; the dedup shuffle runs once either way.
-    The plan object is memoized too (:data:`tables._PLAN_CACHE`): the
+    The plan object is memoized too (:func:`session.memo`): the
     validation/normalization expression tree costs ~0.2 s of driver-side
     construction per call on top of the cdp view's ~0.4 s, and a
     long-running engine builds its silver lineage once."""
-    return _cached_memo(
+    return memo(
         spark, sf_dir, "silver:cvalid",
         lambda: valid_cdp_events(cdp_events(spark, sf_dir)).cache(),
+        silver=True,
     )
 
 
-#: (applicationId, sf_dir) -> localCheckpointed components DataFrame.  The
-#: identity component map is the engine's materialized view (a real
-#: deployment persists it and refreshes incrementally — SURVEY §4.2 item 3);
-#: memoizing the checkpointed result gives every CDP query the same map
-#: without re-running the iterative CC fixpoint.
-_COMP_CACHE: dict = {}
-
-
 def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    comp = _COMP_CACHE.get(key)
-    if comp is None:
-        comp = components_for(_cvalid(spark, sf_dir)).localCheckpoint()
-        _COMP_CACHE[key] = comp
-    return comp
+    """localCheckpointed identity components, memoized per session.  The
+    component map is the engine's materialized view (a real deployment
+    persists it and refreshes incrementally — SURVEY §4.2 item 3); every
+    CDP query shares one map without re-running the iterative CC fixpoint."""
+    return memo(
+        spark, sf_dir, "components",
+        lambda: components_for(_cvalid(spark, sf_dir)).localCheckpoint(),
+    )
 
 
 def _evprof(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan memo (see _cvalid): 7 queries build on the resolved stream
-    return _plan_memo(
+    return memo(
         spark, sf_dir, "silver:evprof",
         lambda: resolve_profiles(_cvalid(spark, sf_dir), _components(spark, sf_dir)),
     )
@@ -1151,7 +1101,7 @@ def _profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merged profile table plan, memoized: build_profiles constructs a
     ~0.25 s expression tree (per-concern aggs + LWW merge) reused by the
     profile and top-20 surfaces."""
-    return _plan_memo(
+    return memo(
         spark, sf_dir, "silver:profiles",
         lambda: build_profiles(_evprof(spark, sf_dir)),
     )
@@ -1279,12 +1229,13 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-paying the degenerate-parquet spread exchange per action; cached
     once unless ``PB_SILVER_CACHE=0`` (at 100 TB you scan the corpus
     table directly so pruning reaches the files)."""
-    if not _silver_cache_enabled():
+    if not silver_cache_enabled():
         return load_table(spark, sf_dir, "documents")
-    return _cached_memo(
+    return memo(
         spark, sf_dir, "silver:documents",
         # select("*"): see entity_events
         lambda: load_table(spark, sf_dir, "documents").select("*").cache(),
+        silver=True,
     )
 
 
@@ -1297,48 +1248,41 @@ def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
     silver posture (r10, see :func:`_docs`) — the similarity family scans
     this filtered view once per query side on top of the memoized
     broadcast index."""
-    if not _silver_cache_enabled():
+    if not silver_cache_enabled():
         return load_table(spark, sf_dir, "embeddings").filter(
             F.col("embedding").isNotNull()
         )
-    return _cached_memo(
+    return memo(
         spark, sf_dir, "silver:embeddings",
         # select("*"): see entity_events
         lambda: load_table(spark, sf_dir, "embeddings")
         .filter(F.col("embedding").isNotNull())
         .select("*")
         .cache(),
+        silver=True,
     )
 
 
-#: (applicationId, sf_dir) -> localCheckpointed near-dup artifacts.  The
-#: verified pair graph and its transitive clusters are the shared expensive
-#: stages of every dedup decision (minhash verdicts, Jaccard-threshold
-#: verdicts, cluster canonicals, corpus accounting); a real pipeline
-#: materializes them once per corpus snapshot (silver tables), so the
-#: registry memoizes them per session the same way as _COMP_CACHE.
-_PAIR_CACHE: dict = {}
-_CLUSTER_CACHE: dict = {}
-
-
 def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pairs = _PAIR_CACHE.get(key)
-    if pairs is None:
-        pairs = dedup.minhash_near_dups(_docs(spark, sf_dir)).localCheckpoint()
-        _PAIR_CACHE[key] = pairs
-    return pairs
+    """The verified near-dup pair graph, localCheckpointed once per
+    session.  It and its transitive clusters (:func:`_near_dup_clusters`)
+    are the shared expensive stages of every dedup decision (minhash
+    verdicts, Jaccard-threshold verdicts, cluster canonicals, corpus
+    accounting); a real pipeline materializes them once per corpus
+    snapshot (silver tables)."""
+    return memo(
+        spark, sf_dir, "near_dup_pairs",
+        lambda: dedup.minhash_near_dups(_docs(spark, sf_dir)).localCheckpoint(),
+    )
 
 
 def _near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    clusters = _CLUSTER_CACHE.get(key)
-    if clusters is None:
-        clusters = dedup.near_dup_clusters(
+    return memo(
+        spark, sf_dir, "near_dup_clusters",
+        lambda: dedup.near_dup_clusters(
             _docs(spark, sf_dir), pairs=_near_dup_pairs(spark, sf_dir)
-        ).localCheckpoint()
-        _CLUSTER_CACHE[key] = clusters
-    return clusters
+        ).localCheckpoint(),
+    )
 
 
 def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1438,39 +1382,17 @@ def label_noise_suspects_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.label_noise_suspects(_embs(spark, sf_dir))
 
 
-#: (applicationId, sf_dir) -> precomputed flat (Lloyd-free) IVF index.  The
-#: index is the shared expensive stage of the distributed kNN queries, and
-#: at full probe cell quality is irrelevant — memoize it per session like
-#: the component/pair caches (the 100 TB twin is a persisted index table).
-_IVF_CACHE: dict = {}
-
-
-def clear_memo_caches() -> None:
-    """Drop every per-session memo (checkpointed artifacts, plan objects,
-    probe verdicts, broadcast indexes).  Harness hook for probes/tests
-    that re-point one session at mutated or rewritten source data."""
-    from pulseboard_spark.operators import similarity as _sim
-    from pulseboard_spark.sources import tables as _tables
-
-    for c in (
-        _COMP_CACHE,
-        _PAIR_CACHE,
-        _CLUSTER_CACHE,
-        _IVF_CACHE,
-        _tables._PLAN_CACHE,
-        _sim._PLAN_PROBE_CACHE,
-    ):
-        c.clear()
-
-
 def _ivf(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = _IVF_CACHE.get(key)
-    if idx is None:
+    """Precomputed flat (Lloyd-free) IVF index, memoized per session: the
+    shared expensive stage of the distributed kNN queries, and at full
+    probe cell quality is irrelevant (the 100 TB twin is a persisted index
+    table)."""
+
+    def build():
         assigned, cent_bc = similarity.ivf_index(_embs(spark, sf_dir), iters=0)
-        idx = (assigned.localCheckpoint(), cent_bc)
-        _IVF_CACHE[key] = idx
-    return idx
+        return assigned.localCheckpoint(), cent_bc
+
+    return memo(spark, sf_dir, "ivf_index", build)
 
 
 def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1826,21 +1748,15 @@ def embedding_norm_outliers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.embedding_norm_outliers(_embs(spark, sf_dir))
 
 
-#: (applicationId, sf_dir) -> trained PQ codebooks.  Training is the shared
-#: expensive stage of every PQ query (codes table, ADC search, re-rank);
-#: a real pipeline trains once per corpus snapshot and ships the m*k*d/m
-#: table with the index — the registry memoizes it the same way as
-#: _PAIR_CACHE.
-_PQ_CACHE: dict = {}
-
-
 def _pq_codebooks(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    C = _PQ_CACHE.get(key)
-    if C is None:
-        C = similarity.pq_train_codebooks(_embs(spark, sf_dir))
-        _PQ_CACHE[key] = C
-    return C
+    """Trained PQ codebooks, memoized per session: training is the shared
+    expensive stage of every PQ query (codes table, ADC search, re-rank);
+    a real pipeline trains once per corpus snapshot and ships the m*k*d/m
+    table with the index."""
+    return memo(
+        spark, sf_dir, "pq_codebooks",
+        lambda: similarity.pq_train_codebooks(_embs(spark, sf_dir)),
+    )
 
 
 def pq_codes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2502,27 +2418,6 @@ QUERIES: dict[str, QueryFn] = {
 }
 
 
-def _ensure_silvers_persisted(spark: SparkSession, sf_dir: str) -> None:
-    """Re-persist any silver whose cache was dropped (guide §5.4 lifecycle).
-
-    A memo HIT on a final query plan (see :func:`_memo_query`) skips the
-    registry builders, so the re-persist probe inside :func:`_cached_memo`
-    would never run after a ``clearCache()`` — the exact
-    valid-but-uncached degradation that probe exists to repair.  This is
-    the same probe, hoisted to the hit path: a storage-level lookup per
-    registered silver of THIS session+corpus (a local py4j getter, no
-    job), re-persisting only entries something dropped."""
-    from pulseboard_spark.sources import tables as _tables
-
-    app = spark.sparkContext.applicationId
-    sfa = _os.path.abspath(sf_dir)
-    for (kapp, ksf, kname), df in list(_tables._PLAN_CACHE.items()):
-        if (kapp, ksf, kname) in _CACHED_MEMO_KEYS and kapp == app and ksf == sfa:
-            sl = df.storageLevel
-            if not (sl.useMemory or sl.useDisk):
-                df.persist()
-
-
 def _memo_query(name: str, fn: QueryFn) -> QueryFn:
     """Memoize the CONSTRUCTED DataFrame of a declared query per
     (session, corpus dir, silver-cache posture).
@@ -2537,24 +2432,14 @@ def _memo_query(name: str, fn: QueryFn) -> QueryFn:
     ``count()``/collect/write on the memoized DataFrame still executes
     the full job from the parquet inputs (or the in-session silver IMTS),
     and a fresh driver process rebuilds everything.  Keyed additionally
-    on :func:`_silver_cache_enabled` so the PB_SILVER_CACHE=0 posture
+    on :func:`silver_cache_enabled` so the PB_SILVER_CACHE=0 posture
     builds (and keeps) its own uncached plans."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pulseboard_spark.sources import tables as _tables
-
-        key = (
-            spark.sparkContext.applicationId,
-            _os.path.abspath(sf_dir),
-            f"query:{name}:{_silver_cache_enabled()}",
+        return memo(
+            spark, sf_dir, f"query:{name}:{silver_cache_enabled()}",
+            lambda: fn(spark, sf_dir),
         )
-        df = _tables._PLAN_CACHE.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            _tables._PLAN_CACHE[key] = df
-        elif _silver_cache_enabled():
-            _ensure_silvers_persisted(spark, sf_dir)
-        return df
 
     wrapped.__name__ = fn.__name__
     wrapped._raw = fn  # unmemoized builder (probes, construction-cost audits)
@@ -2565,10 +2450,12 @@ def _memo_query(name: str, fn: QueryFn) -> QueryFn:
 #: trainers, incremental twins that replay state, index/codebook builds not
 #: under a session memo).  Memoizing these would hide real per-invocation
 #: compute behind the plan memo — the line between a plan memo and a result
-#: cache — so they are excluded and build fresh on every call.  List derived empirically: build
-#: every registry query twice in one session and flag any that still runs
-#: jobs on the SECOND construction (first build warms the documented
-#: session memos: broadcast index, component map, near-dup artifacts).
+#: cache — so they are excluded and build fresh on every call.  The list is
+#: pinned by measurement (``tests/test_plans.py::
+#: test_construction_compute_matches_second_build_jobs``): build every
+#: registry query twice in one session; exactly these still run jobs on the
+#: SECOND construction (the first build warms the session memos: broadcast
+#: index, component map, near-dup artifacts, probe verdicts).
 _CONSTRUCTION_COMPUTE = {
     "bpe_encode",            # 5-round BPE driver loop per build
     "bpe_learned_merges",    # same loop

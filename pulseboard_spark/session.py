@@ -7,9 +7,7 @@ must be *runtime-settable* SQL confs, not static Spark confs.
 
 from __future__ import annotations
 
-import atexit
 import os
-import re
 import tempfile
 import zipfile
 
@@ -120,6 +118,70 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def silver_cache_enabled() -> bool:
+    """Bench-scale posture switch for the silver views.
+
+    Default (unset / ``1``): ``cache()`` the silver — ~25 behavioral /
+    rule / time-series queries scan it per session and the projection
+    (regexp tag extraction, geo/device derivation, the degenerate-parquet
+    spread exchange) is worth paying once.  Set ``PB_SILVER_CACHE=0`` when
+    pointing the engine at a cluster-scale directory: at 100 TB you do
+    NOT cache the fact table — the correct twin is a materialized silver
+    table refreshed per corpus snapshot (same posture as ``_cvalid`` for
+    the CDP family), with each query scanning parquet directly so
+    predicate pushdown / partition pruning reach the files instead of an
+    all-columns InMemoryRelation."""
+    return os.environ.get("PB_SILVER_CACHE", "1") != "0"
+
+
+#: The session memo store: (applicationId, abspath(corpus) or None, name) ->
+#: (artifact, silver).  Artifacts are constructed plans (table views, silver
+#: lineages, declared queries' DataFrames), localCheckpointed driver
+#: artifacts (identity components, near-dup graph, IVF index), trained PQ
+#: codebooks and plan-keyed probe verdicts.  A long-running engine builds
+#: each once per corpus snapshot; a fresh driver process rebuilds them all.
+#: Rebuilding a plan per call costs real driver time: ``spark.read.parquet``
+#: re-lists files and re-reads footers (~70-120 ms per table) and a declared
+#: query's expression tree is 0.02-0.17 s of py4j round trips
+#: (OPTIMIZATION_r10.md "plan construction").  A plan entry is NOT a result
+#: cache: every action on it still executes.
+_MEMO: dict = {}
+
+
+def memo(spark: SparkSession, corpus: str | None, name: str, build, silver: bool = False):
+    """Return the memoized artifact for (session, corpus, name), building it
+    on a miss.  ``silver=True`` marks a persisted silver.  ``clearCache()``
+    or ``unpersist`` leave a memoized silver valid-but-uncached, silently
+    degrading its consumers to re-scanning parquet, and a hit skips the
+    builders that would persist it, so every hit re-persists any dropped
+    silver of the same (session, corpus) — a storage-level lookup per
+    silver, no job.  Under ``PB_SILVER_CACHE=0`` a hit re-persists only
+    itself (the always-cached ``silver:cvalid``): CacheManager substitutes
+    cached fragments into plans by canonical-plan match, so re-persisting
+    the other silvers would hide the parquet scans that posture exists to
+    expose.  Plan-only entries are never persisted: caching a query's own
+    output plan would serve its warm runs from a result cache."""
+    app = spark.sparkContext.applicationId
+    corpus = None if corpus is None else os.path.abspath(corpus)
+    entry = _MEMO.get((app, corpus, name))
+    if entry is None:
+        entry = _MEMO[(app, corpus, name)] = (build(), silver)
+        return entry[0]
+    every = silver_cache_enabled()
+    for (a, c, n), (df, is_silver) in list(_MEMO.items()):
+        if is_silver and a == app and c == corpus and (every or n == name):
+            sl = df.storageLevel
+            if not (sl.useMemory or sl.useDisk):
+                df.persist()
+    return entry[0]
+
+
+def clear() -> None:
+    """Drop every memo entry — for harnesses that re-point one session at
+    mutated or rewritten source data."""
+    _MEMO.clear()
+
+
 def local_df(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
     """Driver-local rows → DataFrame WITHOUT the python-RDD execution path.
 
@@ -170,57 +232,8 @@ def local_df(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
         return spark.createDataFrame(rows, schema=schema)
 
 
-def write_fair_allocation(pool_weights: dict[str, int],
-                          min_shares: dict[str, int] | None = None) -> str:
-    """Write a FAIR scheduler allocation XML and return its path.
-
-    Equal-weight on-demand pools stop one query's task flood from QUEUEING
-    another's batches, but they also cap the flood's own share: with three
-    pools on 32 cores the 32-task query gets ~1/3 of slots while the small
-    queries are active, and its batch duration — not queueing — becomes
-    the worst-p95 term (SCALE.md round-9 latency table).  Weights shift
-    share toward the latency-binding query; minShare guarantees a floor
-    while idle pools return their slots.  Within-pool mode stays FIFO —
-    each pool holds a single streaming query's jobs.
-
-    Static conf: pass the returned path as
-    ``spark.scheduler.allocation.file`` at context creation.
-    """
-    parts = ["<?xml version=\"1.0\"?>", "<allocations>"]
-    for pool, w in pool_weights.items():
-        # pool names reach this XML from CLI input (tools/probes/multi_stream.py)
-        # — a quote/angle/ampersand would be attribute-injectable, so refuse
-        # anything outside the safe identifier alphabet (r09 advisory)
-        if not re.fullmatch(r"[A-Za-z0-9_-]+", pool):
-            raise ValueError(f"pool name {pool!r} must match [A-Za-z0-9_-]+")
-        ms = (min_shares or {}).get(pool, 0)
-        parts += [
-            f"  <pool name=\"{pool}\">",
-            "    <schedulingMode>FIFO</schedulingMode>",
-            f"    <weight>{int(w)}</weight>",
-            f"    <minShare>{int(ms)}</minShare>",
-            "  </pool>",
-        ]
-    parts.append("</allocations>")
-    fd, path = tempfile.mkstemp(prefix="pb_fair_", suffix=".xml")
-    with os.fdopen(fd, "w") as f:
-        f.write("\n".join(parts))
-    # Spark reads the file at context creation; drop it at interpreter exit
-    # so repeated sessions don't accrete temp files (r09 advisory)
-    atexit.register(_unlink_quiet, path)
-    return path
-
-
-def _unlink_quiet(path: str) -> None:
-    try:
-        os.unlink(path)
-    except OSError:
-        pass
-
-
 def get_spark(app_name: str = "pulseboard-spark", cpus: int | None = None,
-              fair: bool = False,
-              pool_weights: dict[str, int] | None = None) -> SparkSession:
+              fair: bool = False) -> SparkSession:
     """Build a local session sized for the test harness.
 
     On a real cluster this builder is replaced by spark-submit confs; the
@@ -232,11 +245,6 @@ def get_spark(app_name: str = "pulseboard-spark", cpus: int | None = None,
     pool", ...)`` before ``start()``; the microbatch thread inherits it),
     so one query's task flood cannot queue another's small batches behind
     it.  Static conf — must be chosen at context creation.
-
-    ``pool_weights`` (requires ``fair=True``) additionally ships a FAIR
-    allocation file giving named pools uneven slot shares — the dial for
-    a co-resident query whose own batch duration, not queueing, binds its
-    latency (see :func:`write_fair_allocation`).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
@@ -260,9 +268,5 @@ def get_spark(app_name: str = "pulseboard-spark", cpus: int | None = None,
     )
     if fair:
         builder = builder.config("spark.scheduler.mode", "FAIR")
-        if pool_weights:
-            builder = builder.config(
-                "spark.scheduler.allocation.file", write_fair_allocation(pool_weights)
-            )
     spark = builder.getOrCreate()
     return tune(spark)

@@ -47,7 +47,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pulseboard_spark.session import tune
+from pulseboard_spark.session import memo, tune
 
 TABLES = [
     "region",
@@ -70,29 +70,6 @@ COUNTRIES = ["US", "UK", "DE", "FR", "CA", "AU", "JP"]
 
 def _path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
-
-
-#: (applicationId, abspath(sf_dir), name) -> constructed DataFrame.
-#:
-#: Plan-object memo, NOT a result cache: a DataFrame is an immutable lazy
-#: plan, and every action on it still computes from the parquet files.
-#: Re-constructing the plan per query invocation costs real driver time
-#: (``spark.read.parquet`` re-lists files and re-reads footers ~70-120 ms
-#: per table; the cdp view's ~15 expression columns add ~250 ms of py4j
-#: round trips), which at bench scale dominates several sub-second queries
-#: (guide §1: measure first — see OPTIMIZATION_r10.md "plan construction").
-#: A real long-running engine registers its source views once per catalog;
-#: this memo is that posture, same keying as registry._COMP_CACHE.
-_PLAN_CACHE: dict = {}
-
-
-def _plan_memo(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    df = _PLAN_CACHE.get(key)
-    if df is None:
-        df = build()
-        _PLAN_CACHE[key] = df
-    return df
 
 
 def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -133,7 +110,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return _spread(spark, df)
 
-    return _plan_memo(spark, sf_dir, "events", build)
+    return memo(spark, sf_dir, "events", build)
 
 
 #: Tables whose downstream work is per-row heavy (explodes, Arrow kernels,
@@ -152,7 +129,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(_path(sf_dir, name))
         return _spread(spark, df) if name in _SPREAD_TABLES else df
 
-    return _plan_memo(spark, sf_dir, name, build)
+    return memo(spark, sf_dir, name, build)
 
 
 def _k(col_props=None):
@@ -187,7 +164,7 @@ def entity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     diverged on NULL keys under the randomized-input fuzz
     (tools/probes/oracle_fuzz.py, nulls profile).
     """
-    return _plan_memo(
+    return memo(
         spark, sf_dir, "entity_events_view", lambda: _entity_events_build(spark, sf_dir)
     )
 
@@ -223,7 +200,7 @@ def cdp_events(spark: SparkSession, sf_dir: str, with_duplicates: bool = True) -
     properties_json (JSON strings holding the Any-typed trait/property
     maps at full fidelity — the typed columns are the projection).
     """
-    return _plan_memo(
+    return memo(
         spark,
         sf_dir,
         f"cdp_events_view:dups={with_duplicates}",

@@ -35,10 +35,10 @@ def empty_dir(spark, sf_dir, tmp_path_factory):
 
 
 def _run_empty(spark, empty_dir, name):
-    # memo caches would hand back another test's sf-dir artifacts
-    from pulseboard_spark import registry
+    # the session memo would hand back another test's sf-dir artifacts
+    from pulseboard_spark.session import clear
 
-    registry.clear_memo_caches()
+    clear()
     assert QUERIES[name](spark, empty_dir).count() == 0
 
 

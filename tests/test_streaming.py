@@ -621,39 +621,6 @@ def test_sized_session_binds_state_partitions(spark, tmp_path):
     assert run(spark, None, "parent") == int(parent_before)
 
 
-def test_fair_allocation_file_shape():
-    """write_fair_allocation emits the exact XML contract Spark's FAIR
-    scheduler parses (pool name / weight / minShare / FIFO-within) — the
-    co-residency weight dial (SCALE.md round-9 latency table).  Parsed
-    back with the stdlib to pin structure, not string formatting."""
-    import xml.etree.ElementTree as ET
-
-    from pulseboard_spark.session import write_fair_allocation
-
-    path = write_fair_allocation(
-        {"pool_alerts": 4, "pool_profiles": 1},
-        min_shares={"pool_alerts": 16},
-    )
-    root = ET.parse(path).getroot()
-    assert root.tag == "allocations"
-    pools = {p.attrib["name"]: p for p in root.findall("pool")}
-    assert set(pools) == {"pool_alerts", "pool_profiles"}
-    a = pools["pool_alerts"]
-    assert a.findtext("weight") == "4"
-    assert a.findtext("minShare") == "16"
-    assert a.findtext("schedulingMode") == "FIFO"
-    assert pools["pool_profiles"].findtext("weight") == "1"
-    assert pools["pool_profiles"].findtext("minShare") == "0"
-    # pool names reach the XML from CLI input (tools/probes/multi_stream.py):
-    # anything outside [A-Za-z0-9_-]+ is attribute-injectable and must be
-    # refused, not interpolated (r09 advisory)
-    import pytest as _pytest
-
-    for bad in ('po"ol', "a<b", "a&b", "", "a b"):
-        with _pytest.raises(ValueError, match="pool name"):
-            write_fair_allocation({bad: 1})
-
-
 def test_r3_stream_stream_join_matches_batch(spark, sf_dir, entity_chunks_dir, small_state):
     """Native watermarked stream-stream interval join == batch conflict
     pairs (the third R3 twin, after the bucketed batch join and the

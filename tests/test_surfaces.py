@@ -14,9 +14,11 @@ container-typed column at the output schema, so an array surface can
 never again reach the driver from any direction.
 
 Schema-only: each query's plan is BUILT (analysis resolves the schema)
-but never executed — except the EAGER_QUERIES, whose plan construction
-inherently runs jobs (iterative trainers, index builds); at sf0.001 those
-are cheap and already exercised elsewhere in the suite.
+but never executed — except that building a plan may run jobs: the
+session-memoized artifacts (silvers, checkpoints, probes, indexes) once,
+and the registry's ``_CONSTRUCTION_COMPUTE`` queries (iterative trainers,
+index builds) on every build; at sf0.001 those are cheap and already
+exercised elsewhere in the suite.
 """
 
 from __future__ import annotations

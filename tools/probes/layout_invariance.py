@@ -55,16 +55,10 @@ CONFIGS = {
 }
 
 
-def _clear_caches():
-    from pulseboard_spark import registry
-
-    registry.clear_memo_caches()
-
-
 def main() -> int:
     from pulseboard_spark.parity import _canon_frame
     from pulseboard_spark.registry import ORACLE_SQL, QUERIES
-    from pulseboard_spark.session import get_spark
+    from pulseboard_spark.session import clear, get_spark
 
     spark = get_spark("pb-layout-invariance")
     spark.sparkContext.setLogLevel("ERROR")
@@ -80,7 +74,7 @@ def main() -> int:
         for k, v in confs.items():
             RUNTIME_CONFS[k] = v
             spark.conf.set(k, v)
-        _clear_caches()
+        clear()
         spark.catalog.clearCache()
         t_cfg = time.time()
         for name, q in QUERIES.items():

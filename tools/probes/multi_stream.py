@@ -319,18 +319,9 @@ def _print_latency(lat: dict) -> None:
 def main() -> None:
     from pulseboard_spark.session import get_spark
 
-    weights = None
-    for a in sys.argv:  # e.g. --weights=alerts:4,profiles:1,segments:1
-        if a.startswith("--weights="):
-            weights = {
-                f"pool_{k}": int(v)
-                for k, v in (kv.split(":") for kv in a.split("=", 1)[1].split(","))
-            }
-    spark = get_spark("pb-multi-stream", fair="--fair" in sys.argv,
-                      pool_weights=weights)
+    spark = get_spark("pb-multi-stream", fair="--fair" in sys.argv)
     if "--fair" in sys.argv:
-        print(f"# scheduler: FAIR (one pool per streaming query"
-              f"{', weights ' + str(weights) if weights else ''})", flush=True)
+        print("# scheduler: FAIR (one pool per streaming query)", flush=True)
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix="pb_multistream_")
     try:

@@ -281,15 +281,9 @@ def make_fuzzed_dir(profile: str, seed: int, sf_src: str, out_root: str) -> str:
     return out
 
 
-def _clear_caches():
-    from pulseboard_spark import registry
-
-    registry.clear_memo_caches()
-
-
 def main() -> int:
     from pulseboard_spark.parity import run_all
-    from pulseboard_spark.session import get_spark
+    from pulseboard_spark.session import clear, get_spark
 
     spark = get_spark("pb-oracle-fuzz")
     spark.sparkContext.setLogLevel("ERROR")
@@ -298,7 +292,7 @@ def main() -> int:
     bad = []
     for profile in PROFILES:
         fdir = make_fuzzed_dir(profile, SEED, SF_SRC, OUT_ROOT)
-        _clear_caches()
+        clear()
         spark.catalog.clearCache()
         t_p = time.time()
         results = run_all(spark, fdir)

@@ -104,27 +104,22 @@ def _image(df):
     return _canon_frame(df.toPandas())
 
 
-def _clear_memo_caches():
-    """The registry memoizes localCheckpointed artifacts (components,
-    near-dup pairs, IVF index) per (app, sf_dir); without clearing them the
-    injected phase would reuse the clean phase's checkpoint and never
-    re-read parquet through the patched reader."""
-    from pulseboard_spark import registry
-
-    registry.clear_memo_caches()
-
-
 def run_batch(spark) -> list[tuple[str, bool, bool, int, int]]:
     """Returns (name, scan_ok, reduce_ok, scan_fired, reduce_fired)."""
     import pyspark.sql.readwriter as rw
 
     from pulseboard_spark.registry import QUERIES
+    from pulseboard_spark.session import clear
 
+    # the session memo keeps localCheckpointed artifacts (components,
+    # near-dup pairs, IVF index) per (app, sf_dir); without clearing it the
+    # injected phase would reuse the clean phase's checkpoint and never
+    # re-read parquet through the patched reader
     results = []
     orig_parquet = rw.DataFrameReader.parquet
     for name in BATCH_QUERIES:
         q = QUERIES[name]
-        _clear_memo_caches()
+        clear()
         clean = _image(q(spark, SF_DIR))
 
         # Phase 1: fail-and-retry every third leaf task of every scan.
@@ -135,7 +130,7 @@ def run_batch(spark) -> list[tuple[str, bool, bool, int, int]]:
 
         rw.DataFrameReader.parquet = patched
         try:
-            _clear_memo_caches()
+            clear()
             scan_img = _image(q(spark, SF_DIR))
         finally:
             rw.DataFrameReader.parquet = orig_parquet
@@ -143,7 +138,7 @@ def run_batch(spark) -> list[tuple[str, bool, bool, int, int]]:
 
         # Phase 2: fail-and-retry the final stage's tasks.
         tag_r = f"reduce-{name}"
-        _clear_memo_caches()
+        clear()
         reduce_img = _image(_failing_passthrough(q(spark, SF_DIR), tag_r))
         reduce_ok = reduce_img.equals(clean)
 
