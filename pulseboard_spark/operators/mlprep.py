@@ -29,6 +29,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pulseboard_spark.session import plan_probe
+
 
 def group_moments(df: DataFrame, value: str, by: Sequence[str]) -> DataFrame:
     """Per-group n / mean / sample-std from decimal-exact moment sums.
@@ -423,10 +425,9 @@ def rfm_scores(ev: DataFrame, n_tiles: int = 5) -> DataFrame:
     :func:`distributed_ntile`, whose stages stay parallel at 1e8+
     entities.  Both are the same ANSI arithmetic (equivalence pinned by
     ``test_distributed_ntile_matches_window_ntile``).  The routing count
-    is a session-memoized size probe (similarity's ``_plan_probe``
-    pattern — one count job on first construction, plan-only after).
+    is a session-memoized size probe (:func:`session.plan_probe` — one
+    count job on first construction, plan-only after).
     """
-    from pulseboard_spark.operators.similarity import _plan_probe
     agg = ev.groupBy("entity_id").agg(
         F.max("ts_ms").alias("last_ms"),
         F.count(F.lit(1)).alias("n_events"),
@@ -443,7 +444,7 @@ def rfm_scores(ev: DataFrame, n_tiles: int = 5) -> DataFrame:
             for s, c in metrics.items()
         ])),
     )
-    if _plan_probe(agg, "rfm:n_entities", agg.count) <= MAX_SINGLE_PARTITION_RANK_ROWS:
+    if plan_probe(agg, "rfm:n_entities", agg.count) <= MAX_SINGLE_PARTITION_RANK_ROWS:
         ranked = long.withColumn(
             "s", F.ntile(n_tiles).over(Window.partitionBy("metric").orderBy("v", "entity_id"))
         )

@@ -4,15 +4,16 @@ Brute-force cosine top-k as the exact baseline (oracle-checked), plus an
 LSH-bucketed variant as the 100 TB scale path.
 
 The exact kernel is a **block-nested numpy join**: the small side (the
-index) is broadcast to executors as an (ids, matrix, norms) triple and each
-Arrow batch of query vectors is scored against it with vectorized
-float64 math — the classic brute-force ANN layout.  Summation is
-dimension-major (``_seq_gram``) so every dot product reproduces the exact
-left-fold order of a sequential ``aggregate`` — bit-identical to the DuckDB
-oracle's ``list_dot_product``.  At 100 TB the query side streams (mapInPandas
-over arbitrarily many partitions) and the broadcast side is the index shard:
-partition the index, run the same kernel per shard, union, re-rank —
-or cut candidates first with ``simhash_buckets``.
+index) is broadcast to executors as (ids, matrix, norms, labels) parts and
+each Arrow batch of query vectors is scored against every part with
+vectorized float64 math — the classic brute-force ANN layout.  Scores are
+bit-identical to a dimension-major fold (``_seq_gram``), the exact
+left-fold order of a sequential ``aggregate`` and of the DuckDB oracle's
+``list_dot_product`` (``_gram6``: BLAS plus a rounding-boundary audit).
+The query side streams (mapInPandas over arbitrarily many partitions);
+the index is one part under the broadcast ceiling and hash slices above
+it (:func:`_index_parts`): the same kernel runs per part, and the union
+is re-ranked once — or candidates are cut first with ``simhash_buckets``.
 
 The Catalyst higher-order-function kernel (``_dot``) is kept for
 composition inside plain Column expressions (LSH scale path) where the
@@ -21,6 +22,7 @@ pair count is already bucket-bounded.
 
 from __future__ import annotations
 
+import math
 import warnings
 
 import numpy as np
@@ -29,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pulseboard_spark.functions.core import duck_round
-from pulseboard_spark.session import local_df, memo
+from pulseboard_spark.session import local_df, plan_probe
 
 
 def _as_double(col):
@@ -85,10 +87,11 @@ def _seq_norms(M: np.ndarray) -> np.ndarray:
 
 def _safe_norms(M: np.ndarray) -> np.ndarray:
     """Norms with zeros replaced by 1 — an all-zero vector scores cosine
-    0.0 everywhere instead of NaN.  EVERY kernel must use this (broadcast,
-    IVF, bucket): the guard is part of the scoring contract, and a kernel
-    that skips it returns different rows for the same table depending on
-    which physical path the size guard picks."""
+    0.0 everywhere instead of NaN.  Every scored block uses it (index
+    parts, IVF cells, LSH buckets, the queries themselves): the guard is
+    part of the scoring contract, and a block that skipped it would
+    return different rows for the same table depending on which physical
+    path scored it."""
     n = _seq_norms(M)
     return np.where(n == 0, 1.0, n)
 
@@ -142,13 +145,6 @@ def _gram6(A: np.ndarray, M: np.ndarray, na: np.ndarray | None = None,
     return np.round(D, 6)
 
 
-def _cosine_block(A: np.ndarray, M: np.ndarray) -> np.ndarray:
-    """The ONE scoring contract shared by all kernels: sequential-fold dot
-    products (audited BLAS — :func:`_gram6`), zero-guarded norms, round
-    to 6."""
-    return _gram6(A, M)
-
-
 def _topk_order(row: np.ndarray, ids: np.ndarray, k: int, keep: np.ndarray) -> np.ndarray:
     """The ONE selection contract: (cosine desc, neighbor id asc), masked
     by ``keep``, truncated to k.
@@ -172,10 +168,10 @@ def _topk_order(row: np.ndarray, ids: np.ndarray, k: int, keep: np.ndarray) -> n
     return idx[order]
 
 
-#: Ceiling for driver-collected broadcast indexes: ~200k × (64-dim f64 +
-#: id + norm) ≈ 110 MB — the same order as Spark's own broadcast-join
-#: comfort zone.  Above it the exact kernels route to the distributed
-#: IVF path instead of OOMing the driver at 100× scale.
+#: Ceiling for one driver-collected index part: ~200k × (64-dim f64 + id +
+#: norm) ≈ 110 MB — the same order as Spark's own broadcast-join comfort
+#: zone.  An index above it is hash-sliced into parts of at most this many
+#: rows (:func:`_index_parts`) instead of OOMing the driver at 100× scale.
 MAX_BROADCAST_INDEX_ROWS = 200_000
 
 #: Probe-side chunk for cogrouped cell kernels: bounds each task's score
@@ -214,64 +210,170 @@ def _budgeted(batches, m_rows: int):
         yield from _query_chunks(pdf, m_rows)
 
 
-def _plan_probe(df: DataFrame, tag: str, compute):
-    """Size verdict / broadcast index memoized per session plan.  A
-    session's source tables are immutable (the same assumption every
-    silver cache in the registry makes), so the guard probe and the
-    collected index are pure functions of the *plan* — yet both ran a Spark
-    job on EVERY query invocation (the probe one count job, the index a
-    full collect + broadcast, ~0.5-1 s warm at bench scale).  The 100 TB
-    twin is a persisted index table; naming the entry by the canonicalized
-    plan's semanticHash + schema means semantically identical lineages
-    share one probe / one index."""
-    plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
-    return memo(df.sparkSession, None, f"{tag}:{plan_hash}:{df.schema.json()}", compute)
-
-
-def _index_too_big(embeddings: DataFrame, max_rows: int | None) -> bool:
-    limit = MAX_BROADCAST_INDEX_ROWS if max_rows is None else max_rows
+def _index_too_big(index_df: DataFrame) -> bool:
+    limit = MAX_BROADCAST_INDEX_ROWS
     # LIMIT-probe: one early-stopping job, nothing shipped to the driver
     # but the single count (collecting limit+1 Row objects just for len()
     # would move ~limit rows driver-side on every call)
-    return _plan_probe(
-        embeddings,
+    return plan_probe(
+        index_df,
         f"guard:{limit}",
-        lambda: embeddings.select(F.lit(1).alias("one")).limit(limit + 1).count() > limit,
+        lambda: index_df.select(F.lit(1).alias("one")).limit(limit + 1).count() > limit,
     )
 
 
-def _broadcast_index(embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"):
-    """Collect the index side (small, broadcast-class — same memory contract
-    as ``F.broadcast``) and ship it to executors once.  Callers are
-    size-guarded (:func:`_index_too_big`) — this must never see an
-    unbounded table.  Memoized per session plan (:func:`_plan_probe`)
-    so repeated queries share one collect and one executor broadcast."""
-    return _plan_probe(
-        embeddings,
-        f"index:{id_col}:{vec_col}",
-        lambda: _broadcast_index_build(embeddings, id_col, vec_col),
-    )
+def _index_cols(labeled: bool) -> list[str]:
+    return ["vec_id", "embedding"] + (["label"] if labeled else [])
 
 
-def _broadcast_index_build(embeddings: DataFrame, id_col: str, vec_col: str):
-    rows = embeddings.select(id_col, vec_col).collect()
+def _part(sc, rows: list, labeled: bool):
+    """Broadcast collected index rows as one part: (ids, M, norms,
+    labels-or-None)."""
     ids = np.array([r[0] for r in rows], dtype=np.int64)
-    # empty index must keep a 2-D shape: (0,)-shaped M breaks every kernel
+    # an empty index must keep a 2-D shape: (0,)-shaped M breaks every kernel
     M = (
         np.array([list(r[1]) for r in rows], dtype=np.float64)
         if rows
         else np.zeros((0, 0), dtype=np.float64)
     )
-    return embeddings.sparkSession.sparkContext.broadcast((ids, M, _safe_norms(M)))
+    labels = np.array([r[2] for r in rows], dtype=np.int64) if labeled else None
+    return sc.broadcast((ids, M, _safe_norms(M), labels))
+
+
+def _index_parts(index_df: DataFrame, labeled: bool = False) -> list:
+    """The index side as a list of broadcast parts — the only index builder.
+
+    At or under :data:`MAX_BROADCAST_INDEX_ROWS` (the LIMIT-probe verdict
+    of :func:`_index_too_big`) the whole index is ONE part; above it the
+    rows are hash-sliced on ``vec_id`` into parts targeting 3/4 fill, so
+    xxhash imbalance stays under the ceiling, and empty slices are
+    dropped.  Part membership cannot affect results: every index row is
+    scored against every query exactly once whichever part holds it.
+
+    Memoized per session plan (:func:`~pulseboard_spark.session.plan_probe`,
+    tag carries the ceiling): repeated queries share one collect and one
+    executor broadcast per part.  The driver holds every part for the
+    session (~100 MB per ceiling-sized part) — the honest bound on the
+    exact kernels is driver memory, a few million index rows; beyond that
+    exact all-pairs is the wrong tool and the IVF/LSH approximate paths
+    are the answer."""
+    ceiling = MAX_BROADCAST_INDEX_ROWS
+
+    def build():
+        sc = index_df.sparkSession.sparkContext
+        df = index_df.select(*_index_cols(labeled))
+        if not _index_too_big(index_df):
+            return [_part(sc, df.collect(), labeled)]
+        n_parts = max(2, math.ceil(df.count() / max(ceiling * 3 // 4, 1)))
+        sliced = df.withColumn("_slice", F.pmod(F.xxhash64("vec_id"), F.lit(n_parts)))
+        slices = (sliced.filter(F.col("_slice") == s).collect() for s in range(n_parts))
+        return [_part(sc, rows, labeled) for rows in slices if rows]
+
+    return plan_probe(index_df, f"index:{ceiling}:{labeled}", build)
 
 
 def _batch_matrix(series: pd.Series) -> np.ndarray:
     return np.array([list(v) for v in series], dtype=np.float64)
 
 
-def cosine_topk(
-    embeddings: DataFrame, k: int = 5, max_broadcast_rows: int | None = None
-) -> DataFrame:
+_TOPK_SCHEMA = {
+    False: "vec_id bigint, neighbor_id bigint, cosine double, rank bigint",
+    True: "vec_id bigint, label bigint, neighbor_id bigint, neighbor_label bigint, "
+    "cosine double, rank bigint",
+}
+
+_PAIRS_SCHEMA = "vec_a bigint, vec_b bigint, cosine double"
+
+
+def _topk_block(pdf: pd.DataFrame, ids, M, norms, labels, k: int) -> pd.DataFrame:
+    """The ONE top-k block kernel: score a query frame against one index
+    block (:func:`_gram6`) and keep each query's top-k (:func:`_topk_order`),
+    self excluded — with ``labels``, different-label neighbors only.
+    ``rank`` is the position within this block; callers scoring several
+    blocks re-rank the union with :func:`_merge_topk`."""
+    A = _batch_matrix(pdf["embedding"])
+    a_ids = pdf["vec_id"].to_numpy(np.int64)
+    a_lbl = pdf["label"].to_numpy(np.int64) if labels is not None else None
+    C = _gram6(A, M, nb=norms)
+    qi, nj, rank = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for i in range(A.shape[0]):
+        keep = ids != a_ids[i]
+        if labels is not None:
+            keep &= labels != a_lbl[i]
+        order = _topk_order(C[i], ids, k, keep)
+        qi.append(np.full(order.size, i, dtype=np.int64))
+        nj.append(order)
+        rank.append(np.arange(1, order.size + 1, dtype=np.int64))
+    qi, nj = np.concatenate(qi), np.concatenate(nj)
+    out = {"vec_id": a_ids[qi]}
+    if labels is not None:
+        out["label"] = a_lbl[qi]
+    out["neighbor_id"] = ids[nj]
+    if labels is not None:
+        out["neighbor_label"] = labels[nj]
+    out["cosine"] = C[qi, nj]
+    out["rank"] = np.concatenate(rank)
+    return pd.DataFrame(out)
+
+
+def _pairs_block(pdf: pd.DataFrame, ids, M, norms, threshold: float, canonical: bool):
+    """The ONE threshold block kernel: every (query, index) pair whose
+    rounded cosine reaches ``threshold``; ``canonical`` keeps only
+    vec_a < vec_b, so over a self-join each unordered pair is emitted
+    once — in the part holding vec_b — and a union of parts needs no
+    dedup."""
+    A = _batch_matrix(pdf["embedding"])
+    a_ids = pdf["vec_id"].to_numpy(np.int64)
+    C = _gram6(A, M, nb=norms)
+    hit = C >= threshold
+    if canonical:
+        hit &= a_ids[:, None] < ids[None, :]
+    ii, jj = np.nonzero(hit)
+    return pd.DataFrame({"vec_a": a_ids[ii], "vec_b": ids[jj], "cosine": C[ii, jj]})
+
+
+def _scan(queries: DataFrame, parts: list, rows_fn, schema: str) -> DataFrame:
+    """Stream ``queries`` past every index part: one mapInPandas per part,
+    its batches re-chunked to the score budget, each chunk handed to
+    ``rows_fn(pdf, ids, M, norms, labels)``; the per-part outputs are
+    unioned (one part: no union)."""
+    out = None
+    for part in parts:
+
+        def block(batches, b=part):
+            ids, M, norms, labels = b.value
+            for pdf in _budgeted(batches, M.shape[0]):
+                yield rows_fn(pdf, ids, M, norms, labels)
+
+        scanned = queries.mapInPandas(block, schema=schema)
+        out = scanned if out is None else out.unionByName(scanned)
+    return out
+
+
+def _merge_topk(cand: DataFrame, k: int, labeled: bool = False) -> DataFrame:
+    """The ONE (cosine desc, neighbor_id asc) merge: re-rank the union of
+    per-block top-k candidates to the global top-k.  Lossless: a global
+    top-k member is by definition inside its own block's top-k."""
+    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    cols = ["vec_id", "label", "neighbor_id", "neighbor_label"] if labeled else ["vec_id", "neighbor_id"]
+    return (
+        cand.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select(*cols, "cosine", "rank")
+    )
+
+
+def _exact_topk(embeddings: DataFrame, k: int, parts: list, labeled: bool = False) -> DataFrame:
+    cand = _scan(
+        embeddings.select(*_index_cols(labeled)),
+        parts,
+        lambda pdf, *part: _topk_block(pdf, *part, k),
+        _TOPK_SCHEMA[labeled],
+    )
+    return cand if len(parts) == 1 else _merge_topk(cand, k, labeled)
+
+
+def cosine_topk(embeddings: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors per vector (self-pairs excluded).
 
     Deterministic selection: rank on (cosine rounded to 6, neighbor id) —
@@ -281,224 +383,32 @@ def cosine_topk(
     Physical shape: broadcast the index matrix, stream query batches
     through a numpy block kernel (see module docstring) — no cross join,
     no per-pair expression evaluation, top-k selected inside the batch so
-    only k rows per query ever leave the kernel.
-
-    Size-guarded: above ``max_broadcast_rows`` (default
-    :data:`MAX_BROADCAST_INDEX_ROWS`) a single driver-collected index
-    would be a scale-killer, so the call routes to the sliced-broadcast
-    exact path (:func:`_sliced_exact_topk`) — same exact answer
-    (identical scoring/rounding/tie-break), one bounded broadcast per
-    index slice.  (The earlier over-ceiling route, full-probe IVF,
-    replicated every query to every cell — ~√n data amplification that
-    OOMed the 64x-amplified tier at 128k vectors.)
+    only k rows per query ever leave the kernel.  Above the broadcast
+    ceiling the index is several parts (:func:`_index_parts`): each part
+    emits at most k candidates per query and one window merges them —
+    same exact answer, one bounded broadcast per part.  (An earlier
+    over-ceiling route, full-probe IVF, replicated every query to every
+    cell — ~√n data amplification that OOMed the 64x-amplified tier at
+    128k vectors.)
     """
-    if _index_too_big(embeddings, max_broadcast_rows):
-        return _sliced_exact_topk(embeddings, k=k, slice_rows=max_broadcast_rows)
-    b = _broadcast_index(embeddings)
-
-    def block(batches):
-        ids, M, norms = b.value
-        for pdf in _budgeted(batches, M.shape[0]):
-            A = _batch_matrix(pdf["embedding"])
-            a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            C = _gram6(A, M, nb=norms)
-            out_q, out_n, out_c, out_r = [], [], [], []
-            for i in range(A.shape[0]):
-                row = C[i]
-                order = _topk_order(row, ids, k, ids != a_ids[i])
-                out_q.extend([a_ids[i]] * len(order))
-                out_n.extend(ids[order])
-                out_c.extend(row[order])
-                out_r.extend(range(1, len(order) + 1))
-            yield pd.DataFrame(
-                {
-                    "vec_id": pd.Series(out_q, dtype="int64"),
-                    "neighbor_id": pd.Series(out_n, dtype="int64"),
-                    "cosine": pd.Series(out_c, dtype="float64"),
-                    "rank": pd.Series(out_r, dtype="int64"),
-                }
-            )
-
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        block, schema="vec_id bigint, neighbor_id bigint, cosine double, rank bigint"
-    )
+    return _exact_topk(embeddings, k, _index_parts(embeddings))
 
 
-def _index_slices(embeddings: DataFrame, cross_label: bool, slice_rows: int):
-    """Hash-slice the index side into broadcast-class pieces and collect
-    them one at a time; yields one executor broadcast per non-empty slice.
-
-    Slice count targets 3/4 fill so xxhash imbalance stays under the
-    ceiling.  Slice membership cannot affect results: every index row is
-    scored against every query exactly once regardless of which slice
-    holds it.  Driver holds all slice broadcasts for the plan's lifetime
-    (~100 MB per 200k-row slice) — the honest bound on this exact path is
-    driver memory, a few million index rows; beyond that exact all-pairs
-    is the wrong tool and the IVF/LSH approximate paths are the answer."""
-    import math
-
-    n = embeddings.select(F.lit(1)).count()
-    n_slices = max(2, math.ceil(n / max(slice_rows * 3 // 4, 1)))
-    cols = ["vec_id", "embedding"] + (["label"] if cross_label else [])
-    sliced = embeddings.select(*cols).withColumn(
-        "_slice", F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_slices))
-    )
-    sc = embeddings.sparkSession.sparkContext
-    for s in range(n_slices):
-        rows = sliced.filter(F.col("_slice") == s).drop("_slice").collect()
-        if not rows:
-            continue
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        M = np.array([list(r[1]) for r in rows], dtype=np.float64)
-        labels = np.array([r[2] for r in rows], dtype=np.int64) if cross_label else None
-        yield sc.broadcast((ids, M, _safe_norms(M), labels))
-
-
-def _sliced_exact_topk(
-    embeddings: DataFrame,
-    k: int,
-    cross_label: bool = False,
-    slice_rows: int | None = None,
-) -> DataFrame:
-    """Exact kNN above the broadcast ceiling WITHOUT probe amplification.
-
-    The index is scored one broadcast-class slice at a time through the
-    same budgeted block kernel as :func:`cosine_topk`; each slice emits
-    at most k candidates per query, and one window keeps the global
-    (cosine desc, neighbor id asc) top-k — any global top-k member is by
-    definition inside its own slice's top-k, so the union is a lossless
-    candidate set.  Shuffled data: n_slices × k rows per query, versus
-    the retired full-probe IVF route's √n full-vector copies per query
-    (which OOMed the 64x-amplified tier at 128k vectors)."""
-    slice_rows = slice_rows or MAX_BROADCAST_INDEX_ROWS
-    qcols = ["vec_id", "embedding"] + (["label"] if cross_label else [])
-    lbl_out = ", label bigint, neighbor_label bigint" if cross_label else ""
-    parts = []
-    for b in _index_slices(embeddings, cross_label, slice_rows):
-
-        def block(batches, _b=b):
-            ids_, M_, norms, lbl = _b.value
-            cols = ["vec_id", "neighbor_id", "cosine"] + (
-                ["label", "neighbor_label"] if lbl is not None else []
-            )
-            for pdf in _budgeted(batches, M_.shape[0]):
-                A = _batch_matrix(pdf["embedding"])
-                a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-                a_lbl = pdf["label"].to_numpy(dtype=np.int64) if lbl is not None else None
-                C = _gram6(A, M_, nb=norms)
-                out = {c: [] for c in cols}
-                for i in range(A.shape[0]):
-                    row = C[i]
-                    keep = ids_ != a_ids[i]
-                    if lbl is not None:
-                        keep &= lbl != a_lbl[i]
-                    order = _topk_order(row, ids_, k, keep)
-                    out["vec_id"].extend([a_ids[i]] * len(order))
-                    out["neighbor_id"].extend(ids_[order])
-                    out["cosine"].extend(row[order])
-                    if lbl is not None:
-                        out["label"].extend([a_lbl[i]] * len(order))
-                        out["neighbor_label"].extend(lbl[order])
-                yield pd.DataFrame(
-                    {c: pd.Series(out[c], dtype="float64" if c == "cosine" else "int64") for c in cols}
-                )
-
-        parts.append(
-            embeddings.select(*qcols).mapInPandas(
-                block, schema=f"vec_id bigint, neighbor_id bigint, cosine double{lbl_out}"
-            )
-        )
-    cand = parts[0]
-    for p in parts[1:]:
-        cand = cand.unionByName(p)
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    out_cols = (
-        ["vec_id", "label", "neighbor_id", "neighbor_label"]
-        if cross_label
-        else ["vec_id", "neighbor_id"]
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*out_cols, "cosine", F.col("rank").cast("long").alias("rank"))
-    )
-
-
-def _sliced_pairs_above(
-    embeddings: DataFrame, threshold: float, slice_rows: int | None = None
-) -> DataFrame:
-    """Exact pairs-above-threshold above the ceiling: score every query
-    against one index slice at a time; the canonical a<b mask means each
-    unordered pair is emitted exactly once — in the slice holding b — so
-    the union needs no dedup and no merge window."""
-    slice_rows = slice_rows or MAX_BROADCAST_INDEX_ROWS
-    parts = []
-    for b in _index_slices(embeddings, False, slice_rows):
-
-        def block(batches, _b=b):
-            ids_, M_, norms, _lbl = _b.value
-            for pdf in _budgeted(batches, M_.shape[0]):
-                A = _batch_matrix(pdf["embedding"])
-                a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-                C = _gram6(A, M_, nb=norms)
-                ii, jj = np.nonzero((C >= threshold) & (a_ids[:, None] < ids_[None, :]))
-                yield pd.DataFrame(
-                    {
-                        "vec_a": pd.Series(a_ids[ii], dtype="int64"),
-                        "vec_b": pd.Series(ids_[jj], dtype="int64"),
-                        "cosine": pd.Series(C[ii, jj], dtype="float64"),
-                    }
-                )
-
-        parts.append(
-            embeddings.select("vec_id", "embedding").mapInPandas(
-                block, schema="vec_a bigint, vec_b bigint, cosine double"
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def cosine_pairs_above(
-    embeddings: DataFrame, threshold: float, max_broadcast_rows: int | None = None
-) -> DataFrame:
+def cosine_pairs_above(embeddings: DataFrame, threshold: float) -> DataFrame:
     """All pairs (vec_a < vec_b) with rounded cosine ≥ threshold — the
-    exact kernel behind embedding-cosine near-dup.  Same broadcast block
-    shape as :func:`cosine_topk`; same size guard — above the broadcast
-    ceiling the call routes to the sliced-broadcast twin
-    (:func:`_sliced_pairs_above`) instead of collecting the whole index
-    to the driver (or replicating every query to every IVF cell)."""
-    if _index_too_big(embeddings, max_broadcast_rows):
-        return _sliced_pairs_above(embeddings, threshold, slice_rows=max_broadcast_rows)
-    b = _broadcast_index(embeddings)
-
-    def block(batches):
-        ids, M, norms = b.value
-        for pdf in _budgeted(batches, M.shape[0]):
-            A = _batch_matrix(pdf["embedding"])
-            a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            C = _gram6(A, M, nb=norms)
-            ii, jj = np.nonzero((C >= threshold) & (a_ids[:, None] < ids[None, :]))
-            yield pd.DataFrame(
-                {
-                    "vec_a": pd.Series(a_ids[ii], dtype="int64"),
-                    "vec_b": pd.Series(ids[jj], dtype="int64"),
-                    "cosine": pd.Series(C[ii, jj], dtype="float64"),
-                }
-            )
-
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        block, schema="vec_a bigint, vec_b bigint, cosine double"
+    exact kernel behind embedding-cosine near-dup.  Same index parts and
+    query scan as :func:`cosine_topk`; the canonical a<b mask emits each
+    pair once, so the per-part union needs no merge."""
+    return _scan(
+        embeddings.select("vec_id", "embedding"),
+        _index_parts(embeddings),
+        lambda pdf, ids, M, norms, _labels: _pairs_block(pdf, ids, M, norms, threshold, True),
+        _PAIRS_SCHEMA,
     )
 
 
 def embedding_decontamination(
-    embeddings: DataFrame,
-    threshold: float = 0.35,
-    eval_mod: int = 10,
-    max_broadcast_rows: int | None = None,
+    embeddings: DataFrame, threshold: float = 0.35, eval_mod: int = 10
 ) -> DataFrame:
     """Embedding-space benchmark decontamination — the semantic twin of
     the n-gram `corpus.decontaminate`: vectors with ``vec_id % eval_mod
@@ -507,64 +417,22 @@ def embedding_decontamination(
     eval leakage that shares no n-gram).  Returns contaminated training
     vectors with their closest-eval cosine and the match count.
 
-    Physical shape: the eval set (a few percent) is the broadcast index;
-    training vectors stream through the shared block kernel.  Size guard
-    as everywhere — an over-ceiling eval set is scored one broadcast-class
-    slice at a time (asymmetric :func:`_index_slices` over the EVAL side
-    only: scoring all-pairs over the full table and filtering after would
-    waste ~5× the compute on train×train and eval×eval cosines nobody
-    reads; each (train, eval) pair is seen in exactly one slice, so the
-    union needs no dedup).
+    Physical shape: the eval set (a few percent) is the index — its parts
+    built over the EVAL side only (scoring all-pairs over the full table
+    and filtering after would waste ~5× the compute on train×train and
+    eval×eval cosines nobody reads); training vectors stream through the
+    threshold block kernel, and each (train, eval) pair is seen in
+    exactly one part, so the union needs no dedup.
     """
     evals = embeddings.filter(F.col("vec_id") % eval_mod == 0)
     train = embeddings.filter(F.col("vec_id") % eval_mod != 0)
-    if _index_too_big(evals, max_broadcast_rows):
-        parts = []
-        for sb in _index_slices(evals, False, max_broadcast_rows or MAX_BROADCAST_INDEX_ROWS):
-
-            def sblock(batches, _b=sb):
-                ids, M, norms, _lbl = _b.value
-                for pdf in _budgeted(batches, M.shape[0]):
-                    A = _batch_matrix(pdf["embedding"])
-                    a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-                    C = _gram6(A, M, nb=norms)
-                    ii, jj = np.nonzero(C >= threshold)
-                    yield pd.DataFrame(
-                        {
-                            "vec_id": pd.Series(a_ids[ii], dtype="int64"),
-                            "cosine": pd.Series(C[ii, jj], dtype="float64"),
-                        }
-                    )
-
-            parts.append(
-                train.select("vec_id", "embedding").mapInPandas(
-                    sblock, schema="vec_id bigint, cosine double"
-                )
-            )
-        hits = parts[0]
-        for p in parts[1:]:
-            hits = hits.unionByName(p)
-    else:
-        b = _broadcast_index(evals)
-
-        def block(batches):
-            ids, M, norms = b.value
-            for pdf in _budgeted(batches, M.shape[0]):
-                A = _batch_matrix(pdf["embedding"])
-                a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-                C = _gram6(A, M, nb=norms)
-                ii, jj = np.nonzero(C >= threshold)
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pd.Series(a_ids[ii], dtype="int64"),
-                        "cosine": pd.Series(C[ii, jj], dtype="float64"),
-                    }
-                )
-
-        hits = train.select("vec_id", "embedding").mapInPandas(
-            block, schema="vec_id bigint, cosine double"
-        )
-    return hits.groupBy("vec_id").agg(
+    hits = _scan(
+        train.select("vec_id", "embedding"),
+        _index_parts(evals),
+        lambda pdf, ids, M, norms, _labels: _pairs_block(pdf, ids, M, norms, threshold, False),
+        _PAIRS_SCHEMA,
+    )
+    return hits.groupBy(F.col("vec_a").alias("vec_id")).agg(
         F.count(F.lit(1)).alias("n_eval_matches"),
         F.max("cosine").alias("max_eval_cosine"),
     )
@@ -605,7 +473,7 @@ def ivf_index(
 
     Returns ``(assigned, centroids_bc)`` — the inverted lists as an
     (vec_id, embedding, cell) DataFrame, plus the centroid matrix broadcast
-    ((ids, C, norms), same triple shape as the exact kernel's index).
+    ((ids, C, norms), an exact index part's layout without labels).
 
     Construction is Spark-shaped end to end:
 
@@ -715,7 +583,6 @@ def _ivf_knn(
             iters = 0  # full probe: partition quality cannot change the answer
         index = ivf_index(embeddings, n_cells=n_cells, iters=iters)
     assigned, cent_bc = index
-    qcols = ["vec_id", "embedding"] + (["label"] if cross_label else [])
     if cross_label:
         assigned = assigned.join(embeddings.select("vec_id", "label"), "vec_id")
 
@@ -743,64 +610,34 @@ def _ivf_knn(
                 out["label"] = np.repeat(pdf["label"].to_numpy(np.int64), npb)
             yield pd.DataFrame(out)
 
-    probes = embeddings.select(*qcols).mapInPandas(
+    probes = embeddings.select(*_index_cols(cross_label)).mapInPandas(
         probe, schema=f"vec_id bigint, embedding array<float>, cell bigint{lbl_field}"
-    )
-
-    empty_cols = ["vec_id", "neighbor_id", "cosine"] + (
-        ["label", "neighbor_label"] if cross_label else []
     )
 
     def score_cell(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(
-                {c: pd.Series(dtype="float64" if c == "cosine" else "int64") for c in empty_cols}
-            )
+            return pd.DataFrame()  # no rows, no columns: Spark reads an empty group
         M = _batch_matrix(right["embedding"])
-        m_ids = right["vec_id"].to_numpy(np.int64)
-        m_lbl = right["label"].to_numpy(np.int64) if cross_label else None
-        out = {c: [] for c in empty_cols}
+        ids = right["vec_id"].to_numpy(np.int64)
+        labels = right["label"].to_numpy(np.int64) if cross_label else None
+        norms = _safe_norms(M)
         # chunk the probe side: at full probe the left frame holds every
         # query — chunking bounds the score matrix per task (budget-capped:
         # a skewed 100k-member cell would make 4096 fixed rows a 3 GB block)
-        for chunk in _query_chunks(left, M.shape[0], cap=_SCORE_CHUNK):
-            A = _batch_matrix(chunk["embedding"])
-            a_ids = chunk["vec_id"].to_numpy(np.int64)
-            a_lbl = chunk["label"].to_numpy(np.int64) if cross_label else None
-            C = _cosine_block(A, M)
-            for i in range(A.shape[0]):
-                row = C[i]
-                keep = m_ids != a_ids[i]
-                if cross_label:
-                    keep &= m_lbl != a_lbl[i]
-                order = _topk_order(row, m_ids, k, keep)
-                out["vec_id"].extend([a_ids[i]] * len(order))
-                out["neighbor_id"].extend(m_ids[order])
-                out["cosine"].extend(row[order])
-                if cross_label:
-                    out["label"].extend([a_lbl[i]] * len(order))
-                    out["neighbor_label"].extend(m_lbl[order])
-        return pd.DataFrame(
-            {c: pd.Series(out[c], dtype="float64" if c == "cosine" else "int64") for c in empty_cols}
+        return pd.concat(
+            [
+                _topk_block(chunk, ids, M, norms, labels, k)
+                for chunk in _query_chunks(left, M.shape[0], cap=_SCORE_CHUNK)
+            ],
+            ignore_index=True,
         )
 
-    lbl_out = ", label bigint, neighbor_label bigint" if cross_label else ""
     cand = (
         probes.groupBy("cell")
         .cogroup(assigned.groupBy("cell"))
-        .applyInPandas(score_cell, schema=f"vec_id bigint, neighbor_id bigint, cosine double{lbl_out}")
+        .applyInPandas(score_cell, schema=_TOPK_SCHEMA[cross_label])
     )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    out_cols = (
-        ["vec_id", "label", "neighbor_id", "neighbor_label"]
-        if cross_label
-        else ["vec_id", "neighbor_id"]
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*out_cols, "cosine", F.col("rank").cast("long").alias("rank"))
-    )
+    return _merge_topk(cand, k, cross_label)
 
 
 def ivf_topk(
@@ -888,13 +725,7 @@ def ann_topk(embeddings: DataFrame, k: int = 5, n_planes: int = 6, n_tables: int
             u = u.unionByName(t)
         # same (vec, neighbor) pair scores identically in every table, so
         # any-value dedupe is exact; re-rank with the one selection contract
-        merged = u.groupBy("vec_id", "neighbor_id").agg(F.max("cosine").alias("cosine"))
-        w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-        return (
-            merged.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("vec_id", "neighbor_id", "cosine", "rank")
-        )
+        return _merge_topk(u.groupBy("vec_id", "neighbor_id").agg(F.max("cosine").alias("cosine")), k)
     return _ann_topk_single(embeddings, k, n_planes, seed=0)
 
 
@@ -907,33 +738,15 @@ def _ann_topk_single(embeddings: DataFrame, k: int, n_planes: int, seed: int) ->
         M = _batch_matrix(pdf["embedding"])
         ids = pdf["vec_id"].to_numpy(np.int64)
         norms = _safe_norms(M)
-        out_q, out_n, out_c, out_r = [], [], [], []
         # budget the query side against the whole bucket: a skewed bucket
         # (near-duplicate-heavy corpora collapse hyperplane signs) would
         # otherwise plan an unbounded |bucket|^2 matrix in one shot
-        for chunk in _query_chunks(pdf, M.shape[0]):
-            A = _batch_matrix(chunk["embedding"])
-            a_ids = chunk["vec_id"].to_numpy(np.int64)
-            C = _gram6(A, M, nb=norms)
-            for i in range(A.shape[0]):
-                row = C[i]
-                order = _topk_order(row, ids, k, ids != a_ids[i])
-                out_q.extend([a_ids[i]] * len(order))
-                out_n.extend(ids[order])
-                out_c.extend(row[order])
-                out_r.extend(range(1, len(order) + 1))
-        return pd.DataFrame(
-            {
-                "vec_id": pd.Series(out_q, dtype="int64"),
-                "neighbor_id": pd.Series(out_n, dtype="int64"),
-                "cosine": pd.Series(out_c, dtype="float64"),
-                "rank": pd.Series(out_r, dtype="int64"),
-            }
+        return pd.concat(
+            [_topk_block(chunk, ids, M, norms, None, k) for chunk in _query_chunks(pdf, M.shape[0])],
+            ignore_index=True,
         )
 
-    return e.groupBy("bucket").applyInPandas(
-        bucket_topk, schema="vec_id bigint, neighbor_id bigint, cosine double, rank bigint"
-    )
+    return e.groupBy("bucket").applyInPandas(bucket_topk, schema=_TOPK_SCHEMA[False])
 
 
 def label_centroids(embeddings: DataFrame) -> DataFrame:
@@ -1076,32 +889,30 @@ def hard_negatives(
     negatives that actually teach the model something sit right at the
     decision boundary).
 
-    Size-tiered exactly like :func:`cosine_topk` (r10 optimization — guide
-    §2.4/§3.1: the under-ceiling full-probe IVF route replicated every
-    query vector to every cell, a √n data amplification that shuffled
-    ~80 MB of embeddings at bench scale for an answer a broadcast-index
-    kernel computes with NO embedding shuffle at all; measured 2.1-3.1 s
-    → ~0.6 s, same rows):
+    Tiers (r10 optimization — guide §2.4/§3.1: the under-ceiling
+    full-probe IVF route replicated every query vector to every cell, a
+    √n data amplification that shuffled ~80 MB of embeddings at bench
+    scale for an answer a broadcast-index kernel computes with NO
+    embedding shuffle at all; measured 2.1-3.1 s → ~0.6 s, same rows):
 
-    * **under the broadcast ceiling, exact** (``nprobe=None``,
-      ``index=None``): the label-masked broadcast-index block kernel —
-      index broadcast once per session (memoized like cosine_topk's), the
-      query side streams, nothing else moves;
-    * **above the ceiling, exact**: the sliced-broadcast kernel
-      (:func:`_sliced_exact_topk` with the label mask) — full-probe's
-      every-query-to-every-cell replication is ~√n data amplification,
-      measured fatal at 128k vectors in the amplified tier.  A precomputed
-      ``index`` does not override this reroute — the index is a
-      candidate-generation artifact with no bearing on the exact answer,
-      and at full probe it cannot rescue the replication cost;
+    * **exact** (``nprobe=None`` and no ``index``): the label-masked
+      exact kernel of :func:`cosine_topk` over :func:`_index_parts` — one
+      memoized broadcast part under the ceiling, hash-sliced parts plus
+      one merge window above it; the query side streams, nothing else
+      moves;
     * **explicit ``index`` or ``nprobe``** (under ceiling): the cogrouped
       IVF-cell kernel (:func:`_ivf_knn`) — the distributed candidate-gen
       path, exact at full probe (equality pinned by test), approximate at
-      ``nprobe`` ≪ n_cells.
+      ``nprobe`` ≪ n_cells.  Over the ceiling with ``nprobe=None`` a
+      precomputed ``index`` is ignored with a warning and the exact tier
+      runs: full probe's every-query-to-every-cell replication was
+      measured fatal at 128k vectors in the amplified tier, and the index
+      has no bearing on the exact answer.
 
-    All three tiers share the single scoring/rounding/tie-break contract
-    (:func:`_cosine_block` + ``_topk_order``), so tier choice can never
-    change the rows — pinned by TestHardNegatives and the DuckDB oracle.
+    Both tiers share the single scoring/rounding/tie-break contract
+    (:func:`_topk_block`: ``_gram6`` + ``_topk_order``), so tier choice
+    can never change the rows — pinned by TestHardNegatives and the
+    DuckDB oracle.
 
     NULL-label vectors are excluded entirely: a query without a label has
     no "different label" to mine against, and a candidate without a label
@@ -1116,92 +927,38 @@ def hard_negatives(
     embeddings = embeddings.filter(
         F.col("label").isNotNull() & F.col("embedding").isNotNull()
     )
-    if nprobe is None and _index_too_big(embeddings, None):
+    if nprobe is None and (index is None or _index_too_big(embeddings)):
         if index is not None:
             # documented in the docstring, but a caller who BUILT an index
             # expecting reuse deserves a runtime signal, not silence
             warnings.warn(
                 "hard_negatives: exact (nprobe=None) over-ceiling input routes to "
-                "the sliced-broadcast kernel; the precomputed IVF index is unused. "
+                "the sliced exact kernel; the precomputed IVF index is unused. "
                 "Pass an explicit nprobe to use the index.",
                 stacklevel=2,
             )
-        return _sliced_exact_topk(embeddings, k=k, cross_label=True)
-    if nprobe is None and index is None:
-        # under-ceiling exact: broadcast label-masked kernel, memoized index
-        b = _plan_probe(
-            embeddings,
-            "index:labeled",
-            lambda: _labeled_index_build(embeddings),
-        )
-        return _label_block_topk(embeddings, b, k)
+        return _exact_topk(embeddings, k, _index_parts(embeddings, labeled=True), labeled=True)
     return _ivf_knn(
         embeddings, k=k, n_cells=n_cells, nprobe=nprobe, iters=iters,
         cross_label=True, index=index,
     )
 
 
-def _labeled_index_build(embeddings: DataFrame):
-    rows = embeddings.select("vec_id", "embedding", "label").collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    M = (
-        np.array([list(r[1]) for r in rows], dtype=np.float64)
-        if rows
-        else np.zeros((0, 0), dtype=np.float64)
-    )
-    labels = np.array([r[2] for r in rows], dtype=np.int64)
-    return embeddings.sparkSession.sparkContext.broadcast(
-        (ids, M, _safe_norms(M), labels)
-    )
-
-
-def _label_block_topk(embeddings: DataFrame, b, k: int) -> DataFrame:
-    """Label-masked broadcast block kernel — identical scoring contract to
-    :func:`cosine_topk` / :func:`_ivf_knn` (``_cosine_block`` +
-    ``_topk_order`` with the different-label mask)."""
-
-    def block(batches):
-        ids_, M_, norms, labels_ = b.value
-        for pdf in _budgeted(batches, M_.shape[0]):
-            A = _batch_matrix(pdf["embedding"])
-            a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            a_labels = pdf["label"].to_numpy(dtype=np.int64)
-            C = _gram6(A, M_, nb=norms)
-            out = {c: [] for c in ("vec_id", "label", "neighbor_id", "neighbor_label", "cosine", "rank")}
-            for i in range(A.shape[0]):
-                row = C[i]
-                order = _topk_order(row, ids_, k, (labels_ != a_labels[i]) & (ids_ != a_ids[i]))
-                out["vec_id"].extend([a_ids[i]] * len(order))
-                out["label"].extend([a_labels[i]] * len(order))
-                out["neighbor_id"].extend(ids_[order])
-                out["neighbor_label"].extend(labels_[order])
-                out["cosine"].extend(row[order])
-                out["rank"].extend(range(1, len(order) + 1))
-            yield pd.DataFrame(
-                {
-                    c: pd.Series(out[c], dtype="float64" if c == "cosine" else "int64")
-                    for c in ("vec_id", "label", "neighbor_id", "neighbor_label", "cosine", "rank")
-                }
-            )
-
-    return embeddings.select("vec_id", "embedding", "label").mapInPandas(
-        block,
-        schema="vec_id bigint, label bigint, neighbor_id bigint, neighbor_label bigint, cosine double, rank bigint",
-    )
-
-
 def hard_negatives_broadcast(embeddings: DataFrame, k: int = 3) -> DataFrame:
     """Broadcast-kernel twin of :func:`hard_negatives` — exact and fast for
     broadcast-class inputs, but collects the whole table to the driver:
-    kept as the small-input path and the equivalence oracle for the IVF
-    kernel, NOT the declared query path.
+    kept as the equivalence oracle for the IVF kernel, NOT the declared
+    query path.
 
     Same block kernel as :func:`cosine_topk` with a label mask inside the
     batch: similarity never leaves the kernel for same-label pairs.
     Selection is deterministic on (cosine rounded to 6 desc, neighbor_id).
     """
-    # own (unmemoized) collect so the twin stays an independent index build
-    return _label_block_topk(embeddings, _labeled_index_build(embeddings), k)
+    # own (unmemoized) one-part collect so the twin stays an independent
+    # index build
+    rows = embeddings.select(*_index_cols(True)).collect()
+    part = _part(embeddings.sparkSession.sparkContext, rows, labeled=True)
+    return _exact_topk(embeddings, k, [part], labeled=True)
 
 
 def embedding_norm_outliers(embeddings: DataFrame, k: float = 3.0) -> DataFrame:
@@ -1413,7 +1170,6 @@ def pq_topk(
     k: int = 256,
     iters: int = 2,
     eval_mod: int = 10,
-    max_query_rows: int | None = None,
     C: np.ndarray | None = None,
 ) -> DataFrame:
     """PQ/ADC approximate top-k: vectors with ``vec_id % eval_mod == 0``
@@ -1440,7 +1196,7 @@ def pq_topk(
     dsub = C.shape[2]
     codes = pq_assign_codes(embeddings, C)
     queries = embeddings.filter(F.col("vec_id") % eval_mod == 0)
-    if _index_too_big(queries, max_query_rows):
+    if _index_too_big(queries):
         raise ValueError(
             "pq_topk query slice exceeds the broadcast ceiling — raise eval_mod "
             "or pre-sample the query set; the codes side scales, the query "

@@ -1396,10 +1396,10 @@ def _ivf(spark: SparkSession, sf_dir: str):
 
 
 def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # No precomputed IVF index: under the broadcast ceiling the exact path
-    # is the label-masked broadcast kernel (index memoized in-module, like
-    # cosine_topk's); over it, the sliced-broadcast kernel.  The IVF index
-    # is a candidate-generation artifact for the approximate (nprobe) path.
+    # No precomputed IVF index: the exact label-masked kernel over the
+    # session-memoized index parts (one part under the broadcast ceiling).
+    # The IVF index is a candidate-generation artifact for the approximate
+    # (nprobe) path.
     return similarity.hard_negatives(_embs(spark, sf_dir))
 
 

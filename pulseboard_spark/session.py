@@ -176,6 +176,20 @@ def memo(spark: SparkSession, corpus: str | None, name: str, build, silver: bool
     return entry[0]
 
 
+def plan_probe(df: DataFrame, tag: str, compute):
+    """Memoize a plan-derived artifact — a size verdict, a collected
+    index — per session and plan.  A session's source tables are immutable
+    (the same assumption every memoized silver makes), so a guard probe or
+    a collected index is a pure function of the *plan*, yet each ran a
+    Spark job on EVERY query invocation (a probe one count job, an index a
+    full collect + broadcast, ~0.5-1 s warm at bench scale).  The 100 TB
+    twin is a persisted table; naming the entry by the canonicalized
+    plan's semanticHash + schema means semantically identical lineages
+    share one probe / one index."""
+    plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
+    return memo(df.sparkSession, None, f"{tag}:{plan_hash}:{df.schema.json()}", compute)
+
+
 def clear() -> None:
     """Drop every memo entry — for harnesses that re-point one session at
     mutated or rewritten source data."""

@@ -1806,51 +1806,56 @@ class TestHardNegatives:
 class TestBroadcastSizeGuard:
     def _route_and_compare(self, spark, sf_dir, monkeypatch, kernels):
         """Above the broadcast ceiling the exact kernels must never collect
-        the whole index to the driver — they route to the sliced-broadcast
-        path (one bounded collect per slice, NO full-probe cell
-        replication) and still return the exact answer.  Ceiling pinned to
-        60 rows => ~5 slices over the sf0.001 embeddings, so slice-union
-        plus the global merge window is genuinely exercised (29-slice
-        version behaved identically but cost 3 min of suite time)."""
+        the whole index to the driver — the index splits into several
+        hash-sliced parts of at most the ceiling each (one bounded collect
+        per part, NO full-probe cell replication) — and still return the
+        exact answer.  ``kernels`` maps a name to (ceiling, kernel).  A
+        60-row ceiling makes ~12 parts over the sf0.001 embeddings, so the
+        part union plus the global merge window is genuinely exercised.
+        Part sizes are recorded at :func:`_index_parts` itself: a memo hit
+        on the same index performs no collect, so counting collects would
+        miss it."""
         from pulseboard_spark.operators import similarity
         from pulseboard_spark.sources.tables import load_table
 
         embs = load_table(spark, sf_dir, "embeddings")
-        want = {k: {tuple(r) for r in fn(similarity, embs, False).collect()}
-                for k, fn in kernels.items()}
+        want = {name: {tuple(r) for r in fn(similarity, embs).collect()}
+                for name, (_ceiling, fn) in kernels.items()}
+        index_parts, sizes = similarity._index_parts, []
 
-        def boom(*a, **kw):  # the guard must keep this path unreachable
-            raise AssertionError("broadcast index collected above the ceiling")
+        def recording(*a, **kw):
+            parts = index_parts(*a, **kw)
+            sizes.append([len(p.value[0]) for p in parts])
+            return parts
 
-        monkeypatch.setattr(similarity, "MAX_BROADCAST_INDEX_ROWS", 60)
-        monkeypatch.setattr(similarity, "_broadcast_index", boom)
-        for k, fn in kernels.items():
-            got = {tuple(r) for r in fn(similarity, embs, True).collect()}
-            assert got == want[k], k
+        monkeypatch.setattr(similarity, "_index_parts", recording)
+        for name, (ceiling, fn) in kernels.items():
+            monkeypatch.setattr(similarity, "MAX_BROADCAST_INDEX_ROWS", ceiling)
+            sizes.clear()
+            got = {tuple(r) for r in fn(similarity, embs).collect()}
+            assert got == want[name], name
+            assert sizes and all(len(s) > 1 and max(s) <= ceiling for s in sizes), (name, sizes)
 
     def test_exact_kernels_route_to_slices_above_ceiling(self, spark, sf_dir, monkeypatch):
         """Fast pin of the slice-routing guard (r10 gate-budget retier):
         the top-k kernel (the declared query path) plus decontamination —
-        whose eval side is ~20 rows at sf0.001, so its slicing is forced
-        with the explicit per-call ceiling (the 60-row global pin would
-        leave it legitimately on the broadcast path).  The pairs and
-        hard-negative kernels run the same guard in the slow tier
-        (test_pairs_and_hard_negatives_route_to_slices)."""
+        whose eval side is ~50 rows at sf0.001, so its slicing takes a
+        10-row ceiling (the 60-row pin would leave it legitimately one
+        part).  The pairs and hard-negative kernels run the same guard in
+        the slow tier (test_pairs_and_hard_negatives_route_to_slices)."""
         self._route_and_compare(spark, sf_dir, monkeypatch, {
-            "topk": lambda s, e, guarded: s.cosine_topk(e, 5),
-            "decontamination": lambda s, e, guarded: s.embedding_decontamination(
-                e, **({"max_broadcast_rows": 10} if guarded else {})
-            ),
+            "topk": (60, lambda s, e: s.cosine_topk(e, 5)),
+            "decontamination": (10, lambda s, e: s.embedding_decontamination(e)),
         })
 
     @pytest.mark.slow
     def test_pairs_and_hard_negatives_route_to_slices(self, spark, sf_dir, monkeypatch):
         """Slow tier of the slice-routing guard: the similarity-pairs and
-        hard-negative kernels (same boom-patched ceiling, same exactness
+        hard-negative kernels (same recorded parts, same exactness
         equality) — fast pin above."""
         self._route_and_compare(spark, sf_dir, monkeypatch, {
-            "pairs": lambda s, e, guarded: s.cosine_pairs_above(e, 0.35),
-            "hard_negatives": lambda s, e, guarded: s.hard_negatives(e, k=3),
+            "pairs": (60, lambda s, e: s.cosine_pairs_above(e, 0.35)),
+            "hard_negatives": (60, lambda s, e: s.hard_negatives(e, k=3)),
         })
 
     def test_over_ceiling_precomputed_index_warns_and_stays_exact(self, spark, sf_dir, monkeypatch):
@@ -2056,6 +2061,9 @@ class TestAnnTopk:
         single = {tuple(r) for r in ann_topk(embs, k=5, n_planes=6).collect()}
         explicit = {tuple(r) for r in ann_topk(embs, k=5, n_planes=6, n_tables=1).collect()}
         assert single == explicit and single
+        # the multi-table merge keeps the single-table column types (rank bigint)
+        multi = ann_topk(embs, k=5, n_planes=6, n_tables=3)
+        assert multi.schema.simpleString() == ann_topk(embs, k=5, n_planes=6).schema.simpleString()
 
         rows = ar.measure_recall(embs, k=5, configs=[(6, 1), (6, 3)])
         by_tables = {tables: recall for _p, tables, recall, _w in rows}
@@ -2081,7 +2089,8 @@ def test_connected_components_ignores_foreign_endpoints(spark, max_local_edges):
 
 class TestEmbeddingDecon:
     def test_guarded_path_matches_broadcast(self, spark, sf_dir, monkeypatch):
-        """The asymmetric IVF fallback must equal the broadcast path."""
+        """Over the ceiling, the eval-side index parts must give the
+        one-part answer."""
         from pulseboard_spark.operators import similarity
         from pulseboard_spark.sources.tables import load_table
 
@@ -2200,7 +2209,7 @@ class TestPq:
         b = rr2.sort_values(["vec_id", "rank"]).reset_index(drop=True)
         assert a.equals(b)
 
-    def test_query_slice_guard(self, spark, sf_dir):
+    def test_query_slice_guard(self, spark, sf_dir, monkeypatch):
         import pytest as _pytest
 
         from pulseboard_spark.operators import similarity as S
@@ -2208,8 +2217,9 @@ class TestPq:
 
         emb = load_table(spark, sf_dir, "embeddings")
         C = S.pq_train_codebooks(emb, m=4, k=8, iters=0)
+        monkeypatch.setattr(S, "MAX_BROADCAST_INDEX_ROWS", 3)
         with _pytest.raises(ValueError, match="broadcast ceiling"):
-            S.pq_topk(emb, topk=5, m=4, k=8, max_query_rows=3, C=C)
+            S.pq_topk(emb, topk=5, m=4, k=8, C=C)
 
 
 class TestHllRollup:
@@ -3654,8 +3664,8 @@ class TestScaledLongExactSums:
 
 
 class TestGram6Audit:
-    """r11: the shared rounded-cosine kernel (_cosine_block and friends)
-    now computes the gram with BLAS plus a rounding-boundary audit
+    """The shared rounded-cosine kernel behind every top-k and threshold
+    block computes the gram with BLAS plus a rounding-boundary audit
     (similarity._gram6).  Contract: bit-identical to the exact
     sequential-fold formulation after round-to-6 — pinned here on random
     matrices INCLUDING values planted exactly on round boundaries (the

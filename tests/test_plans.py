@@ -339,6 +339,18 @@ def test_label_noise_broadcasts_centroids(spark, sf_dir):
     assert not PY_NODES.search(plan)
 
 
+@pytest.mark.parametrize(
+    "name", ["similarity_topk", "dedup_embedding", "embedding_decontamination", "hard_negatives"]
+)
+def test_exact_similarity_one_part_one_scan(spark, sf_dir, name):
+    """Under the broadcast ceiling the index is one part: exactly one
+    Python scan and no merge window — the part union and the (cosine,
+    neighbor_id) merge exist only above the ceiling."""
+    plan = _plan(spark, sf_dir, name)
+    assert len(PY_NODES.findall(plan)) == 1, name
+    assert "Window" not in plan, name
+
+
 def test_profile_single_scan(spark, sf_dir):
     """profile_table computes every column's census in ONE scan — the
     whole point vs the oracle's N UNION branches."""
