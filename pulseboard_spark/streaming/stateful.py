@@ -9,7 +9,10 @@ state):
   (entity_id, type) it keeps the trailing point buffer + EWMA state and
   evaluates R1/R2/R4 per arriving event.  Exactly the batch semantics
   (operators/rules.py) when events arrive in event-time order — the
-  equivalence is pinned by tests/test_streaming.py.
+  equivalence is pinned by tests/test_streaming.py.  Its per-key cost is
+  the stream's capacity, so the operator sees only the seven columns the
+  kernel reads, and the kernel works in numpy alone and builds an output
+  frame only for a key where a rule fires.
 
 * :func:`r3_stateful` — R3 keyed by entity_id (the rule spans event
   types): a 2-minute tag-carrying predecessor buffer per entity.
@@ -65,16 +68,27 @@ def _sev_vec(value: np.ndarray, thr: np.ndarray) -> np.ndarray:
     return np.where(thr <= 0, "HIGH", out)
 
 
+#: the four trailing windows _eval_rules reads, one searchsorted row each
+_WINDOWS_US = np.array([60, 300, 3600, 30], dtype=np.int64)[:, None] * US
+
+
 def _eval_rules(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
     """Per (entity_id, type): replay arriving events in (ts, event_id) order
     against the trailing-window buffer, emitting fired R1/R2/R4 rows.
 
-    Fully vectorized: the merged buffer stays sorted, so every event's
-    trailing range is one batched searchsorted pair + prefix-sum lookup,
-    clipped to the points processed so far (``upto`` — append-before-eval
-    order).  The only sequential piece is the EWMA recurrence, a bare
-    multiply-add per non-null value (kept as a scalar loop for bit-exact
-    parity with the batch twin's scan — operators/ewma.py)."""
+    Input chunks carry the seven columns :func:`alert_rules_stateful`
+    selects and are read straight into numpy: columns are concatenated only
+    when there are several chunks, ``np.lexsort`` gives the (ts_us,
+    event_id) order, and the buffer merge sorts only when a new event is
+    older than the buffer's newest point (otherwise buffer + new events is
+    already in order: a stable sort of it is the identity).  Every
+    event's trailing range is one batched searchsorted pair + prefix-sum
+    lookup, clipped to the points processed so far (``upto`` —
+    append-before-eval order).  The only sequential piece is the EWMA
+    recurrence, a bare multiply-add per non-null value (kept as a scalar
+    loop for bit-exact parity with the batch twin's scan —
+    operators/ewma.py).  A call that fires no rule yields nothing; the
+    state is updated either way."""
     entity_id, etype = key
     if state.exists:
         ts_list, val_list, ewma, has_ewma = state.get
@@ -85,19 +99,28 @@ def _eval_rules(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> It
         buf_val = np.empty(0, dtype=np.float64)
         ewma, has_ewma = 0.0, False
 
-    batch = pd.concat(list(pdfs), ignore_index=True).sort_values(["ts_us", "event_id"], kind="mergesort")
-    n = len(batch)
+    chunks = list(pdfs)
 
-    n_ts = batch["ts_us"].to_numpy(np.int64)
-    n_val = batch["value"].to_numpy(np.float64)
-    n_eid = batch["event_id"].to_numpy(np.int64)
-    n_tsms = batch["ts_ms"].to_numpy(np.int64)
-    profile = batch["profile"].to_numpy()
+    def col(name: str, dtype: Any = None) -> np.ndarray:
+        if len(chunks) == 1:
+            return chunks[0][name].to_numpy(dtype)
+        return np.concatenate([c[name].to_numpy(dtype) for c in chunks])
 
+    n_ts = col("ts_us", np.int64)
+    n_eid = col("event_id", np.int64)
+    n_val = col("value", np.float64)
+    n = len(n_ts)
+    if n == 0:
+        return
+    order = np.lexsort((n_eid, n_ts)) if n > 1 else slice(None)
+    n_ts, n_eid, n_val = n_ts[order], n_eid[order], n_val[order]
+
+    base = len(buf_ts)
     all_ts = np.concatenate([buf_ts, n_ts])
     all_val = np.concatenate([buf_val, n_val])
-    order = np.argsort(all_ts, kind="mergesort")
-    all_ts, all_val = all_ts[order], all_val[order]
+    if base and n_ts[0] < buf_ts[-1]:  # a late event: merge it into the buffer
+        merge = np.argsort(all_ts, kind="mergesort")
+        all_ts, all_val = all_ts[merge], all_val[merge]
     # Null-value events (NaN) stay IN the buffer — they count toward the
     # event rate (batch rate_1m counts all rows) — but are SKIPPED by the
     # value aggregates, exactly like the batch twin's sum(v)/count(v): a
@@ -107,20 +130,16 @@ def _eval_rules(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> It
     csum = np.concatenate([[0.0], np.cumsum(np.where(valid_all, all_val, 0.0))])
     vcnt = np.concatenate([[0], np.cumsum(valid_all.astype(np.int64))])
 
-    base = len(buf_ts)
+    # per window row (60 s, 5 m, 1 h, 30 s): all-row count, null-skipped
+    # sum and non-null count per event
     upto = base + np.arange(1, n + 1)  # points processed so far, current included
-
-    def win(dur_us: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(all-row count, null-skipped sum, non-null count) per event."""
-        lo = np.minimum(np.searchsorted(all_ts, n_ts - dur_us, side="left"), upto)
-        hi = np.minimum(np.searchsorted(all_ts, n_ts, side="right"), upto)
-        return hi - lo, csum[hi] - csum[lo], vcnt[hi] - vcnt[lo]
-
-    c60, _, v60 = win(60 * US)
-    _, s5m, v5m = win(300 * US)
-    _, s1h, v1h = win(3600 * US)
-    _, s30, _ = win(30 * US)
-    rate_1m = c60.astype(np.float64)
+    hi = np.minimum(np.searchsorted(all_ts, n_ts, side="right"), upto)
+    lo = np.minimum(np.searchsorted(all_ts, n_ts - _WINDOWS_US, side="left"), upto)
+    sums = csum[hi] - csum[lo]
+    vcnts = vcnt[hi] - vcnt[lo]
+    rate_1m = (hi - lo[0]).astype(np.float64)
+    v60, v5m, v1h, _ = vcnts
+    _, s5m, s1h, s30 = sums
     # batch: coalesce(sum(v)/count(v), 0.0) — empty value window → 0.0
     avg_5m = np.where(v5m > 0, s5m / np.maximum(v5m, 1), 0.0)
     avg_1h = np.where(v1h > 0, s1h / np.maximum(v1h, 1), 0.0)
@@ -150,8 +169,16 @@ def _eval_rules(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> It
 
     # R4 exfil (SASE only); empty value window → avg 0 → the 1000 floor
     p95 = np.maximum(np.floor(avg_1h * 10), 1000.0)
-    r4 = (profile == "SASE") & valid & (s30 > p95)
+    r4 = valid & (s30 > p95)
+    if r4.any():
+        r4 &= col("profile")[order] == "SASE"
 
+    # prune buffer to the horizon relative to the newest point
+    keep = np.searchsorted(all_ts, all_ts[-1] - HORIZON_US, side="left")
+    state.update((all_ts[keep:].tolist(), all_val[keep:].tolist(), float(ewma), bool(has_ewma)))
+
+    if not (r1.any() or r2.any() or r4.any()):
+        return
     idx = np.concatenate([np.flatnonzero(r1), np.flatnonzero(r2), np.flatnonzero(r4)])
     rules_a = np.concatenate([
         np.full(int(r1.sum()), "R1_VELOCITY_SPIKE"),
@@ -164,17 +191,11 @@ def _eval_rules(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> It
         np.full(int(r4.sum()), "HIGH"),
     ])
     ordr = np.argsort(idx, kind="mergesort")  # event order; stable keeps R1<R2<R4 per event
-
-    # prune buffer to the horizon relative to the newest point
-    if len(all_ts):
-        keep = all_ts >= all_ts[-1] - HORIZON_US
-        state.update((all_ts[keep].tolist(), all_val[keep].tolist(), float(ewma), bool(has_ewma)))
-
     yield pd.DataFrame(
         {
             "rule": rules_a[ordr],
             "entity_id": entity_id,
-            "ts_ms": n_tsms[idx[ordr]],
+            "ts_ms": col("ts_ms", np.int64)[order][idx[ordr]],
             "severity": sev_a[ordr],
             "event_id": n_eid[idx[ordr]],
         },
@@ -185,15 +206,19 @@ def _eval_rules(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> It
 def alert_rules_stateful(entity_stream: DataFrame, set_watermark: bool = True) -> DataFrame:
     """Streaming R1/R2/R4 alerts over an entity-event stream.
 
-    Input needs: entity_id, type, profile, ts (timestamp), ts_us, ts_ms,
-    value, event_id.  Watermark bounds state and admits 120 s of lateness
-    (W2's drop tier, `cdp/runtime/CdpEventProcessor.kt:189-204`); pass
+    Input needs: entity_id, type, profile, ts_us, ts_ms, value, event_id,
+    plus the timestamp ``ts`` when ``set_watermark`` is on.  Watermark
+    bounds state and admits 120 s of lateness (W2's drop tier,
+    `cdp/runtime/CdpEventProcessor.kt:189-204`); pass
     ``set_watermark=False`` when the stream already carries one (Spark
-    disallows redefining it)."""
+    disallows redefining it).  Only the seven columns the kernel reads
+    reach the operator: PySpark converts each column of each group to
+    pandas on its own, so every extra column is a per-key cost."""
     if set_watermark:
         entity_stream = entity_stream.withWatermark("ts", "120 seconds")
     return (
         entity_stream
+        .select("entity_id", "type", "profile", "ts_us", "ts_ms", "value", "event_id")
         .groupBy("entity_id", "type")
         .applyInPandasWithState(
             _eval_rules,
@@ -290,12 +315,14 @@ def _eval_r3(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Itera
 def r3_stateful(entity_stream: DataFrame, set_watermark: bool = True) -> DataFrame:
     """Streaming R3 geo/device-mismatch alerts, keyed by entity_id (R3 spans
     event types, so it cannot share alert_rules_stateful's (entity_id, type)
-    grouping).  Input needs: entity_id, type, profile, ts (timestamp),
-    ts_us, ts_ms, event_id, geo, device."""
+    grouping).  Input needs: entity_id, type, profile, ts_us, ts_ms,
+    event_id, geo, device, plus the timestamp ``ts`` when ``set_watermark``
+    is on; only the columns the kernel reads reach the operator."""
     if set_watermark:
         entity_stream = entity_stream.withWatermark("ts", "120 seconds")
     return (
         entity_stream
+        .select("entity_id", "type", "profile", "ts_us", "ts_ms", "event_id", "geo", "device")
         .groupBy("entity_id")
         .applyInPandasWithState(
             _eval_r3,

@@ -155,6 +155,73 @@ def test_kernel_equals_batch_on_random_histories(spark, hist):
 
 
 # ---------------------------------------------------------------------------
+# Kernel paths the time-ordered fuzz never reaches: no firing, several input
+# chunks in one call, and a late event merged into the buffer
+# ---------------------------------------------------------------------------
+
+US = 1_000_000
+LATE_KEY = ("late", "LOGIN")
+
+
+def _key_frame(rows) -> pd.DataFrame:
+    """(event_id, seconds after BASE_US, value) rows of LATE_KEY, in the
+    seven columns alert_rules_stateful hands the kernel."""
+    pdf = pd.DataFrame(rows, columns=["event_id", "ts_s", "value"])
+    pdf["ts_us"] = BASE_US + pdf["ts_s"] * US
+    pdf["ts_ms"] = pdf["ts_us"] // 1000
+    pdf["entity_id"], pdf["type"], pdf["profile"] = "late", "LOGIN", "SASE"
+    pdf["value"] = pdf["value"].astype("float64")
+    return pdf[["entity_id", "type", "profile", "ts_us", "ts_ms", "value", "event_id"]]
+
+
+def _rows(frames) -> list[tuple]:
+    return [tuple(r) for f in frames for r in f.itertuples(index=False)]
+
+
+def test_kernel_yields_nothing_when_no_rule_fires():
+    state = FakeState()
+    out = list(_eval_rules(LATE_KEY, iter([_key_frame([(1, 30, 2.0), (0, 0, 1.0)])]), state))
+    assert out == []
+    assert state.get == ([BASE_US, BASE_US + 30 * US], [1.0, 2.0], 1.1, True)
+
+
+def test_kernel_chunks_equal_their_concatenation():
+    """One call over two chunks (neither time-ordered, nor in time order
+    with each other) ≡ one call over their concatenation: same alerts, same
+    state."""
+    rows = [(i, 100 + 2 * i, 1.0) for i in range(25)] + [(25, 140, 5000.0), (26, 141, None)]
+    whole = _key_frame(rows).sample(frac=1, random_state=3)
+    a, b = whole.iloc[::2], whole.iloc[1::2]
+    s_split, s_whole = FakeState(), FakeState()
+    got = _rows(_eval_rules(LATE_KEY, iter([a, b]), s_split))
+    want = _rows(_eval_rules(LATE_KEY, iter([whole]), s_whole))
+    assert got == want and len(want) > 0
+    assert repr(s_split.get) == repr(s_whole.get)  # repr: NaN == NaN
+
+
+def test_kernel_late_arrival_matches_recorded_output():
+    """A late event (older than the buffer's tail, inside the 1 h horizon)
+    takes the merge path; the literals are the output of the pandas-sorted
+    kernel this one replaced."""
+    state = FakeState()
+    first = _key_frame([(i, 100 + 2 * i, 1.0) for i in range(25)])  # t = 100..148 s
+    got = _rows(_eval_rules(LATE_KEY, iter([first]), state))
+    assert got == [
+        ("R1_VELOCITY_SPIKE", "late", BASE_US // 1000 + (100 + 2 * i) * 1000, "MEDIUM", i)
+        for i in range(19, 25)
+    ]
+    second = _key_frame([(101, 150, 2.0), (100, 110, 5000.0), (102, 150, None)])
+    got = _rows(_eval_rules(LATE_KEY, iter([second]), state))
+    assert got == [("R2_VALUE_SPIKE", "late", 1_704_067_310_000, "LOW", 100)]
+    ts, vals, ewma, has_ewma = state.get
+    offsets = list(range(100, 150, 2))
+    offsets.insert(6, 110)
+    assert [(t - BASE_US) // US for t in ts] == offsets + [150, 150]
+    assert repr(vals) == repr([1.0] * 6 + [5000.0] + [1.0] * 19 + [2.0, float("nan")])
+    assert (ewma, has_ewma) == (451.01, True)
+
+
+# ---------------------------------------------------------------------------
 # Same harness, two more kernels: transitions and attribution (entity-keyed)
 # ---------------------------------------------------------------------------
 

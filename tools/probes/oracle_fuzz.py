@@ -51,11 +51,9 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[2]))
 
-os.environ["PB_SILVER_CACHE"] = "0"
-
-SEED = int(sys.argv[1]) if len(sys.argv) > 1 else 7
-SF_SRC = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
-PROFILES = sys.argv[3:] or ["nulls", "ties", "edges", "unicode"]
+DEFAULT_SEED = 7
+DEFAULT_SF_SRC = "/root/testdata/sf0.001"
+DEFAULT_PROFILES = ["nulls", "ties", "edges", "unicode"]
 OUT_ROOT = "/tmp/pb_oracle_fuzz"
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
@@ -281,7 +279,15 @@ def make_fuzzed_dir(profile: str, seed: int, sf_src: str, out_root: str) -> str:
     return out
 
 
-def main() -> int:
+def main(argv: list[str]) -> int:
+    """``argv`` = [seed [sf_src [profile...]]].  Runs the parity gate on
+    each profile's mutation of sf_src; 1 when any query diverges.  The
+    silvers stay uncached (``PB_SILVER_CACHE=0``): each profile reads a
+    different directory."""
+    seed = int(argv[0]) if argv else DEFAULT_SEED
+    sf_src = argv[1] if len(argv) > 1 else DEFAULT_SF_SRC
+    profiles = argv[2:] or DEFAULT_PROFILES
+    os.environ["PB_SILVER_CACHE"] = "0"
     from pulseboard_spark.parity import run_all
     from pulseboard_spark.session import clear, get_spark
 
@@ -290,24 +296,24 @@ def main() -> int:
 
     t0 = time.time()
     bad = []
-    for profile in PROFILES:
-        fdir = make_fuzzed_dir(profile, SEED, SF_SRC, OUT_ROOT)
+    for profile in profiles:
+        fdir = make_fuzzed_dir(profile, seed, sf_src, OUT_ROOT)
         clear()
         spark.catalog.clearCache()
         t_p = time.time()
         results = run_all(spark, fdir)
         fails = [r for r in results if not r.ok]
-        print(f"# profile {profile} seed {SEED}: {len(results) - len(fails)}"
+        print(f"# profile {profile} seed {seed}: {len(results) - len(fails)}"
               f"/{len(results)} parity-OK in {time.time() - t_p:.0f}s", flush=True)
         for r in fails:
             print(f"FAIL [{profile}] {r.name}: {r.detail} "
                   f"(spark={r.spark_rows}, duck={r.duck_rows})", flush=True)
             bad.append((profile, r.name))
-    print(f"\ntotal {time.time() - t0:.0f}s, seed {SEED}, src {SF_SRC}, "
+    print(f"\ntotal {time.time() - t0:.0f}s, seed {seed}, src {sf_src}, "
           f"{len(bad)} failures")
     spark.stop()
     return 1 if bad else 0
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))
