@@ -98,14 +98,3 @@ def segments_from_spec(spec: dict) -> dict:
         name: (lambda c=F.col, _p=p: compile_predicate(_p, resolver=c))
         for name, p in spec.items()
     }
-
-
-def rules_from_spec(spec: dict) -> dict:
-    """{rule_name: {"fired": predicate-spec, "threshold": operand-spec}}
-    → {rule_name: (fired Column, threshold Column)} — the (predicate,
-    threshold) pair the alert builders consume (threshold feeds the R5
-    severity ladder)."""
-    return {
-        name: (compile_predicate(r["fired"]), compile_operand(r["threshold"]))
-        for name, r in spec.items()
-    }

@@ -7,17 +7,16 @@ every event's identifier pairs (`cdp/runtime/CdpPipeline.kt:106-119,189-198`).
 Spark-first re-expression: the graph is an edges DataFrame; the canonical id
 is the lexicographic minimum of each connected component (the deterministic
 twin of the reference's tie-breaking; SURVEY §3.2 pins apply-time
-resolution).  Components are computed by iterative min-label propagation —
-each round is one shuffle join on the node id; rounds ≈ graph diameter.
-At 100 TB scale this is the standard large-star/small-star pattern (two
-joins per round, converges in O(log d) rounds); our graphs here are shallow
-so plain propagation converges in a handful of rounds.  GraphFrames'
-connectedComponents is a drop-in upgrade when the jar is available.
+resolution).  :func:`connected_components` is the one CC home: a
+driver-side union-find for broadcast-class edge lists, else min-label
+propagation with path halving (two joins per round, O(log d) rounds — the
+work shape of large-star/small-star).  GraphFrames' connectedComponents is
+a drop-in upgrade when the jar is available.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pulseboard_spark.functions.ids import normalize_id
@@ -111,6 +110,10 @@ def identity_nodes(cvalid: DataFrame) -> DataFrame:
 #: local path; the distributed fixpoint below is the ≥ threshold path.
 MAX_LOCAL_CC_EDGES = 500_000
 
+#: Round cap of the distributed fixpoint; path halving converges in
+#: O(log diameter) rounds, so the cap is a runaway guard, not a budget.
+MAX_CC_ROUNDS = 50
+
 
 def _local_components(node_rows, edge_rows):
     """Driver-side union-find with path compression; labels = min id per
@@ -142,22 +145,20 @@ def _local_components(node_rows, edge_rows):
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
-    max_iter: int = 50,
     seed: DataFrame | None = None,
-    max_local_edges: int | None = None,
 ) -> DataFrame:
     """(id, component) with component = min id reachable; min-label
     propagation with path halving, to fixpoint.
 
-    Size-guarded fast path: below ``max_local_edges`` (default
-    :data:`MAX_LOCAL_CC_EDGES`) the edge list is broadcast-class, so the
-    components are solved with a driver-side union-find in one pass —
+    Size-guarded fast path: at or below :data:`MAX_LOCAL_CC_EDGES` edges
+    the edge list is broadcast-class, so the components are solved with a
+    driver-side union-find in one pass —
     a handful of Spark jobs instead of ~2 jobs per fixpoint round, which
     dominates wall time on small graphs (the identity graph is an
     aggregate: |distinct ids| ≪ |events|).  Above the guard the
     distributed fixpoint below runs unchanged; both paths share the
-    min-label contract and are pinned equal by test.  Pass
-    ``max_local_edges=0`` to force the distributed path.
+    min-label contract and are pinned equal by test (which sets the
+    constant to 0 to force the distributed path).
 
     Each round: (1) component[id] ← min(component[id], min of neighbors'
     components) — one join + partial-aggregated groupBy; (2) path halving:
@@ -183,7 +184,7 @@ def connected_components(
     join/shuffle from |V| to |V_incident| — the piece that matters when V
     is 10^11 ids at 100 TB and the pair graph is thin.
     """
-    limit = MAX_LOCAL_CC_EDGES if max_local_edges is None else max_local_edges
+    limit = MAX_LOCAL_CC_EDGES
     if limit > 0:
         probe = edges.select("a", "b").limit(limit + 1).collect()
         if len(probe) <= limit:
@@ -232,7 +233,7 @@ def connected_components(
     incident = sym.select("a").distinct().withColumnRenamed("a", "id").localCheckpoint()
     isolated = init.join(incident, "id", "left_anti")
     comp = init.join(incident, "id", "left_semi").localCheckpoint()
-    for _ in range(max_iter):
+    for _ in range(MAX_CC_ROUNDS):
         nbr_min = (
             sym.join(comp, sym["a"] == comp["id"])
             .select(F.col("b").alias("id"), F.col("component"))
@@ -265,99 +266,6 @@ def connected_components(
             break
     sym.unpersist()
     return comp.unionByName(isolated)
-
-
-def connected_components_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    max_iter: int = 50,
-    stats: dict | None = None,
-) -> DataFrame:
-    """(id, component) via alternating **large-star / small-star** rounds —
-    the published MapReduce CC algorithm (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14) — behind the same API as
-    :func:`connected_components`, which remains the oracle twin.
-
-    Why a second algorithm: min-label propagation converges in O(log d)
-    rounds with path halving but each round joins the full edge list
-    against the label table; star contraction instead REWRITES the edge
-    list toward a star per component, shrinking the per-round shuffle as
-    it converges — the better shape for high-diameter graphs (long chains
-    of ALIAS hops) at 100 TB.
-
-    Each round: per center u, m = min(Γ(u) ∪ {u});
-    large-star connects every LARGER neighbor to m, small-star connects
-    every smaller-or-equal neighbor (and u) to m.  Both preserve
-    connectivity and strictly reduce star-height; at fixpoint every
-    component is a star rooted at its min id.  Convergence is detected
-    with a constant-size (count, hash-sum) signature of the edge multiset
-    — no driver-side edge materialization.
-
-    ``stats``: optional dict; receives ``{"rounds": n}`` for convergence
-    assertions in tests.
-    """
-    cur = (
-        edges.select(F.col("a"), F.col("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def signature(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: 2^63-magnitude hashes overflow a long sum under
-            # ANSI arithmetic
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    def star(e: DataFrame, large: bool) -> DataFrame:
-        sym = e.unionByName(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).select(F.col("a").alias("u"), F.col("b").alias("v"))
-        m = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", F.col("u")).alias("m"))
-        )
-        j = sym.join(m, "u")
-        if large:
-            out = j.filter(F.col("v") > F.col("u")).select(
-                F.col("v").alias("a"), F.col("m").alias("b")
-            )
-        else:
-            out = j.filter(F.col("v") <= F.col("u")).select(
-                F.col("v").alias("a"), F.col("m").alias("b")
-            ).unionByName(m.select(F.col("u").alias("a"), F.col("m").alias("b")))
-        return out.filter(F.col("a") != F.col("b")).distinct()
-
-    rounds = 0
-    sig = signature(cur)
-    for _ in range(max_iter):
-        nxt = star(star(cur, large=True), large=False).localCheckpoint()
-        rounds += 1
-        nsig = signature(nxt)
-        cur = nxt
-        if nsig == sig:
-            break
-        sig = nsig
-    if stats is not None:
-        stats["rounds"] = rounds
-
-    # fixpoint edge set is a star per component: (child → root).  Root rows
-    # may not appear as children, so label them from the b side; a final
-    # min-agg collapses duplicates defensively.
-    labels = (
-        cur.select(F.col("a").alias("id"), F.col("b").alias("component"))
-        .unionByName(cur.select(F.col("b").alias("id"), F.col("b").alias("component")))
-        .groupBy("id")
-        .agg(F.min("component").alias("component"))
-    )
-    isolated = nodes.select("id").join(labels.select("id"), "id", "left_anti").select(
-        "id", F.col("id").alias("component")
-    )
-    return labels.unionByName(isolated)
 
 
 def components_for(cvalid: DataFrame) -> DataFrame:

@@ -303,23 +303,6 @@ def value_histogram(ev: DataFrame, n_bins: int = 20) -> DataFrame:
     )
 
 
-def _discrete_median(df: DataFrame, key: str, valcol: str, out: str) -> DataFrame:
-    """Per-key LOWER DISCRETE median: the smallest value whose cumulative
-    count reaches ceil(n/2) — an actual element of the data, so the result
-    is bit-identical on any engine (interpolated quantiles are a proven
-    cross-engine hash-drift source: implementations disagree on the
-    interpolation convention).  Computed over the (key, value) distinct
-    histogram (map-side combined), so the ordered cumulative window sorts
-    distinct values — a big win for discrete-valued columns.  For
-    continuous doubles distinct ≈ rows, so the per-key window degrades to
-    a per-key sort — the same per-group gather ``F.percentile`` does
-    internally; an exact median fundamentally costs a per-group selection.
-    At 100 TB route continuous columns to ``percentile_approx`` (the
-    sketch twin, `approx_value_quantiles`) unless exactness is required."""
-    hist = df.groupBy(key, valcol).agg(F.count(F.lit(1)).alias("_c"))
-    return _hist_median(hist, key, valcol, "_c", out)
-
-
 def _hist_median(hist: DataFrame, key: str, valcol: str, cnt: str, out: str) -> DataFrame:
     """Lower discrete median from a precomputed (key, value, count)
     histogram — lets a caller that already paid the fact pass reuse it."""
@@ -338,7 +321,7 @@ def mad_outliers(ev: DataFrame, k: float = 3.0) -> DataFrame:
     """Robust per-type outlier stats via median absolute deviation.
 
     Unlike the z-score path (:func:`standardize`), MAD is immune to the
-    outliers it hunts.  Medians are LOWER DISCRETE (:func:`_discrete_median`)
+    outliers it hunts.  Medians are LOWER DISCRETE (:func:`_hist_median`)
     — actual data elements, engine-exact with no rounding at the surface —
     then median of |v − med|; a value is an outlier when
     |v − med| > k · 1.4826 · MAD (1.4826 scales MAD to σ under

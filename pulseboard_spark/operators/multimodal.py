@@ -555,40 +555,6 @@ def _synth_image_feature_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.Data
     return _image_feature_batches(_synth_image_batches(it))
 
 
-FEATURE_SCHEMA = "doc_id bigint, media_type string, n_bytes bigint, checksum bigint, decoded boolean"
-
-
-def extract_features(media: DataFrame, *, real_decode: bool = False) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    ``real_decode=True`` is the seam where PIL/librosa/ffmpeg would run —
-    STUBBED: raises NotImplementedError (the container ships no media
-    codecs).  The default path computes deterministic byte-level features,
-    exercising the exact mapInPandas batch shape a real decoder uses.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if real_decode:
-                raise NotImplementedError(
-                    "media decode requires image/audio codecs not present in this environment"
-                )
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    # cheap rolling checksum — a deterministic stand-in for
-                    # decoded-content features
-                    "checksum": payloads.map(lambda b: sum(b) % 1_000_000_007).astype("int64"),
-                    "decoded": False,
-                }
-            )
-
-    return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
-
-
 RESIZE_SCHEMA = (
     "doc_id bigint, media_type string, out_width int, out_height int, "
     "out_n_bytes bigint, payload binary"

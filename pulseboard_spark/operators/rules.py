@@ -147,22 +147,6 @@ def _r3_conflicts(entity: DataFrame):
     return conflicts, geo_conf, dev_conf
 
 
-def r3_conflict_pairs(entity: DataFrame) -> DataFrame:
-    """Pair-level R3 surface: one row per (event, conflicting predecessor
-    within 2 min).  This is the stage the native stream-stream join twin
-    reproduces (`streaming/pipeline.py::r3_stream_stream_join`);
-    :func:`r3_geo_device_eval` aggregates it into per-event alerts."""
-    conflicts, geo_conf, dev_conf = _r3_conflicts(entity)
-    return conflicts.select(
-        F.col("e1.event_id").alias("event_id"),
-        F.col("e1.entity_id").alias("entity_id"),
-        F.col("e1.ts_ms").alias("ts_ms"),
-        F.col("e2.event_id").alias("prev_event_id"),
-        geo_conf.alias("geo_conflict"),
-        dev_conf.alias("device_conflict"),
-    )
-
-
 def r3_geo_device_eval(entity: DataFrame) -> DataFrame:
     """Per-event R3 alerts: the conflict pairs of :func:`_r3_conflicts`
     aggregated per triggering event with latest-conflict evidence

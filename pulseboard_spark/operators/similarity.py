@@ -174,6 +174,11 @@ def _topk_order(row: np.ndarray, ids: np.ndarray, k: int, keep: np.ndarray) -> n
 #: rows (:func:`_index_parts`) instead of OOMing the driver at 100× scale.
 MAX_BROADCAST_INDEX_ROWS = 200_000
 
+#: Rows per local-iterator fetch of the sliced index build: the driver JVM
+#: holds one fetch whole while it streams to Python, so a fetch is bounded
+#: like one default-ceiling part, not by the whole index.
+_FETCH_ROWS = 200_000
+
 #: Probe-side chunk for cogrouped cell kernels: bounds each task's score
 #: matrix at ~CHUNK × |cell| doubles regardless of how many queries probe
 #: the cell (at full probe that is ALL of them).
@@ -226,17 +231,32 @@ def _index_cols(labeled: bool) -> list[str]:
     return ["vec_id", "embedding"] + (["label"] if labeled else [])
 
 
-def _part(sc, rows: list, labeled: bool):
-    """Broadcast collected index rows as one part: (ids, M, norms,
-    labels-or-None)."""
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
+def _slice_arrays(rows, sizes: dict, labeled: bool, slice_of=lambda r: 0) -> list:
+    """File index rows, as they stream in, into per-slice arrays
+    preallocated from ``sizes`` ({slice: n_rows}); returns (ids, M,
+    labels-or-None) per slice in slice order.  Only arrays are kept, so a
+    streamed input never has more than one batch of Row objects alive."""
+    ids = {s: np.empty(n, np.int64) for s, n in sizes.items()}
+    labels = {s: np.empty(n, np.int64) for s, n in sizes.items()} if labeled else {}
+    M: dict = {}
+    fill = dict.fromkeys(sizes, 0)
+    for r in rows:
+        s = slice_of(r)
+        i = fill[s]
+        fill[s] = i + 1
+        ids[s][i] = r[0]
+        if s not in M:
+            M[s] = np.empty((sizes[s], len(r[1])), dtype=np.float64)
+        M[s][i] = r[1]
+        if labeled:
+            labels[s][i] = r[2]
     # an empty index must keep a 2-D shape: (0,)-shaped M breaks every kernel
-    M = (
-        np.array([list(r[1]) for r in rows], dtype=np.float64)
-        if rows
-        else np.zeros((0, 0), dtype=np.float64)
-    )
-    labels = np.array([r[2] for r in rows], dtype=np.int64) if labeled else None
+    empty = np.zeros((0, 0), dtype=np.float64)
+    return [(ids[s], M.get(s, empty), labels.get(s)) for s in sorted(sizes)]
+
+
+def _part(sc, ids, M, labels):
+    """Broadcast one index part: (ids, M, norms, labels-or-None)."""
     return sc.broadcast((ids, M, _safe_norms(M), labels))
 
 
@@ -247,8 +267,11 @@ def _index_parts(index_df: DataFrame, labeled: bool = False) -> list:
     of :func:`_index_too_big`) the whole index is ONE part; above it the
     rows are hash-sliced on ``vec_id`` into parts targeting 3/4 fill, so
     xxhash imbalance stays under the ceiling, and empty slices are
-    dropped.  Part membership cannot affect results: every index row is
-    scored against every query exactly once whichever part holds it.
+    dropped.  The sliced build reads the index twice whatever the part
+    count: an id-hash pass sizes the slices, and one local-iterator pass
+    files each row into its slice's arrays.  Part membership cannot affect
+    results: every index row is scored against every query exactly once
+    whichever part holds it.
 
     Memoized per session plan (:func:`~pulseboard_spark.session.plan_probe`,
     tag carries the ceiling): repeated queries share one collect and one
@@ -263,11 +286,17 @@ def _index_parts(index_df: DataFrame, labeled: bool = False) -> list:
         sc = index_df.sparkSession.sparkContext
         df = index_df.select(*_index_cols(labeled))
         if not _index_too_big(index_df):
-            return [_part(sc, df.collect(), labeled)]
-        n_parts = max(2, math.ceil(df.count() / max(ceiling * 3 // 4, 1)))
+            rows = df.collect()
+            return [_part(sc, *p) for p in _slice_arrays(rows, {0: len(rows)}, labeled)]
+        # the id hashes alone (one Arrow job) size every slice; numpy's %
+        # by a positive divisor is non-negative, exactly Spark's pmod
+        h = df.select(F.xxhash64("vec_id").alias("h")).toPandas()["h"].to_numpy()
+        n_parts = max(2, math.ceil(len(h) / max(ceiling * 3 // 4, 1)))
+        sizes = {s: int(c) for s, c in enumerate(np.bincount(h % n_parts)) if c}
+        # then one pass streams each row into its slice's arrays
         sliced = df.withColumn("_slice", F.pmod(F.xxhash64("vec_id"), F.lit(n_parts)))
-        slices = (sliced.filter(F.col("_slice") == s).collect() for s in range(n_parts))
-        return [_part(sc, rows, labeled) for rows in slices if rows]
+        rows = sliced.coalesce(max(1, math.ceil(len(h) / _FETCH_ROWS))).toLocalIterator()
+        return [_part(sc, *p) for p in _slice_arrays(rows, sizes, labeled, slice_of=lambda r: r[-1])]
 
     return plan_probe(index_df, f"index:{ceiling}:{labeled}", build)
 
@@ -957,8 +986,9 @@ def hard_negatives_broadcast(embeddings: DataFrame, k: int = 3) -> DataFrame:
     # own (unmemoized) one-part collect so the twin stays an independent
     # index build
     rows = embeddings.select(*_index_cols(True)).collect()
-    part = _part(embeddings.sparkSession.sparkContext, rows, labeled=True)
-    return _exact_topk(embeddings, k, [part], labeled=True)
+    sc = embeddings.sparkSession.sparkContext
+    parts = [_part(sc, *p) for p in _slice_arrays(rows, {0: len(rows)}, True)]
+    return _exact_topk(embeddings, k, parts, labeled=True)
 
 
 def embedding_norm_outliers(embeddings: DataFrame, k: float = 3.0) -> DataFrame:

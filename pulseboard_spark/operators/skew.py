@@ -16,7 +16,7 @@ don't pay the extra phase.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: merge function for each algebraic aggregate's partials
@@ -56,21 +56,6 @@ def salted_agg(
     )
     return phase1.groupBy(*keys).agg(
         *[_MERGE[op](F.col(out)).alias(out) for out, (op, _col) in aggs.items()]
-    )
-
-
-def with_salted_key(df: DataFrame, key: str, n_salts: int = 32, out: str = "salted_key") -> DataFrame:
-    """Join-side salting helper: explode the *small* side over all salts and
-    salt the big side's key, turning a skewed equi-join into a uniform one
-    (the classic replicate-broadcast-salt pattern; use when AQE's skew
-    splitting isn't available, e.g. bucketed SMJ pipelines)."""
-    return df.withColumn(
-        out,
-        F.concat(
-            F.col(key),
-            F.lit("#"),
-            (F.abs(F.xxhash64(F.monotonically_increasing_id())) % n_salts).cast("string"),
-        ),
     )
 
 

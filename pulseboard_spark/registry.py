@@ -1382,19 +1382,6 @@ def label_noise_suspects_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.label_noise_suspects(_embs(spark, sf_dir))
 
 
-def _ivf(spark: SparkSession, sf_dir: str):
-    """Precomputed flat (Lloyd-free) IVF index, memoized per session: the
-    shared expensive stage of the distributed kNN queries, and at full
-    probe cell quality is irrelevant (the 100 TB twin is a persisted index
-    table)."""
-
-    def build():
-        assigned, cent_bc = similarity.ivf_index(_embs(spark, sf_dir), iters=0)
-        return assigned.localCheckpoint(), cent_bc
-
-    return memo(spark, sf_dir, "ivf_index", build)
-
-
 def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No precomputed IVF index: the exact label-masked kernel over the
     # session-memoized index parts (one part under the broadcast ceiling).

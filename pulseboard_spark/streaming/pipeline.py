@@ -180,16 +180,6 @@ def kafka_cdp_sink(events: DataFrame, brokers: str, topic: str = "cdp-events", c
     )
 
 
-def file_entity_source(spark: SparkSession, path: str, schema, max_files_per_trigger: int = 1) -> DataFrame:
-    """S4 twin for tests: time-ordered parquet chunks trickled one per
-    micro-batch."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(path)
-    )
-
-
 def entity_alert_stream(events: DataFrame, grace: str = "120 seconds") -> DataFrame:
     """§3.1 end-to-end streaming shape: admission (W2) → dedup (W1) →
     per-event stateful rule evaluation (W5) over any entity-event stream
@@ -265,22 +255,6 @@ class CdpIdentityStage:
 
     def resolved(self) -> DataFrame:
         return self.spark.read.parquet(self.resolved_dir)
-
-
-def run_cdp_identity(
-    spark: SparkSession, cdp_stream: DataFrame, workdir: str, checkpoint: str | None = None
-):
-    """Wire the identity stage onto a raw CDP stream.  Downstream, read
-    ``{workdir}/resolved`` as a file stream into ``profile_apply_stateful``
-    (two cooperating queries — the standard foreachBatch + stateful split)."""
-    stage = CdpIdentityStage(spark, workdir)
-    q = (
-        cdp_stream.writeStream.foreachBatch(stage.process_batch)
-        .option("checkpointLocation", checkpoint or f"{workdir}/ckpt")
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    return stage, q
 
 
 def with_admission(
@@ -437,59 +411,6 @@ def streaming_sessions(
             F.unix_millis(F.col("w.end")).alias("window_end_ms"),
             "n_events",
         )
-    )
-
-
-def r3_stream_stream_join(later: DataFrame, earlier: DataFrame) -> DataFrame:
-    """R3 conflict pairs via Spark's NATIVE watermarked stream-stream join
-    (the batch twin is `operators/rules.py::r3_conflict_pairs`; the
-    keyed-state twin is `stateful.py::r3_stateful`).
-
-    Both inputs are streaming DataFrames of the entity view.  The join
-    condition carries an event-time range (`e2.ts` within 2 minutes before
-    `e1.ts`), which is what lets the engine bound join state: the probe
-    side keeps 120 s of history per watermark advance, the build side
-    240 s (its rows must outlive the latest probe row that can reach
-    back to them).  No custom state, no applyInPandasWithState — this is
-    the join the reference's stubbed recent-event lookup would have been
-    (`core/Rules.kt:207-215`), expressed as the engine primitive.
-    """
-    e1 = later.withWatermark("ts", "120 seconds").alias("e1")
-    e2 = earlier.withWatermark("ts", "240 seconds").alias("e2")
-    geo_conf = (
-        F.col("e1.geo").isNotNull()
-        & F.col("e2.geo").isNotNull()
-        & (F.col("e1.geo") != F.col("e2.geo"))
-    )
-    dev_conf = (
-        F.col("e1.device").isNotNull()
-        & F.col("e2.device").isNotNull()
-        & (F.col("e1.device") != F.col("e2.device"))
-    )
-    cond = (
-        (F.col("e1.entity_id") == F.col("e2.entity_id"))
-        & (F.col("e2.ts") >= F.col("e1.ts") - F.expr("INTERVAL 2 MINUTES"))
-        # upper bound ON THE WATERMARKED ts COLUMN: without it the engine
-        # has no event-time ceiling for e1's state and the e1 side grows
-        # unboundedly — ts_us/event_id below only refine strict ordering
-        # inside the same millisecond, they are not watermarked columns
-        & (F.col("e2.ts") <= F.col("e1.ts"))
-        & (
-            (F.col("e2.ts_us") < F.col("e1.ts_us"))
-            | (
-                (F.col("e2.ts_us") == F.col("e1.ts_us"))
-                & (F.col("e2.event_id") < F.col("e1.event_id"))
-            )
-        )
-        & (geo_conf | dev_conf)
-    )
-    return e1.join(e2, cond, "inner").select(
-        F.col("e1.event_id").alias("event_id"),
-        F.col("e1.entity_id").alias("entity_id"),
-        F.col("e1.ts_ms").alias("ts_ms"),
-        F.col("e2.event_id").alias("prev_event_id"),
-        geo_conf.alias("geo_conflict"),
-        dev_conf.alias("device_conflict"),
     )
 
 

@@ -14,8 +14,9 @@ state):
   kernel reads, and the kernel works in numpy alone and builds an output
   frame only for a key where a rule fires.
 
-* :func:`r3_stateful` — R3 keyed by entity_id (the rule spans event
-  types): a 2-minute tag-carrying predecessor buffer per entity.
+* :func:`r3_stateful` — R3's one streaming home, keyed by entity_id (the
+  rule spans event types): a 2-minute tag-carrying predecessor buffer per
+  entity, emitting the alert row of ``operators/rules.py::r3_geo_device_eval``.
 
 * :func:`profile_apply_stateful` / :func:`segment_diff_stateful` /
   :func:`reengage_stateful` — the CDP apply loop, G4 membership diff
@@ -49,19 +50,9 @@ ALERT_SCHEMA = (
 _RULE_STATE_SCHEMA = "ts_us array<long>, value array<double>, ewma double, has_ewma boolean"
 
 
-def _severity(value: float, threshold: float) -> str:
-    if threshold <= 0:
-        return "HIGH"
-    ratio = value / threshold
-    if ratio >= 10.0:
-        return "HIGH"
-    if ratio >= 5.0:
-        return "MEDIUM"
-    return "LOW"
-
-
 def _sev_vec(value: np.ndarray, thr: np.ndarray) -> np.ndarray:
-    """Vectorized R5 severity ladder; matches _severity element-wise."""
+    """R5 severity ladder per element: HIGH at a non-positive threshold or
+    ratio ≥ 10, MEDIUM at ≥ 5, else LOW (`core/Rules.kt:220-231`)."""
     safe = np.where(thr > 0, thr, 1.0)
     ratio = value / safe
     out = np.where(ratio >= 10.0, "HIGH", np.where(ratio >= 5.0, "MEDIUM", "LOW"))
@@ -585,63 +576,6 @@ def transitions_stateful(entity_stream: DataFrame, set_watermark: bool = True) -
             stateStructType=_TRANSITION_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def transitions_stateful_tws(entity_stream: DataFrame, set_watermark: bool = True) -> DataFrame:
-    """The transition pair emitter on `transformWithStateInPandas` — the
-    current-generation stateful API (typed per-key state handles, RocksDB
-    provider required).  Semantics identical to
-    :func:`transitions_stateful`; pinned equal by
-    ``test_transitions_tws_matches_legacy_and_batch``.  Kept alongside the
-    `applyInPandasWithState` twin as the migration template for the rest
-    of this file: ValueState replaces the monolithic state tuple, and the
-    runtime owns timers/TTL instead of the handler.
-
-    Environment note: the transformWithState Python worker speaks a
-    protobuf state-server protocol, so running it needs `google.protobuf`
-    (absent in this sandbox — the equivalence test skips cleanly there,
-    exactly like the Kafka e2e; the operator itself is import-clean).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Transitions(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last", "last_type string")
-
-        def handleInputRows(self, key, rows, timer_values):
-            batch = pd.concat(list(rows), ignore_index=True).sort_values(
-                ["ts_ms", "event_id"], kind="mergesort"
-            )
-            prev = self._last.get()[0] if self._last.exists() else None
-            out_from, out_to = [], []
-            for t in batch["type"].tolist():
-                if prev is not None:
-                    out_from.append(prev)
-                    out_to.append(t)
-                prev = t
-            self._last.update((str(batch.iloc[-1]["type"]),))
-            if out_from:
-                ts = batch["ts_ms"].tolist()[-len(out_from):]
-                yield pd.DataFrame({"from_type": out_from, "to_type": out_to, "ts_ms": ts})
-
-        def close(self) -> None:
-            pass
-
-    if set_watermark:
-        entity_stream = entity_stream.withWatermark("ts", "120 seconds")
-    return (
-        entity_stream.select("entity_id", "type", "ts", "ts_ms", "event_id")
-        .groupBy("entity_id")
-        .transformWithStateInPandas(
-            _Transitions(),
-            outputStructType=TRANSITION_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
         )
     )
 

@@ -184,15 +184,25 @@ def test_empty_value_window_sums_are_zero(spark):
 # --- Connected components (`IdentityGraphTest.kt:105-214`) ------------------
 
 
-@pytest.mark.parametrize("max_local_edges", [None, 0], ids=["local", "distributed"])
-def test_connected_components_diamond(spark, max_local_edges):
+@pytest.fixture(params=["local", "distributed"])
+def cc_route(request, monkeypatch):
+    """Both connected_components routes: the driver-side union-find, and
+    the distributed fixpoint forced by a zero local-edge ceiling."""
+    if request.param == "distributed":
+        from pulseboard_spark.operators import identity
+
+        monkeypatch.setattr(identity, "MAX_LOCAL_CC_EDGES", 0)
+    return request.param
+
+
+def test_connected_components_diamond(spark, cc_route):
     edges = spark.createDataFrame(
         [("b", "c"), ("c", "d"), ("b", "d"), ("x", "y")], "a string, b string"
     )
     nodes = spark.createDataFrame([("b",), ("c",), ("d",), ("x",), ("y",), ("solo",)], "id string")
     comp = {
         r["id"]: r["component"]
-        for r in connected_components(nodes, edges, max_local_edges=max_local_edges).collect()
+        for r in connected_components(nodes, edges).collect()
     }
     assert comp["b"] == comp["c"] == comp["d"] == "b"  # canonical = lexicographic min
     assert comp["x"] == comp["y"] == "x"
@@ -207,32 +217,6 @@ def test_connected_components_order_independent(spark):
     c1 = {r["id"]: r["component"] for r in connected_components(nodes, edges).collect()}
     c2 = {r["id"]: r["component"] for r in connected_components(nodes, edges_rev).collect()}
     assert c1 == c2 == {"b": "b", "c": "b", "d": "b"}
-
-
-def test_star_contraction_matches_propagation(spark):
-    """large-star/small-star CC (the high-diameter scale path) must equal
-    the min-label propagation twin, and converge logarithmically on a
-    chain — the exact shape propagation-without-halving handles worst."""
-    import random
-
-    from pulseboard_spark.operators.identity import connected_components_star
-
-    # chain fixture: 0-1-2-…-63 (diameter 63) plus a random component mix
-    chain = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(63)]
-    rng = random.Random(11)
-    extra = [(f"m{rng.randrange(40)}", f"m{rng.randrange(40)}") for _ in range(60)]
-    edges = spark.createDataFrame(chain + extra, "a string, b string")
-    ids = sorted({x for e in chain + extra for x in e} | {"iso"})
-    nodes = spark.createDataFrame([(i,) for i in ids], "id string")
-
-    stats: dict = {}
-    got = {r.id: r.component for r in connected_components_star(nodes, edges, stats=stats).collect()}
-    want = {r.id: r.component for r in connected_components(nodes, edges).collect()}
-    assert got == want
-    assert got["iso"] == "iso"
-    # star contraction halves star-height per paired round: a 64-node chain
-    # must close in O(log n) rounds, nowhere near the diameter
-    assert stats["rounds"] <= 10, stats
 
 
 def test_salted_agg_matches_direct(spark):
@@ -1540,11 +1524,18 @@ class TestMergeComponents:
     recompute over prior ∪ delta edges — including bridged components,
     brand-new nodes, and still-isolated nodes."""
 
-    def _check(self, spark, prior_edges, delta_edges, extra_nodes=(), **cc_kw):
-        from pulseboard_spark.operators.identity import (
-            connected_components,
-            merge_components,
-        )
+    def _check(self, spark, prior_edges, delta_edges, extra_nodes=(), monkeypatch=None):
+        """``monkeypatch`` given: the prior labels and the full recompute
+        take the distributed route; the merge keeps the default route."""
+        from pulseboard_spark.operators import identity
+        from pulseboard_spark.operators.identity import merge_components
+
+        def connected_components(nodes, edges):
+            if monkeypatch is None:
+                return identity.connected_components(nodes, edges)
+            with monkeypatch.context() as m:
+                m.setattr(identity, "MAX_LOCAL_CC_EDGES", 0)
+                return identity.connected_components(nodes, edges)
 
         all_ids = sorted(
             {x for e in prior_edges + delta_edges for x in e} | set(extra_nodes)
@@ -1555,14 +1546,14 @@ class TestMergeComponents:
             "id string",
         )
         mk = lambda es: spark.createDataFrame(es, "a string, b string")
-        prior = connected_components(prior_ndf, mk(prior_edges), **cc_kw)
+        prior = connected_components(prior_ndf, mk(prior_edges))
         got = {
             (r.id, r.component)
             for r in merge_components(prior, ndf, mk(delta_edges)).collect()
         }
         want = {
             (r.id, r.component)
-            for r in connected_components(ndf, mk(prior_edges + delta_edges), **cc_kw).collect()
+            for r in connected_components(ndf, mk(prior_edges + delta_edges)).collect()
         }
         assert got == want
 
@@ -1576,13 +1567,13 @@ class TestMergeComponents:
             extra_nodes=["g"],
         )
 
-    def test_distributed_path_equivalence(self, spark):
+    def test_distributed_path_equivalence(self, spark, monkeypatch):
         self._check(
             spark,
             prior_edges=[("a", "b"), ("b", "c"), ("x", "y")],
             delta_edges=[("c", "x"), ("p", "q")],
             extra_nodes=["z"],
-            max_local_edges=0,
+            monkeypatch=monkeypatch,
         )
 
     def _random_graph_trials(self, spark, n_trials):
@@ -1858,6 +1849,49 @@ class TestBroadcastSizeGuard:
             "hard_negatives": (60, lambda s, e: s.hard_negatives(e, k=3)),
         })
 
+    def test_sliced_index_build_takes_fixed_passes(self, spark, sf_dir, monkeypatch):
+        """Over the ceiling the parts come from a fixed number of passes
+        over the index — not one filtered collect (a full index scan) per
+        slice — and each part holds exactly its hash slice.  At a 60-row
+        ceiling the sf0.001 embeddings make 12 parts (27 jobs at local[8]
+        as one collect per slice); with the guard verdict memoized the
+        build runs 4 jobs: the id-hash pass and one local-iterator pass."""
+        import math
+        import uuid
+
+        from pyspark.sql import functions as F
+
+        from pulseboard_spark import session
+        from pulseboard_spark.operators import similarity
+        from pulseboard_spark.sources.tables import load_table
+
+        embs = load_table(spark, sf_dir, "embeddings")
+        monkeypatch.setattr(similarity, "MAX_BROADCAST_INDEX_ROWS", 60)
+        monkeypatch.setattr(session, "_MEMO", {})  # a cold build, not a memo hit
+        assert similarity._index_too_big(embs)
+        sc = spark.sparkContext
+        group = f"index-build:{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            parts = similarity._index_parts(embs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+        n_parts = max(2, math.ceil(embs.count() / 45))
+        want: dict = {}
+        for r in embs.select(
+            "vec_id", F.pmod(F.xxhash64("vec_id"), F.lit(n_parts)).alias("s")
+        ).collect():
+            want.setdefault(r.s, set()).add(r.vec_id)
+        got = [set(p.value[0].tolist()) for p in parts]
+        assert len(parts) > 1 and jobs <= 5, (len(parts), jobs)
+        assert got == [want[s] for s in sorted(want)]
+        for p in parts:
+            ids, M, _norms, _labels = p.value
+            assert M.shape[0] == len(ids) and M.shape[1] > 0
+
     def test_over_ceiling_precomputed_index_warns_and_stays_exact(self, spark, sf_dir, monkeypatch):
         """A caller-built IVF index cannot rescue the exact over-ceiling
         path (full-probe replication is the cost, not candidate gen) — the
@@ -2071,8 +2105,7 @@ class TestAnnTopk:
         assert 0.0 < by_tables[1] <= 1.0 and by_tables[3] <= 1.0
 
 
-@pytest.mark.parametrize("max_local_edges", [None, 0], ids=["local", "distributed"])
-def test_connected_components_ignores_foreign_endpoints(spark, max_local_edges):
+def test_connected_components_ignores_foreign_endpoints(spark, cc_route):
     """Edges touching ids absent from `nodes` neither label nor bridge —
     and BOTH physical paths must agree on that (the induced-subgraph
     contract of the distributed fixpoint)."""
@@ -2082,7 +2115,7 @@ def test_connected_components_ignores_foreign_endpoints(spark, max_local_edges):
     nodes = spark.createDataFrame([("n1",), ("n2",), ("n3",), ("n4",)], "id string")
     comp = {
         r["id"]: r["component"]
-        for r in connected_components(nodes, edges, max_local_edges=max_local_edges).collect()
+        for r in connected_components(nodes, edges).collect()
     }
     assert comp == {"n1": "n1", "n2": "n2", "n3": "n3", "n4": "n3"}
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from pulseboard_spark.functions.ids import normalize_id
 from pulseboard_spark.functions.core import severity
+from pulseboard_spark.operators import identity
 from pulseboard_spark.operators.identity import connected_components
 from pulseboard_spark.operators.rolling_counter import rolling_counter_24h
 from pulseboard_spark.operators.ewma import with_ewma
@@ -113,7 +114,7 @@ def test_rolling_counter_matches_brute_force(spark):
 # --- J1-J3 connected components vs union-find --------------------------------
 
 
-def test_connected_components_matches_union_find(spark):
+def test_connected_components_matches_union_find(spark, monkeypatch):
     rng = random.Random(3)
     nodes = [f"n{i:02d}" for i in range(40)]
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(35)]
@@ -141,10 +142,13 @@ def test_connected_components_matches_union_find(spark):
     if not edges:
         want["n00"] = want["n01"] = min("n00", "n01")
     # both physical paths must match the model: the size-guarded local
-    # union-find AND the distributed min-label fixpoint
-    for mle in (None, 0):
-        got = {r.id: r.component for r in connected_components(ndf, edf, max_local_edges=mle).collect()}
-        assert got == want, f"max_local_edges={mle}"
+    # union-find AND the distributed min-label fixpoint (forced by a zero
+    # local-edge ceiling)
+    for route in ("local", "distributed"):
+        if route == "distributed":
+            monkeypatch.setattr(identity, "MAX_LOCAL_CC_EDGES", 0)
+        got = {r.id: r.component for r in connected_components(ndf, edf).collect()}
+        assert got == want, route
 
 
 # --- A6 EWMA vs sequential recurrence ----------------------------------------

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """64x-amplified bench tier: do the headline plans survive a real scale-up?
 
-bench.py measures sf0.1 (100k events / 600k lineitem / 5k docs / 2k
+The benchmarks measure sf0.1 (100k events / 600k lineitem / 5k docs / 2k
 vectors).  Every plan in the repo is *argued* to scale — banding, one
 shuffle, broadcast guards — but nothing has *measured* a headline query
 above sf0.1.  This probe materializes a 64x-amplified copy of the driver

@@ -1,14 +1,15 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for headline queries to plans/$PB_PLANS_ROUND/<q>_<tag>.txt.
+"""Dump .explain("formatted") for registry queries to plans/<query>_<tag>.txt.
 
-Usage: python tools/probes/explain_dump.py <tag> [query ...]
+Usage: python tools/probes/explain_dump.py <tag> <query> [query ...]
   tag: "before" / "after" (file suffix)
-  query: optional subset; default = every bench.py HEADLINE query.
+  query: registry query names (at least one).
 
-Plans are captured WITHOUT executing (explain only), on the same session
-posture as bench.py (get_spark, silver caches cold). AQE shows the initial
-plan (isFinalPlan=false); Exchange counts / join strategies / PushedFilters
-are all visible there, which is what the optimization evidence needs.
+plans/ is git-ignored: dumps are on-demand evidence, not tracked files.
+Plans are captured WITHOUT executing (explain only), on a get_spark
+session with the silver caches cold.  AQE shows the initial plan
+(isFinalPlan=false); Exchange counts / join strategies / PushedFilters are
+all visible there, which is what the optimization evidence needs.
 """
 
 from __future__ import annotations
@@ -18,19 +19,16 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", ".."))
 
-from bench import HEADLINE  # noqa: E402
 from pulseboard_spark.registry import QUERIES  # noqa: E402
 from pulseboard_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or HEADLINE
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    tag, names = sys.argv[1], sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "..", "..", "plans",
-        os.environ.get("PB_PLANS_ROUND", "r11"),
-    )
+    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "..", "plans")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("pulseboard-explain")
     spark.sparkContext.setLogLevel("ERROR")

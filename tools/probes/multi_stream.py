@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Multi-query streaming: the production shape nothing else measures.
 
-Every streaming soak in the repo (bench.py, rocksdb_soak.py,
-stream_keygroups.py) runs ONE stateful query at a time.  Production runs
+Every streaming soak in the repo (perfbench's alerts_stream,
+rocksdb_soak.py, stream_keygroups.py) runs ONE stateful query at a time.  Production runs
 the anomaly rules, the CDP profile builder, and the segment differ
 CONCURRENTLY on one SparkContext — three `applyInPandasWithState`
 queries competing for the same local[32] task slots, Python workers, and
@@ -12,13 +12,13 @@ state-store memory.  Two questions:
    twin still equal its batch oracle?  (Scheduler interleaving must not
    leak through the keyed-state contract.)
 2. **Interference**: how much per-query throughput does co-residency
-   cost vs the solo number bench.py records?  (At 100 TB this decides
+   cost vs the solo number?  (At 100 TB this decides
    whether the three pipelines share a cluster or get their own.)
 
 Method: phase 1 feeds each query its real input once (memory sinks) and
 set-compares against the batch operators — the same assertions as
 tests/test_streaming.py, now under concurrency.  Phase 2 re-runs with
-noop sinks and the bench.py replay-rename harness, timing N passes of
+noop sinks and a replay-rename harness, timing N passes of
 alerts SOLO and then N passes with ALL THREE replaying simultaneously;
 each pass replays every source and waits for all queries to drain.
 
@@ -348,15 +348,11 @@ def main() -> None:
                     }
             if sizing:
                 print(f"# per-query state partitions (sized_session): {sizing}", flush=True)
-            # throttle self-documentation: same canary as bench.py, so a
-            # latency table carries its own host-speed context
-            import bench
-
-            print(f"# spin canary start: {bench._spin_canary()}s mc {bench._spin_canary_mc()}s "
-                  f"load {bench._loadavg()}", flush=True)
+            # host load before and after, so a latency table carries its
+            # own host context
+            print(f"# load start: {os.getloadavg()}", flush=True)
             lat = phase3_latency(spark, work, sources, sizing=sizing)
-            print(f"# spin canary end: {bench._spin_canary()}s mc {bench._spin_canary_mc()}s "
-                  f"load {bench._loadavg()}", flush=True)
+            print(f"# load end: {os.getloadavg()}", flush=True)
             _print_latency(lat)
             return
         phase1_equality(spark, work, sources, bounds)

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Isolated per-query timing: bench.py methodology (count(), warm best) for
+"""Isolated per-query timing: count() forced, warm best of N, for
 a subset of queries, plus an optional noop-sink timing (guide §1.4) that
 computes every column so sink-independent cost is visible.
 
@@ -29,7 +29,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("pulseboard-qtime")
     spark.sparkContext.setLogLevel("ERROR")
-    # same warm-up as bench.py
+    # JIT warm-up on one query before any timing
     QUERIES["tpch_q1_pricing_summary"](spark, sf_dir).count()
     for name in args.queries:
         times, rows = [], 0

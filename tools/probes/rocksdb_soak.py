@@ -2,16 +2,16 @@
 """RocksDB state-store soak: sustained throughput + state-size stability of
 the keyed-state rule engine on the production state-store provider.
 
-bench.py certifies `alert_rules_stateful` on the default heap provider;
-`tests/test_streaming.py` pins RocksDB *result parity* on one dataset.
+perfbench's alerts_stream times `alert_rules_stateful` on the default heap
+provider; `tests/test_streaming.py` pins RocksDB *result parity* on one
+dataset.
 What neither measures is the soak: does throughput hold, and does state
 stay bounded, over many replay passes on RocksDB with changelog
 checkpointing (the 100 TB-state configuration, where keyed state outgrows
 executor heaps and per-batch changelogs replace full SST snapshot
 uploads)?
 
-Method (same replay-rename harness as bench.py so numbers are
-comparable): warm-up batch excluded, then N_PASSES timed replays of the
+Method (a replay-rename harness): warm-up batch excluded, then N_PASSES timed replays of the
 sf events through `alert_rules_stateful`.  After each pass, record the
 state operator's numRowsTotal (must stay CONSTANT across replays — the
 key space repeats, so growth = a state leak) and the provider's memory
@@ -40,7 +40,7 @@ N_PASSES = 10
 def soak(provider: str) -> dict:
     """One full soak in a fresh SparkContext (providers must not share a JVM
     session: the conf is read at query start, and Python-worker residue
-    from a prior run skews the measure — the bench.py lesson)."""
+    from a prior run skews the measure)."""
     from pulseboard_spark.session import get_spark
     from pulseboard_spark.sources.tables import entity_events
     from pulseboard_spark.streaming.pipeline import use_rocksdb_state

@@ -15,8 +15,9 @@ One core count per invocation (Spark local-mode master is static per JVM):
     SPARK_GRAFT_CPUS=8  python tools/probes/scale_evidence.py [AMP] > c8.json
 
 Output: one JSON line {"amp": A, "cpus": C, "queries": {name: {"cold": s,
-"warm": s, "rows": n}}}.  Methodology identical to bench.py (count() forced,
-warm best of 2, cold kept).  Results -> SCALE.md + plans/r11/.
+"warm": s, "rows": n}}}: count() forced, warm best of 2, cold kept — the
+row-count timing of BENCH_r01–r11, not perfbench's noop-sink pass.
+Results -> SCALE.md.
 """
 
 from __future__ import annotations
