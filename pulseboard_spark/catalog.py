@@ -10,11 +10,10 @@ becomes a named view a BI tool or notebook can select from.
 Views are lazy: registering one executes nothing of the query itself.
 Building a view's plan may run jobs once per session for the artifacts
 the session memo keeps (:func:`session.memo`: silvers, the identity
-components checkpoint, size probes, broadcast and IVF indexes, PQ
+components checkpoint, size probes, broadcast indexes, PQ
 codebooks); every later build reuses them.  Queries whose EVERY build runs
 jobs (:data:`registry._CONSTRUCTION_COMPUTE`: driver-loop trainers,
-per-call index builds) are skipped by the default registration sweep —
-pass their names explicitly to opt in.
+per-call index builds) are skipped by the registration sweep.
 """
 
 from __future__ import annotations
@@ -50,19 +49,15 @@ def register_tables(spark: SparkSession, sf_dir: str) -> None:
     cdp_events(spark, sf_dir).createOrReplaceTempView("cdp")
 
 
-def register_queries(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> list[str]:
+def register_queries(spark: SparkSession, sf_dir: str) -> list[str]:
     """Register declared queries as temp views named after their registry
     key (``spark.sql("SELECT * FROM r1_velocity_spike")``).  Returns the
-    registered names.  With ``names=None`` the sweep skips
+    registered names.  The sweep skips
     :data:`registry._CONSTRUCTION_COMPUTE`, whose every build runs jobs."""
     from pulseboard_spark.registry import _CONSTRUCTION_COMPUTE, QUERIES
 
     tune(spark)
-    picked = (
-        [n for n in QUERIES if n not in _CONSTRUCTION_COMPUTE] if names is None else names
-    )
+    picked = [n for n in QUERIES if n not in _CONSTRUCTION_COMPUTE]
     for name in picked:
         QUERIES[name](spark, sf_dir).createOrReplaceTempView(name)
     return picked

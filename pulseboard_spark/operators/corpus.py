@@ -80,12 +80,12 @@ def pack_documents(
     )
 
 
-def scrub_pii(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def scrub_pii(documents: DataFrame) -> DataFrame:
     """Redact emails → <EMAIL>, URLs → <URL>, phones → <PHONE> (in that
     order) and count each kind.  Counting happens before redaction on the
     original text; all three passes are codegen'd JVM regex — the 100 TB
     cost is one streaming pass over the text bytes, no shuffle at all."""
-    t = F.col(text_col)
+    t = F.col("text")
     n = lambda pat: F.size(F.regexp_extract_all(t, F.lit(pat), F.lit(0))).cast("long")  # noqa: E731
     scrubbed = F.regexp_replace(
         F.regexp_replace(F.regexp_replace(t, EMAIL_RE, "<EMAIL>"), URL_RE, "<URL>"),
@@ -112,12 +112,10 @@ def weighted_sample(df: DataFrame, key: str, pct_col: Column) -> DataFrame:
     )
 
 
-def decontaminate(
-    documents: DataFrame, eval_bucket_min: int = 95, n: int = 3
-) -> DataFrame:
-    """Benchmark decontamination: the top (100−eval_bucket_min)% of docs by
-    stable doc_id hash form the held-out eval set; a training doc is
-    contaminated if it shares any word ``n``-gram shingle with any eval
+def decontaminate(documents: DataFrame) -> DataFrame:
+    """Benchmark decontamination: the top 5% of docs by stable doc_id hash
+    (buckets 95-99) form the held-out eval set; a training doc is
+    contaminated if it shares any word shingle (``dedup.SHINGLE``-gram) with any eval
     doc.  Returns contaminated training docs with their shared-shingle
     count.
 
@@ -127,10 +125,10 @@ def decontaminate(
     moderate scale; at 100 TB the join shuffles on the shingle hash, which
     is the minimal-width key possible."""
     tagged = documents.withColumn("bucket", hash_bucket(F.col("doc_id")))
-    train = tagged.filter(F.col("bucket") < eval_bucket_min)
-    evals = tagged.filter(F.col("bucket") >= eval_bucket_min)
-    train_sh = shingles(train.select("doc_id", "text"), n)
-    eval_sh = shingles(evals.select("doc_id", "text"), n).select("s").distinct()
+    train = tagged.filter(F.col("bucket") < 95)
+    evals = tagged.filter(F.col("bucket") >= 95)
+    train_sh = shingles(train.select("doc_id", "text"))
+    eval_sh = shingles(evals.select("doc_id", "text")).select("s").distinct()
     return (
         train_sh.join(eval_sh, "s")
         .groupBy("doc_id")
@@ -141,8 +139,8 @@ def decontaminate(
 LINE_TOKENS = 10
 
 
-def doc_lines(documents: DataFrame, line_tokens: int = LINE_TOKENS) -> DataFrame:
-    """Pseudo-line segmentation: whitespace tokens chunked ``line_tokens``
+def doc_lines(documents: DataFrame) -> DataFrame:
+    """Pseudo-line segmentation: whitespace tokens chunked ``LINE_TOKENS``
     at a time, joined back to a line string — (doc_id, line_no, line).
 
     The synthetic corpus ships no newlines, so fixed-token chunks stand in
@@ -155,18 +153,18 @@ def doc_lines(documents: DataFrame, line_tokens: int = LINE_TOKENS) -> DataFrame
         "_n", F.size("_t")
     ).filter(F.col("_n") > 0)
     line_no = F.explode(
-        F.sequence(F.lit(0), ((F.col("_n") - 1) / line_tokens).cast("int"))
+        F.sequence(F.lit(0), ((F.col("_n") - 1) / LINE_TOKENS).cast("int"))
     )
     return base.select("doc_id", line_no.alias("line_no"), "_t").select(
         "doc_id",
         "line_no",
         F.array_join(
-            F.slice("_t", F.col("line_no") * line_tokens + 1, line_tokens), " "
+            F.slice("_t", F.col("line_no") * LINE_TOKENS + 1, LINE_TOKENS), " "
         ).alias("line"),
     )
 
 
-def line_dedup_stats(documents: DataFrame, line_tokens: int = LINE_TOKENS) -> DataFrame:
+def line_dedup_stats(documents: DataFrame) -> DataFrame:
     """C4-style line-level dedup audit: per document, how many of its lines
     are corpus boilerplate (the same line appears in >= 2 distinct docs).
 
@@ -176,7 +174,7 @@ def line_dedup_stats(documents: DataFrame, line_tokens: int = LINE_TOKENS) -> Da
     (map-side partial over (line, doc_id)), the join back is co-partitioned
     on the same key, and the final per-doc rollup shuffles line-count rows,
     never text.  Integer-exact surface (ppm via truncating div)."""
-    lines = doc_lines(documents, line_tokens)
+    lines = doc_lines(documents)
     freq = lines.groupBy("line").agg(
         F.countDistinct("doc_id").cast("long").alias("n_docs")
     )
@@ -196,12 +194,12 @@ def line_dedup_stats(documents: DataFrame, line_tokens: int = LINE_TOKENS) -> Da
     )
 
 
-def boilerplate_lines(documents: DataFrame, line_tokens: int = LINE_TOKENS) -> DataFrame:
+def boilerplate_lines(documents: DataFrame) -> DataFrame:
     """The boilerplate inventory itself: every line occurring in >= 2
     distinct documents, with its doc reach and total occurrence count —
     what a C4-style cleaner materializes as its removal list.  One shuffle
     on the line string; output is bounded by the duplicated-line mass."""
-    lines = doc_lines(documents, line_tokens)
+    lines = doc_lines(documents)
     return (
         lines.groupBy("line")
         .agg(
@@ -212,7 +210,7 @@ def boilerplate_lines(documents: DataFrame, line_tokens: int = LINE_TOKENS) -> D
     )
 
 
-def doc_repetition(documents: DataFrame, line_tokens: int = LINE_TOKENS) -> DataFrame:
+def doc_repetition(documents: DataFrame) -> DataFrame:
     """Within-document repetition signals — the Gopher repetition family
     (Rae et al. 2021 §A1.1: documents dominated by repeated lines or a
     single n-gram are boilerplate/spam and poison LLM training):
@@ -246,9 +244,9 @@ def doc_repetition(documents: DataFrame, line_tokens: int = LINE_TOKENS) -> Data
     units = F.expr(
         f"""
         concat(
-          transform(sequence(0, (_n - 1) div {line_tokens}),
+          transform(sequence(0, (_n - 1) div {LINE_TOKENS}),
                     i -> struct('L' AS kind,
-                                array_join(slice(_t, i * {line_tokens} + 1, {line_tokens}), ' ') AS k)),
+                                array_join(slice(_t, i * {LINE_TOKENS} + 1, {LINE_TOKENS}), ' ') AS k)),
           CASE WHEN _n >= 2
                THEN transform(slice(_t, 1, _n - 1),
                               (x, i) -> struct('B' AS kind, concat(x, ' ', _t[i + 1]) AS k))
@@ -321,14 +319,7 @@ def source_length_bands(documents: DataFrame) -> DataFrame:
     )
 
 
-def build_corpus(
-    spark,
-    sf_dir: str,
-    out_dir: str,
-    val_pct: int = 10,
-    test_pct: int = 10,
-    seq_budget: int = 256,
-) -> dict:
+def build_corpus(spark, sf_dir: str, out_dir: str) -> dict:
     """End-to-end corpus construction: the one-call pipeline a training
     team runs per snapshot, chaining the engine's stages in production
     order:
@@ -337,8 +328,8 @@ def build_corpus(
       2. Near-dup removal — keep cluster canonicals (`dedup.near_dup_clusters`)
       3. Benchmark decontamination (`decontaminate`: drop training docs
          sharing shingles with the held-out hash bucket)
-      4. Deterministic train/val/test assignment (`sampling.train_val_test_split`)
-      5. Sequence packing per split (`pack_documents`)
+      4. Deterministic 80/10/10 train/val/test assignment (`sampling.train_val_test_split`)
+      5. Sequence packing per split into 256-token windows (`pack_documents`)
       6. Split-partitioned, sorted parquet write (`layout.write_partitioned`)
 
     Returns a manifest dict (per-stage survivor counts + per-split packed
@@ -369,8 +360,8 @@ def build_corpus(
     docs_c = docs_d.join(contaminated, "doc_id", "left_anti")
     n_clean = docs_c.count()
 
-    assigned = train_val_test_split(docs_c, "doc_id", val_pct=val_pct, test_pct=test_pct)
-    packed = pack_documents(assigned, budget=seq_budget, shard="split")
+    assigned = train_val_test_split(docs_c, "doc_id")
+    packed = pack_documents(assigned, budget=256, shard="split")
     write_partitioned(packed, out_dir, ["split"], sort_cols=["doc_id"])
 
     out = spark.read.parquet(out_dir)
@@ -429,13 +420,11 @@ def ngram_novelty(documents: DataFrame) -> DataFrame:
     )
 
 
-def pack_efficiency(
-    documents: DataFrame, budget: int = PACK_BUDGET, shard: str = "source"
-) -> DataFrame:
-    """Packing-efficiency rollup over :func:`pack_documents`: per shard,
+def pack_efficiency(documents: DataFrame) -> DataFrame:
+    """Packing-efficiency rollup over :func:`pack_documents`: per source,
     how many context windows the corpus fills, how full they are
-    (fill ppm of the window budget), and how many documents straddle a
-    window boundary — the loader-tuning table that decides whether the
+    (fill ppm of the ``PACK_BUDGET`` window), and how many documents
+    straddle a window boundary — the loader-tuning table that decides whether the
     packing budget or the shard layout needs to change before a
     pretraining run burns compute on padding.
 
@@ -447,8 +436,9 @@ def pack_efficiency(
 
     Scale: rides pack_documents' one shard-key shuffle; the rollup is
     |shards| rows."""
-    packed = pack_documents(documents, budget=budget, shard=shard)
-    return packed.groupBy(shard).agg(
+    budget = PACK_BUDGET
+    packed = pack_documents(documents, budget=budget)
+    return packed.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("n_tokens"),
         F.greatest(F.max("pack_end").cast("long") + 1, F.lit(0).cast("long")).alias(
@@ -464,18 +454,18 @@ def pack_efficiency(
     )
 
 
-def mixture_plan(
-    documents: DataFrame,
-    target_tokens: int = 112_000,
-    max_epochs: int = 4,
-    shard: str = "source",
-) -> DataFrame:
+#: :func:`mixture_plan`'s training-token budget and per-source repeat cap.
+MIXTURE_TARGET_TOKENS = 112_000
+MIXTURE_MAX_EPOCHS = 4
+
+
+def mixture_plan(documents: DataFrame) -> DataFrame:
     """Token-budget mixture planner: split a total training-token budget
     across sources under a per-source repeat cap — the allocation table a
     pretraining run derives its per-source sampling weights from.
 
-    Each source starts from an equal fair share (``target_tokens div
-    n_sources``), clipped at ``max_epochs`` passes over what the source
+    Each source starts from an equal fair share (``MIXTURE_TARGET_TOKENS
+    div n_sources``), clipped at ``MIXTURE_MAX_EPOCHS`` passes over what the source
     actually has; the budget the caps free up is then redistributed to
     the uncapped sources in one water-filling round (equal bonus, again
     clipped at each source's cap).  One round is exact when at most one
@@ -491,7 +481,8 @@ def mixture_plan(
     windows over that |sources|-row table — fine while source cardinality
     is bounded (thousands); a web-scale domain mixture would swap the
     windows for a broadcast twin of the three scalar totals."""
-    per = documents.groupBy(shard).agg(
+    target_tokens, max_epochs = MIXTURE_TARGET_TOKENS, MIXTURE_MAX_EPOCHS
+    per = documents.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(_word_count(F.col("text"))).cast("long").alias("avail_tokens"),
     )
@@ -517,7 +508,7 @@ def mixture_plan(
     ).otherwise(F.lit(0).cast("long"))
     alloc = F.col("alloc1") + F.least(bonus, F.col("cap") - F.col("alloc1"))
     return per.select(
-        F.col(shard),
+        F.col("source"),
         "n_docs",
         "avail_tokens",
         "fair_share",
@@ -528,44 +519,37 @@ def mixture_plan(
     )
 
 
-def doc_chunks(
-    documents: DataFrame, chunk_tokens: int = 64, stride: int = 48
-) -> DataFrame:
+def doc_chunks(documents: DataFrame) -> DataFrame:
     """RAG-indexing chunk plan: split each document into overlapping
-    token windows (``chunk_tokens`` wide, ``stride`` apart — the standard
+    token windows (64 wide, 48 apart — the standard
     sliding-window chunker an embedding index ingests).  Surfaces chunk
     METADATA plus a deterministic md5 of the chunk text (the join key an
     index builder / dedup pass uses), not the text itself — the driver
     surface stays narrow and scalar.
 
-    Chunks start at every ``k·stride < n_tokens``, so every token is
+    Chunks start at every ``k·48 < n_tokens``, so every token is
     covered and the final chunk may be short: n_chunks =
-    ``(n−1) div stride + 1``.  Token-free docs emit nothing.
+    ``(n−1) div 48 + 1``.  Token-free docs emit nothing.
 
     Scale: one narrow pass — tokens, a per-row ``sequence`` explode, and
     row-local slicing/hashing; no shuffle at all (the chunker is the
     map side of whatever index build follows)."""
-    if not 0 < stride <= chunk_tokens:
-        raise ValueError(
-            "doc_chunks needs 0 < stride <= chunk_tokens for full token "
-            f"coverage, got stride={stride}, chunk_tokens={chunk_tokens}"
-        )
     toks = ws_tokens(ascii_lower(F.col("text")))
     base = documents.select("doc_id", toks.alias("_t")).withColumn(
         "_n", F.size("_t")
     ).filter(F.col("_n") > 0)
     chunk_no = F.explode(
-        F.sequence(F.lit(0), F.expr(f"(_n - 1) div {int(stride)}"))
+        F.sequence(F.lit(0), F.expr("(_n - 1) div 48"))
     )
-    start = F.col("chunk_no") * stride
-    piece = F.slice(F.col("_t"), start + 1, chunk_tokens)
+    start = F.col("chunk_no") * 48
+    piece = F.slice(F.col("_t"), start + 1, 64)
     return (
         base.select("doc_id", chunk_no.alias("chunk_no"), "_t", "_n")
         .select(
             "doc_id",
             F.col("chunk_no").cast("long").alias("chunk_no"),
             start.cast("long").alias("start_token"),
-            F.least(F.lit(chunk_tokens), F.col("_n") - start).cast("long").alias("n_tokens"),
+            F.least(F.lit(64), F.col("_n") - start).cast("long").alias("n_tokens"),
             F.md5(F.array_join(piece, " ")).alias("chunk_hash"),
         )
     )

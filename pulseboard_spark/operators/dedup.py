@@ -29,6 +29,8 @@ N_BANDS = 4  # 2 hashes per band
 SHINGLE = 3  # words per shingle
 SIMHASH_BITS = 16
 SIMHASH_HAMMING_MAX = 3
+#: Near-dup verdict: exact shingle Jaccard at or above 80 % (basis points).
+NEAR_DUP_BP = 8000
 
 
 def exact_dedup(documents: DataFrame) -> DataFrame:
@@ -40,8 +42,8 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
     )
 
 
-def shingles(documents: DataFrame, n: int = SHINGLE) -> DataFrame:
-    """Distinct word n-gram shingles per doc (lowercased).
+def shingles(documents: DataFrame) -> DataFrame:
+    """Distinct word ``SHINGLE``-gram shingles per doc (lowercased).
 
     Word shingles, not char shingles: on template-heavy / small-vocabulary
     corpora char n-grams are shared by unrelated documents, which floods
@@ -49,7 +51,7 @@ def shingles(documents: DataFrame, n: int = SHINGLE) -> DataFrame:
     1.1M candidate pairs from 5k synthetic docs with char-5).  Word n-grams
     keep the shingle space discriminative — the standard choice in
     large-scale text dedup.  Everything JVM-side via split → explode →
-    slice; docs shorter than n words degrade to one short shingle.
+    slice; docs shorter than ``SHINGLE`` words degrade to one short shingle.
 
     Zero-token docs (empty, whitespace-only, or NULL text) emit NO
     shingles: without the filter every empty document degrades to the
@@ -63,10 +65,10 @@ def shingles(documents: DataFrame, n: int = SHINGLE) -> DataFrame:
     """
     toks = ws_tokens(ascii_lower(F.col("text")))
     base = documents.select("doc_id", toks.alias("toks")).filter(F.size("toks") > 0)
-    idx = F.explode(F.sequence(F.lit(1), F.greatest(F.size("toks") - (n - 1), F.lit(1))))
+    idx = F.explode(F.sequence(F.lit(1), F.greatest(F.size("toks") - (SHINGLE - 1), F.lit(1))))
     return (
         base.select("doc_id", idx.alias("i"), "toks")
-        .select("doc_id", F.concat_ws(" ", F.slice("toks", F.col("i"), n)).alias("s"))
+        .select("doc_id", F.concat_ws(" ", F.slice("toks", F.col("i"), SHINGLE)).alias("s"))
         .distinct()
     )
 
@@ -158,33 +160,26 @@ def _jaccard_at_least(threshold_bp: int):
     return F.col("n_common") * 10000 >= F.lit(int(threshold_bp)) * F.col("n_union")
 
 
-def ngram_jaccard_dedup(
-    documents: DataFrame, threshold_bp: int = 8000, pairs: DataFrame | None = None
-) -> DataFrame:
-    """Near-dup verdicts: pairs at/above a Jaccard threshold (basis points)
-    with the canonical (min) id — the decision layer over minhash_near_dups.
+def ngram_jaccard_dedup(documents: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
+    """Near-dup verdicts: pairs at/above the ``NEAR_DUP_BP`` Jaccard
+    threshold with the canonical (min) id — the decision layer over minhash_near_dups.
 
     ``pairs``: precomputed minhash_near_dups output (the pair graph is the
     expensive shared stage; callers running several dedup decisions over one
     corpus materialize it once)."""
     if pairs is None:
         pairs = minhash_near_dups(documents)
-    pairs = pairs.filter(_jaccard_at_least(threshold_bp))
+    pairs = pairs.filter(_jaccard_at_least(NEAR_DUP_BP))
     return pairs.select(
         "doc_a", "doc_b", "jaccard_ppm", F.least("doc_a", "doc_b").alias("canonical_doc_id")
     )
 
 
-def containment_pairs(
-    documents: DataFrame,
-    containment_bp: int = 9000,
-    jaccard_max_bp: int = 8000,
-    pairs: DataFrame | None = None,
-) -> DataFrame:
+def containment_pairs(documents: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
     """Containment audit over the verified candidate-pair graph, flagging
     the asymmetric partial-duplicate class: pairs where the SMALLER
-    document's shingles are ≥ ``containment_bp`` contained in the
-    larger's, yet symmetric Jaccard stays BELOW the near-dup threshold —
+    document's shingles are ≥ 90 % contained in the larger's, yet
+    symmetric Jaccard stays BELOW the near-dup threshold —
     the quote-expansion / excerpt / boilerplate-wrapper class that
     symmetric dedup structurally misses (a 100-word doc embedded in a
     10 000-word doc has Jaccard ≈ 1 %, containment ≈ 100 %).
@@ -230,8 +225,8 @@ def containment_pairs(
     container_id = F.when(F.col("n_a") <= F.col("n_b"), F.col("doc_b")).otherwise(
         F.col("doc_a")
     )
-    is_partial = (F.col("n_common") * 10000 >= F.lit(int(containment_bp)) * n_small) & (
-        F.col("n_common") * 10000 < F.lit(int(jaccard_max_bp)) * F.col("n_union")
+    is_partial = (F.col("n_common") * 10000 >= F.lit(9000) * n_small) & (
+        F.col("n_common") * 10000 < F.lit(NEAR_DUP_BP) * F.col("n_union")
     )
     return enriched.select(
         contained_id.alias("contained_doc_id"),
@@ -243,10 +238,7 @@ def containment_pairs(
 
 
 def split_leakage(
-    documents: DataFrame,
-    splits: DataFrame,
-    threshold_bp: int = 8000,
-    pairs: DataFrame | None = None,
+    documents: DataFrame, splits: DataFrame, pairs: DataFrame | None = None
 ) -> DataFrame:
     """Train/eval contamination audit: near-dup pairs that STRADDLE the
     train/val/test split — the leak an LLM pipeline must catch before a
@@ -269,7 +261,7 @@ def split_leakage(
     """
     if pairs is None:
         pairs = minhash_near_dups(documents)
-    pairs = pairs.filter(_jaccard_at_least(threshold_bp))
+    pairs = pairs.filter(_jaccard_at_least(NEAR_DUP_BP))
     sa = splits.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("_sa"))
     sb = splits.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("_sb"))
     classed = (
@@ -298,7 +290,7 @@ def split_leakage(
 
 
 def near_dup_clusters(
-    documents: DataFrame, threshold_bp: int = 8000, pairs: DataFrame | None = None
+    documents: DataFrame, threshold_bp: int = NEAR_DUP_BP, pairs: DataFrame | None = None
 ) -> DataFrame:
     """Transitive near-dup clusters: connected components over the verified
     near-dup pair graph (the dedup decision a training-data pipeline
@@ -327,10 +319,7 @@ def near_dup_clusters(
 
 
 def near_dup_clusters_incremental(
-    documents: DataFrame,
-    prior: DataFrame,
-    delta_pairs: DataFrame,
-    threshold_bp: int = 8000,
+    documents: DataFrame, prior: DataFrame, delta_pairs: DataFrame
 ) -> DataFrame:
     """Fold a delta batch of verified near-dup pairs into a prior cluster
     map — the nightly-corpus-refresh shape: yesterday's (doc, cluster)
@@ -344,7 +333,7 @@ def near_dup_clusters_incremental(
     from pulseboard_spark.operators.identity import merge_components
 
     edges = (
-        delta_pairs.filter(_jaccard_at_least(threshold_bp))
+        delta_pairs.filter(_jaccard_at_least(NEAR_DUP_BP))
         .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     )
     comp = merge_components(
@@ -388,9 +377,9 @@ def simhash_fingerprints(documents: DataFrame) -> DataFrame:
     return sums.select("doc_id", fp.cast("long").alias("simhash"))
 
 
-def simhash_near_dups(documents: DataFrame, max_hamming: int = SIMHASH_HAMMING_MAX) -> DataFrame:
-    """SimHash near-dup pairs: hamming distance ≤ ``max_hamming`` over the
-    16-bit fingerprints.
+def simhash_near_dups(documents: DataFrame) -> DataFrame:
+    """SimHash near-dup pairs: hamming distance ≤ ``SIMHASH_HAMMING_MAX``
+    over the 16-bit fingerprints.
 
     Candidate generation is LSH banding on the two 8-bit halves — any pair
     within hamming ≤ 3 of a 16-bit code CAN disagree in both halves, so
@@ -421,13 +410,13 @@ def simhash_near_dups(documents: DataFrame, max_hamming: int = SIMHASH_HAMMING_M
             F.col("b.doc_id").alias("doc_b"),
             ham.alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_HAMMING_MAX)
         .distinct()
     )
 
 
-def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.35) -> DataFrame:
-    """Embedding-cosine near-dup pairs: cosine ≥ ``threshold``, each pair
+def embedding_near_dups(embeddings: DataFrame) -> DataFrame:
+    """Embedding-cosine near-dup pairs: cosine ≥ 0.35, each pair
     once (vec_a < vec_b), canonical = min id.
 
     Exact broadcast block kernel (``similarity.cosine_pairs_above``) — the
@@ -436,9 +425,9 @@ def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.35) -> DataF
     ``similarity.simhash_buckets`` and keeps this exact kernel as the
     per-bucket verifier (see ``similarity.ann_topk`` for the composed
     shape).  The synthetic embeddings have no true dups (max cosine ≈ 0.5),
-    so the default threshold marks the distribution's tail.
+    so the threshold marks the distribution's tail.
     """
-    pairs = cosine_pairs_above(embeddings, threshold)
+    pairs = cosine_pairs_above(embeddings, 0.35)
     return pairs.withColumn("canonical_vec_id", F.least("vec_a", "vec_b"))
 
 
@@ -557,9 +546,7 @@ def blocked_fuzzy_pairs(
     )
 
 
-def cross_source_overlap(
-    documents: DataFrame, threshold_bp: int = 8000, pairs: DataFrame | None = None
-) -> DataFrame:
+def cross_source_overlap(documents: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
     """Near-duplicate leakage between sources: for every (source, source)
     pair, how many verified near-dup document pairs cross it — the
     contamination audit a training pipeline runs before mixing corpora
@@ -567,7 +554,7 @@ def cross_source_overlap(
     content; a high diagonal means a source self-duplicates).
 
     Built on the same verified pair graph as :func:`ngram_jaccard_dedup`
-    (MinHash-banded candidates → exact-Jaccard verify at ``threshold_bp``),
+    (MinHash-banded candidates → exact-Jaccard verify at ``NEAR_DUP_BP``),
     so the scale posture is unchanged: banded candidate generation, never
     all-pairs.  The source pair is ordered lexicographically (src_a <=
     src_b) so each unordered pair surfaces once.
@@ -577,7 +564,7 @@ def cross_source_overlap(
     """
     if pairs is None:
         pairs = minhash_near_dups(documents)
-    pairs = pairs.filter(_jaccard_at_least(threshold_bp))
+    pairs = pairs.filter(_jaccard_at_least(NEAR_DUP_BP))
     src = documents.select("doc_id", "source")
     tagged = (
         pairs.select("doc_a", "doc_b")
@@ -604,12 +591,7 @@ def cross_source_overlap(
     )
 
 
-def cluster_size_histogram(
-    documents: DataFrame,
-    threshold_bp: int = 8000,
-    pairs: DataFrame | None = None,
-    clusters: DataFrame | None = None,
-) -> DataFrame:
+def cluster_size_histogram(documents: DataFrame, clusters: DataFrame | None = None) -> DataFrame:
     """Near-dup cluster-size distribution: how many clusters of size 1
     (unique docs), 2, 3, … the verified pair graph produces — the one
     table that says whether dedup is removing onesie-twosie noise or
@@ -617,13 +599,13 @@ def cluster_size_histogram(
     before :func:`near_dup_clusters` is applied.
 
     ``clusters``: a precomputed :func:`near_dup_clusters` output (the
-    registry passes its memoized cluster silver, same convention as
-    ``pairs`` — never re-run the CC fixpoint for a histogram).
+    registry passes its memoized cluster silver — never re-run the CC
+    fixpoint for a histogram).
 
     Scale: two tiny rollups over the |docs|-row cluster table
     (cluster → size, size → count)."""
     if clusters is None:
-        clusters = near_dup_clusters(documents, threshold_bp=threshold_bp, pairs=pairs)
+        clusters = near_dup_clusters(documents)
     sizes = clusters.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size")
     )
@@ -633,11 +615,9 @@ def cluster_size_histogram(
     )
 
 
-def lsh_recall_audit(
-    documents: DataFrame, sample_pct: int = 10, band_width_ppm: int = 100_000
-) -> DataFrame:
+def lsh_recall_audit(documents: DataFrame) -> DataFrame:
     """Measured recall of the banded MinHash candidate generator, per
-    Jaccard band: on a stable hash sample of the corpus, compute EXACT
+    0.1-wide Jaccard band: on a stable 10 % hash sample of the corpus, compute EXACT
     all-pairs Jaccard (every pair sharing ≥1 shingle — zero-overlap pairs
     are never dedup-relevant) and check which of those pairs the 4×2 LSH
     banding actually surfaces.  The output — (jaccard band, true pairs,
@@ -654,7 +634,7 @@ def lsh_recall_audit(
 
     sample = (
         documents.withColumn("_b", hash_bucket(F.col("doc_id")))
-        .filter(F.col("_b") < int(sample_pct))
+        .filter(F.col("_b") < 10)
         .select("doc_id", "text")
     )
     sh = shingles(sample)
@@ -691,7 +671,7 @@ def lsh_recall_audit(
     joined = exact.join(caught, ["doc_a", "doc_b"], "left")
     return (
         joined.groupBy(
-            F.expr(f"jaccard_ppm div {int(band_width_ppm)}").alias("jaccard_band")
+            F.expr("jaccard_ppm div 100000").alias("jaccard_band")
         )
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_pairs"),

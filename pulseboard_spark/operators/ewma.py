@@ -41,29 +41,27 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: The EWMA weight of the newest value (`core/WindowStore.kt:106-132`).
+ALPHA = 0.1
+# Decimal complement, not 1.0 - ALPHA: for α = 0.1 the binary result of
+# 1.0 - 0.1 (0.8999999999999999…) is a DIFFERENT double from the parsed
+# literal 0.9 the SQL oracle uses, and over a long recurrence the ulp
+# drift can flip a round-to-6 boundary (it did, at sf0.01).
+BETA = float(Decimal(1) - Decimal(str(ALPHA)))
+#: The per-key scan's key: one EWMA state per (entity_id, type).
+KEY = ("entity_id", "type")
 
-def with_ewma(
-    df: DataFrame,
-    partition_cols: list[str] = ("entity_id", "type"),
-    value_col: str = "value",
-    alpha: float = 0.1,
-    out: str = "ewma",
-) -> DataFrame:
-    """Append per-event EWMA (post-update value) over non-null values.
+
+def with_ewma(df: DataFrame) -> DataFrame:
+    """Append per-event ``ewma`` (post-update value) over non-null
+    ``value``s.
 
     Rows with null ``value`` pass through with null ewma — the reference
     skips them entirely (`core/Rules.kt:66`).
     """
-    cols = list(partition_cols)
-    # Decimal complement, not 1.0 - alpha: for α = 0.1 the binary result of
-    # 1.0 - 0.1 (0.8999999999999999…) is a DIFFERENT double from the parsed
-    # literal 0.9 the SQL oracle uses, and over a long recurrence the ulp
-    # drift can flip a round-to-6 boundary (it did, at sf0.01).
-    beta = float(Decimal(1) - Decimal(str(alpha)))
-
     narrow = (
-        df.filter(F.col(value_col).isNotNull())
-        .select(*cols, "ts_us", "event_id", F.col(value_col).cast("double").alias("__v"))
+        df.filter(F.col("value").isNotNull())
+        .select(*KEY, "ts_us", "event_id", F.col("value").cast("double").alias("__v"))
     )
     id_type = dict(narrow.dtypes)["event_id"]
 
@@ -71,35 +69,27 @@ def with_ewma(
         state: dict = {}
         for pdf in batches:
             v = pdf["__v"].to_numpy(dtype="float64")
-            kcols = [pdf[c].to_numpy() for c in cols]
+            kcols = [pdf[c].to_numpy() for c in KEY]
             e = np.empty(len(v), dtype="float64")
             get = state.get
             for i in range(len(v)):
                 k = tuple(kc[i] for kc in kcols)
                 prev = get(k)
-                cur = v[i] if prev is None else alpha * v[i] + beta * prev
+                cur = v[i] if prev is None else ALPHA * v[i] + BETA * prev
                 state[k] = cur
                 e[i] = cur
-            pdf[out] = e
-            yield pdf[["event_id", out]]
+            pdf["ewma"] = e
+            yield pdf[["event_id", "ewma"]]
 
     ewma_rows = (
-        narrow.repartition(*cols)
-        .sortWithinPartitions(*cols, "ts_us", "event_id")
-        .mapInPandas(_scan, schema=f"event_id {id_type}, {out} double")
+        narrow.repartition(*KEY)
+        .sortWithinPartitions(*KEY, "ts_us", "event_id")
+        .mapInPandas(_scan, schema=f"event_id {id_type}, ewma double")
     )
     return df.join(ewma_rows, "event_id", "left")
 
 
-def ewma_scan(
-    df: DataFrame,
-    partition_cols: list[str] = ("entity_id", "type"),
-    value_col: str = "value",
-    alpha: float = 0.1,
-    out: str = "ewma",
-    carry: list[str] = (),
-    clustered: bool = False,
-) -> DataFrame:
+def ewma_scan(df: DataFrame, carry: list[str] = (), clustered: bool = False) -> DataFrame:
     """Fused EWMA scan over the NON-NULL-value rows only — the shape both
     declared consumers actually need (`ewma_q` and R2 both filter
     ``value IS NOT NULL`` immediately after :func:`with_ewma`, discarding
@@ -109,10 +99,10 @@ def ewma_scan(
     on event_id (which re-shuffles BOTH sides of the join by event_id —
     two extra Exchanges on top of the scan's own repartition), the listed
     ``carry`` columns ride through the Arrow pass and come back alongside
-    ``out``: zero joins, and with ``clustered=True`` zero added shuffles.
+    ``ewma``: zero joins, and with ``clustered=True`` zero added shuffles.
 
     ``clustered=True`` skips the repartition: the caller guarantees the
-    input is already hash-clustered by ``partition_cols`` (e.g. the output
+    input is already hash-clustered by ``KEY`` (e.g. the output
     of :func:`~pulseboard_spark.operators.windows.with_trailing_aggs`,
     whose window Exchange partitions by the same keys — AQE coalescing
     merges whole partitions so key-locality survives it).  Only the local
@@ -123,37 +113,35 @@ def ewma_scan(
     state sequence is unchanged; the re-attach join keyed on the unique
     event_id is replaced by in-row pass-through (equality pinned by
     TestEwmaScan and the unchanged ewma/r2 oracles)."""
-    cols = list(partition_cols)
-    beta = float(Decimal(1) - Decimal(str(alpha)))
-    passthrough = [c for c in carry if c not in cols]
+    passthrough = [c for c in carry if c not in KEY]
     sel = (
-        [F.col(c) for c in cols]
+        [F.col(c) for c in KEY]
         + [F.col(c) for c in passthrough if c not in ("ts_us", "event_id")]
         + [F.col("ts_us"), F.col("event_id")]
-        + [F.col(value_col).cast("double").alias(value_col)]
+        + [F.col("value").cast("double").alias("value")]
     )
-    narrow = df.filter(F.col(value_col).isNotNull()).select(*sel)
+    narrow = df.filter(F.col("value").isNotNull()).select(*sel)
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in narrow.schema.fields
-    ) + f", {out} double"
+    ) + ", ewma double"
 
     def _scan(batches):
         state: dict = {}
         for pdf in batches:
-            v = pdf[value_col].to_numpy(dtype="float64")
-            kcols = [pdf[c].to_numpy() for c in cols]
+            v = pdf["value"].to_numpy(dtype="float64")
+            kcols = [pdf[c].to_numpy() for c in KEY]
             e = np.empty(len(v), dtype="float64")
             get = state.get
             for i in range(len(v)):
                 k = tuple(kc[i] for kc in kcols)
                 prev = get(k)
-                cur = v[i] if prev is None else alpha * v[i] + beta * prev
+                cur = v[i] if prev is None else ALPHA * v[i] + BETA * prev
                 state[k] = cur
                 e[i] = cur
-            pdf[out] = e
+            pdf["ewma"] = e
             yield pdf
 
-    shaped = narrow if clustered else narrow.repartition(*cols)
-    return shaped.sortWithinPartitions(*cols, "ts_us", "event_id").mapInPandas(
+    shaped = narrow if clustered else narrow.repartition(*KEY)
+    return shaped.sortWithinPartitions(*KEY, "ts_us", "event_id").mapInPandas(
         _scan, schema=schema
     )

@@ -150,12 +150,18 @@ def connected_components(
     """(id, component) with component = min id reachable; min-label
     propagation with path halving, to fixpoint.
 
-    Size-guarded fast path: at or below :data:`MAX_LOCAL_CC_EDGES` edges
-    the edge list is broadcast-class, so the components are solved with a
-    driver-side union-find in one pass —
-    a handful of Spark jobs instead of ~2 jobs per fixpoint round, which
+    Size-guarded fast path: the node ids are materialized once (both the
+    probe and the labelling read them), and the edges whose endpoints are
+    both node ids (a semi-join on each endpoint inside the plan — null and
+    foreign endpoints drop out, as they never equi-join in the fixpoint)
+    are collected once, capped at ``MAX_LOCAL_CC_EDGES + 1``.  At or below
+    the ceiling the edge list is broadcast-class, so the components are
+    solved with a driver-side union-find and the node ids are labelled by
+    one broadcast left join (an id on no edge is its own component) — a
+    handful of Spark jobs instead of ~2 jobs per fixpoint round, which
     dominates wall time on small graphs (the identity graph is an
-    aggregate: |distinct ids| ≪ |events|).  Above the guard the
+    aggregate: |distinct ids| ≪ |events|).  The local route ignores
+    ``seed``: union-find needs no head start.  Above the guard the
     distributed fixpoint below runs unchanged; both paths share the
     min-label contract and are pinned equal by test (which sets the
     constant to 0 to force the distributed path).
@@ -186,38 +192,30 @@ def connected_components(
     """
     limit = MAX_LOCAL_CC_EDGES
     if limit > 0:
-        probe = edges.select("a", "b").limit(limit + 1).collect()
+        # one stored copy, so both semi-joins share one broadcast and the
+        # labelling join below scans blocks instead of re-deriving nodes
+        ids = nodes.select("id").localCheckpoint()
+        e = edges.select("a", "b")
+        probe = (
+            e.join(ids, e["a"] == ids["id"], "left_semi")
+            .join(ids, e["b"] == ids["id"], "left_semi")
+            .limit(limit + 1)
+            .collect()
+        )
         if len(probe) <= limit:
             # Driver memory is bounded by the EDGE guard alone: only the
-            # edge-incident ids are collected (≤ 2·|E|), never the nodes
-            # table — the thin-graph-at-scale case is exactly |V| huge
-            # with |E| small, and isolated nodes resolve distributed via
-            # an anti-join (id = component, no materialization).
-            spark = nodes.sparkSession
-            out_schema = nodes.select("id", F.col("id").alias("component")).schema
-            # null endpoints never equi-join in the distributed fixpoint —
-            # drop them here too (and keep sorted() away from None)
-            probe = [r for r in probe if r[0] is not None and r[1] is not None]
-            endpoint_ids = sorted({x for r in probe for x in (r[0], r[1])})
-            inc_df = local_df(
-                spark, [(i,) for i in endpoint_ids], nodes.select("id").schema
+            # edge-incident ids are held (≤ 2·|E|), never the nodes table
+            # — the thin-graph-at-scale case is exactly |V| huge with |E|
+            # small.
+            incident = sorted({x for r in probe for x in r})
+            rows = _local_components([(n,) for n in incident], probe)
+            labels = local_df(
+                nodes.sparkSession, rows, ids.select("id", F.col("id").alias("component")).schema
             )
-            # endpoints that are REAL nodes — matching the distributed
-            # fixpoint, which neither labels nor propagates through ids
-            # absent from `nodes`
-            node_inc = {
-                r[0]
-                for r in nodes.join(inc_df, "id", "left_semi").select("id").collect()
-            }
-            local_edges = [
-                (r[0], r[1]) for r in probe if r[0] in node_inc and r[1] in node_inc
-            ]
-            rows = _local_components([(n,) for n in sorted(node_inc)], local_edges)
-            labels = local_df(spark, rows, out_schema)
-            isolated_rest = nodes.join(labels.select("id"), "id", "left_anti").select(
-                "id", F.col("id").alias("component")
+            return ids.join(F.broadcast(labels), "id", "left").select(
+                "id", F.coalesce(F.col("component"), F.col("id")).alias("component")
             )
-            return labels.unionByName(isolated_rest)
+        nodes = ids
 
     sym = edges.select("a", "b").unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
     sym.cache()
@@ -297,9 +295,8 @@ def merge_components(
     the standard label-map contraction.  At 100 TB this is the difference
     between reprocessing a petabyte-class accumulated edge log per refresh
     and touching only |ids| labels + the day's delta (the streaming
-    identity stage's seeded-recompute, `streaming/pipeline.py:210`, still
-    rescans accumulated edges; this is the batch-refresh twin that does
-    not).  Convergence is fast by construction: the star forest has depth
+    identity stage, ``CdpIdentityStage``, folds each micro-batch in this
+    way).  Convergence is fast by construction: the star forest has depth
     1, so only components actually bridged by delta edges move labels.
     Equivalence with a full recompute is pinned by ``TestMergeComponents``
     and by the `identity_components_incremental` registry query, which
@@ -326,12 +323,16 @@ def resolve_profiles(cvalid: DataFrame, comp: DataFrame) -> DataFrame:
     )
 
 
+#: PageRank's damping factor (the textbook 0.85).
+PAGERANK_DAMPING = 0.85
+#: Supersteps between two frontier checkpoints (see :func:`pagerank`).
+PAGERANK_CHECKPOINT_EVERY = 2
+
+
 def pagerank(
     nodes: DataFrame,
     edges: DataFrame,
     iters: int = 10,
-    damping: float = 0.85,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Power-iteration PageRank over an undirected edge list — ranks hub
     identifiers (ids that co-occur with many well-connected ids), the
@@ -347,7 +348,7 @@ def pagerank(
       PageRank step; dangling (degree-0) mass is re-spread uniformly via
       a 1-row aggregate broadcast-joined back (the textbook dangling-node
       treatment, so ranks keep summing to 1);
-    * ``checkpoint_every`` MATERIALIZES the frontier every K rounds
+    * ``PAGERANK_CHECKPOINT_EVERY`` MATERIALIZES the frontier every K rounds
       (eager ``localCheckpoint``) — non-optional in spirit: each round
       references the previous ranks twice (contribution + dangling), so
       a fully lazy build doubles the logical TREE per round and Catalyst
@@ -413,8 +414,8 @@ def pagerank(
                 "deg",
                 "_n",
                 (
-                    (1.0 - damping) / F.col("_n")
-                    + damping
+                    (1.0 - PAGERANK_DAMPING) / F.col("_n")
+                    + PAGERANK_DAMPING
                     * (
                         F.coalesce(F.col("inflow"), F.lit(0.0))
                         + F.col("_dangle") / F.col("_n")
@@ -422,7 +423,7 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iters:
+        if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and i + 1 < iters:
             ranks = ranks.localCheckpoint()
     # final materialization makes the result self-contained so sym can be
     # released before the consumer runs its action
@@ -502,7 +503,7 @@ def edge_support(cvalid: DataFrame) -> DataFrame:
     )
 
 
-def canonical_sessions(evprof: DataFrame, gap_ms: int = 30 * 60 * 1000) -> DataFrame:
+def canonical_sessions(evprof: DataFrame) -> DataFrame:
     """Cross-device sessionization: gap-based sessions keyed by the
     identity graph's canonical ``profile_id`` instead of any single raw
     identifier — the stitched-journey view the CDP identity layer exists
@@ -516,11 +517,11 @@ def canonical_sessions(evprof: DataFrame, gap_ms: int = 30 * 60 * 1000) -> DataF
     broadcast join) and the memoized component fixpoint; here one
     shuffle on profile_id serves both the ordering window and the
     session rollup."""
-    from pulseboard_spark.operators.sessions import session_numbers
+    from pulseboard_spark.operators.sessions import SESSION_GAP_MS, session_numbers
 
     pid = F.coalesce(F.col("nuser"), F.col("nanon"), F.col("nemail"))
     base = evprof.select("profile_id", "event_id", "ts_ms", pid.alias("rid"))
-    s = session_numbers(base, "profile_id", gap_ms)
+    s = session_numbers(base, "profile_id", SESSION_GAP_MS)
     return (
         s.groupBy("profile_id", "session_no")
         .agg(

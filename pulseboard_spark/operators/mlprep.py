@@ -55,10 +55,8 @@ def group_moments(df: DataFrame, value: str, by: Sequence[str]) -> DataFrame:
     )
 
 
-def standardize(
-    df: DataFrame, value: str, by: Sequence[str], z_col: str = "zscore"
-) -> DataFrame:
-    """Attach the per-group z-score of ``value`` to every row (NULL where
+def standardize(df: DataFrame, value: str, by: Sequence[str]) -> DataFrame:
+    """Attach the per-group z-score of ``value`` to every row as ``zscore`` (NULL where
     the value is NULL or the group is degenerate: n < 2 or zero variance).
     Stats ride a broadcast join back onto the fact — one scan, no fact
     shuffle."""
@@ -69,17 +67,17 @@ def standardize(
     )
     return (
         df.join(F.broadcast(stats), by, "left")
-        .withColumn(z_col, z)
+        .withColumn("zscore", z)
         .drop("n", "mean", "std")
     )
 
 
-def value_outliers(ev: DataFrame, threshold: float = 3.0) -> DataFrame:
-    """Events whose value is a >N-sigma outlier within its event type —
+def value_outliers(ev: DataFrame) -> DataFrame:
+    """Events whose value is a >3-sigma outlier within its event type —
     the query-shaped face of :func:`standardize`."""
     z = standardize(ev, "value", ["type"])
     return (
-        z.where(F.abs(F.col("zscore")) > threshold)
+        z.where(F.abs(F.col("zscore")) > 3.0)
         .select(
             "event_id",
             "entity_id",
@@ -266,15 +264,15 @@ def value_decile_profile(ev: DataFrame) -> DataFrame:
     )
 
 
-def value_histogram(ev: DataFrame, n_bins: int = 20) -> DataFrame:
-    """Per-type equal-width histogram of ``value`` (the feature-profiling
+def value_histogram(ev: DataFrame) -> DataFrame:
+    """Per-type 20-bin equal-width histogram of ``value`` (the feature-profiling
     pass a training pipeline runs before choosing clips/transforms).
 
     Two-phase: the per-type min/max is a tiny aggregate broadcast back
     onto the fact — the fact table itself is shuffled exactly once, for
     the final (type, bin) count.  Bin index is
-    ``floor((v - min) / ((max - min) / n_bins))`` clamped to the last
-    bin so v == max lands in bin n-1; a degenerate type (min == max)
+    ``floor((v - min) / ((max - min) / 20))`` clamped to the last
+    bin so v == max lands in bin 19; a degenerate type (min == max)
     collapses to bin 0.  All arithmetic is double-precision IEEE in a
     fixed operation order so the DuckDB oracle reproduces it bit-exactly.
     """
@@ -284,14 +282,14 @@ def value_histogram(ev: DataFrame, n_bins: int = 20) -> DataFrame:
     stats = vals.groupBy("type").agg(
         F.min("v").alias("vmin"), F.max("v").alias("vmax")
     )
-    width = (F.col("vmax") - F.col("vmin")) / F.lit(float(n_bins))
+    width = (F.col("vmax") - F.col("vmin")) / F.lit(20.0)
     binned = vals.join(F.broadcast(stats), "type").withColumn(
         "bin",
         F.when(F.col("vmax") == F.col("vmin"), F.lit(0))
         .otherwise(
             F.least(
                 F.floor((F.col("v") - F.col("vmin")) / width),
-                F.lit(n_bins - 1),
+                F.lit(19),
             )
         )
         .cast("int"),
@@ -317,14 +315,14 @@ def _hist_median(hist: DataFrame, key: str, valcol: str, cnt: str, out: str) -> 
     )
 
 
-def mad_outliers(ev: DataFrame, k: float = 3.0) -> DataFrame:
+def mad_outliers(ev: DataFrame) -> DataFrame:
     """Robust per-type outlier stats via median absolute deviation.
 
     Unlike the z-score path (:func:`standardize`), MAD is immune to the
     outliers it hunts.  Medians are LOWER DISCRETE (:func:`_hist_median`)
     — actual data elements, engine-exact with no rounding at the surface —
     then median of |v − med|; a value is an outlier when
-    |v − med| > k · 1.4826 · MAD (1.4826 scales MAD to σ under
+    |v − med| > 3 · 1.4826 · MAD (1.4826 scales MAD to σ under
     normality).  Degenerate types (MAD = 0) flag every v ≠ median.
 
     The fact is scanned and aggregated ONCE — into the per-(type, value)
@@ -366,7 +364,7 @@ def mad_outliers(ev: DataFrame, k: float = 3.0) -> DataFrame:
     mad = _hist_median(ahist, "type", "adev", "_c", "mad").join(med, "type").cache()
     flagged = hist.join(F.broadcast(mad), "type").withColumn(
         "is_out",
-        F.abs(F.col("v") - F.col("med")) > F.lit(k) * F.lit(1.4826) * F.col("mad"),
+        F.abs(F.col("v") - F.col("med")) > F.lit(3.0) * F.lit(1.4826) * F.col("mad"),
     )
     return (
         flagged.groupBy("type")
@@ -391,10 +389,14 @@ def mad_outliers(ev: DataFrame, k: float = 3.0) -> DataFrame:
     )
 
 
-def rfm_scores(ev: DataFrame, n_tiles: int = 5) -> DataFrame:
+#: Quantile buckets of each RFM score (1..RFM_TILES).
+RFM_TILES = 5
+
+
+def rfm_scores(ev: DataFrame) -> DataFrame:
     """RFM behavioral features: per entity, recency (last event), frequency
     (event count), monetary (decimal-exact value sum), each quantile-scored
-    into ``n_tiles`` buckets, plus the concatenated RFM segment label —
+    into ``RFM_TILES`` buckets, plus the concatenated RFM segment label —
     the classic CDP-to-ML feature block.
 
     The three rankings are ONE ranking: the per-entity aggregate unpivots
@@ -429,29 +431,27 @@ def rfm_scores(ev: DataFrame, n_tiles: int = 5) -> DataFrame:
     )
     if plan_probe(agg, "rfm:n_entities", agg.count) <= MAX_SINGLE_PARTITION_RANK_ROWS:
         ranked = long.withColumn(
-            "s", F.ntile(n_tiles).over(Window.partitionBy("metric").orderBy("v", "entity_id"))
+            "s", F.ntile(RFM_TILES).over(Window.partitionBy("metric").orderBy("v", "entity_id"))
         )
     else:
-        ranked = distributed_ntile(long, ["v", "entity_id"], n_tiles, "s", by=["metric"])
+        ranked = distributed_ntile(long, ["v", "entity_id"], RFM_TILES, "s", by=["metric"])
     scores = [F.max(F.when(F.col("metric") == s, F.col("s"))).cast("int").alias(s) for s in metrics]
     return ranked.groupBy("entity_id").agg(
         *[F.max(c).alias(c) for c in metrics.values()], *scores
     ).withColumn("rfm", F.concat(*[F.col(s).cast("string") for s in metrics]))
 
 
-def value_drift_psi(
-    ev: DataFrame, n_bins: int = 10, value_rows: DataFrame | None = None
-) -> DataFrame:
+def value_drift_psi(ev: DataFrame, value_rows: DataFrame | None = None) -> DataFrame:
     """Population stability index per event type: how far the value
     distribution drifted between the first and second half of the time
     range — the standard feature-drift monitor a training pipeline runs
     between corpus snapshots.
 
     Periods split at the integer midpoint of the global [min_ts, max_ts];
-    both halves share fixed equal-width bins from per-type global
+    both halves share 10 fixed equal-width bins from per-type global
     min/max (broadcast stats — the fact shuffles once, for the final
     (type, bin) count).  Laplace-smoothed shares avoid ln(0); each bin's
-    PSI term is rounded then summed through DECIMAL so the ≤ n_bins
+    PSI term is rounded then summed through DECIMAL so the ≤ 10
     additions are order-insensitive and engine-exact.
 
     Physical shape (r10): TWO passes over the fact, the minimum — one
@@ -500,11 +500,11 @@ def value_drift_psi(
             F.when(F.col("ts_ms") < F.col("mid_ms"), F.lit("a")).otherwise(F.lit("b")).alias("period"),
         )
     )
-    width = (F.col("vmax") - F.col("vmin")) / F.lit(float(n_bins))
+    width = (F.col("vmax") - F.col("vmin")) / F.lit(10.0)
     binned = vals.join(F.broadcast(stats.select("type", "vmin", "vmax")), "type").withColumn(
         "bin",
         F.when(F.col("vmax") == F.col("vmin"), F.lit(0))
-        .otherwise(F.least(F.floor((F.col("v") - F.col("vmin")) / width), F.lit(n_bins - 1)))
+        .otherwise(F.least(F.floor((F.col("v") - F.col("vmin")) / width), F.lit(9)))
         .cast("int"),
     )
     wide = binned.groupBy("type", "bin").agg(
@@ -515,8 +515,8 @@ def value_drift_psi(
     # |type × bins| table — no third fact pass, no broadcast stats join
     wt = Window.partitionBy("type")
     j = wide.withColumn("n_a", F.sum("a").over(wt)).withColumn("n_b", F.sum("b").over(wt))
-    p = (F.col("a") + F.lit(0.5)) / (F.col("n_a") + F.lit(0.5) * n_bins)
-    q = (F.col("b") + F.lit(0.5)) / (F.col("n_b") + F.lit(0.5) * n_bins)
+    p = (F.col("a") + F.lit(0.5)) / (F.col("n_a") + F.lit(0.5) * 10)
+    q = (F.col("b") + F.lit(0.5)) / (F.col("n_b") + F.lit(0.5) * 10)
     term = F.round((p - q) * F.log(p / q), 10).cast("decimal(27,12)")
     return j.groupBy("type").agg(
         F.min("n_a").alias("n_a"),
@@ -554,18 +554,12 @@ def label_balance(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def contrastive_pairs(
-    documents: DataFrame,
-    pos_min_ppm: int = 300_000,
-    pos_max_ppm: int = 950_000,
-    neg_buckets: int = 50,
-    pairs: DataFrame | None = None,
-) -> DataFrame:
+def contrastive_pairs(documents: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
     """Contrastive training-pair construction over the corpus: positives
     are verified near-dup pairs whose Jaccard sits in the "similar but
-    not identical" band (paraphrase-grade, below the dedup threshold);
-    negatives are deterministic random-ish pairings — consecutive doc_ids
-    within a stable hash bucket — anti-joined against the candidate
+    not identical" band [0.30, 0.95) (paraphrase-grade, below the dedup
+    threshold); negatives are deterministic random-ish pairings —
+    consecutive doc_ids within one of 50 stable hash buckets — anti-joined against the candidate
     graph so no accidental near-dup leaks in with a ``neg`` label.
     The output (doc_a, doc_b, label) is the input a bi-encoder /
     cross-encoder fine-tune consumes.
@@ -587,13 +581,12 @@ def contrastive_pairs(
     if pairs is None:
         pairs = minhash_near_dups(documents)
     pos = pairs.filter(
-        (F.col("jaccard_ppm") >= int(pos_min_ppm))
-        & (F.col("jaccard_ppm") < int(pos_max_ppm))
+        (F.col("jaccard_ppm") >= 300_000) & (F.col("jaccard_ppm") < 950_000)
     ).select("doc_a", "doc_b", F.lit("pos").alias("label"))
     w = Window.partitionBy("bucket").orderBy("doc_id")
     nxt = (
         documents.select(
-            "doc_id", hash_bucket(F.col("doc_id"), neg_buckets).alias("bucket")
+            "doc_id", hash_bucket(F.col("doc_id"), 50).alias("bucket")
         )
         .withColumn("doc_b", F.lead("doc_id").over(w))
         .filter(F.col("doc_b").isNotNull())

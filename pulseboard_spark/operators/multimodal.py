@@ -14,7 +14,6 @@ repartitioning on a content key before the mapInPandas pass.
 
 from __future__ import annotations
 
-import functools
 import struct
 import zlib
 from collections.abc import Iterator
@@ -345,8 +344,12 @@ FRAME_SCHEMA = (
 )
 
 
-def sampled_frame_features(media: DataFrame, every_n: int = 2) -> DataFrame:
-    """REAL frame sampling: decode every ``every_n``-th frame via the O(1)
+#: Frame stride of the video samplers: every FRAME_EVERY_N-th frame is decoded.
+FRAME_EVERY_N = 2
+
+
+def sampled_frame_features(media: DataFrame) -> DataFrame:
+    """REAL frame sampling: decode every ``FRAME_EVERY_N``-th frame via the O(1)
     container seek and emit integer pixel sums per sampled frame — the
     video twin of :func:`decoded_features`.  Unsampled frames are never
     materialized (the point of a sampler).  A payload that fails the
@@ -355,13 +358,11 @@ def sampled_frame_features(media: DataFrame, every_n: int = 2) -> DataFrame:
     the stage never dies on a corrupt clip."""
 
     return media.select("doc_id", "payload").mapInPandas(
-        functools.partial(_frame_feature_batches, every_n=every_n), schema=FRAME_SCHEMA
+        _frame_feature_batches, schema=FRAME_SCHEMA
     )
 
 
-def _frame_feature_batches(
-    it: Iterator[pd.DataFrame], every_n: int = 2
-) -> Iterator[pd.DataFrame]:
+def _frame_feature_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in it:
         out = {c: [] for c in ("doc_id", "frame_index", "n_frames",
                                "width", "height", "sum_px", "decoded")}
@@ -376,7 +377,7 @@ def _frame_feature_batches(
                     out[c].append(None)
                 out["decoded"].append(False)
                 continue
-            for f in range(0, n_frames, every_n):
+            for f in range(0, n_frames, FRAME_EVERY_N):
                 nf, w, h, rgb = decode_ppm_video_frame(payload, f)
                 px = np.frombuffer(rgb, dtype=np.uint8).astype(np.int64)
                 out["doc_id"].append(int(doc_id))
@@ -389,21 +390,18 @@ def _frame_feature_batches(
         yield pd.DataFrame(out)
 
 
-def synth_video_frame_features(documents: DataFrame, every_n: int = 2) -> DataFrame:
+def synth_video_frame_features(documents: DataFrame) -> DataFrame:
     """Fused :func:`synth_video` → :func:`sampled_frame_features`: one
     Arrow stage, clip payloads never cross the Python↔JVM boundary (guide
     §4/§8) — row-identical to the chained form by iterator composition of
     the same kernels (pinned by test)."""
     return documents.select("doc_id").mapInPandas(
-        functools.partial(_synth_video_frame_batches, every_n=every_n),
-        schema=FRAME_SCHEMA,
+        _synth_video_frame_batches, schema=FRAME_SCHEMA
     )
 
 
-def _synth_video_frame_batches(
-    it: Iterator[pd.DataFrame], every_n: int = 2
-) -> Iterator[pd.DataFrame]:
-    return _frame_feature_batches(_synth_video_batches(it), every_n=every_n)
+def _synth_video_frame_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    return _frame_feature_batches(_synth_video_batches(it))
 
 
 def synth_audio(documents: DataFrame) -> DataFrame:
@@ -561,22 +559,22 @@ RESIZE_SCHEMA = (
 )
 
 
-def resize_media(media: DataFrame, max_dim: int = 224, *, real_decode: bool = False) -> DataFrame:
-    """Resize stage: aspect-preserving downscale to ``max_dim`` on the long
-    side.  The geometry (out_width/out_height) is exact integer arithmetic;
-    the pixel path is the STUBBED decode seam (``real_decode=True`` raises —
-    no codecs in this container).  The fake payload is a deterministic
-    truncation to out_w·out_h bytes, preserving the real operator's batch
+#: Long-side target of :func:`resize_media`, in pixels.
+RESIZE_MAX_DIM = 224
+
+
+def resize_media(media: DataFrame) -> DataFrame:
+    """Resize stage: aspect-preserving downscale to ``RESIZE_MAX_DIM`` on
+    the long side.  The geometry (out_width/out_height) is exact integer
+    arithmetic; the pixel path is a stub (no codecs in this container):
+    the fake payload is a deterministic truncation to out_w·out_h bytes, preserving the real operator's batch
     shape: binary in, binary out, one Arrow batch at a time, memory bounded
     by batch size × payload size.
     """
+    max_dim = RESIZE_MAX_DIM
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if real_decode:
-                raise NotImplementedError(
-                    "media resize requires image codecs not present in this environment"
-                )
             w = pdf["meta_width"].astype("int64")
             h = pdf["meta_height"].astype("int64")
             long_side = w.combine(h, max)
@@ -602,19 +600,19 @@ def resize_media(media: DataFrame, max_dim: int = 224, *, real_decode: bool = Fa
     return media.mapInPandas(batches, schema=RESIZE_SCHEMA)
 
 
-def frame_sample_plan(media: DataFrame, every_n_bytes: int = 1024) -> DataFrame:
-    """Frame/chunk sampling *plan*: one row per sampled offset, computed
+def frame_sample_plan(media: DataFrame) -> DataFrame:
+    """Frame/chunk sampling *plan*: one row per sampled 1 KiB offset, computed
     without touching payload bytes (pure metadata arithmetic) — the shape
     of a video frame-sampler where the decode stage fills in pixels."""
-    n = (F.col("meta_n_bytes") / every_n_bytes).cast("int")
+    n = (F.col("meta_n_bytes") / 1024).cast("int")
     return media.select(
         "doc_id",
         "media_type",
         F.explode(F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)))).alias("chunk_index"),
-    ).withColumn("byte_offset", (F.col("chunk_index") * every_n_bytes).cast("bigint"))
+    ).withColumn("byte_offset", (F.col("chunk_index") * 1024).cast("bigint"))
 
 
-def media_text_pairs(documents: DataFrame, caption_chars: int = 100) -> DataFrame:
+def media_text_pairs(documents: DataFrame) -> DataFrame:
     """Multimodal training-pair manifest: one row per (media payload,
     caption) pair with the quality gate and split assignment a
     vision/audio-text training job consumes.
@@ -622,7 +620,7 @@ def media_text_pairs(documents: DataFrame, caption_chars: int = 100) -> DataFram
     Chains the multimodal metadata (:func:`synth_media`), the Gopher
     quality gate (`text.gopher_quality`) and the deterministic split
     (`sampling.train_val_test_split`) — captions are the leading
-    ``caption_chars`` characters of the paired text.
+    100 characters of the paired text.
 
     Physical shape (r10): ONE join.  The media metadata, caption, and
     split columns are all per-row projections of the same document row
@@ -645,7 +643,7 @@ def media_text_pairs(documents: DataFrame, caption_chars: int = 100) -> DataFram
             "doc_id",
             _media_type_col().alias("media_type"),
             F.length(F.encode(F.col("text"), "UTF-8")).cast("bigint").alias("meta_n_bytes"),
-            F.substring(F.col("text"), 1, caption_chars).alias("caption"),
+            F.substring(F.col("text"), 1, 100).alias("caption"),
         ),
         "doc_id",
     )

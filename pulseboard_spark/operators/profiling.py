@@ -11,10 +11,6 @@ per-partition distinct pairs — then by column.  A wide multi-
 rewrite with ONE global group, funnelling every distinct state into a
 single reducer task (measured 2.7× slower at sf0.1 even on local[32];
 at fact scale it is a straight single-task bottleneck).
-
-The approx path keeps the wide one-row aggregate: HLL++ sketches merge
-associatively, so partial aggregation stays distributed without Expand —
-constant-size state per column (cf. `registry.approx_user_counts_q`).
 """
 
 from __future__ import annotations
@@ -25,29 +21,14 @@ from pyspark.sql import functions as F
 from pulseboard_spark.session import local_df
 
 
-def profile_table(df: DataFrame, approx: bool = False, rsd: float = 0.05) -> DataFrame:
+def profile_table(df: DataFrame) -> DataFrame:
     """One row per column: total rows, non-null count, distinct count —
-    computed in a single pass over the table.  ``approx=True`` swaps the
-    exact per-(column, value) dedup for HLL++ sketches
-    (``approx_count_distinct``, relative error ``rsd``) — the fact-scale
-    setting when exact distinct counts aren't required.
+    computed in a single pass over the table.
 
     Exact distinct counts are taken over each value's string image —
     injective for the scalar types profiled here (Spark's casts are
     round-trippable), and it lets every column ride one explode."""
     cols = df.columns
-    if approx:
-        aggs = [F.count(F.lit(1)).alias("__n_rows")]
-        for c in cols:
-            aggs.append(F.count(F.col(c)).alias(f"__nn_{c}"))
-            aggs.append(F.approx_count_distinct(F.col(c), rsd).alias(f"__nd_{c}"))
-        wide = df.agg(*aggs)
-        stack_args = ", ".join(f"'{c}', __nn_{c}, __nd_{c}" for c in cols)
-        return wide.selectExpr(
-            "__n_rows as n_rows",
-            f"stack({len(cols)}, {stack_args}) as (column_name, n_nonnull, n_distinct)",
-        ).select("column_name", "n_rows", "n_nonnull", "n_distinct")
-
     # posexplode keeps null elements, so count(*) per column index is the
     # table's row count — no second scan for n_rows.
     arr = F.array(*[F.col(c).cast("string") for c in cols])
@@ -62,8 +43,7 @@ def profile_table(df: DataFrame, approx: bool = False, rsd: float = 0.05) -> Dat
     )
     # names scaffold (|columns| literal rows, broadcast-joined): an EMPTY
     # table explodes to zero pairs, but the census contract — like the
-    # wide-agg form, the approx path, and the oracle's N UNION branches —
-    # is one all-zeros row per column, not a vanishing schema.
+    # oracle's N UNION branches — is one all-zeros row per column, not a vanishing schema.
     names_df = local_df(
         df.sparkSession, [(i, c) for i, c in enumerate(cols)], "i int, column_name string"
     )

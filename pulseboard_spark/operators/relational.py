@@ -32,26 +32,23 @@ def asof_join(
     right: DataFrame,
     on: Sequence[str],
     ts: str = "ts_ms",
-    right_cols: Sequence[str] | None = None,
     right_order: str | None = None,
-    tolerance_ms: int | None = None,
 ) -> DataFrame:
     """Backward as-of join: for every left row, attach the most recent right
-    row with ``right.ts <= left.ts`` on the same key (at-or-before match).
+    row with ``right.ts <= left.ts`` on the same key (at-or-before match),
+    carrying every right column but the key and ``ts``.
 
     Deterministic by construction: right rows at exactly the left row's ts
     DO match; among right rows sharing (key, ts), the one with the greatest
-    ``right_order`` wins.  ``tolerance_ms`` nulls out matches older than
-    ``left.ts - tolerance_ms`` (the match row is kept, its payload nulled —
-    left cardinality is always preserved, like a left join).
+    ``right_order`` wins.  Left cardinality is always preserved, like a
+    left join.
 
     Implementation: tag both sides, union, and take ``last(payload,
     ignorenulls=True)`` over a per-key (ts, side, order) rows-frame — the
     classic scalable as-of formulation (one shuffle, no pair explosion).
     """
     on = list(on)
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in on and c != ts]
+    right_cols = [c for c in right.columns if c not in on and c != ts]
     payload_fields = [F.col(c).alias(c) for c in right_cols] + [
         F.col(ts).alias("_asof_matched_ts")
     ]
@@ -75,15 +72,6 @@ def asof_join(
     matched = unioned.withColumn(
         "_asof_m", F.last("_asof_payload", ignorenulls=True).over(w)
     ).filter(F.col("_asof_side") == 1)
-    if tolerance_ms is not None:
-        matched = matched.withColumn(
-            "_asof_m",
-            F.when(
-                F.col("_asof_m._asof_matched_ts")
-                >= F.col(ts) - F.lit(tolerance_ms),
-                F.col("_asof_m"),
-            ),
-        )
     out_cols = [c for c in left.columns]
     out = matched.select(
         *out_cols,
@@ -111,8 +99,8 @@ def top_n_per_group(
     )
 
 
-def brand_part_revenue_topn(lineitem: DataFrame, part: DataFrame, n: int = 3) -> DataFrame:
-    """Top-N parts by revenue within each brand.
+def brand_part_revenue_topn(lineitem: DataFrame, part: DataFrame) -> DataFrame:
+    """Top-3 parts by revenue within each brand.
 
     Shape (r11): aggregate the fact by its OWN long key first, attach the
     dim after.  ``p_partkey`` is the part dim's primary key, so joining
@@ -143,7 +131,7 @@ def brand_part_revenue_topn(lineitem: DataFrame, part: DataFrame, n: int = 3) ->
     )
     joined = per_part.join(F.broadcast(part.select("p_partkey", "p_brand")), "p_partkey")
     ranked = top_n_per_group(
-        joined, ["p_brand"], F.col("revenue_u6"), n, tiebreak=["p_partkey"]
+        joined, ["p_brand"], F.col("revenue_u6"), 3, tiebreak=["p_partkey"]
     )
     return ranked.select(
         "p_brand",
@@ -332,16 +320,15 @@ def value_stats_per_type(ev: DataFrame) -> DataFrame:
     )
 
 
-def heavy_hitters(
-    df: DataFrame,
-    key: Sequence[str],
-    value: str,
-    min_share_bp: int = 500,
-) -> DataFrame:
+#: :func:`heavy_hitters`' share threshold, in basis points.
+HEAVY_HITTER_MIN_SHARE_BP = 500
+
+
+def heavy_hitters(df: DataFrame, key: Sequence[str], value: str) -> DataFrame:
     """Exact frequent items: every ``value`` whose share of its key group
-    is >= ``min_share_bp`` basis points, with count and integer-bp share.
-    Threshold and share are pure integer arithmetic (``n * 10000`` vs
-    ``min_share_bp * n_total``) so the emitted values and the boundary
+    is >= ``HEAVY_HITTER_MIN_SHARE_BP`` basis points, with count and
+    integer-bp share.  Threshold and share are pure integer arithmetic
+    (``n * 10000`` vs ``threshold * n_total``) so the emitted values and the boundary
     predicate are engine-exact — no float rounding at the hash boundary.
 
     Same two-phase shape as :func:`group_mode` — the fact is reduced to a
@@ -359,7 +346,7 @@ def heavy_hitters(
     return (
         counts.withColumn("n_total", tot)
         .withColumn("share_bp", F.expr("(n * 10000) div n_total"))
-        .where(F.col("n") * 10000 >= F.lit(int(min_share_bp)) * F.col("n_total"))
+        .where(F.col("n") * 10000 >= F.lit(HEAVY_HITTER_MIN_SHARE_BP) * F.col("n_total"))
         .select(*key, value, "n", "n_total", "share_bp")
     )
 

@@ -26,9 +26,9 @@ from pulseboard_spark.operators.windows import with_trailing_aggs
 
 _R = lambda c, n=4: F.round(c, n)  # noqa: E731 — oracle-stable rounding
 
-#: Rule thresholds as CONFIG, not code — defaults are the reference's
-#: (`core/Rules.kt` constants / `application.yml`); every ``*_eval`` takes
-#: them as keyword overrides so rules are tunable without touching the
+#: Rule thresholds as CONFIG, not code — the reference's values
+#: (`core/Rules.kt` constants / `application.yml`); each ``*_eval`` reads
+#: them at call time, so a threshold is one constant away from the
 #: expression compiler.
 R1_MULTIPLIER = 3.0
 R1_MIN_RATE = 20.0
@@ -38,13 +38,11 @@ R4_AVG_MULTIPLIER = 10.0
 R4_FLOOR = 1000.0
 
 
-def r1_velocity_eval(
-    entity: DataFrame, multiplier: float = R1_MULTIPLIER, min_rate: float = R1_MIN_RATE
-) -> DataFrame:
-    """R1 velocity spike: rate_now > multiplier·avg_5m AND rate_now >= min_rate."""
+def r1_velocity_eval(entity: DataFrame) -> DataFrame:
+    """R1 velocity spike: rate_now > R1_MULTIPLIER·avg_5m AND rate_now >= R1_MIN_RATE."""
     df = with_trailing_aggs(entity)
-    threshold = F.col("avg_5m") * multiplier
-    fired = (F.col("rate_1m") > threshold) & (F.col("rate_1m") >= min_rate)
+    threshold = F.col("avg_5m") * R1_MULTIPLIER
+    fired = (F.col("rate_1m") > threshold) & (F.col("rate_1m") >= R1_MIN_RATE)
     return df.select(
         "event_id",
         "entity_id",
@@ -59,10 +57,8 @@ def r1_velocity_eval(
     )
 
 
-def r2_value_eval(
-    entity: DataFrame, multiplier: float = R2_MULTIPLIER, min_count: int = R2_MIN_COUNT
-) -> DataFrame:
-    """R2 value spike: value > multiplier·ewma_updated AND count_60s >= min_count.
+def r2_value_eval(entity: DataFrame) -> DataFrame:
+    """R2 value spike: value > R2_MULTIPLIER·ewma_updated AND count_60s >= R2_MIN_COUNT.
 
     Null-valued events are skipped (`core/Rules.kt:66`).
 
@@ -76,8 +72,8 @@ def r2_value_eval(
         carry=["profile", "ts_ms", "count_60s"],
         clustered=True,
     )
-    threshold = F.col("ewma") * multiplier
-    fired = (F.col("value") > threshold) & (F.col("count_60s") >= min_count)
+    threshold = F.col("ewma") * R2_MULTIPLIER
+    fired = (F.col("value") > threshold) & (F.col("count_60s") >= R2_MIN_COUNT)
     return df.select(
         "event_id",
         "entity_id",
@@ -178,20 +174,18 @@ def r3_geo_device_eval(entity: DataFrame) -> DataFrame:
     )
 
 
-def r4_exfil_eval(
-    entity: DataFrame, avg_multiplier: float = R4_AVG_MULTIPLIER, floor: float = R4_FLOOR
-) -> DataFrame:
+def r4_exfil_eval(entity: DataFrame) -> DataFrame:
     """R4 exfil (SASE only): sum_30s > max(floor(10·avg_1h), 1000).
 
     The threshold is the reference's P95 *fallback* (`core/Rules.kt:159-200`);
-    the true trailing percentile is exposed separately
-    (windows.trailing_percentile).  Severity is always HIGH."""
+    the true trailing percentile is the ``win_p95_1h`` query.  Severity is
+    always HIGH."""
     df = (
         with_trailing_aggs(entity)
         .filter((F.col("profile") == "SASE") & F.col("value").isNotNull())
     )
     p95_threshold = F.greatest(
-        F.floor(F.col("avg_1h") * avg_multiplier).cast("double"), F.lit(floor)
+        F.floor(F.col("avg_1h") * R4_AVG_MULTIPLIER).cast("double"), F.lit(R4_FLOOR)
     )
     fired = F.col("sum_30s") > p95_threshold
     return df.select(

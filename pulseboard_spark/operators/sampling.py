@@ -35,9 +35,9 @@ def hash_bucket(col: Column, buckets: int = 100) -> Column:
     return (hash_int(col) % buckets).cast("int")
 
 
-def hash_sample(df: DataFrame, key: str, pct: int, buckets: int = 100) -> DataFrame:
+def hash_sample(df: DataFrame, key: str, pct: int) -> DataFrame:
     """Deterministic ~pct% sample: rows whose hash bucket < pct."""
-    return df.withColumn("bucket", hash_bucket(F.col(key), buckets)).filter(
+    return df.withColumn("bucket", hash_bucket(F.col(key))).filter(
         F.col("bucket") < pct
     )
 
@@ -54,15 +54,9 @@ def stratified_sample(
     )
 
 
-def train_val_test_split(
-    df: DataFrame,
-    key: str,
-    val_pct: int = 10,
-    test_pct: int = 10,
-    buckets: int = 100,
-) -> DataFrame:
-    """Deterministic corpus split assignment: the first ``test_pct`` hash
-    buckets are 'test', the next ``val_pct`` 'val', the rest 'train'.
+def train_val_test_split(df: DataFrame, key: str) -> DataFrame:
+    """Deterministic corpus split assignment: the first 10 hash buckets
+    are 'test', the next 10 'val', the rest 'train'.
 
     Same stable-hash contract as :func:`hash_sample`: a document's split
     never changes as the corpus grows or repartitions, membership is
@@ -71,10 +65,10 @@ def train_val_test_split(
     prevents test-set leakage across pipeline re-runs.  Pure narrow
     projection, zero shuffle.
     """
-    b = hash_bucket(F.col(key), buckets)
+    b = hash_bucket(F.col(key))
     split = (
-        F.when(b < test_pct, F.lit("test"))
-        .when(b < test_pct + val_pct, F.lit("val"))
+        F.when(b < 10, F.lit("test"))
+        .when(b < 20, F.lit("val"))
         .otherwise(F.lit("train"))
     )
     return df.withColumn("bucket", b).withColumn("split", split)

@@ -29,37 +29,32 @@ from pyspark.sql import functions as F
 from pulseboard_spark.functions.core import lww_order_key
 
 
-def changes_to_intervals(
-    long: DataFrame,
-    keys: Sequence[str],
-    order_col: str = "okey",
-    value_col: str = "value",
-    ts_col: str = "ts_ms",
-) -> DataFrame:
-    """Collapse an ordered (keys…, order, value, ts) change stream into
+def changes_to_intervals(long: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Collapse an ordered (keys…, okey, value, ts_ms) change stream into
     SCD2 intervals: rows where the value differs from the previous value
     open an interval; ``valid_to`` is the next interval's ``valid_from``
     (NULL for the current one); ``version`` numbers intervals per key."""
     key_cols = [F.col(k) for k in keys]
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
+    w = Window.partitionBy(*key_cols).orderBy("okey")
     changed = (
-        long.withColumn("__prev", F.lag(value_col).over(w))
-        .filter(F.col("__prev").isNull() | (F.col("__prev") != F.col(value_col)))
+        long.withColumn("__prev", F.lag("value").over(w))
+        .filter(F.col("__prev").isNull() | (F.col("__prev") != F.col("value")))
         .drop("__prev")
     )
     # Window input here is already reduced to change rows, so the second
     # pass is cheap; same partitioning → no extra exchange.
     return changed.select(
         *keys,
-        value_col,
-        F.col(ts_col).alias("valid_from_ms"),
-        F.lead(ts_col).over(w).alias("valid_to_ms"),
+        "value",
+        F.col("ts_ms").alias("valid_from_ms"),
+        F.lead("ts_ms").over(w).alias("valid_to_ms"),
         F.row_number().over(w).cast("int").alias("version"),
     )
 
 
-def trait_history(evprof: DataFrame, traits: Sequence[str] = ("plan", "country")) -> DataFrame:
-    """SCD2 history of profile traits from resolved IDENTIFY events.
+def trait_history(evprof: DataFrame) -> DataFrame:
+    """SCD2 history of the plan and country profile traits from resolved
+    IDENTIFY events.
 
     Input is the resolved event stream (``resolve_profiles`` output:
     profile_id + cvalid columns).  Traits are unpivoted to long form so one
@@ -72,7 +67,7 @@ def trait_history(evprof: DataFrame, traits: Sequence[str] = ("plan", "country")
         F.array(
             *[
                 F.struct(F.lit(t).alias("trait"), F.col(t).alias("value"))
-                for t in traits
+                for t in ("plan", "country")
             ]
         )
     )
@@ -90,16 +85,11 @@ def trait_history(evprof: DataFrame, traits: Sequence[str] = ("plan", "country")
     return changes_to_intervals(long, ["profile_id", "trait"])
 
 
-def point_in_time_trait(
-    evprof: DataFrame,
-    history: DataFrame,
-    trait: str = "plan",
-    event_ctype: str = "ALIAS",
-) -> DataFrame:
+def point_in_time_trait(evprof: DataFrame, history: DataFrame) -> DataFrame:
     """Point-in-time (temporal) join — the query the SCD2 history exists
-    to answer: for each event, which trait interval was in force at the
-    event's timestamp ("what plan was this profile on when the purchase
-    happened").  Intervals are half-open ``[valid_from, valid_to)`` and
+    to answer: for each ALIAS event, which plan interval was in force at
+    the event's timestamp ("what plan was this profile on when the
+    purchase happened").  Intervals are half-open ``[valid_from, valid_to)`` and
     partition each profile's timeline, so at most one interval matches;
     events before the profile's first recorded value keep a NULL trait
     (left join) rather than dropping.
@@ -109,10 +99,10 @@ def point_in_time_trait(
     equi key and evaluates the range residual in place, so there is no
     interval explosion; the history side is bounded by the number of
     trait *changes*, not events, and broadcasts while small."""
-    ev = evprof.filter(F.col("ctype") == event_ctype).select(
+    ev = evprof.filter(F.col("ctype") == "ALIAS").select(
         "event_id", F.col("ts_ms").alias("event_ms"), "profile_id"
     )
-    h = history.filter(F.col("trait") == trait).select(
+    h = history.filter(F.col("trait") == "plan").select(
         F.col("profile_id").alias("h_profile_id"),
         F.col("value").alias("trait_value"),
         "valid_from_ms",

@@ -28,6 +28,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DAY_MS = 86_400_000
+#: A session closes after this much inactivity (strictly greater gap).
+SESSION_GAP_MS = 30 * 60 * 1000
+#: The ordered funnel every funnel operator walks.
+STEPS = ("view", "click", "purchase")
+#: How far back a conversion looks for its first/last touch.
+ATTRIBUTION_LOOKBACK_MS = DAY_MS
 
 
 def session_numbers(
@@ -54,21 +60,17 @@ def session_numbers(
     )
 
 
-def sessionize(
-    ev: DataFrame,
-    key: str = "entity_id",
-    gap_ms: int = 30 * 60 * 1000,
-) -> DataFrame:
+def sessionize(ev: DataFrame) -> DataFrame:
     """Assign gap-based sessions and aggregate per session.
 
     A new session starts when the gap to the previous event of the same
-    entity exceeds ``gap_ms`` (strictly greater).  Output one row per
-    session: session_id, entity_id, session_start_ms, session_end_ms,
+    entity exceeds ``SESSION_GAP_MS`` (strictly greater).  Output one row
+    per session: session_id, entity_id, session_start_ms, session_end_ms,
     duration_ms, n_events, sum_value.
     """
-    with_sess = session_numbers(ev, key, gap_ms)
+    with_sess = session_numbers(ev, "entity_id", SESSION_GAP_MS)
     return (
-        with_sess.groupBy(key, "session_no")
+        with_sess.groupBy("entity_id", "session_no")
         .agg(
             F.min("ts_ms").alias("session_start_ms"),
             F.max("ts_ms").alias("session_end_ms"),
@@ -78,10 +80,10 @@ def sessionize(
             ).alias("sum_value"),
         )
         .select(
-            F.concat(F.col(key), F.lit("#"), F.col("session_no").cast("string")).alias(
+            F.concat(F.col("entity_id"), F.lit("#"), F.col("session_no").cast("string")).alias(
                 "session_id"
             ),
-            F.col(key),
+            F.col("entity_id"),
             "session_start_ms",
             "session_end_ms",
             (F.col("session_end_ms") - F.col("session_start_ms")).alias("duration_ms"),
@@ -111,28 +113,24 @@ def _step_times(ev: DataFrame, steps: Sequence[str], key: str) -> DataFrame:
     )
 
 
-def funnel(
-    ev: DataFrame,
-    steps: Sequence[str] = ("view", "click", "purchase"),
-    key: str = "entity_id",
-) -> DataFrame:
-    """Ordered k-step funnel: an entity reaches step i when an event of
-    ``steps[i]`` occurs strictly after its step-(i-1) time (first such
-    occurrence counts).  Output one row per step: step_no, step,
-    n_entities, conversion (fraction of step-1 entities, 4 dp).
+def funnel(ev: DataFrame) -> DataFrame:
+    """Ordered k-step funnel over ``STEPS``: an entity reaches step i when
+    an event of ``STEPS[i]`` occurs strictly after its step-(i-1) time
+    (first such occurrence counts).  Output one row per step: step_no,
+    step, n_entities, conversion (fraction of step-1 entities, 4 dp).
     """
-    per_entity = _step_times(ev, steps, key)
+    per_entity = _step_times(ev, STEPS, "entity_id")
     counts = per_entity.agg(
         *[
             F.sum(F.col(f"t{i}").isNotNull().cast("long")).alias(f"n{i}")
-            for i in range(1, len(steps) + 1)
+            for i in range(1, len(STEPS) + 1)
         ]
     )
     stack_args = ", ".join(
-        f"{i}, '{s}', n{i}" for i, s in enumerate(steps, start=1)
+        f"{i}, '{s}', n{i}" for i, s in enumerate(STEPS, start=1)
     )
     return counts.selectExpr(
-        f"stack({len(steps)}, {stack_args}) AS (step_no, step, n_entities)"
+        f"stack({len(STEPS)}, {stack_args}) AS (step_no, step, n_entities)"
     ).select(
         F.col("step_no").cast("int").alias("step_no"),
         "step",
@@ -145,14 +143,14 @@ def funnel(
     )
 
 
-def retention_cohorts(ev: DataFrame, key: str = "entity_id") -> DataFrame:
+def retention_cohorts(ev: DataFrame) -> DataFrame:
     """Weekly retention matrix: cohort_week = the entity's first active
     epoch-week; one output row per (cohort_week, week_offset) counting
     entities from that cohort active in that later week."""
     weekly = ev.select(
-        F.col(key), F.expr(f"ts_ms div {7 * DAY_MS}").alias("week")
+        F.col("entity_id"), F.expr(f"ts_ms div {7 * DAY_MS}").alias("week")
     ).distinct()
-    w = Window.partitionBy(key)
+    w = Window.partitionBy("entity_id")
     with_cohort = weekly.withColumn("cohort_week", F.min("week").over(w))
     return (
         with_cohort.groupBy(
@@ -162,12 +160,8 @@ def retention_cohorts(ev: DataFrame, key: str = "entity_id") -> DataFrame:
     )
 
 
-def funnel_latency(
-    ev: DataFrame,
-    steps: Sequence[str] = ("view", "click", "purchase"),
-    key: str = "entity_id",
-) -> DataFrame:
-    """Time-to-convert between adjacent funnel steps: for every entity
+def funnel_latency(ev: DataFrame) -> DataFrame:
+    """Time-to-convert between adjacent ``STEPS``: for every entity
     that reached step i+1, the gap between its step-i and step-(i+1)
     first-occurrence times (the same strictly-after step times as
     :func:`funnel`) — the "how long does conversion take" companion to
@@ -183,13 +177,11 @@ def funnel_latency(
     (pair, latency_ms) rows — bounded by |converting entities|, and the
     quantile window runs over distinct latency values per pair.
     """
-    if len(steps) < 2:
-        raise ValueError(f"funnel_latency needs >= 2 steps, got {list(steps)!r}")
-    per_entity = _step_times(ev, steps, key)
+    per_entity = _step_times(ev, STEPS, "entity_id")
     pairs = None
-    for i in range(1, len(steps)):
+    for i in range(1, len(STEPS)):
         leg = per_entity.where(F.col(f"t{i + 1}").isNotNull()).select(
-            F.lit(f"{steps[i - 1]}>{steps[i]}").alias("step_pair"),
+            F.lit(f"{STEPS[i - 1]}>{STEPS[i]}").alias("step_pair"),
             (F.col(f"t{i + 1}") - F.col(f"t{i}")).alias("lat_ms"),
         )
         pairs = leg if pairs is None else pairs.unionByName(leg)
@@ -206,16 +198,11 @@ def funnel_latency(
     )
 
 
-def time_to_return(
-    ev: DataFrame,
-    gap_ms: int = 30 * 60 * 1000,
-    key: str = "entity_id",
-    by: str = "profile",
-) -> DataFrame:
+def time_to_return(ev: DataFrame) -> DataFrame:
     """Inter-session return-time stats: for every session after an
     entity's first, the gap between the previous session's end and this
     session's start — the churn-risk signal product teams watch next to
-    the funnel.  Aggregated per ``by`` group (profile by default) with
+    the funnel.  Aggregated per profile with
     the usual engine-exact surfaces: n gaps, lower-discrete median/p90,
     max (ms), and returning-entity count.
 
@@ -224,11 +211,9 @@ def time_to_return(
     entity are tiny), then a (group, gap) histogram; quantiles are
     cumulative-count arithmetic on distinct gap values.
     """
-    sess = sessionize(ev, key=key, gap_ms=gap_ms).select(
-        key, "session_start_ms", "session_end_ms"
-    )
-    groups = ev.select(key, by).distinct()
-    w = Window.partitionBy(key).orderBy("session_start_ms")
+    sess = sessionize(ev).select("entity_id", "session_start_ms", "session_end_ms")
+    groups = ev.select("entity_id", "profile").distinct()
+    w = Window.partitionBy("entity_id").orderBy("session_start_ms")
     # cache(): the histogram and the returning-entity count are two
     # independent consumers of the session-bounded gap table (AQE does not
     # stitch them — the mad_outliers/label_cohesion precedent); the entry
@@ -236,30 +221,28 @@ def time_to_return(
     gaps = (
         sess.withColumn("prev_end", F.lag("session_end_ms").over(w))
         .where(F.col("prev_end").isNotNull())
-        .select(key, (F.col("session_start_ms") - F.col("prev_end")).alias("gap_ms"))
-        .join(groups, key)
+        .select("entity_id", (F.col("session_start_ms") - F.col("prev_end")).alias("gap_ms"))
+        .join(groups, "entity_id")
         .cache()
     )
-    hist = gaps.groupBy(by, "gap_ms").agg(F.count(F.lit(1)).alias("c"))
-    wp = Window.partitionBy(by)
+    hist = gaps.groupBy("profile", "gap_ms").agg(F.count(F.lit(1)).alias("c"))
+    wp = Window.partitionBy("profile")
     cum = hist.withColumn("cum", F.sum("c").over(wp.orderBy("gap_ms"))).withColumn(
         "tot", F.sum("c").over(wp)
     )
-    ents = gaps.groupBy(by).agg(F.count_distinct(key).alias("n_returning"))
-    stats = cum.groupBy(by).agg(
+    ents = gaps.groupBy("profile").agg(F.count_distinct("entity_id").alias("n_returning"))
+    stats = cum.groupBy("profile").agg(
         F.max("tot").alias("n_gaps"),
         F.min(F.when(F.expr("cum >= (tot + 1) div 2"), F.col("gap_ms"))).alias("med_gap_ms"),
         F.min(F.when(F.expr("cum * 10 >= tot * 9"), F.col("gap_ms"))).alias("p90_gap_ms"),
         F.max("gap_ms").alias("max_gap_ms"),
     )
-    return stats.join(ents, by).select(
-        by, "n_returning", "n_gaps", "med_gap_ms", "p90_gap_ms", "max_gap_ms"
+    return stats.join(ents, "profile").select(
+        "profile", "n_returning", "n_gaps", "med_gap_ms", "p90_gap_ms", "max_gap_ms"
     )
 
 
-def session_basket_lift(
-    ev: DataFrame, gap_ms: int = 30 * 60 * 1000, key: str = "entity_id"
-) -> DataFrame:
+def session_basket_lift(ev: DataFrame) -> DataFrame:
     """Market-basket analysis over sessions: for every pair of event
     types that co-occur in a session, support and LIFT — does seeing
     type a in a session make type b more likely than its base rate?
@@ -279,9 +262,9 @@ def session_basket_lift(
     basket) and the rollup is map-side combined to ≤ |types|² rows.
     """
     sess = (
-        session_numbers(ev.select(key, "type", "ts_ms", "event_id"), key, gap_ms)
+        session_numbers(ev.select("entity_id", "type", "ts_ms", "event_id"), "entity_id", SESSION_GAP_MS)
         .select(
-            F.concat(F.col(key), F.lit("#"), F.col("session_no").cast("string")).alias("sid"),
+            F.concat(F.col("entity_id"), F.lit("#"), F.col("session_no").cast("string")).alias("sid"),
             "type",
         )
         .distinct()
@@ -319,7 +302,7 @@ def session_basket_lift(
     )
 
 
-def retention_curve(ev: DataFrame, key: str = "entity_id") -> DataFrame:
+def retention_curve(ev: DataFrame) -> DataFrame:
     """Aggregate day-N-style retention curve (weekly grain): for each
     week offset k, the share of eligible cohort members still active k
     weeks after their first week — the single curve product reviews
@@ -338,7 +321,7 @@ def retention_curve(ev: DataFrame, key: str = "entity_id") -> DataFrame:
     Scale: rides the same (entity, week) distinct collapse as
     :func:`retention_cohorts`; the generated grid is
     |cohorts|·|offsets| rows — metadata-sized."""
-    matrix = retention_cohorts(ev, key=key)
+    matrix = retention_cohorts(ev)
     horizon = matrix.agg(
         F.max(F.col("cohort_week") + F.col("week_offset")).alias("_max_week")
     )
@@ -369,14 +352,10 @@ def retention_curve(ev: DataFrame, key: str = "entity_id") -> DataFrame:
     )
 
 
-def purchase_attribution(
-    ev: DataFrame,
-    lookback_ms: int = 86_400_000,
-    target_type: str = "purchase",
-) -> DataFrame:
-    """Marketing attribution: for each conversion (``target_type``) event,
+def purchase_attribution(ev: DataFrame) -> DataFrame:
+    """Marketing attribution: for each conversion (``purchase``) event,
     the FIRST-touch and LAST-touch non-conversion event type within the
-    trailing lookback window — the two classic single-touch attribution
+    trailing ``ATTRIBUTION_LOOKBACK_MS`` window — the two classic single-touch attribution
     models; a conversion with no touch inside the window keeps NULLs
     (organic / outside-window).
 
@@ -390,7 +369,7 @@ def purchase_attribution(
     the same RANGE frame over the same sorted partition, and the frame
     holds at most the lookback's events per entity."""
     key = F.when(
-        F.col("type") != target_type,
+        F.col("type") != "purchase",
         F.concat(
             F.lpad(F.col("ts_ms").cast("string"), 15, "0"),
             F.lit("|"),
@@ -402,7 +381,7 @@ def purchase_attribution(
     w = (
         Window.partitionBy("entity_id")
         .orderBy("ts_ms")
-        .rangeBetween(-int(lookback_ms), -1)
+        .rangeBetween(-ATTRIBUTION_LOOKBACK_MS, -1)
     )
     enriched = (
         ev.select("entity_id", "event_id", "ts_ms", "type", "value", key.alias("_tkey"))
@@ -413,7 +392,7 @@ def purchase_attribution(
     # contained the delimiter would parse identically to the oracle's
     # split_part(key, '|', 3) — same cross-engine image either way
     touch_type = lambda c: F.element_at(F.split(F.col(c), "\\|"), 3)  # noqa: E731
-    return enriched.filter(F.col("type") == target_type).select(
+    return enriched.filter(F.col("type") == "purchase").select(
         "event_id",
         "entity_id",
         F.col("ts_ms").alias("purchase_ms"),
@@ -423,7 +402,7 @@ def purchase_attribution(
     )
 
 
-def attribution_report(ev: DataFrame, lookback_ms: int = 86_400_000) -> DataFrame:
+def attribution_report(ev: DataFrame) -> DataFrame:
     """Channel-credit rollup over :func:`purchase_attribution`: per
     (attribution model, touch type), conversion count and total value —
     the side-by-side comparison that shows how much credit moves between
@@ -436,7 +415,7 @@ def attribution_report(ev: DataFrame, lookback_ms: int = 86_400_000) -> DataFram
     Scale: the per-conversion attribution subtree is computed once and
     unpivoted to (model, touch) rows; the rollup output is bounded by
     |models| x |event types|."""
-    att = purchase_attribution(ev, lookback_ms=lookback_ms)
+    att = purchase_attribution(ev)
     # unpivot via explode so the attribution window subtree executes
     # ONCE — a union of two selects would duplicate the whole
     # scan+window plan (Catalyst reuses identical Exchanges, not
@@ -464,7 +443,7 @@ def attribution_report(ev: DataFrame, lookback_ms: int = 86_400_000) -> DataFram
     )
 
 
-def cohort_ltv(ev: DataFrame, week_ms: int = 604_800_000) -> DataFrame:
+def cohort_ltv(ev: DataFrame) -> DataFrame:
     """Cohort lifetime-value curve: users are cohorted by their first-ever
     event week; for each (cohort_week, week_offset) the table reports how
     many cohort members were active that week, the week's purchase
@@ -481,7 +460,7 @@ def cohort_ltv(ev: DataFrame, week_ms: int = 604_800_000) -> DataFrame:
     retention_cohorts pattern, NOT a broadcast of the |users|-row
     first-week table (unbounded at fact scale); the cumulative window
     runs over the |cohorts|x|offsets| grid, never the event stream."""
-    week = F.expr(f"ts_ms div {int(week_ms)}").alias("week")
+    week = F.expr(f"ts_ms div {7 * DAY_MS}").alias("week")
     per_uw = (
         ev.select("entity_id", week, "type", "value")
         .groupBy("entity_id", "week")
@@ -519,14 +498,9 @@ def cohort_ltv(ev: DataFrame, week_ms: int = 604_800_000) -> DataFrame:
     )
 
 
-def session_funnel(
-    ev: DataFrame,
-    steps: Sequence[str] = ("view", "click", "purchase"),
-    key: str = "entity_id",
-    gap_ms: int = 30 * 60 * 1000,
-) -> DataFrame:
+def session_funnel(ev: DataFrame) -> DataFrame:
     """Funnel denominated in SESSIONS: a session converts step i when an
-    event of ``steps[i]`` occurs strictly after its step-(i-1) time
+    event of ``STEPS[i]`` occurs strictly after its step-(i-1) time
     WITHIN THE SAME SESSION — the per-visit view of intent
     (:func:`funnel` spans an entity's whole history, so a view today and
     a purchase next month still "convert"; this one doesn't).  Reuses
@@ -539,22 +513,22 @@ def session_funnel(
     Scale: the session-number window shuffles once on the entity key;
     the step windows shuffle once on the session id (finer than the
     entity key, so no skew regression); the final rollup is k rows."""
-    sid = F.concat(F.col(key), F.lit("#"), F.col("session_no").cast("string"))
+    sid = F.concat(F.col("entity_id"), F.lit("#"), F.col("session_no").cast("string"))
     s = session_numbers(
-        ev.select(key, "type", "ts_ms", "event_id"), key, gap_ms
+        ev.select("entity_id", "type", "ts_ms", "event_id"), "entity_id", SESSION_GAP_MS
     ).select(sid.alias("sid"), "type", "ts_ms")
-    per = _step_times(s, steps, "sid")
+    per = _step_times(s, STEPS, "sid")
     counts = per.agg(
         *[
             F.sum(F.col(f"t{i}").isNotNull().cast("long")).alias(f"n{i}")
-            for i in range(1, len(steps) + 1)
+            for i in range(1, len(STEPS) + 1)
         ]
     )
-    stack_args = ", ".join(f"{i}, '{s_}', n{i}" for i, s_ in enumerate(steps, start=1))
+    stack_args = ", ".join(f"{i}, '{s_}', n{i}" for i, s_ in enumerate(STEPS, start=1))
     return (
         counts.selectExpr(
             f"n1 AS _n1",
-            f"stack({len(steps)}, {stack_args}) AS (step_no, step, n_sessions)",
+            f"stack({len(STEPS)}, {stack_args}) AS (step_no, step, n_sessions)",
         )
         .select(
             F.col("step_no").cast("int").alias("step_no"),

@@ -23,7 +23,6 @@ pair count is already bucket-bounded.
 from __future__ import annotations
 
 import math
-import warnings
 
 import numpy as np
 import pandas as pd
@@ -42,8 +41,8 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def with_norm(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    v = _as_double(F.col(vec_col))
+def with_norm(embeddings: DataFrame) -> DataFrame:
+    v = _as_double(F.col("embedding"))
     return embeddings.withColumn("v", v).withColumn("norm", F.sqrt(_dot(F.col("v"), F.col("v"))))
 
 
@@ -106,8 +105,7 @@ def _safe_norms(M: np.ndarray) -> np.ndarray:
 _GRAM6_AUDIT_TOL = 1e-4
 
 
-def _gram6(A: np.ndarray, M: np.ndarray, na: np.ndarray | None = None,
-           nb: np.ndarray | None = None) -> np.ndarray:
+def _gram6(A: np.ndarray, M: np.ndarray, nb: np.ndarray | None = None) -> np.ndarray:
     """Rounded cosine block — bit-identical to
     ``np.round(_seq_gram(A, M) / (na[:, None] * nb[None, :]), 6)`` but
     computed with BLAS (guide §4.2: ~9× on this host; the fold's d rank-1
@@ -126,8 +124,7 @@ def _gram6(A: np.ndarray, M: np.ndarray, na: np.ndarray | None = None,
     round(fold).  NaN/±inf propagate identically on both paths (audit
     comparisons are False for NaN, and both paths yield the same NaN).
     """
-    if na is None:
-        na = _safe_norms(A)
+    na = _safe_norms(A)
     if nb is None:
         nb = _safe_norms(M)
     if A.size == 0 or M.size == 0:
@@ -436,13 +433,16 @@ def cosine_pairs_above(embeddings: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def embedding_decontamination(
-    embeddings: DataFrame, threshold: float = 0.35, eval_mod: int = 10
-) -> DataFrame:
+#: Held-out split of the embedding table: ``vec_id % EVAL_MOD == 0`` is
+#: the eval/query set of :func:`embedding_decontamination` and the PQ search.
+EVAL_MOD = 10
+
+
+def embedding_decontamination(embeddings: DataFrame) -> DataFrame:
     """Embedding-space benchmark decontamination — the semantic twin of
-    the n-gram `corpus.decontaminate`: vectors with ``vec_id % eval_mod
+    the n-gram `corpus.decontaminate`: vectors with ``vec_id % EVAL_MOD
     == 0`` form the held-out eval set; a training vector is contaminated
-    when its cosine to ANY eval vector reaches ``threshold`` (paraphrased
+    when its cosine to ANY eval vector reaches 0.35 (paraphrased
     eval leakage that shares no n-gram).  Returns contaminated training
     vectors with their closest-eval cosine and the match count.
 
@@ -453,12 +453,12 @@ def embedding_decontamination(
     threshold block kernel, and each (train, eval) pair is seen in
     exactly one part, so the union needs no dedup.
     """
-    evals = embeddings.filter(F.col("vec_id") % eval_mod == 0)
-    train = embeddings.filter(F.col("vec_id") % eval_mod != 0)
+    evals = embeddings.filter(F.col("vec_id") % EVAL_MOD == 0)
+    train = embeddings.filter(F.col("vec_id") % EVAL_MOD != 0)
     hits = _scan(
         train.select("vec_id", "embedding"),
         _index_parts(evals),
-        lambda pdf, ids, M, norms, _labels: _pairs_block(pdf, ids, M, norms, threshold, False),
+        lambda pdf, ids, M, norms, _labels: _pairs_block(pdf, ids, M, norms, 0.35, False),
         _PAIRS_SCHEMA,
     )
     return hits.groupBy(F.col("vec_a").alias("vec_id")).agg(
@@ -495,9 +495,7 @@ def label_knn_accuracy(embeddings: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
-def ivf_index(
-    embeddings: DataFrame, n_cells: int | None = None, iters: int = 2
-) -> tuple[DataFrame, "object"]:
+def ivf_index(embeddings: DataFrame) -> tuple[DataFrame, "object"]:
     """IVF coarse quantizer: deterministic k-means cells over the corpus.
 
     Returns ``(assigned, centroids_bc)`` — the inverted lists as an
@@ -506,11 +504,11 @@ def ivf_index(
 
     Construction is Spark-shaped end to end:
 
-    * **init**: the ``n_cells`` vectors with smallest md5(vec_id) — a
+    * **init**: the ≈√n vectors with smallest md5(vec_id) — a
       deterministic hash-sample (no driver RNG), same trick as the LSH
-      planes.  Default cell count ≈ √n, the classic IVF balance point
-      (√n cells × √n vectors/cell).
-    * **Lloyd rounds** (``iters``): assign = broadcast-centroid argmax
+      planes.  √n cells is the classic IVF balance point (√n cells × √n
+      vectors/cell).
+    * **two Lloyd rounds**: assign = broadcast-centroid argmax
       inside an Arrow-batched kernel (cells are broadcast-class by
       construction: √n of them); update = per-cell mean via grouped
       applyInPandas (one shuffle on cell, ~√n groups).  Members are
@@ -522,9 +520,7 @@ def ivf_index(
     assignment one extra pass.  Cell ids are argmax indices into the
     hash-ordered seed list, stable across runs.
     """
-    n = embeddings.count()
-    if n_cells is None:
-        n_cells = max(int(n**0.5), 1)
+    n_cells = max(int(embeddings.count() ** 0.5), 1)
 
     seeds = (
         embeddings.select("vec_id", "embedding")
@@ -566,7 +562,7 @@ def ivf_index(
         M = _batch_matrix(pdf["embedding"])
         return pd.DataFrame({"cell": [int(pdf["cell"].iloc[0])], "centroid": [M.mean(axis=0).tolist()]})
 
-    for _ in range(iters):
+    for _ in range(2):
         assigned = base.mapInPandas(assign, schema=schema)
         rows = sorted(
             assigned.groupBy("cell").applyInPandas(mean_cell, schema="cell bigint, centroid array<double>").collect()
@@ -579,47 +575,31 @@ def ivf_index(
     return base.mapInPandas(assign, schema=schema), cent_bc
 
 
-def _ivf_knn(
-    embeddings: DataFrame,
-    k: int = 5,
-    n_cells: int | None = None,
-    nprobe: int | None = 5,
-    iters: int = 2,
-    cross_label: bool = False,
-    index: tuple | None = None,
-) -> DataFrame:
-    """Distributed kNN over IVF cells — the no-driver-collect kernel behind
-    both :func:`ivf_topk` and :func:`hard_negatives`.
+#: IVF cells each query probes (of ≈√n); a value at or above the cell
+#: count probes every cell, which makes :func:`ivf_topk` exact.
+IVF_NPROBE = 5
+
+
+def ivf_topk(embeddings: DataFrame, k: int = 5) -> DataFrame:
+    """Approximate top-k cosine via IVF: probe the ``IVF_NPROBE`` nearest
+    cells, exact-rank inside them.  The scale path that avoids
+    broadcasting the index entirely — candidate generation is a shuffle
+    on cell id, and no driver collect.
 
     Physical shape: queries explode to (query, probe_cell) rows; a
     **cogrouped** applyInPandas on cell runs the exact numpy block kernel
     between the cell's probing queries and its member vectors, emitting at
     most k candidates per (query, cell); a final window keeps the global
     top-k.  Scoring/rounding/tie-break are identical to :func:`cosine_topk`,
-    so with ``nprobe = None`` (full probe) the result is exactly the
-    brute-force answer (pinned by test) — recall loss comes only from
-    unprobed cells.  ``cross_label`` keeps only different-label neighbors
-    (hard-negative mining) with the mask applied INSIDE the cell kernel.
-
-    ``index``: a precomputed :func:`ivf_index` result — the index is the
-    expensive shared stage, so callers running several kNN queries over
-    one corpus snapshot build it once (registry memoizes per session).
-    At full probe cell QUALITY is irrelevant to exactness (every cell is
-    scored), so the default index skips Lloyd refinement entirely.
+    so at full probe the result is exactly the brute-force answer (pinned
+    by test) — recall loss comes only from unprobed cells.
     """
-    if index is None:
-        if nprobe is None:
-            iters = 0  # full probe: partition quality cannot change the answer
-        index = ivf_index(embeddings, n_cells=n_cells, iters=iters)
-    assigned, cent_bc = index
-    if cross_label:
-        assigned = assigned.join(embeddings.select("vec_id", "label"), "vec_id")
-
-    lbl_field = ", label bigint" if cross_label else ""
+    assigned, cent_bc = ivf_index(embeddings)
+    nprobe = IVF_NPROBE
 
     def probe(batches):
         _ids, CM, cn = cent_bc.value
-        npb = CM.shape[0] if nprobe is None else min(nprobe, CM.shape[0])
+        npb = min(nprobe, CM.shape[0])
         for pdf in _budgeted(batches, CM.shape[0]):
             A = _batch_matrix(pdf["embedding"])
             an = _safe_norms(A)
@@ -630,17 +610,14 @@ def _ivf_knn(
             m = len(pdf)
             rep = np.repeat(np.arange(m), npb)
             emb = pdf["embedding"].to_numpy()
-            out = {
+            yield pd.DataFrame({
                 "vec_id": np.repeat(pdf["vec_id"].to_numpy(np.int64), npb),
                 "embedding": list(emb[rep]),  # one vectorized gather
                 "cell": order.ravel().astype(np.int64),
-            }
-            if cross_label:
-                out["label"] = np.repeat(pdf["label"].to_numpy(np.int64), npb)
-            yield pd.DataFrame(out)
+            })
 
-    probes = embeddings.select(*_index_cols(cross_label)).mapInPandas(
-        probe, schema=f"vec_id bigint, embedding array<float>, cell bigint{lbl_field}"
+    probes = embeddings.select(*_index_cols(False)).mapInPandas(
+        probe, schema="vec_id bigint, embedding array<float>, cell bigint"
     )
 
     def score_cell(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
@@ -648,14 +625,13 @@ def _ivf_knn(
             return pd.DataFrame()  # no rows, no columns: Spark reads an empty group
         M = _batch_matrix(right["embedding"])
         ids = right["vec_id"].to_numpy(np.int64)
-        labels = right["label"].to_numpy(np.int64) if cross_label else None
         norms = _safe_norms(M)
         # chunk the probe side: at full probe the left frame holds every
         # query — chunking bounds the score matrix per task (budget-capped:
         # a skewed 100k-member cell would make 4096 fixed rows a 3 GB block)
         return pd.concat(
             [
-                _topk_block(chunk, ids, M, norms, labels, k)
+                _topk_block(chunk, ids, M, norms, None, k)
                 for chunk in _query_chunks(left, M.shape[0], cap=_SCORE_CHUNK)
             ],
             ignore_index=True,
@@ -664,24 +640,9 @@ def _ivf_knn(
     cand = (
         probes.groupBy("cell")
         .cogroup(assigned.groupBy("cell"))
-        .applyInPandas(score_cell, schema=_TOPK_SCHEMA[cross_label])
+        .applyInPandas(score_cell, schema=_TOPK_SCHEMA[False])
     )
-    return _merge_topk(cand, k, cross_label)
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    k: int = 5,
-    n_cells: int | None = None,
-    nprobe: int = 5,
-    iters: int = 2,
-) -> DataFrame:
-    """Approximate top-k cosine via IVF: probe the ``nprobe`` nearest cells,
-    exact-rank inside them.  The scale path that avoids broadcasting the
-    index entirely — candidate generation is a shuffle on cell id.  See
-    :func:`_ivf_knn` for the physical shape and exactness contract.
-    """
-    return _ivf_knn(embeddings, k=k, n_cells=n_cells, nprobe=nprobe, iters=iters)
+    return _merge_topk(cand, k)
 
 
 def simhash_buckets(embeddings: DataFrame, n_planes: int = 8, seed: int = 0) -> DataFrame:
@@ -862,8 +823,8 @@ def embedding_dim_stats(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def label_noise_suspects(embeddings: DataFrame, top_n: int = 10) -> DataFrame:
-    """Mislabel candidates: per label, the ``top_n`` vectors FURTHEST
+def label_noise_suspects(embeddings: DataFrame) -> DataFrame:
+    """Mislabel candidates: per label, the 10 vectors FURTHEST
     (squared euclidean) from their own label's centroid — the standard
     first-pass label-noise audit over an embedded training set.
 
@@ -901,46 +862,25 @@ def label_noise_suspects(embeddings: DataFrame, top_n: int = 10) -> DataFrame:
     w = Window.partitionBy("label").orderBy(F.desc("sq_dist_micro2"), F.asc("vec_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .where(F.col("rnk") <= top_n)
+        .where(F.col("rnk") <= 10)
     )
 
 
-def hard_negatives(
-    embeddings: DataFrame,
-    k: int = 3,
-    n_cells: int | None = None,
-    nprobe: int | None = None,
-    iters: int = 2,
-    index: tuple | None = None,
-) -> DataFrame:
-    """Hard-negative mining: per vector, the ``k`` most-similar vectors
-    with a DIFFERENT label — the contrastive-training primitive (the
-    negatives that actually teach the model something sit right at the
-    decision boundary).
+def hard_negatives(embeddings: DataFrame) -> DataFrame:
+    """Hard-negative mining: per vector, the 3 most-similar vectors with a
+    DIFFERENT label — the contrastive-training primitive (the negatives
+    that actually teach the model something sit right at the decision
+    boundary).
 
-    Tiers (r10 optimization — guide §2.4/§3.1: the under-ceiling
-    full-probe IVF route replicated every query vector to every cell, a
-    √n data amplification that shuffled ~80 MB of embeddings at bench
-    scale for an answer a broadcast-index kernel computes with NO
-    embedding shuffle at all; measured 2.1-3.1 s → ~0.6 s, same rows):
-
-    * **exact** (``nprobe=None`` and no ``index``): the label-masked
-      exact kernel of :func:`cosine_topk` over :func:`_index_parts` — one
-      memoized broadcast part under the ceiling, hash-sliced parts plus
-      one merge window above it; the query side streams, nothing else
-      moves;
-    * **explicit ``index`` or ``nprobe``** (under ceiling): the cogrouped
-      IVF-cell kernel (:func:`_ivf_knn`) — the distributed candidate-gen
-      path, exact at full probe (equality pinned by test), approximate at
-      ``nprobe`` ≪ n_cells.  Over the ceiling with ``nprobe=None`` a
-      precomputed ``index`` is ignored with a warning and the exact tier
-      runs: full probe's every-query-to-every-cell replication was
-      measured fatal at 128k vectors in the amplified tier, and the index
-      has no bearing on the exact answer.
-
-    Both tiers share the single scoring/rounding/tie-break contract
-    (:func:`_topk_block`: ``_gram6`` + ``_topk_order``), so tier choice
-    can never change the rows — pinned by TestHardNegatives and the
+    Physical shape: the label-masked exact kernel of :func:`cosine_topk`
+    over :func:`_index_parts` — one memoized broadcast part under the
+    ceiling, hash-sliced parts plus one merge window above it; the query
+    side streams, nothing else moves.  (r10, guide §2.4/§3.1: the
+    full-probe IVF route it replaced replicated every query vector to
+    every cell, a √n data amplification that shuffled ~80 MB of
+    embeddings at bench scale; measured 2.1-3.1 s → ~0.6 s, same rows.)
+    Scoring/rounding/tie-break are the one :func:`_topk_block` contract
+    (``_gram6`` + ``_topk_order``) — pinned by TestHardNegatives and the
     DuckDB oracle.
 
     NULL-label vectors are excluded entirely: a query without a label has
@@ -956,28 +896,14 @@ def hard_negatives(
     embeddings = embeddings.filter(
         F.col("label").isNotNull() & F.col("embedding").isNotNull()
     )
-    if nprobe is None and (index is None or _index_too_big(embeddings)):
-        if index is not None:
-            # documented in the docstring, but a caller who BUILT an index
-            # expecting reuse deserves a runtime signal, not silence
-            warnings.warn(
-                "hard_negatives: exact (nprobe=None) over-ceiling input routes to "
-                "the sliced exact kernel; the precomputed IVF index is unused. "
-                "Pass an explicit nprobe to use the index.",
-                stacklevel=2,
-            )
-        return _exact_topk(embeddings, k, _index_parts(embeddings, labeled=True), labeled=True)
-    return _ivf_knn(
-        embeddings, k=k, n_cells=n_cells, nprobe=nprobe, iters=iters,
-        cross_label=True, index=index,
-    )
+    return _exact_topk(embeddings, 3, _index_parts(embeddings, labeled=True), labeled=True)
 
 
-def hard_negatives_broadcast(embeddings: DataFrame, k: int = 3) -> DataFrame:
+def hard_negatives_broadcast(embeddings: DataFrame) -> DataFrame:
     """Broadcast-kernel twin of :func:`hard_negatives` — exact and fast for
     broadcast-class inputs, but collects the whole table to the driver:
-    kept as the equivalence oracle for the IVF kernel, NOT the declared
-    query path.
+    kept as the equivalence oracle for the memoized index parts, NOT the
+    declared query path.
 
     Same block kernel as :func:`cosine_topk` with a label mask inside the
     batch: similarity never leaves the kernel for same-label pairs.
@@ -988,10 +914,10 @@ def hard_negatives_broadcast(embeddings: DataFrame, k: int = 3) -> DataFrame:
     rows = embeddings.select(*_index_cols(True)).collect()
     sc = embeddings.sparkSession.sparkContext
     parts = [_part(sc, *p) for p in _slice_arrays(rows, {0: len(rows)}, True)]
-    return _exact_topk(embeddings, k, parts, labeled=True)
+    return _exact_topk(embeddings, 3, parts, labeled=True)
 
 
-def embedding_norm_outliers(embeddings: DataFrame, k: float = 3.0) -> DataFrame:
+def embedding_norm_outliers(embeddings: DataFrame) -> DataFrame:
     """Embedding-table QA: per label, robust (median/MAD) outlier stats
     over the squared L2 norm — degenerate vectors (zero, clipped,
     mis-scaled, fp-overflowed) show up as norm outliers long before any
@@ -1019,7 +945,7 @@ def embedding_norm_outliers(embeddings: DataFrame, k: float = 3.0) -> DataFrame:
     vals = embeddings.select(
         F.col("label").alias("type"), duck_round(sq, 6).alias("value")
     )
-    out = mad_outliers(vals, k=k)
+    out = mad_outliers(vals)
     return out.select(
         F.col("type").alias("label"),
         F.col("n_values").alias("n_vecs"),
@@ -1043,13 +969,19 @@ def embedding_norm_outliers(embeddings: DataFrame, k: float = 3.0) -> DataFrame:
 # Search" (TPAMI 2011) — public method, reimplemented Spark-first.
 
 
-def pq_train_codebooks(
-    embeddings: DataFrame, m: int = 8, k: int = 256, iters: int = 2
-) -> np.ndarray:
-    """Train the (m, k, d/m) PQ codebooks — deterministic k-means per
-    subspace, same recipe as :func:`ivf_index`: seeds are the ``k``
-    vectors with smallest md5(vec_id) (no driver RNG), Lloyd rounds
-    assign distributed (broadcast codebooks, Arrow kernel) and update via
+#: PQ shape: ``PQ_M`` subspaces of ``PQ_K`` codes each (one byte per
+#: code), trained with ``PQ_ITERS`` Lloyd rounds.
+PQ_M = 8
+PQ_K = 256
+PQ_ITERS = 2
+
+
+def pq_train_codebooks(embeddings: DataFrame) -> np.ndarray:
+    """Train the (m, k, d/m) PQ codebooks (m = ``PQ_M``, k = ``PQ_K``) —
+    deterministic k-means per subspace, same recipe as
+    :func:`ivf_index`: seeds are the ``k`` vectors with smallest
+    md5(vec_id) (no driver RNG), ``PQ_ITERS`` Lloyd rounds assign
+    distributed (broadcast codebooks, Arrow kernel) and update via
     per-(subspace, code) means averaged in vec_id order so every centroid
     is bit-deterministic.
 
@@ -1060,6 +992,7 @@ def pq_train_codebooks(
     train pass runs on a hash-sample (caller passes ``embeddings.sample``)
     and only the final assignment sweeps the full corpus.
     """
+    m, k = PQ_M, PQ_K
     seeds = (
         embeddings.select("vec_id", "embedding")
         .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
@@ -1084,7 +1017,7 @@ def pq_train_codebooks(
     sc = embeddings.sparkSession.sparkContext
     base = embeddings.select("vec_id", "embedding")
 
-    for _ in range(iters):
+    for _ in range(PQ_ITERS):
         cb = sc.broadcast(C)
 
         def subassign(batches):
@@ -1169,40 +1102,26 @@ def pq_assign_codes(embeddings: DataFrame, C: np.ndarray) -> DataFrame:
     )
 
 
-def pq_codes(
-    embeddings: DataFrame,
-    m: int = 8,
-    k: int = 256,
-    iters: int = 2,
-    C: np.ndarray | None = None,
-) -> DataFrame:
+def pq_codes(embeddings: DataFrame, C: np.ndarray | None = None) -> DataFrame:
     """Registry surface for the PQ code table: vec_id, codes as a
     comma-joined string (arrays never reach a driver-checked surface —
     round-2 Class B), n_bytes = m (one byte per code at k<=256).
     ``C``: pre-trained codebooks (callers running several PQ queries over
     one corpus train once and share — see the registry's _pq cache)."""
     if C is None:
-        C = pq_train_codebooks(embeddings, m=m, k=k, iters=iters)
+        C = pq_train_codebooks(embeddings)
     codes = pq_assign_codes(embeddings, C)
     return codes.select(
         "vec_id",
         F.array_join("codes", ",").alias("codes"),
-        # from the codebooks, not the parameter — pre-trained C may use a
-        # different subspace count than this call's default m
         F.lit(int(C.shape[0])).cast("long").alias("n_bytes"),
     )
 
 
 def pq_topk(
-    embeddings: DataFrame,
-    topk: int = 10,
-    m: int = 8,
-    k: int = 256,
-    iters: int = 2,
-    eval_mod: int = 10,
-    C: np.ndarray | None = None,
+    embeddings: DataFrame, topk: int = 10, C: np.ndarray | None = None
 ) -> DataFrame:
-    """PQ/ADC approximate top-k: vectors with ``vec_id % eval_mod == 0``
+    """PQ/ADC approximate top-k: vectors with ``vec_id % EVAL_MOD == 0``
     are the query set (same held-out convention as
     :func:`embedding_decontamination`); every corpus vector is a
     candidate via its 8-byte code only.
@@ -1222,13 +1141,13 @@ def pq_topk(
     ``tests/test_operators.py::TestPq``.
     """
     if C is None:
-        C = pq_train_codebooks(embeddings, m=m, k=k, iters=iters)
+        C = pq_train_codebooks(embeddings)
     dsub = C.shape[2]
     codes = pq_assign_codes(embeddings, C)
-    queries = embeddings.filter(F.col("vec_id") % eval_mod == 0)
+    queries = embeddings.filter(F.col("vec_id") % EVAL_MOD == 0)
     if _index_too_big(queries):
         raise ValueError(
-            "pq_topk query slice exceeds the broadcast ceiling — raise eval_mod "
+            "pq_topk query slice exceeds the broadcast ceiling — raise EVAL_MOD "
             "or pre-sample the query set; the codes side scales, the query "
             "broadcast is the documented bound"
         )
@@ -1296,33 +1215,22 @@ def pq_topk(
     )
 
 
-def pq_topk_rerank(
-    embeddings: DataFrame,
-    topk: int = 10,
-    shortlist: int = 50,
-    m: int = 8,
-    k: int = 256,
-    iters: int = 2,
-    eval_mod: int = 10,
-    C: np.ndarray | None = None,
-) -> DataFrame:
+def pq_topk_rerank(embeddings: DataFrame, C: np.ndarray | None = None) -> DataFrame:
     """IVFADC+R-style two-stage search: the PQ/ADC pass
-    (:func:`pq_topk`) produces a ``shortlist``-deep candidate set from
+    (:func:`pq_topk`) produces a 50-deep candidate set from
     codes alone, then ONLY those candidates' raw vectors are fetched
     (a join against the corpus — at 100 TB this touches
-    |queries|·shortlist rows of cold parquet, not the corpus) and
+    |queries|·50 rows of cold parquet, not the corpus) and
     re-ranked by exact L2 distance as a pure Catalyst expression
     (``zip_with``/``aggregate`` left fold — JVM-side, no Python seam in
     the re-rank stage).  Recall is then bounded by shortlist coverage
     rather than code resolution — the standard production ANN shape.
 
-    Output: vec_id, neighbor_id, l2_dist (round-6), rank ≤ ``topk``.
+    Output: vec_id, neighbor_id, l2_dist (round-6), rank ≤ 10.
     Approximate (shortlist may miss true neighbors) → rows-only driver
     check; recall and determinism pinned by ``TestPq``.
     """
-    cand = pq_topk(
-        embeddings, topk=shortlist, m=m, k=k, iters=iters, eval_mod=eval_mod, C=C
-    ).select("vec_id", "neighbor_id")
+    cand = pq_topk(embeddings, topk=50, C=C).select("vec_id", "neighbor_id")
     qvec = embeddings.select(
         F.col("vec_id").alias("vec_id"), _as_double(F.col("embedding")).alias("_qv")
     )
@@ -1340,7 +1248,7 @@ def pq_topk_rerank(
         .join(nvec, "neighbor_id")
         .withColumn("l2_dist", duck_round(dist, 6))
         .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= topk)
+        .where(F.col("rank") <= 10)
         .select("vec_id", "neighbor_id", "l2_dist", "rank")
     )
 
@@ -1426,7 +1334,7 @@ def label_cohesion(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def embedding_pca(embeddings: DataFrame, k: int = 8) -> DataFrame:
+def embedding_pca(embeddings: DataFrame) -> DataFrame:
     """Distributed PCA spectrum of the embedding cloud — the variance
     audit behind whitening, dimensionality choices, and PQ subspace
     design: if the top-8 of 64 components explain ~95 % of variance, the
@@ -1442,7 +1350,7 @@ def embedding_pca(embeddings: DataFrame, k: int = 8) -> DataFrame:
     O(partitions · d²) bytes of sufficient statistics, the same
     communication shape as a 1000-executor cluster job.
 
-    Output (k rows): component, eigenvalue, explained_bp (basis points of
+    Output (8 rows, the top-8 components): component, eigenvalue, explained_bp (basis points of
     total variance), cum_explained_bp.  Approximate at the float level
     (partial-sum order differs from a serial pass) → rows-only driver
     check; spectrum pinned against a single-machine NumPy reference by
@@ -1491,7 +1399,7 @@ def embedding_pca(embeddings: DataFrame, k: int = 8) -> DataFrame:
     cov = G / n - np.outer(mu, mu)
     evals = np.linalg.eigvalsh(cov)[::-1]  # descending
     total = float(evals.sum()) or 1.0
-    k = min(k, d)
+    k = min(8, d)
     rows = []
     cum = 0.0
     for i in range(k):

@@ -27,13 +27,12 @@ def salted_agg(
     df: DataFrame,
     keys: list[str],
     aggs: dict[str, tuple[str, str]],
-    n_salts: int = 32,
 ) -> DataFrame:
     """Two-phase aggregation immune to key skew.
 
     ``aggs`` maps output column → (op, input column) with op in
     sum/count/min/max.  Phase 1 groups by (keys…, salt) — uniform by
-    construction — and phase 2 merges the ≤ n_salts partial rows per key.
+    construction — and phase 2 merges the ≤ 32 partial rows per key.
     Result is identical to ``df.groupBy(keys).agg(...)`` for these
     algebraic ops regardless of data distribution.
     """
@@ -41,7 +40,7 @@ def salted_agg(
         if op not in _MERGE:
             raise ValueError(f"{out}: op must be one of {sorted(_MERGE)}, got {op!r}")
 
-    salt = (F.abs(F.xxhash64(*[F.col(k) for k in keys], F.monotonically_increasing_id())) % n_salts).alias(
+    salt = (F.abs(F.xxhash64(*[F.col(k) for k in keys], F.monotonically_increasing_id())) % 32).alias(
         "__salt"
     )
     phase1 = (

@@ -146,8 +146,8 @@ def token_stats(documents: DataFrame) -> DataFrame:
     )
 
 
-def top_terms_per_lang(documents: DataFrame, n: int = 10) -> DataFrame:
-    """Top-N terms per language by occurrence count (ties → lexicographic).
+def top_terms_per_lang(documents: DataFrame) -> DataFrame:
+    """Top-10 terms per language by occurrence count (ties → lexicographic).
 
     The 100 TB wordcount shape: explode term tokens, two-level aggregate
     (the (lang, term) groupBy partial-aggregates map-side so the shuffle
@@ -163,7 +163,7 @@ def top_terms_per_lang(documents: DataFrame, n: int = 10) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
     )
     ranked = top_n_per_group(
-        counts, ["lang"], F.col("n_occurrences"), n, tiebreak=["term"]
+        counts, ["lang"], F.col("n_occurrences"), 10, tiebreak=["term"]
     )
     return ranked.select("lang", "term", "n_occurrences", F.col("rnk").cast("int").alias("rnk"))
 
@@ -205,11 +205,15 @@ def doc_fingerprint(documents: DataFrame) -> DataFrame:
     return documents.select("doc_id", F.md5(F.col("text")).alias("content_hash")).join(agg, "doc_id")
 
 
-def inverted_index(documents: DataFrame, max_postings: int = 20) -> DataFrame:
+#: Posting-list cap of :func:`inverted_index`.
+MAX_POSTINGS = 20
+
+
+def inverted_index(documents: DataFrame) -> DataFrame:
     """Term → (document frequency, capped sorted posting list).
 
     The retrieval-side twin of :func:`term_df_idf`: per term, how many
-    documents contain it and the first ``max_postings`` doc_ids ascending.
+    documents contain it and the first ``MAX_POSTINGS`` doc_ids ascending.
     The cap is enforced BEFORE collection — a `row_number` over the
     term-partitioned, doc_id-sorted pairs — so no executor ever
     materializes the full posting list of a stop-word-grade term; at
@@ -227,16 +231,15 @@ def inverted_index(documents: DataFrame, max_postings: int = 20) -> DataFrame:
     return ranked.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("doc_freq"),
         F.sort_array(
-            F.collect_list(F.when(F.col("rnk") <= max_postings, F.col("doc_id")))
+            F.collect_list(F.when(F.col("rnk") <= MAX_POSTINGS, F.col("doc_id")))
         ).alias("postings"),
     )
 
 
-def term_cooccurrence(documents: DataFrame, min_pairs: int = 2) -> DataFrame:
+def term_cooccurrence(documents: DataFrame) -> DataFrame:
     """Term co-occurrence with pointwise mutual information.
 
-    For every unordered term pair appearing together in >= ``min_pairs``
-    documents: co-document count and PMI = ln(N * c_ab / (c_a * c_b)),
+    For every unordered term pair appearing together in >= 2 documents: co-document count and PMI = ln(N * c_ab / (c_a * c_b)),
     rounded to 4 decimals.  The self-join runs WITHIN each document over
     its distinct-term set, so the pair explosion is bounded by per-doc
     vocabulary squared — corpus size only scales the (map-side combined)
@@ -277,7 +280,7 @@ def term_cooccurrence(documents: DataFrame, min_pairs: int = 2) -> DataFrame:
         .cache()
     )
     pair_counts = (
-        counts.where(F.col("term_b").isNotNull() & (F.col("n") >= min_pairs))
+        counts.where(F.col("term_b").isNotNull() & (F.col("n") >= 2))
         .withColumnRenamed("n", "n_docs_both")
     )
     df_counts = counts.where(F.col("term_b").isNull()).select(
@@ -310,10 +313,14 @@ def term_cooccurrence(documents: DataFrame, min_pairs: int = 2) -> DataFrame:
     )
 
 
-def bigram_stats(documents: DataFrame, min_count: int = 2) -> DataFrame:
+#: A bigram reaches :func:`bigram_stats` at this many corpus occurrences.
+BIGRAM_MIN_COUNT = 2
+
+
+def bigram_stats(documents: DataFrame) -> DataFrame:
     """Corpus bigram counts with conditional follow probability.
 
-    For every consecutive token pair (w1, w2) occurring >= ``min_count``
+    For every consecutive token pair (w1, w2) occurring >= ``BIGRAM_MIN_COUNT``
     times corpus-wide: its count, the count of all bigrams starting with
     w1, and p(w2|w1) rounded to 4 decimals — the raw material of n-gram
     LM pruning and phrase-mining passes.  Pair generation is per-row
@@ -340,7 +347,7 @@ def bigram_stats(documents: DataFrame, min_count: int = 2) -> DataFrame:
     tot = F.sum("n").over(Window.partitionBy("w1"))
     return (
         counts.withColumn("n_first", tot)
-        .where(F.col("n") >= min_count)
+        .where(F.col("n") >= BIGRAM_MIN_COUNT)
         .select(
             "w1",
             "w2",
@@ -470,8 +477,8 @@ def doc_entropy(documents: DataFrame) -> DataFrame:
     )
 
 
-def token_length_histogram(documents: DataFrame, bucket: int = 64) -> DataFrame:
-    """Per-source token-length distribution in fixed buckets — the
+def token_length_histogram(documents: DataFrame) -> DataFrame:
+    """Per-source token-length distribution in 64-token buckets — the
     mixture-planning census (which sources skew short/long before
     packing/sampling).  All-integer surface; one map-side-combined
     aggregate over (source, bucket)."""
@@ -480,7 +487,7 @@ def token_length_histogram(documents: DataFrame, bucket: int = 64) -> DataFrame:
     ).cast("long")
     return (
         documents.select("source", n_tokens.alias("nt"))
-        .groupBy("source", F.expr(f"nt div {int(bucket)}").alias("bucket"))
+        .groupBy("source", F.expr("nt div 64").alias("bucket"))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.min("nt").alias("min_tokens"),
@@ -489,18 +496,11 @@ def token_length_histogram(documents: DataFrame, bucket: int = 64) -> DataFrame:
     )
 
 
-def gopher_quality(
-    documents: DataFrame,
-    min_words: int = 20,
-    max_words: int = 100_000,
-    min_word_len: int = 2,
-    max_word_len: int = 12,
-    top_word_share_max_bp: int = 3000,
-    dup_shingle_frac_max_bp: int = 5000,
-) -> DataFrame:
+def gopher_quality(documents: DataFrame) -> DataFrame:
     """Gopher/Dolma-style document quality rules (public heuristics from
-    the Gopher corpus-filtering recipe: word-count bounds, mean-word-length
-    band, most-frequent-word share, duplicate n-gram fraction).
+    the Gopher corpus-filtering recipe): a doc passes with 20-100 000
+    words, a mean word length in [2, 12], a most-frequent word at most
+    30 % of its words, and at most 50 % duplicate word-5-gram shingles.
 
     Everything except the top-word share is per-row array arithmetic —
     zero shuffles; the top-word share is a two-level (doc, word) aggregate
@@ -556,11 +556,11 @@ def gopher_quality(
         .withColumn("_nw1", F.greatest(F.col("n_words"), F.lit(1)))
     )
     passes = (
-        F.col("n_words").between(min_words, max_words)
-        & (F.lit(int(min_word_len)) * F.col("_nw1") <= F.col("_alpha"))
-        & (F.col("_alpha") <= F.lit(int(max_word_len)) * F.col("_nw1"))
-        & (F.col("_topn") * 10000 <= F.lit(int(top_word_share_max_bp)) * F.col("_totn"))
-        & (F.col("_ndup") * 10000 <= F.lit(int(dup_shingle_frac_max_bp)) * F.col("_nsh"))
+        F.col("n_words").between(20, 100_000)
+        & (F.lit(2) * F.col("_nw1") <= F.col("_alpha"))
+        & (F.col("_alpha") <= F.lit(12) * F.col("_nw1"))
+        & (F.col("_topn") * 10000 <= F.lit(3000) * F.col("_totn"))
+        & (F.col("_ndup") * 10000 <= F.lit(5000) * F.col("_nsh"))
     )
     return joined.select(
         "doc_id",
@@ -577,9 +577,13 @@ def gopher_quality(
     )
 
 
-def bpe_merge_candidates(documents: DataFrame, top_n: int = 50) -> DataFrame:
+#: Ranked pairs :func:`bpe_merge_candidates` keeps.
+BPE_TOP_N = 50
+
+
+def bpe_merge_candidates(documents: DataFrame) -> DataFrame:
     """First-round BPE merge statistics: corpus-wide adjacent character
-    pair counts inside word tokens, ranked — exactly the quantity a BPE
+    pair counts inside word tokens, the top ``BPE_TOP_N`` ranked — exactly the quantity a BPE
     vocabulary trainer maximizes at each merge step, distributed.
 
     Char pairs are generated per word with the same slice-zip used by
@@ -610,7 +614,7 @@ def bpe_merge_candidates(documents: DataFrame, top_n: int = 50) -> DataFrame:
     w = Window.orderBy(F.desc("n"), F.asc("c1"), F.asc("c2"))
     return (
         counts.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .where(F.col("rnk") <= top_n)
+        .where(F.col("rnk") <= BPE_TOP_N)
     )
 
 
@@ -831,8 +835,8 @@ def quality_funnel(documents: DataFrame) -> DataFrame:
     )
 
 
-def doc_keywords(documents: DataFrame, k: int = 3) -> DataFrame:
-    """Per-document keyword extraction: the ``k`` terms with the highest
+def doc_keywords(documents: DataFrame) -> DataFrame:
+    """Per-document keyword extraction: the 3 terms with the highest
     tf-over-df salience — frequent in THIS doc, rare across the corpus —
     the retrieval/labeling primitive built on the same exploded-term pass
     as :func:`term_df_idf`.
@@ -862,7 +866,7 @@ def doc_keywords(documents: DataFrame, k: int = 3) -> DataFrame:
         "doc_freq", F.count(F.lit(1)).over(Window.partitionBy("term"))
     ).select("doc_id", "term", F.expr("(tf * 1000000) div doc_freq").alias("score_ppm"))
     w = Window.partitionBy("doc_id").orderBy(F.col("score_ppm").desc(), F.col("term").asc())
-    top = scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    top = scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= 3)
     return top.groupBy("doc_id").agg(
         F.array_join(
             F.transform(

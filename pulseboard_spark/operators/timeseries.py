@@ -157,8 +157,8 @@ def gap_fill_hours(ev: DataFrame) -> DataFrame:
     )
 
 
-def hourly_trending(ev: DataFrame, n: int = 3) -> DataFrame:
-    """Top-N event types per hour bucket — the "trending" leaderboard shape.
+def hourly_trending(ev: DataFrame) -> DataFrame:
+    """Top-3 event types per hour bucket — the "trending" leaderboard shape.
 
     Two-phase like every leaderboard here: the fact reduces map-side to
     (hour, type) counts; the rank window only sees the counts table.
@@ -178,12 +178,12 @@ def hourly_trending(ev: DataFrame, n: int = 3) -> DataFrame:
     w = Window.partitionBy("hour_ms").orderBy(F.desc("n"), F.asc("type"))
     return (
         counts.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .where(F.col("rnk") <= n)
+        .where(F.col("rnk") <= 3)
         .select("hour_ms", "type", "n", "rnk")
     )
 
 
-def seasonal_deviation(ev: DataFrame, z_threshold: float = 3.0) -> DataFrame:
+def seasonal_deviation(ev: DataFrame) -> DataFrame:
     """Seasonality-aware volume anomalies: each (type, hour) bucket scored
     against the baseline for its HOUR-OF-DAY — a Monday-9am spike is
     judged against other 9am hours, not against 3am.
@@ -243,7 +243,7 @@ def seasonal_deviation(ev: DataFrame, z_threshold: float = 3.0) -> DataFrame:
         )
     )
     anomaly = F.when(F.col("n_obs") <= 1, F.lit(False)).otherwise(
-        F.when(F.col("sd") > 0, (F.col("n") - F.col("mu")) / F.col("sd") > z_threshold)
+        F.when(F.col("sd") > 0, (F.col("n") - F.col("mu")) / F.col("sd") > 3.0)
         .otherwise(F.col("n") != F.col("mu"))
     )
     return scored.select(
@@ -296,23 +296,22 @@ def event_transitions(ev: DataFrame) -> DataFrame:
     )
 
 
-def event_paths_topk(ev: DataFrame, depth: int = 3, k: int = 20) -> DataFrame:
-    """Top-k event-type paths: the ``depth``-length sequences of
+def event_paths_topk(ev: DataFrame) -> DataFrame:
+    """Top-20 event-type paths: the 3-long sequences of
     consecutive event types (per entity, ordered by (ts_ms, event_id))
     that occur most often across the corpus — the "what do users do in
     what order" product-analytics staple one step up from the first-order
     transition matrix (:func:`event_transitions`).
 
-    Output: path (types joined by " > "), n, rank — the global top ``k``
+    Output: path (types joined by " > "), n, rank — the global top 20
     by (n DESC, path ASC), a deterministic total order.
 
     Scale: one shuffle on entity_id for the lag window (shared with
     sessionization / transitions — same key), then a map-side-combining
-    rollup to at most |types|^depth rows; the final top-k is a single
+    rollup to at most |types|³ rows; the final top-k is a single
     window over that tiny counts table.  No self-join, no driver collect.
     """
-    if depth < 2:
-        raise ValueError(f"event_paths_topk needs depth >= 2, got {depth}")
+    depth = 3
     w = Window.partitionBy("entity_id").orderBy("ts_ms", "event_id")
     steps = ev.select("entity_id", "type", "ts_ms", "event_id")
     for i in range(1, depth):
@@ -325,7 +324,7 @@ def event_paths_topk(ev: DataFrame, depth: int = 3, k: int = 20) -> DataFrame:
     rk = F.row_number().over(Window.orderBy(F.col("n").desc(), F.col("path").asc()))
     return (
         counts.withColumn("rank", rk.cast("long"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 20)
         .select("path", "n", "rank")
     )
 
@@ -347,9 +346,13 @@ def _cusum_values(ev: DataFrame) -> DataFrame:
     )
 
 
-def cusum_params(ev: DataFrame, h_mads: int = 5) -> DataFrame:
+#: CUSUM alarm threshold, in micro-MADs.
+CUSUM_H_MADS = 5
+
+
+def cusum_params(ev: DataFrame) -> DataFrame:
     """Per-type CUSUM parameters (type, mu, h) in micro units: truncated
-    micro-mean center, h = h_mads·max(micro-MAD, 1).  Trained offline on
+    micro-mean center, h = CUSUM_H_MADS·max(micro-MAD, 1).  Trained offline on
     a batch window and handed to the streaming detector
     (`streaming/stateful.py::cusum_stateful`) — the standard
     train-offline / detect-online split."""
@@ -370,11 +373,11 @@ def cusum_params(ev: DataFrame, h_mads: int = 5) -> DataFrame:
     )
     mad = _hist_median(ah, "type", "adev", "_c", "mad")
     return mu.join(mad, "type").select(
-        "type", "mu", (F.greatest(F.col("mad"), F.lit(1)) * h_mads).alias("h")
+        "type", "mu", (F.greatest(F.col("mad"), F.lit(1)) * CUSUM_H_MADS).alias("h")
     )
 
 
-def cusum_changepoints(ev: DataFrame, h_mads: int = 5) -> DataFrame:
+def cusum_changepoints(ev: DataFrame) -> DataFrame:
     """Per-(entity, type) CUSUM change-point detection — the classic
     drift detector the threshold rules (R1/R2) can't express: a rule
     fires on one extreme event, CUSUM fires when a RUN of individually
@@ -387,7 +390,7 @@ def cusum_changepoints(ev: DataFrame, h_mads: int = 5) -> DataFrame:
     center is the truncated micro-mean, the scale is the micro-MAD
     (lower-discrete, histogram arithmetic), and the two-sided recurrence
 
-        S⁺ = max(0, S⁺ + (v − μ));  alarm when S⁺ > h = h_mads·max(MAD,1), then S⁺ := 0
+        S⁺ = max(0, S⁺ + (v − μ));  alarm when S⁺ > h = CUSUM_H_MADS·max(MAD,1), then S⁺ := 0
         S⁻ = max(0, S⁻ − (v − μ));  symmetric
 
     runs in int64 (page 1 of Page 1954, public method).  Output per key:
@@ -400,7 +403,7 @@ def cusum_changepoints(ev: DataFrame, h_mads: int = 5) -> DataFrame:
     |keys| rows, not |events|.  The per-type μ/h table is broadcast.
     """
     vals = _cusum_values(ev)
-    par = cusum_params(ev, h_mads=h_mads)
+    par = cusum_params(ev)
     narrow = vals.join(F.broadcast(par), "type").select(
         "entity_id", "type", "ts_us", "event_id",
         (F.col("vu") - F.col("mu")).alias("d"), "h",
@@ -634,16 +637,16 @@ def value_autocorr(ev: DataFrame) -> DataFrame:
     )
 
 
-def burst_windows(ev: DataFrame, factor: int = 2) -> DataFrame:
+def burst_windows(ev: DataFrame) -> DataFrame:
     """Hourly burst detection per event type: an hour is a burst when its
-    event count reaches ``factor``× the mean hourly rate of the previous
+    event count reaches 2× the mean hourly rate of the previous
     24 hour-slots (absent hours count as zero traffic — a burst after a
     quiet day must fire, so the divisor is the 24-slot span, not the
     observed-hour count).  The volume companion to the value-based CUSUM
     change-points.
 
     The decision is the exact integer cross-multiplication
-    ``n·24 ≥ factor·prev24_sum`` — no float rate at the boundary — and
+    ``n·24 ≥ 2·prev24_sum`` — no float rate at the boundary — and
     only fires after a full 24-slot warmup (``hour_idx ≥ first hour +
     24``): before that, the fixed divisor counts pre-history slots as
     quiet hours, which flags the first ~half-day of perfectly steady
@@ -672,7 +675,7 @@ def burst_windows(ev: DataFrame, factor: int = 2) -> DataFrame:
             (
                 (F.col("hour_idx") >= F.col("_first") + 24)
                 & (F.col("prev24_sum") > 0)
-                & (F.col("n_events") * 24 >= F.lit(int(factor)) * F.col("prev24_sum"))
+                & (F.col("n_events") * 24 >= F.lit(2) * F.col("prev24_sum"))
             ).alias("is_burst"),
         )
     )
@@ -705,9 +708,7 @@ def weekly_seasonality(ev: DataFrame) -> DataFrame:
     )
 
 
-def holt_forecast(
-    ev: DataFrame, alpha: float = 0.2, beta: float = 0.1
-) -> DataFrame:
+def holt_forecast(ev: DataFrame) -> DataFrame:
     """Holt double-exponential smoothing per (entity, type): level +
     linear trend, surfaced as the LAST state per key plus the one-step
     forecast — the next rung of the forecasting ladder above
@@ -715,7 +716,7 @@ def holt_forecast(
     level; Holt also tracks where it is headed, so a steadily climbing
     metric forecasts ahead of its current value instead of lagging it).
 
-        level_1 = v_1;  trend_1 = 0
+        level_1 = v_1;  trend_1 = 0;  α = 0.2, β = 0.1
         level_t = α·v + (1−α)·(level_{t−1} + trend_{t−1})
         trend_t = β·(level_t − level_{t−1}) + (1−β)·trend_{t−1}
 
@@ -730,6 +731,7 @@ def holt_forecast(
     """
     from decimal import Decimal
 
+    alpha, beta = 0.2, 0.1
     a_c = float(Decimal(1) - Decimal(str(alpha)))
     b_c = float(Decimal(1) - Decimal(str(beta)))
     narrow = ev.filter(F.col("value").isNotNull()).select(

@@ -28,21 +28,19 @@ from pyspark.sql import functions as F
 US_PER_SEC = 1_000_000
 
 
-def trailing_window(partition_cols: list[str], seconds: int, order_col: str = "ts_us") -> WindowSpec:
-    """RANGE frame covering the inclusive trailing ``seconds`` window."""
+def trailing_window(partition_cols: list[str], seconds: int) -> WindowSpec:
+    """RANGE frame over ``ts_us`` covering the inclusive trailing
+    ``seconds`` window."""
     return (
         Window.partitionBy(*partition_cols)
-        .orderBy(F.col(order_col))
+        .orderBy(F.col("ts_us"))
         .rangeBetween(-seconds * US_PER_SEC, 0)
     )
 
 
-def with_trailing_aggs(
-    df: DataFrame,
-    partition_cols: list[str] = ("entity_id", "type"),
-    value_col: str = "value",
-) -> DataFrame:
-    """Add the full WindowStore aggregate surface as columns.
+def with_trailing_aggs(df: DataFrame) -> DataFrame:
+    """Add the full WindowStore aggregate surface over ``value`` per
+    (entity_id, type) as columns.
 
     rate_1m (A2), sum_30s (A3), count_60s (A4), avg_5m / avg_1h (A5).
     All windows are inclusive of the current row, matching
@@ -77,12 +75,12 @@ def with_trailing_aggs(
     every real CDP feed keyed by event_id) the subtraction is exactly 0.0
     and the plans are bit-identical.
     """
-    cols = list(partition_cols)
+    cols = ["entity_id", "type"]
     w60 = trailing_window(cols, 60)
     w30 = trailing_window(cols, 30)
     w5m = trailing_window(cols, 300)
     w1h = trailing_window(cols, 3600)
-    v = F.col(value_col)
+    v = F.col("value")
     # later-peer contributions: whole peer group minus the running
     # (event_id-ordered) prefix — same hash partitioning, one extra sort
     peers = Window.partitionBy(*cols, "ts_us")
@@ -113,16 +111,16 @@ def with_trailing_aggs(
 MINUTE_MS = 60_000
 
 
-def minute_counts(df: DataFrame, ts_col: str = "ts_ms") -> DataFrame:
+def minute_counts(df: DataFrame) -> DataFrame:
     """A9 batch twin (`core/StatsService.kt:19-55`): global per-minute
     tumbling event counts — the events/min ops gauge as an event-time table.
     One partial-aggregated groupBy; the streaming twin is a 1-min windowed
     count surfaced through ``observe()``."""
-    m = (F.col(ts_col) - F.col(ts_col) % MINUTE_MS).alias("minute_ms")
+    m = (F.col("ts_ms") - F.col("ts_ms") % MINUTE_MS).alias("minute_ms")
     return df.groupBy(m).agg(F.count(F.lit(1)).cast("long").alias("n_events"))
 
 
-def sliding_rate_5m(df: DataFrame, ts_col: str = "ts_ms") -> DataFrame:
+def sliding_rate_5m(df: DataFrame) -> DataFrame:
     """A15 (`ui/src/lib/slidingWindow.ts:15-79`): per minute, the trailing
     5-minute sliding count and per-minute rate.
 
@@ -130,7 +128,7 @@ def sliding_rate_5m(df: DataFrame, ts_col: str = "ts_ms") -> DataFrame:
     RANGE frame over the bucket table — the frame runs over minutes, not
     events, so the unpartitioned window is over an already-tiny series (the
     global ops gauge; at 100 TB partition the gauge by tenant/profile)."""
-    per_min = minute_counts(df, ts_col)
+    per_min = minute_counts(df)
     w = Window.orderBy("minute_ms").rangeBetween(-(4 * MINUTE_MS), 0)
     cnt = F.sum("n_events").over(w)
     return per_min.select(
@@ -140,30 +138,10 @@ def sliding_rate_5m(df: DataFrame, ts_col: str = "ts_ms") -> DataFrame:
     )
 
 
-def unique_entities_5m(df: DataFrame, key: str = "entity_id", ts_col: str = "ts_ms") -> DataFrame:
-    """A16 (`ui/src/lib/slidingWindow.ts:85-108`): distinct keys per 5-min
+def unique_entities_5m(df: DataFrame) -> DataFrame:
+    """A16 (`ui/src/lib/slidingWindow.ts:85-108`): distinct entity_ids per 5-min
     tumbling window.  Exact count_distinct (two-phase: partial distinct
     map-side); the 100 TB path is ``approx_count_distinct`` (HLL merge, no
     distinct shuffle) — same call shape, documented divergence."""
-    w5 = (F.col(ts_col) - F.col(ts_col) % (5 * MINUTE_MS)).alias("window_ms")
-    return df.groupBy(w5).agg(F.count_distinct(F.col(key)).cast("long").alias("uniques"))
-
-
-def trailing_percentile(
-    df: DataFrame,
-    pct: float = 0.95,
-    seconds: int = 3600,
-    partition_cols: list[str] = ("entity_id", "type"),
-    value_col: str = "value",
-    out: str = "p95_1h",
-) -> DataFrame:
-    """Exact trailing percentile per event (A8 done right).
-
-    The reference defers true P95 to a ticket (`docs/TICKETS.md:127-135`)
-    and ships a 10×avg fallback (`core/Rules.kt:190-200`); Spark's native
-    ``percentile`` gives the real quantile.  At 100 TB scale swap for
-    ``percentile_approx`` (t-digest-style mergeable sketch) — same call
-    shape, documented divergence from the exact oracle.
-    """
-    w = trailing_window(list(partition_cols), seconds)
-    return df.withColumn(out, F.percentile(F.col(value_col), F.lit(pct)).over(w))
+    w5 = (F.col("ts_ms") - F.col("ts_ms") % (5 * MINUTE_MS)).alias("window_ms")
+    return df.groupBy(w5).agg(F.count_distinct(F.col("entity_id")).cast("long").alias("uniques"))

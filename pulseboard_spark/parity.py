@@ -134,12 +134,11 @@ def compare(spark: SparkSession, con: duckdb.DuckDBPyConnection, name: str, sf_d
     return ParityResult(name, True, len(sdf), len(ddf))
 
 
-def run_all(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> list[ParityResult]:
+def run_all(spark: SparkSession, sf_dir: str) -> list[ParityResult]:
+    """:func:`compare` every oracle-checked query, one result each."""
     con = duck_connection(sf_dir)
     results = []
-    if names is None:  # an explicitly-empty list means "run nothing"
-        names = [n for n in QUERIES if n in ORACLE_SQL]
-    for name in names:
+    for name in [n for n in QUERIES if n in ORACLE_SQL]:
         try:
             results.append(compare(spark, con, name, sf_dir))
         except Exception as exc:  # surface, don't abort the sweep

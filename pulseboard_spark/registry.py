@@ -1383,10 +1383,6 @@ def label_noise_suspects_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # No precomputed IVF index: the exact label-masked kernel over the
-    # session-memoized index parts (one part under the broadcast ceiling).
-    # The IVF index is a candidate-generation artifact for the approximate
-    # (nprobe) path.
     return similarity.hard_negatives(_embs(spark, sf_dir))
 
 

@@ -37,18 +37,15 @@ def write_bucketed(
     bucket_cols: Sequence[str],
     num_buckets: int,
     path: str,
-    sort: bool = True,
 ) -> None:
-    """Persist ``df`` as a bucketed (and bucket-sorted) external table.
+    """Persist ``df`` as a bucketed and bucket-sorted external table.
 
     Sorting by the bucket key lets sort-merge joins skip their Sort too
     when each bucket holds a single file — pre-repartitioning on the
     bucket key achieves that (one writer task per bucket).
     """
     cols = list(bucket_cols)
-    writer = df.repartition(num_buckets, *cols).write.bucketBy(num_buckets, *cols)
-    if sort:
-        writer = writer.sortBy(*cols)
+    writer = df.repartition(num_buckets, *cols).write.bucketBy(num_buckets, *cols).sortBy(*cols)
     writer.option("path", path).mode("overwrite").format("parquet").saveAsTable(table)
 
 
@@ -100,9 +97,9 @@ def zorder_key(a, b):
     return _spread_bits16(a).bitwiseOR(F.shiftleft(_spread_bits16(b), 1)).cast("long")
 
 
-def zorder_layout_audit(ev, n_buckets: int = 64) -> "DataFrame":
+def zorder_layout_audit(ev) -> "DataFrame":
     """Layout audit for a Z-ordered (user, hour) clustering of the event
-    fact: bucket the Morton key space evenly and report, per bucket, the
+    fact: bucket the Morton key space evenly into 64 and report, per bucket, the
     row count and the spans it would confine a reader to — distinct
     users and the hour range.  Tight per-bucket spans on BOTH dimensions
     are the locality a z-layout buys (a pure time-sort shows one tight
@@ -140,7 +137,7 @@ def zorder_layout_audit(ev, n_buckets: int = 64) -> "DataFrame":
     ).select(
         # integer div keeps the bucket id engine-exact (the key space is
         # 32 bits wide: two interleaved 16-bit dimensions)
-        F.expr(f"(_z * {int(n_buckets)}) div {1 << 32}").cast("long").alias("z_bucket"),
+        F.expr(f"(_z * 64) div {1 << 32}").cast("long").alias("z_bucket"),
         "entity_id",
         "_hour",
     )

@@ -132,10 +132,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return memo(spark, sf_dir, name, build)
 
 
-def _k(col_props=None):
-    if col_props is None:
-        col_props = F.col("props")
-    return F.regexp_extract(col_props, r"([0-9]+)", 1).cast("int")
+def _k():
+    return F.regexp_extract(F.col("props"), r"([0-9]+)", 1).cast("int")
 
 
 def _pick(arr, idx):

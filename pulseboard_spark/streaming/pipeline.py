@@ -180,14 +180,14 @@ def kafka_cdp_sink(events: DataFrame, brokers: str, topic: str = "cdp-events", c
     )
 
 
-def entity_alert_stream(events: DataFrame, grace: str = "120 seconds") -> DataFrame:
+def entity_alert_stream(events: DataFrame) -> DataFrame:
     """§3.1 end-to-end streaming shape: admission (W2) → dedup (W1) →
     per-event stateful rule evaluation (W5) over any entity-event stream
     (Kafka, file, memory).  Returns the alert stream; attach a sink with
     ``.writeStream`` (Kafka via :func:`kafka_alert_sink`)."""
     from pulseboard_spark.streaming.stateful import alert_rules_stateful
 
-    prepared = with_dedup(with_admission(events, grace), ["event_id"]).drop("is_late")
+    prepared = with_dedup(with_admission(events), ["event_id"]).drop("is_late")
     return alert_rules_stateful(prepared, set_watermark=False)
 
 
@@ -197,12 +197,15 @@ class CdpIdentityStage:
     components → join event→canonical" (SURVEY §3.2 Spark shape; §4.2
     custom item 3).
 
-    Per micro-batch: (1) validate+normalize the raw CDP rows; (2) append
-    the batch's new identifier edges to the persistent edges table;
-    (3) recompute components over all edges, *seeded* with the previous
-    component map so convergence starts near the fixpoint (a handful of
-    label updates for typical incremental batches); (4) write the new map;
-    (5) resolve the batch's events against the map **as of this batch**
+    Per micro-batch: (1) validate+normalize the raw CDP rows; (2) fold the
+    batch's identifiers and edges into the previous component map with
+    :func:`~pulseboard_spark.operators.identity.merge_components` (the
+    first batch builds it with ``components_for``) — no edge history is
+    kept, the map is connectivity-complete; (3) materialize the new map
+    and overwrite the stored one (it was read from the path the write
+    replaces, so it is checkpointed first: the write must never read the
+    files it deletes); (4) resolve the batch's events against the map
+    **as of this batch**
     (apply-time resolution — SURVEY §3.2 pins this semantics; an ALIAS in a
     later batch does NOT rewrite earlier events' profiles, reproducing the
     reference's orphaned-profile behavior, `docs/cdp/README.md:85-126`) and
@@ -210,45 +213,36 @@ class CdpIdentityStage:
     stateful profile/segment stage as a file stream.
 
     State lives in parquet dirs (a stand-in for Delta tables at
-    production): ``{workdir}/edges``, ``{workdir}/components``,
-    ``{workdir}/resolved``.
+    production): ``{workdir}/components``, ``{workdir}/resolved``.
     """
 
     def __init__(self, spark: SparkSession, workdir: str):
         self.spark = spark
-        self.edges_dir = f"{workdir}/edges"
         self.comp_dir = f"{workdir}/components"
         self.resolved_dir = f"{workdir}/resolved"
         self._have_state = False
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         from pulseboard_spark.operators.identity import (
-            connected_components,
+            components_for,
             identity_edges,
             identity_nodes,
+            merge_components,
             resolve_profiles,
             valid_cdp_events,
         )
 
         cvalid = valid_cdp_events(batch_df).localCheckpoint()
-        new_edges = identity_edges(cvalid)
-        new_edges.write.mode("append").parquet(self.edges_dir)
-
-        edges = self.spark.read.parquet(self.edges_dir).distinct()
-        prev = self.spark.read.parquet(self.comp_dir) if self._have_state else None
-        nodes = edges.select(F.col("a").alias("id")).unionByName(
-            edges.select(F.col("b").alias("id"))
-        ).distinct()
-        # single-id events contribute no edges but still need a component
-        nodes = nodes.unionByName(identity_nodes(cvalid)).distinct()
-        if prev is not None:
-            nodes = nodes.unionByName(prev.select("id")).distinct()
-        comp = connected_components(nodes, edges, seed=prev)
+        if self._have_state:
+            prev = self.spark.read.parquet(self.comp_dir)
+            comp = merge_components(prev, identity_nodes(cvalid), identity_edges(cvalid))
+        else:
+            comp = components_for(cvalid)
+        comp = comp.localCheckpoint()
         comp.write.mode("overwrite").parquet(self.comp_dir)
         self._have_state = True
 
-        resolved = resolve_profiles(cvalid, self.spark.read.parquet(self.comp_dir))
-        resolved.write.mode("append").parquet(self.resolved_dir)
+        resolve_profiles(cvalid, comp).write.mode("append").parquet(self.resolved_dir)
 
     def components(self) -> DataFrame:
         return self.spark.read.parquet(self.comp_dir)
@@ -257,10 +251,13 @@ class CdpIdentityStage:
         return self.spark.read.parquet(self.resolved_dir)
 
 
-def with_admission(
-    events: DataFrame, grace: str = "120 seconds", observation=None
-) -> DataFrame:
-    """W2: late-event admission — watermark gives the drop tier; an
+#: Event-time watermark delay of every streaming operator here: the
+#: admission grace, and so W1's dedup TTL.
+WATERMARK_DELAY = "120 seconds"
+
+
+def with_admission(events: DataFrame, observation=None) -> DataFrame:
+    """W2: late-event admission — the ``WATERMARK_DELAY`` watermark gives the drop tier; an
     is_late tag (event older than 5 s against the micro-batch clock) feeds
     the late-vs-ontime metrics the reference tracks
     (`CdpEventProcessor.kt:177-230`).
@@ -273,7 +270,7 @@ def with_admission(
     extra aggregation job, no second read (the reference keeps these
     counters on its single-threaded ingest loop; here they survive
     distribution)."""
-    out = events.withWatermark("ts", grace).withColumn(
+    out = events.withWatermark("ts", WATERMARK_DELAY).withColumn(
         "is_late", F.col("ts") < F.current_timestamp() - F.expr("INTERVAL 5 SECONDS")
     )
     if observation is not None:
@@ -356,7 +353,7 @@ def scheduler_pool(spark: SparkSession, pool: str):
         sc.setLocalProperty("spark.scheduler.pool", prev)
 
 
-def use_rocksdb_state(spark: SparkSession, changelog: bool = True) -> None:
+def use_rocksdb_state(spark: SparkSession) -> None:
     """Switch stateful streaming queries to the RocksDB state store
     (SURVEY §7.1 step 8).  The default HDFS-backed provider keeps every
     key in executor heap — fine for the reference's single-node scale,
@@ -367,8 +364,7 @@ def use_rocksdb_state(spark: SparkSession, changelog: bool = True) -> None:
     is pinned per checkpoint at query start)."""
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
     spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true" if changelog else "false",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true"
     )
 
 
@@ -378,23 +374,21 @@ def with_dedup(events: DataFrame, key_cols: list[str] = ("event_id",)) -> DataFr
     return events.dropDuplicatesWithinWatermark(list(key_cols))
 
 
-def streaming_minute_counts(events: DataFrame, watermark: str = "120 seconds") -> DataFrame:
+def streaming_minute_counts(events: DataFrame) -> DataFrame:
     """A9 streaming twin (`core/StatsService.kt:19-55`): event-time 1-minute
     tumbling counts — all built-in (windowed agg + watermark state
     eviction), zero custom state.  Output: minute_ms, n_events."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK_DELAY)
         .groupBy(F.window("ts", "1 minute").alias("w"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
         .select(F.unix_millis(F.col("w.start")).alias("minute_ms"), "n_events")
     )
 
 
-def streaming_sessions(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "120 seconds"
-) -> DataFrame:
-    """Gap-session streaming twin of ``operators/sessions.sessionize`` via
-    the built-in ``session_window`` — incremental session merge + watermark
+def streaming_sessions(events: DataFrame) -> DataFrame:
+    """30-minute gap-session streaming twin of ``operators/sessions.sessionize``
+    via the built-in ``session_window`` — incremental session merge + watermark
     eviction for free.  Boundary note: the built-in closes a session when
     the gap is ≥ the threshold (half-open windows) while the batch operator
     starts a new session only when strictly greater; the two agree on any
@@ -402,8 +396,8 @@ def streaming_sessions(
     end = last_ts + gap (Spark's convention); subtract the gap to compare
     with the batch session_end_ms."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy("entity_id", F.session_window("ts", gap).alias("w"))
+        events.withWatermark("ts", WATERMARK_DELAY)
+        .groupBy("entity_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
         .select(
             "entity_id",
@@ -414,8 +408,8 @@ def streaming_sessions(
     )
 
 
-def with_dim_enrichment(events: DataFrame, dim: DataFrame, on: str, how: str = "left") -> DataFrame:
-    """Stream-static enrichment join: attach a slowly-changing dimension
+def with_dim_enrichment(events: DataFrame, dim: DataFrame, on: str) -> DataFrame:
+    """Stream-static left enrichment join: attach a slowly-changing dimension
     (geo metadata, entity allow-lists, model routing tables) to a stream.
 
     The static side re-resolves per micro-batch — refreshing the dim table
@@ -423,26 +417,25 @@ def with_dim_enrichment(events: DataFrame, dim: DataFrame, on: str, how: str = "
     broadcasts, so the stream side never shuffles and no join state
     accumulates (unlike stream-stream joins, stream-static needs no
     watermark bookkeeping on the static side)."""
-    return events.join(F.broadcast(dim), on, how)
+    return events.join(F.broadcast(dim), on, "left")
 
 
-def profile_upsert_writer(
-    base_path: str,
-    key: str = "profile_id",
-    order: tuple = ("ts_ms",),
-    n_buckets: int = 16,
-):
+#: Directory partitions of the :func:`profile_upsert_writer` store.
+PROFILE_STORE_BUCKETS = 16
+
+
+def profile_upsert_writer(base_path: str):
     """``foreachBatch`` UPSERT into a hash-bucketed parquet profile store —
     the MERGE-into-table pattern (SURVEY §7.1 step 6) without a table
-    format: profiles hash into ``n_buckets`` directory partitions, and
-    each micro-batch rewrites ONLY the buckets it touches (dynamic
-    partition overwrite), merging old ∪ new and keeping the latest row
-    per key by the ``order`` columns (descending, e.g. event time).
+    format: profiles hash on ``profile_id`` into ``PROFILE_STORE_BUCKETS``
+    directory partitions, and each micro-batch rewrites ONLY the buckets
+    it touches (dynamic partition overwrite), merging old ∪ new and
+    keeping the latest row per profile by ``ts_ms``.
 
     Scale shape: per batch, work is proportional to touched buckets, not
     store size — a batch touching k profiles reads/rewrites at most
-    min(k, n_buckets) buckets.  Size ``n_buckets`` so one bucket ≈ one
-    comfortable task (store_rows / n_buckets rows).  The merged result is
+    min(k, buckets) buckets.  Size the buckets so one bucket ≈ one
+    comfortable task (store_rows / buckets rows).  The merged result is
     localCheckpointed before the overwrite so Spark never overwrites a
     path it is still reading.
 
@@ -451,12 +444,14 @@ def profile_upsert_writer(
 
     from pyspark.errors import AnalysisException
 
+    n_buckets = PROFILE_STORE_BUCKETS
+
     def write(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return  # nothing to upsert — and never create an empty store dir
         spark = batch_df.sparkSession
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        bucket = F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets))
+        bucket = F.pmod(F.xxhash64(F.col("profile_id").cast("string")), F.lit(n_buckets))
         batch = batch_df.withColumn("_bucket", bucket).withColumn("_src", F.lit(1))
         try:
             existing = spark.read.parquet(base_path).withColumn("_src", F.lit(0))
@@ -492,12 +487,10 @@ def profile_upsert_writer(
             )
         else:
             merged = batch
-        # tie-break: on equal order columns the BATCH row wins (an update
+        # tie-break: on equal ts_ms the BATCH row wins (an update
         # carrying the same event time as the stored row must not
         # nondeterministically keep the stale value)
-        w = Window.partitionBy(key).orderBy(
-            *[F.desc(c) for c in order], F.desc("_src")
-        )
+        w = Window.partitionBy("profile_id").orderBy(F.desc("ts_ms"), F.desc("_src"))
         latest = (
             merged.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)

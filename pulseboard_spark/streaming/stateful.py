@@ -303,16 +303,14 @@ def _eval_r3(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Itera
     yield pd.DataFrame(rows, columns=cols)
 
 
-def r3_stateful(entity_stream: DataFrame, set_watermark: bool = True) -> DataFrame:
+def r3_stateful(entity_stream: DataFrame) -> DataFrame:
     """Streaming R3 geo/device-mismatch alerts, keyed by entity_id (R3 spans
     event types, so it cannot share alert_rules_stateful's (entity_id, type)
     grouping).  Input needs: entity_id, type, profile, ts_us, ts_ms,
-    event_id, geo, device, plus the timestamp ``ts`` when ``set_watermark``
-    is on; only the columns the kernel reads reach the operator."""
-    if set_watermark:
-        entity_stream = entity_stream.withWatermark("ts", "120 seconds")
+    event_id, geo, device and the timestamp ``ts`` (120 s watermark); only
+    the columns the kernel reads reach the operator."""
     return (
-        entity_stream
+        entity_stream.withWatermark("ts", "120 seconds")
         .select("entity_id", "type", "profile", "ts_us", "ts_ms", "event_id", "geo", "device")
         .groupBy("entity_id")
         .applyInPandasWithState(
@@ -474,14 +472,14 @@ def _reengage(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iter
     yield pd.DataFrame(rows, columns=["profile_id", "segment", "action", "ts_ms"])
 
 
-def reengage_stateful(profile_events: DataFrame, watermark: str = "10 seconds") -> DataFrame:
+def reengage_stateful(profile_events: DataFrame) -> DataFrame:
     """Inactivity-triggered reengage ENTER/EXIT stream.
 
     Input: profile_id, ts (timestamp), ts_ms.  Event-time timers require a
-    watermark; timer latency = 10 m silence + watermark delay, exactly the
-    session-gap pattern."""
+    watermark; timer latency = 10 m silence + the 10 s watermark delay,
+    exactly the session-gap pattern."""
     return (
-        profile_events.withWatermark("ts", watermark)
+        profile_events.withWatermark("ts", "10 seconds")
         .groupBy("profile_id")
         .applyInPandasWithState(
             _reengage,
@@ -559,16 +557,16 @@ def _emit_transitions(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState)
         yield pd.DataFrame({"from_type": out_from, "to_type": out_to, "ts_ms": ts})
 
 
-def transitions_stateful(entity_stream: DataFrame, set_watermark: bool = True) -> DataFrame:
+def transitions_stateful(entity_stream: DataFrame) -> DataFrame:
     """Streaming twin of ``operators/timeseries.event_transitions``: emits
     the raw transition PAIR stream (append mode); the matrix itself is one
     tiny downstream rollup per sink flush (foreachBatch / the consumer),
     exactly how the batch operator splits fact-shuffle vs counts-table
-    work.  Input needs: entity_id, type, ts (timestamp), ts_ms, event_id."""
-    if set_watermark:
-        entity_stream = entity_stream.withWatermark("ts", "120 seconds")
+    work.  Input needs: entity_id, type, ts (timestamp, 120 s watermark),
+    ts_ms, event_id."""
     return (
-        entity_stream.select("entity_id", "type", "ts", "ts_ms", "event_id")
+        entity_stream.withWatermark("ts", "120 seconds")
+        .select("entity_id", "type", "ts", "ts_ms", "event_id")
         .groupBy("entity_id")
         .applyInPandasWithState(
             _emit_transitions,
@@ -637,9 +635,7 @@ def _emit_cusum_alarms(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
         )
 
 
-def cusum_stateful(
-    entity_stream: DataFrame, params: DataFrame, set_watermark: bool = True
-) -> DataFrame:
+def cusum_stateful(entity_stream: DataFrame, params: DataFrame) -> DataFrame:
     """Streaming CUSUM drift detector: the batch-trained per-type
     (mu, h) parameter table (`operators/timeseries.cusum_params`) joins
     the stream broadcast (stream-static join), then keyed state carries
@@ -649,10 +645,9 @@ def cusum_stateful(
     summary by ``test_streaming_cusum_matches_batch``."""
     from pulseboard_spark.operators.timeseries import micro_units
 
-    if set_watermark:
-        entity_stream = entity_stream.withWatermark("ts", "120 seconds")
     narrow = (
-        entity_stream.filter(F.col("value").isNotNull())
+        entity_stream.withWatermark("ts", "120 seconds")
+        .filter(F.col("value").isNotNull())
         .select(
             "entity_id", "type", "ts", "ts_us", "ts_ms", "event_id",
             micro_units(F.col("value")).alias("vu"),
@@ -754,16 +749,16 @@ def _emit_bursts(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> I
         )
 
 
-def burst_stateful(entity_stream: DataFrame, set_watermark: bool = True) -> DataFrame:
+def burst_stateful(entity_stream: DataFrame) -> DataFrame:
     """Streaming twin of `operators/timeseries.burst_windows`: hourly
     volume bursts per event type, detected online with O(24) keyed state
     instead of a 24-hour batch re-scan.  Each hour's verdict emits as
     soon as the next hour opens (append mode); closed hours are pinned
     row-identical to the batch operator by
     ``test_streaming_burst_matches_batch``."""
-    if set_watermark:
-        entity_stream = entity_stream.withWatermark("ts", "120 seconds")
-    narrow = entity_stream.select("type", "ts", "ts_ms", "event_id")
+    narrow = entity_stream.withWatermark("ts", "120 seconds").select(
+        "type", "ts", "ts_ms", "event_id"
+    )
     return narrow.groupBy("type").applyInPandasWithState(
         _emit_bursts,
         outputStructType=BURST_SCHEMA,
@@ -868,17 +863,15 @@ def _emit_attribution(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState)
         )
 
 
-def attribution_stateful(entity_stream: DataFrame, set_watermark: bool = True) -> DataFrame:
+def attribution_stateful(entity_stream: DataFrame) -> DataFrame:
     """Streaming twin of `operators/sessions.purchase_attribution`:
     first/last-touch attribution emitted per purchase as it arrives,
     with keyed touch state bounded by the lookback window.  Pinned
     row-identical to the batch operator by
     ``test_streaming_attribution_matches_batch``."""
-    if set_watermark:
-        entity_stream = entity_stream.withWatermark(
-            "ts", f"{_ATTR_WATERMARK_MS // 1000} seconds"
-        )
-    narrow = entity_stream.select("entity_id", "ts", "ts_ms", "event_id", "type", "value")
+    narrow = entity_stream.withWatermark(
+        "ts", f"{_ATTR_WATERMARK_MS // 1000} seconds"
+    ).select("entity_id", "ts", "ts_ms", "event_id", "type", "value")
     return narrow.groupBy("entity_id").applyInPandasWithState(
         _emit_attribution,
         outputStructType=ATTRIBUTION_SCHEMA,

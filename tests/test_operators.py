@@ -249,13 +249,15 @@ def test_salted_agg_matches_direct(spark):
         assert abs(got[k][1] - want[k][1]) < 1e-6, k
 
 
-def test_resize_media_geometry(spark, sf_dir):
+def test_resize_media_geometry(spark, sf_dir, monkeypatch):
     """Resize stage: aspect-preserving integer geometry + truncated payload."""
+    from pulseboard_spark.operators import multimodal
     from pulseboard_spark.operators.multimodal import resize_media, synth_media
     from pulseboard_spark.sources.tables import load_table
 
+    monkeypatch.setattr(multimodal, "RESIZE_MAX_DIM", 100)
     media = synth_media(load_table(spark, sf_dir, "documents"))
-    out = resize_media(media, max_dim=100)
+    out = resize_media(media)
     rows = out.limit(200).collect()
     src = {r.doc_id: r for r in media.limit(0).unionByName(media).collect()}
     assert rows
@@ -923,16 +925,18 @@ class TestJpegCodec:
             assert r.decoded
 
 
-def test_ivf_topk_full_probe_is_exact(spark, sf_dir):
+def test_ivf_topk_full_probe_is_exact(spark, sf_dir, monkeypatch):
     """IVF with every cell probed must reproduce the brute-force result
     bit-for-bit (same kernel, same rounding, same tie-break) — recall loss
     can come only from unprobed cells."""
+    from pulseboard_spark.operators import similarity
     from pulseboard_spark.operators.similarity import cosine_topk, ivf_topk
     from pulseboard_spark.sources.tables import load_table
 
     embs = load_table(spark, sf_dir, "embeddings")
     exact = {tuple(r) for r in cosine_topk(embs, 5).collect()}
-    full = {tuple(r) for r in ivf_topk(embs, 5, nprobe=10**6).collect()}
+    monkeypatch.setattr(similarity, "IVF_NPROBE", 10**6)
+    full = {tuple(r) for r in ivf_topk(embs, 5).collect()}
     assert full == exact
 
 
@@ -949,7 +953,7 @@ def test_ivf_topk_recall(spark, sf_dir):
 
 def test_asof_join_semantics(spark):
     """Backward as-of: at-or-before match, max-ts wins, ties broken by
-    right_order, tolerance nulls stale matches but keeps left rows."""
+    right_order, left rows always kept."""
     from pulseboard_spark.operators.relational import asof_join
 
     left = spark.createDataFrame(
@@ -970,24 +974,19 @@ def test_asof_join_semantics(spark):
     assert rows["L3"]["ord"] is None  # right row is after the left ts
     assert rows["L4"]["ord"] is None  # key never appears on the right
 
-    tol = asof_join(
-        left, right, on=["entity_id"], ts="ts_ms", right_order="ord", tolerance_ms=10
-    )
-    trows = {r["tag"]: r for r in tol.collect()}
-    assert trows["L1"]["ord"] is None  # 80 < 100 - 10 -> stale, nulled
-    assert trows["L2"]["ord"] == 2  # exact-ts match survives any tolerance
 
-
-def test_sessionize_gap_boundary(spark):
-    """A gap exactly equal to gap_ms stays in the same session (strictly
-    greater starts a new one)."""
+def test_sessionize_gap_boundary(spark, monkeypatch):
+    """A gap exactly equal to SESSION_GAP_MS stays in the same session
+    (strictly greater starts a new one)."""
+    from pulseboard_spark.operators import sessions
     from pulseboard_spark.operators.sessions import sessionize
 
+    monkeypatch.setattr(sessions, "SESSION_GAP_MS", 1000)
     ev = spark.createDataFrame(
         [(1, "u", 0, 1.0), (2, "u", 1000, 1.0), (3, "u", 2001, 1.0)],
         "event_id long, entity_id string, ts_ms long, value double",
     )
-    out = sessionize(ev, gap_ms=1000).orderBy("session_start_ms").collect()
+    out = sessionize(ev).orderBy("session_start_ms").collect()
     assert [r["n_events"] for r in out] == [2, 1]
     assert out[0]["session_end_ms"] == 1000 and out[1]["session_start_ms"] == 2001
 
@@ -1102,11 +1101,13 @@ class TestHistogram:
 
 
 class TestInvertedIndex:
-    def test_postings_capped_and_consistent(self, spark, sf_dir):
+    def test_postings_capped_and_consistent(self, spark, sf_dir, monkeypatch):
+        from pulseboard_spark.operators import text
         from pulseboard_spark.operators.text import inverted_index
         from pulseboard_spark.sources.tables import load_table
 
-        idx = inverted_index(load_table(spark, sf_dir, "documents"), max_postings=5)
+        monkeypatch.setattr(text, "MAX_POSTINGS", 5)
+        idx = inverted_index(load_table(spark, sf_dir, "documents"))
         rows = idx.collect()
         assert rows, "empty index"
         for r in rows:
@@ -1116,13 +1117,15 @@ class TestInvertedIndex:
 
 
 class TestHeavyHitters:
-    def test_threshold_and_bound(self, spark):
+    def test_threshold_and_bound(self, spark, monkeypatch):
+        from pulseboard_spark.operators import relational
         from pulseboard_spark.operators.relational import heavy_hitters
 
+        monkeypatch.setattr(relational, "HEAVY_HITTER_MIN_SHARE_BP", 2500)
         # group g: 60/30/10 split at 2500 bp keeps only the top two
         rows = [("g", "a")] * 6 + [("g", "b")] * 3 + [("g", "c")] * 1
         df = spark.createDataFrame(rows, "k string, v string")
-        got = {r.v: (r.n, r.n_total, r.share_bp) for r in heavy_hitters(df, ["k"], "v", 2500).collect()}
+        got = {r.v: (r.n, r.n_total, r.share_bp) for r in heavy_hitters(df, ["k"], "v").collect()}
         assert got == {"a": (6, 10, 6000), "b": (3, 10, 3000)}
 
     def test_output_bounded_by_inverse_share(self, spark, sf_dir):
@@ -1130,7 +1133,7 @@ class TestHeavyHitters:
         from pulseboard_spark.sources.tables import entity_events
 
         per_geo = (
-            heavy_hitters(entity_events(spark, sf_dir), ["geo"], "type", 500)
+            heavy_hitters(entity_events(spark, sf_dir), ["geo"], "type")
             .groupBy("geo").count().collect()
         )
         assert all(r["count"] <= 20 for r in per_geo)
@@ -1183,10 +1186,14 @@ class TestCatalog:
         }
         assert got == want
 
-    def test_queries_as_views(self, spark, sf_dir):
+    def test_queries_as_views(self, spark, sf_dir, monkeypatch):
+        from pulseboard_spark import registry
         from pulseboard_spark.catalog import register_queries
 
-        register_queries(spark, sf_dir, ["tpch_q6_forecast_revenue", "value_histogram"])
+        monkeypatch.setattr(registry, "QUERIES", {
+            n: registry.QUERIES[n] for n in ("tpch_q6_forecast_revenue", "value_histogram")
+        })
+        register_queries(spark, sf_dir)
         assert spark.sql("SELECT * FROM value_histogram WHERE bin >= 20").count() == 0
         assert spark.sql("SELECT revenue FROM tpch_q6_forecast_revenue").count() == 1
 
@@ -1204,13 +1211,15 @@ class TestBigrams:
         # single-token doc contributes nothing
         assert got == {("the", "cat"): (2, 2, 1000000)}
 
-    def test_follow_probabilities_sum_to_one(self, spark, sf_dir):
+    def test_follow_probabilities_sum_to_one(self, spark, sf_dir, monkeypatch):
         from pyspark.sql import functions as F
+        from pulseboard_spark.operators import text
         from pulseboard_spark.operators.text import bigram_stats
         from pulseboard_spark.sources.tables import load_table
 
+        monkeypatch.setattr(text, "BIGRAM_MIN_COUNT", 1)
         rows = (
-            bigram_stats(load_table(spark, sf_dir, "documents"), min_count=1)
+            bigram_stats(load_table(spark, sf_dir, "documents"))
             .groupBy("w1").agg(F.round(F.sum("n") / F.first("n_first"), 6).alias("s"))
             .collect()
         )
@@ -1311,14 +1320,16 @@ class TestSplits:
 
 
 class TestBpeMerges:
-    def test_top_pair_matches_counter(self, spark):
+    def test_top_pair_matches_counter(self, spark, monkeypatch):
         from collections import Counter
 
+        from pulseboard_spark.operators import text
         from pulseboard_spark.operators.text import bpe_merge_candidates
 
+        monkeypatch.setattr(text, "BPE_TOP_N", 3)
         texts = ["banana band bandana", "an ant and an anvil"]
         df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-        got = [(r.c1, r.c2, r.n) for r in bpe_merge_candidates(df, top_n=3).orderBy("rnk").collect()]
+        got = [(r.c1, r.c2, r.n) for r in bpe_merge_candidates(df).orderBy("rnk").collect()]
         cnt = Counter()
         import re as _re
         for t in texts:
@@ -1409,7 +1420,7 @@ class TestLabelNoise:
         rows = [(i, [1.0 + 0.001 * i, 0.0], 7) for i in range(20)]
         rows.append((99, [-5.0, 9.0], 7))
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-        top = label_noise_suspects(df, top_n=3).orderBy("rnk").collect()
+        top = label_noise_suspects(df).orderBy("rnk").collect()
         assert top[0].vec_id == 99 and top[0].rnk == 1
         assert top[0].sq_dist_micro2 > 10 * top[1].sq_dist_micro2
 
@@ -1650,16 +1661,15 @@ class TestPagerank:
         assert got["a"] >= max(got.values()) - 1e-9
         assert got["d"] <= min(got.values()) + 1e-9
 
-    def test_checkpoint_cadence_same_answer(self, spark):
+    def test_checkpoint_cadence_same_answer(self, spark, monkeypatch):
+        from pulseboard_spark.operators import identity
         from pulseboard_spark.operators.identity import pagerank
 
         ndf = spark.createDataFrame([("a",), ("b",), ("c",)], "id string")
         edf = spark.createDataFrame([("a", "b"), ("b", "c")], "a string, b string")
         every2 = {r.id: r.rank for r in pagerank(ndf, edf, iters=6).collect()}
-        every3 = {
-            r.id: r.rank
-            for r in pagerank(ndf, edf, iters=6, checkpoint_every=3).collect()
-        }
+        monkeypatch.setattr(identity, "PAGERANK_CHECKPOINT_EVERY", 3)
+        every3 = {r.id: r.rank for r in pagerank(ndf, edf, iters=6).collect()}
         for k in every2:
             assert abs(every2[k] - every3[k]) < 1e-12
 
@@ -1733,7 +1743,7 @@ class TestHardNegatives:
         from pulseboard_spark.sources.tables import load_table
 
         embs = load_table(spark, sf_dir, "embeddings")
-        rows = hard_negatives(embs, k=3).collect()
+        rows = hard_negatives(embs).collect()
         assert rows
         n_labels = embs.select("label").distinct().count()
         assert n_labels > 1
@@ -1762,36 +1772,28 @@ class TestHardNegatives:
             ],
             schema=embs.select("vec_id", "embedding", "label").schema,
         )
-        clean = {tuple(r) for r in hard_negatives(embs, k=3).collect()}
+        clean = {tuple(r) for r in hard_negatives(embs).collect()}
         with_junk = {
             tuple(r)
             for r in hard_negatives(
-                embs.select("vec_id", "embedding", "label").unionByName(junk), k=3
+                embs.select("vec_id", "embedding", "label").unionByName(junk)
             ).collect()
         }
         assert with_junk == clean
 
-    def test_ivf_kernel_matches_broadcast_twin(self, spark, sf_dir):
-        """The cogrouped IVF-cell kernel at full probe (forced via an
-        explicit precomputed index — the declared under-ceiling path now
-        takes the broadcast label kernel, r10 optimization) must equal the
-        broadcast-kernel twin exactly, and so must the declared path."""
+    def test_declared_path_matches_broadcast_twin(self, spark, sf_dir):
+        """The declared path (memoized index parts) must equal the
+        broadcast-kernel twin's own one-part collect exactly."""
         from pulseboard_spark.operators.similarity import (
             hard_negatives,
             hard_negatives_broadcast,
-            ivf_index,
         )
         from pulseboard_spark.sources.tables import load_table
 
         embs = load_table(spark, sf_dir, "embeddings")
-        want = {tuple(r) for r in hard_negatives_broadcast(embs, k=3).collect()}
-        got_declared = {tuple(r) for r in hard_negatives(embs, k=3).collect()}
-        idx = ivf_index(
-            embs.filter("label is not null and embedding is not null"), iters=0
-        )
-        got_ivf = {tuple(r) for r in hard_negatives(embs, k=3, index=idx).collect()}
-        assert got_declared == want
-        assert got_ivf == want
+        want = {tuple(r) for r in hard_negatives_broadcast(embs).collect()}
+        got_declared = {tuple(r) for r in hard_negatives(embs).collect()}
+        assert got_declared == want and want
 
 
 class TestBroadcastSizeGuard:
@@ -1846,7 +1848,7 @@ class TestBroadcastSizeGuard:
         equality) — fast pin above."""
         self._route_and_compare(spark, sf_dir, monkeypatch, {
             "pairs": (60, lambda s, e: s.cosine_pairs_above(e, 0.35)),
-            "hard_negatives": (60, lambda s, e: s.hard_negatives(e, k=3)),
+            "hard_negatives": (60, lambda s, e: s.hard_negatives(e)),
         })
 
     def test_sliced_index_build_takes_fixed_passes(self, spark, sf_dir, monkeypatch):
@@ -1891,26 +1893,6 @@ class TestBroadcastSizeGuard:
         for p in parts:
             ids, M, _norms, _labels = p.value
             assert M.shape[0] == len(ids) and M.shape[1] > 0
-
-    def test_over_ceiling_precomputed_index_warns_and_stays_exact(self, spark, sf_dir, monkeypatch):
-        """A caller-built IVF index cannot rescue the exact over-ceiling
-        path (full-probe replication is the cost, not candidate gen) — the
-        reroute must emit a runtime warning instead of silently dropping
-        the index, and the answer stays the exact one."""
-        import warnings as _w
-
-        from pulseboard_spark.operators import similarity
-        from pulseboard_spark.sources.tables import load_table
-
-        embs = load_table(spark, sf_dir, "embeddings")
-        want = {tuple(r) for r in similarity.hard_negatives(embs, k=3).collect()}
-        idx = similarity.ivf_index(embs, n_cells=4)
-        monkeypatch.setattr(similarity, "MAX_BROADCAST_INDEX_ROWS", 60)
-        with _w.catch_warnings(record=True) as caught:
-            _w.simplefilter("always")
-            got = {tuple(r) for r in similarity.hard_negatives(embs, k=3, index=idx).collect()}
-        assert got == want
-        assert any("precomputed IVF index is unused" in str(w.message) for w in caught)
 
 
 class TestSeasonal:
@@ -1961,32 +1943,14 @@ class TestDocLmScore:
             assert r.bucket * 64 <= r.min_tokens <= r.max_tokens < (r.bucket + 1) * 64
 
 
-class TestProfileApprox:
-    def test_sketch_census_tracks_exact(self, spark, sf_dir):
-        """approx=True must keep the same output shape and land within the
-        sketch's error bound of the exact census — the fact-scale setting."""
-        from pulseboard_spark.operators.profiling import profile_table
-        from pulseboard_spark.sources.tables import load_table
-
-        df = load_table(spark, sf_dir, "orders")
-        exact = {r.column_name: r for r in profile_table(df).collect()}
-        approx = {r.column_name: r for r in profile_table(df, approx=True).collect()}
-        assert set(exact) == set(approx)
-        for c in exact:
-            assert approx[c].n_rows == exact[c].n_rows
-            assert approx[c].n_nonnull == exact[c].n_nonnull
-            nd, nda = exact[c].n_distinct, approx[c].n_distinct
-            assert abs(nda - nd) <= max(3, 0.2 * nd), (c, nd, nda)
-
-
 class TestRuleDsl:
-    def test_r1_predicate_from_json_matches_builtin(self, spark, sf_dir):
+    def test_r1_predicate_from_json_matches_builtin(self, spark, sf_dir, monkeypatch):
         """The JSON dialect must reproduce R1's built-in predicate exactly:
         same fired rows over the enriched metric columns."""
         import json
 
         from pulseboard_spark.functions.dsl import compile_predicate
-        from pulseboard_spark.operators.rules import r1_velocity_eval
+        from pulseboard_spark.operators import rules
         from pulseboard_spark.operators.windows import with_trailing_aggs
         from pulseboard_spark.sources.tables import entity_events
 
@@ -2003,10 +1967,11 @@ class TestRuleDsl:
             r.event_id
             for r in enriched.filter(compile_predicate(spec)).select("event_id").collect()
         }
+        monkeypatch.setattr(rules, "R1_MULTIPLIER", 1.5)
+        monkeypatch.setattr(rules, "R1_MIN_RATE", 0.05)
         want = {
             r.event_id
-            for r in r1_velocity_eval(ev, multiplier=1.5, min_rate=0.05)
-            .filter("fired").select("event_id").collect()
+            for r in rules.r1_velocity_eval(ev).filter("fired").select("event_id").collect()
         }
         assert got == want and got
 
@@ -2120,6 +2085,46 @@ def test_connected_components_ignores_foreign_endpoints(spark, cc_route):
     assert comp == {"n1": "n1", "n2": "n2", "n3": "n3", "n4": "n3"}
 
 
+def test_connected_components_null_endpoints(spark, cc_route):
+    """An edge with a NULL endpoint never equi-joins: it neither labels
+    nor bridges, on both routes."""
+    edges = spark.createDataFrame(
+        [("n1", None), (None, "n2"), ("n1", "n3")], "a string, b string"
+    )
+    nodes = spark.createDataFrame([("n1",), ("n2",), ("n3",)], "id string")
+    comp = {r["id"]: r["component"] for r in connected_components(nodes, edges).collect()}
+    assert comp == {"n1": "n1", "n2": "n2", "n3": "n1"}
+
+
+def test_local_components_take_fixed_jobs(spark, sf_dir, monkeypatch):
+    """The local route reads the node ids once into storage, collects the
+    node-incident edges in one capped probe and labels the ids with one
+    broadcast join: 7 jobs for the sf-dir identity graph (8 with a
+    separate endpoint collect, node semi-join collect and anti-join), and
+    the labels of the distributed route."""
+    import uuid
+
+    from pulseboard_spark.operators import identity
+    from pulseboard_spark.sources.tables import cdp_events
+
+    cvalid = identity.valid_cdp_events(cdp_events(spark, sf_dir)).cache()
+    cvalid.count()
+    sc = spark.sparkContext
+    group = f"local-cc:{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        local = identity.components_for(cvalid).localCheckpoint()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    monkeypatch.setattr(identity, "MAX_LOCAL_CC_EDGES", 0)
+    want = {tuple(r) for r in identity.components_for(cvalid).collect()}
+    cvalid.unpersist()
+    assert jobs <= 7, jobs
+    assert {tuple(r) for r in local.collect()} == want and want
+
+
 class TestEmbeddingDecon:
     def test_guarded_path_matches_broadcast(self, spark, sf_dir, monkeypatch):
         """Over the ceiling, the eval-side index parts must give the
@@ -2140,7 +2145,7 @@ class TestEmbeddingDecon:
 
         rows = [(i, [1.0, float(i)]) for i in range(1, 20, 2)]  # all odd ids
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        assert embedding_decontamination(df, eval_mod=10).count() == 0
+        assert embedding_decontamination(df).count() == 0
 
 
 class TestPq:
@@ -2175,7 +2180,7 @@ class TestPq:
             C = newC
         return C
 
-    def test_codes_match_reference(self, spark, sf_dir):
+    def test_codes_match_reference(self, spark, sf_dir, monkeypatch):
         import numpy as np
 
         from pulseboard_spark.operators import similarity as S
@@ -2186,7 +2191,9 @@ class TestPq:
         ids = np.array([r[0] for r in rows], dtype=np.int64)
         M = np.array([list(r[1]) for r in rows], dtype=np.float64)
         m, k, iters = 4, 8, 2
-        C = S.pq_train_codebooks(emb, m=m, k=k, iters=iters)
+        monkeypatch.setattr(S, "PQ_M", m)
+        monkeypatch.setattr(S, "PQ_K", k)
+        C = S.pq_train_codebooks(emb)
         Cref = self._reference_codebooks(ids, M, m, k, iters)
         assert C.shape == Cref.shape
         assert np.allclose(C, Cref, atol=1e-12), np.abs(C - Cref).max()
@@ -2249,10 +2256,12 @@ class TestPq:
         from pulseboard_spark.sources.tables import load_table
 
         emb = load_table(spark, sf_dir, "embeddings")
-        C = S.pq_train_codebooks(emb, m=4, k=8, iters=0)
+        for name, value in (("PQ_M", 4), ("PQ_K", 8), ("PQ_ITERS", 0)):
+            monkeypatch.setattr(S, name, value)
+        C = S.pq_train_codebooks(emb)
         monkeypatch.setattr(S, "MAX_BROADCAST_INDEX_ROWS", 3)
         with _pytest.raises(ValueError, match="broadcast ceiling"):
-            S.pq_topk(emb, topk=5, m=4, k=8, C=C)
+            S.pq_topk(emb, topk=5, C=C)
 
 
 class TestHllRollup:
@@ -2294,7 +2303,7 @@ class TestPca:
         from pulseboard_spark.sources.tables import load_table
 
         emb = load_table(spark, sf_dir, "embeddings")
-        got = embedding_pca(emb, k=8).orderBy("component").collect()
+        got = embedding_pca(emb).orderBy("component").collect()
         M = np.array([list(r[0]) for r in emb.select("embedding").collect()], dtype=np.float64)
         cov = np.cov(M, rowvar=False, bias=True)
         ref = np.linalg.eigvalsh(cov)[::-1]
@@ -2310,7 +2319,7 @@ class TestPca:
         assert bps == sorted(bps, reverse=True)
         assert cums == sorted(cums) and cums[-1] <= 10000
         # deterministic across runs
-        again = embedding_pca(emb, k=8).orderBy("component").collect()
+        again = embedding_pca(emb).orderBy("component").collect()
         assert [(r.component, r.eigenvalue) for r in got] == [
             (r.component, r.eigenvalue) for r in again
         ]
@@ -2662,6 +2671,12 @@ class TestOpenOrdersTimeline:
 
 
 class TestPackEfficiency:
+    @pytest.fixture(autouse=True)
+    def _budget_10(self, monkeypatch):
+        from pulseboard_spark.operators import corpus
+
+        monkeypatch.setattr(corpus, "PACK_BUDGET", 10)
+
     def test_fill_and_spanning(self, spark):
         from pulseboard_spark.operators.corpus import pack_efficiency
 
@@ -2672,7 +2687,7 @@ class TestPackEfficiency:
             [(i, t, "web") for i, t in enumerate(texts)],
             "doc_id long, text string, source string",
         )
-        row = pack_efficiency(df, budget=10).collect()[0]
+        row = pack_efficiency(df).collect()[0]
         assert row.n_docs == 3 and row.n_tokens == 20
         assert row.n_windows == 2  # 20 tokens exactly fill 2 ten-token windows
         assert row.fill_ppm == 1_000_000
@@ -2684,7 +2699,7 @@ class TestPackEfficiency:
         df = spark.createDataFrame(
             [(0, "a b c", "web")], "doc_id long, text string, source string"
         )
-        row = pack_efficiency(df, budget=10).collect()[0]
+        row = pack_efficiency(df).collect()[0]
         assert row.n_windows == 1 and row.fill_ppm == 300_000
 
 
@@ -2801,9 +2816,15 @@ class TestContainmentPairs:
 
 
 class TestMixturePlan:
-    def test_cap_binds_and_leftover_redistributes(self, spark):
-        from pulseboard_spark.operators.corpus import mixture_plan
+    @staticmethod
+    def _plan(monkeypatch, df, target_tokens, max_epochs):
+        from pulseboard_spark.operators import corpus
 
+        monkeypatch.setattr(corpus, "MIXTURE_TARGET_TOKENS", target_tokens)
+        monkeypatch.setattr(corpus, "MIXTURE_MAX_EPOCHS", max_epochs)
+        return corpus.mixture_plan(df).collect()
+
+    def test_cap_binds_and_leftover_redistributes(self, spark, monkeypatch):
         # srcA has 2 tokens -> cap 2*2=4; srcB/srcC have plenty.
         df = spark.createDataFrame(
             [
@@ -2815,7 +2836,7 @@ class TestMixturePlan:
         )
         got = {
             r.source: r
-            for r in mixture_plan(df, target_tokens=60, max_epochs=2).collect()
+            for r in self._plan(monkeypatch, df, 60, 2)
         }
         # fair share = 60 div 3 = 20; srcA capped at 4, freeing 16,
         # split 8 apiece to the open sources
@@ -2827,9 +2848,7 @@ class TestMixturePlan:
         total = sum(r.alloc_tokens for r in got.values())
         assert total == 60  # fully allocated after one round here
 
-    def test_uncapped_is_exact_fair_split(self, spark):
-        from pulseboard_spark.operators.corpus import mixture_plan
-
+    def test_uncapped_is_exact_fair_split(self, spark, monkeypatch):
         df = spark.createDataFrame(
             [
                 (0, "a b c d e", "s1"),
@@ -2839,7 +2858,7 @@ class TestMixturePlan:
         )
         got = {
             r.source: r
-            for r in mixture_plan(df, target_tokens=10, max_epochs=4).collect()
+            for r in self._plan(monkeypatch, df, 10, 4)
         }
         for s in ("s1", "s2"):
             assert got[s].alloc_tokens == 5
@@ -2963,6 +2982,12 @@ class TestPointInTimeTrait:
 
 
 class TestPurchaseAttribution:
+    @pytest.fixture(autouse=True)
+    def _lookback_100ms(self, monkeypatch):
+        from pulseboard_spark.operators import sessions
+
+        monkeypatch.setattr(sessions, "ATTRIBUTION_LOOKBACK_MS", 100)
+
     def test_first_last_touch_within_lookback(self, spark):
         from pulseboard_spark.operators.sessions import purchase_attribution
 
@@ -2983,7 +3008,7 @@ class TestPurchaseAttribution:
         )
         got = {
             r.event_id: r
-            for r in purchase_attribution(df, lookback_ms=100).collect()
+            for r in purchase_attribution(df).collect()
         }
         assert set(got) == {3, 4, 6}
         assert got[3].first_touch_type == "view" and got[3].last_touch_type == "click"
@@ -3001,14 +3026,16 @@ class TestPurchaseAttribution:
         df = spark.createDataFrame(
             rows, "event_id long, ts_ms long, entity_id string, type string, value double"
         )
-        r = purchase_attribution(df, lookback_ms=100).collect()[0]
+        r = purchase_attribution(df).collect()[0]
         assert r.first_touch_type == "view" and r.last_touch_type == "click"
 
 
 class TestAttributionReport:
-    def test_credit_moves_between_models(self, spark):
+    def test_credit_moves_between_models(self, spark, monkeypatch):
+        from pulseboard_spark.operators import sessions
         from pulseboard_spark.operators.sessions import attribution_report
 
+        monkeypatch.setattr(sessions, "ATTRIBUTION_LOOKBACK_MS", 100)
         rows = [
             (1, 10, "A", "view", 0.0),
             (2, 20, "A", "click", 0.0),
@@ -3018,7 +3045,7 @@ class TestAttributionReport:
         df = spark.createDataFrame(
             rows, "event_id long, ts_ms long, entity_id string, type string, value double"
         )
-        got = {(r.model, r.touch_type): r for r in attribution_report(df, lookback_ms=100).collect()}
+        got = {(r.model, r.touch_type): r for r in attribution_report(df).collect()}
         assert got[("first_touch", "view")].n_conversions == 1
         assert got[("first_touch", "view")].total_value == 10.0
         assert got[("last_touch", "click")].total_value == 10.0
@@ -3154,7 +3181,7 @@ class TestDocChunks:
             "doc_id long, text string",
         )
         got = [
-            r for r in doc_chunks(df, chunk_tokens=64, stride=48).collect()
+            r for r in doc_chunks(df).collect()
         ]
         by_doc = {}
         for r in got:

@@ -178,18 +178,23 @@ def test_ewma_matches_recurrence(spark):
 # --- Rules/segments as config ------------------------------------------------
 
 
-def test_custom_rule_config_and_segments(spark, sf_dir):
+def test_custom_rule_config_and_segments(spark, sf_dir, monkeypatch):
     """Rules and segments are data: overriding thresholds changes firing
     monotonically, and a custom segment is one dict entry away."""
     from pulseboard_spark.sources.tables import entity_events
-    from pulseboard_spark.operators.rules import r1_velocity_eval
+    from pulseboard_spark.operators import rules
     from pulseboard_spark.operators.segments import DEFAULT_SEGMENTS, segment_membership
     from pulseboard_spark.registry import _evprof
 
+    def fired(multiplier, min_rate):
+        monkeypatch.setattr(rules, "R1_MULTIPLIER", multiplier)
+        monkeypatch.setattr(rules, "R1_MIN_RATE", min_rate)
+        return rules.r1_velocity_eval(ev).filter("fired").count()
+
     ev = entity_events(spark, sf_dir)
-    fired_default = r1_velocity_eval(ev).filter("fired").count()
-    fired_loose = r1_velocity_eval(ev, multiplier=1.0, min_rate=1.0).filter("fired").count()
-    fired_tight = r1_velocity_eval(ev, multiplier=100.0, min_rate=10_000.0).filter("fired").count()
+    fired_default = fired(rules.R1_MULTIPLIER, rules.R1_MIN_RATE)
+    fired_loose = fired(1.0, 1.0)
+    fired_tight = fired(100.0, 10_000.0)
     assert fired_tight <= fired_default <= fired_loose
     assert fired_tight == 0 and fired_loose > fired_default
 
@@ -349,15 +354,17 @@ def test_scd2_intervals_match_sequential_model(spark):
 # --- heavy hitters vs Counter model ------------------------------------------
 
 
-def test_heavy_hitters_matches_counter_model(spark):
+def test_heavy_hitters_matches_counter_model(spark, monkeypatch):
     from collections import Counter
 
+    from pulseboard_spark.operators import relational
     from pulseboard_spark.operators.relational import heavy_hitters
 
+    monkeypatch.setattr(relational, "HEAVY_HITTER_MIN_SHARE_BP", 1000)
     rng = random.Random(99)
     rows = [(f"g{rng.randrange(5)}", f"v{rng.randrange(12)}") for _ in range(3000)]
     df = spark.createDataFrame(rows, "k string, v string")
-    got = {(r.k, r.v): (r.n, r.n_total) for r in heavy_hitters(df, ["k"], "v", 1000).collect()}
+    got = {(r.k, r.v): (r.n, r.n_total) for r in heavy_hitters(df, ["k"], "v").collect()}
 
     want = {}
     groups: dict[str, Counter] = {}
@@ -443,14 +450,16 @@ def test_dsl_random_specs_match_python_eval(spark):
 # --- attribution vs brute-force model ----------------------------------------
 
 
-def test_attribution_matches_brute_force(spark):
+def test_attribution_matches_brute_force(spark, monkeypatch):
     """purchase_attribution vs an O(n²) python model over a random stream
     with timestamp ties, same-ts purchase/touch collisions, boundary-exact
     lookback gaps, and multi-purchase entities."""
+    from pulseboard_spark.operators import sessions
     from pulseboard_spark.operators.sessions import purchase_attribution
 
     rng = random.Random(11)
     LB = 1_000
+    monkeypatch.setattr(sessions, "ATTRIBUTION_LOOKBACK_MS", LB)
     rows = []
     for i in range(400):
         ent = f"E{rng.randint(0, 5)}"
@@ -466,7 +475,7 @@ def test_attribution_matches_brute_force(spark):
     )
     got = {
         r.event_id: (r.first_touch_type, r.last_touch_type)
-        for r in purchase_attribution(df, lookback_ms=LB).collect()
+        for r in purchase_attribution(df).collect()
     }
 
     def key(r):
@@ -491,11 +500,11 @@ def test_attribution_matches_brute_force(spark):
 # --- mixture planner invariants ----------------------------------------------
 
 
-def test_mixture_plan_invariants(spark):
+def test_mixture_plan_invariants(spark, monkeypatch):
     """Random corpora: allocations never exceed the epoch cap, never go
     negative, total allocation never exceeds the target, and with no
     binding caps every source gets exactly the fair share."""
-    from pulseboard_spark.operators.corpus import mixture_plan
+    from pulseboard_spark.operators import corpus
 
     rng = random.Random(13)
     for trial in range(3):
@@ -510,7 +519,9 @@ def test_mixture_plan_invariants(spark):
         df = spark.createDataFrame(rows, "doc_id long, text string, source string")
         target = rng.randint(10, 500)
         max_epochs = rng.randint(1, 3)
-        got = mixture_plan(df, target_tokens=target, max_epochs=max_epochs).collect()
+        monkeypatch.setattr(corpus, "MIXTURE_TARGET_TOKENS", target)
+        monkeypatch.setattr(corpus, "MIXTURE_MAX_EPOCHS", max_epochs)
+        got = corpus.mixture_plan(df).collect()
         assert len(got) == n_sources
         total = 0
         for r in got:

@@ -1,64 +1,180 @@
 """Repository gates that need no Spark session: every top-level
-definition in the package has a reader, and the hand-off consistency
-check (registry ↔ oracle ↔ QUERIES.md) passes."""
+definition in the package has a reader, every defaulted option of a
+package function has a caller outside the tests, and the hand-off
+consistency check (registry ↔ oracle ↔ QUERIES.md) passes."""
 
 from __future__ import annotations
 
 import ast
 import importlib.util
-import re
+from collections import defaultdict
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "pulseboard_spark"
 SEARCHED = [PACKAGE, ROOT / "tests", ROOT / "tools", ROOT / "perfbench", ROOT / "__spark_entry__.py"]
+#: Where a call counts as setting an option: everything searched but the tests.
+CALLERS = [PACKAGE, ROOT / "tools", ROOT / "perfbench", ROOT / "__spark_entry__.py"]
 
 #: Top-level definitions kept without a reader in the tree, each with why.
 UNREACHED_ALLOWED = {
     "kafka_cdp_source": "S2 transport: the paper's CDP Kafka source; no broker ships here",
     "kafka_cdp_sink": "S3 transport: the paper's CDP Kafka sink; no broker ships here",
+    "kafka_alert_sink": "S3 transport: the paper's alert Kafka sink; no broker ships here",
+}
+
+_KAFKA = "deployment setting of a Kafka transport"
+_SIM = "simulator input; the generators are the paper's event simulator"
+_JPEG = "shapes the decoder's external input formats in generated test vectors"
+#: Defaulted options no call outside the tests sets, each with why.
+OPTIONS_ALLOWED = {
+    "kafka_entity_source(topic)": _KAFKA,
+    "kafka_entity_source(starting_offsets)": _KAFKA,
+    "kafka_cdp_source(topic)": _KAFKA,
+    "kafka_cdp_source(starting_offsets)": _KAFKA,
+    "kafka_alert_sink(topic)": _KAFKA,
+    "kafka_alert_sink(checkpoint)": _KAFKA,
+    "kafka_cdp_sink(topic)": _KAFKA,
+    "kafka_cdp_sink(checkpoint)": _KAFKA,
+    "entity_event_generator(seed)": _SIM,
+    "entity_event_generator(n_entities)": _SIM,
+    "entity_event_generator(rps)": _SIM,
+    "entity_event_generator(lateness_sec)": _SIM,
+    "entity_event_generator(start_ms)": _SIM,
+    "entity_event_generator(profile)": _SIM,
+    "cdp_event_generator(seed)": _SIM,
+    "cdp_event_generator(n_users)": _SIM,
+    "cdp_event_generator(rps)": _SIM,
+    "cdp_event_generator(lateness_sec)": _SIM,
+    "cdp_event_generator(start_ms)": _SIM,
+    "encode_jpeg_gray(restart_interval)": _JPEG,
+    "encode_jpeg_color(subsampling)": _JPEG,
+    "encode_jpeg_color(restart_interval)": _JPEG,
+    "encode_jpeg_color(interleaved)": _JPEG,
+    "with_admission(observation)": "the admission counters' hook; gate counters build on it",
+    "segment_events(segments)": "entry point of the segment DSL",
+    "segment_membership(segments)": "entry point of the segment DSL",
 }
 
 
-def _py_files() -> list[Path]:
+def _py_files(roots: list[Path]) -> list[Path]:
     out: list[Path] = []
-    for p in SEARCHED:
+    for p in roots:
         out.extend(sorted(p.rglob("*.py")) if p.is_dir() else [p])
     return out
 
 
+def _trees(roots: list[Path]) -> dict[Path, ast.Module]:
+    return {p: ast.parse(p.read_text(), filename=str(p)) for p in _py_files(roots)}
+
+
+def _package_defs(trees: dict[Path, ast.Module]):
+    """(path, node) of every top-level function and class of the package."""
+    for path, tree in trees.items():
+        if PACKAGE in path.parents:
+            for d in tree.body:
+                if isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                    yield path, d
+
+
+def _mentions(tree: ast.Module):
+    """(identifier, line) of every name the code reads: Name and
+    Attribute nodes, imported names, and string constants that are a
+    whole identifier (registry keys, ``getattr`` names)."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id, node.lineno
+        elif isinstance(node, ast.Attribute):
+            yield node.attr, node.lineno
+        elif isinstance(node, ast.alias):
+            yield node.name.rsplit(".", 1)[-1], node.lineno
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str) and node.value.isidentifier():
+            yield node.value, node.lineno
+
+
 def unreached_definitions() -> list[str]:
-    """Top-level functions and classes of the package whose name appears in
-    no searched file outside the definition's own lines (decorators
-    included).  A mention in prose — a docstring or comment that points
-    the reader at a helper — counts as a reader."""
-    texts = {p: p.read_text() for p in _py_files()}
-    out = []
-    for path, text in texts.items():
-        if PACKAGE not in path.parents:
+    """Top-level functions and classes of the package that no searched
+    file reads outside the definition's own lines (decorators included).
+    Prose — a docstring or comment naming a helper — is not a reader,
+    and neither are this file's allow-lists."""
+    trees = _trees(SEARCHED)
+    seen: dict[str, list[tuple[Path, int]]] = defaultdict(list)
+    for path, tree in trees.items():
+        if path == Path(__file__).resolve():
             continue
-        lines = text.splitlines()
-        for d in ast.parse(text, filename=str(path)).body:
-            if not isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                continue
-            if d.name.startswith("__") or d.name in UNREACHED_ALLOWED:
-                continue
-            first = min([d.lineno] + [x.lineno for x in d.decorator_list]) - 1
-            word = re.compile(rf"\b{re.escape(d.name)}\b")
-            outside = "\n".join(lines[:first] + lines[d.end_lineno:])
-            if not word.search(outside) and not any(
-                word.search(t) for p, t in texts.items() if p != path
-            ):
-                out.append(f"{path.relative_to(ROOT)}::{d.name}")
+        for name, line in _mentions(tree):
+            seen[name].append((path, line))
+    out = []
+    for path, d in _package_defs(trees):
+        if d.name.startswith("__") or d.name in UNREACHED_ALLOWED:
+            continue
+        first = min([d.lineno] + [x.lineno for x in d.decorator_list])
+        if not any(p != path or not first <= line <= d.end_lineno for p, line in seen[d.name]):
+            out.append(f"{path.relative_to(ROOT)}::{d.name}")
     return sorted(out)
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[str]:
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    names = [p.arg for p in pos[len(pos) - len(a.defaults):]] if a.defaults else []
+    return names + [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+
+
+def unset_options() -> list[str]:
+    """Defaulted parameters (positional or keyword-only) of top-level
+    package functions that no call outside the tests passes — by
+    keyword, by position, or through ``*``/``**``.  Calls match their
+    callee by name (a Name or an Attribute); names the package defines
+    twice are skipped, since a call cannot be told apart."""
+    defs: dict[str, list[ast.FunctionDef]] = defaultdict(list)
+    for _path, d in _package_defs(_trees([PACKAGE])):
+        if not isinstance(d, ast.ClassDef):
+            defs[d.name].append(d)
+    fns = {name: ds[0] for name, ds in defs.items() if len(ds) == 1}
+    set_by_call: dict[str, set[str]] = defaultdict(set)
+    for tree in _trees(CALLERS).values():
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name not in fns:
+                continue
+            a = fns[name].args
+            pos = [p.arg for p in a.posonlyargs + a.args]
+            for i, arg in enumerate(node.args):
+                if isinstance(arg, ast.Starred):
+                    set_by_call[name].update(pos[i:])
+                    break
+                set_by_call[name].update(pos[i:i + 1])
+            for kw in node.keywords:
+                if kw.arg is None:
+                    set_by_call[name].update(pos + [p.arg for p in a.kwonlyargs])
+                else:
+                    set_by_call[name].add(kw.arg)
+    return sorted(
+        f"{name}({p})"
+        for name, fn in fns.items()
+        for p in _defaulted(fn)
+        if p not in set_by_call[name] and f"{name}({p})" not in OPTIONS_ALLOWED
+    )
 
 
 def test_every_package_definition_is_named_outside_itself():
     assert unreached_definitions() == []
 
 
-def test_consistency_gate_passes(monkeypatch, capsys):
-    monkeypatch.chdir(ROOT)
+def test_every_package_option_is_set_outside_tests():
+    """One value in use is a constant, not an option: a defaulted
+    parameter only the tests set (or nothing sets) doubles what must be
+    covered for no caller.  A test that needs another value monkeypatches
+    the module constant instead."""
+    assert unset_options() == []
+
+
+def test_consistency_gate_passes(monkeypatch, tmp_path, capsys):
+    monkeypatch.chdir(tmp_path)
     spec = importlib.util.spec_from_file_location("check_consistency", ROOT / "tools" / "check_consistency.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -710,13 +710,15 @@ def test_shed_oldest_keeps_newest(spark):
     assert dropped0 == 0 and kept_all.count() == 20
 
 
-def test_profile_upsert_writer_merges_latest(spark, tmp_path):
+def test_profile_upsert_writer_merges_latest(spark, tmp_path, monkeypatch):
     """Bucketed parquet UPSERT: later batches overwrite only touched
     buckets; the store converges to the latest row per profile."""
+    from pulseboard_spark.streaming import pipeline
     from pulseboard_spark.streaming.pipeline import profile_upsert_writer
 
+    monkeypatch.setattr(pipeline, "PROFILE_STORE_BUCKETS", 4)
     store = str(tmp_path / "profiles")
-    writer = profile_upsert_writer(store, key="profile_id", order=("ts_ms",), n_buckets=4)
+    writer = profile_upsert_writer(store)
     b1 = spark.createDataFrame(
         [("p1", 100, "basic"), ("p2", 100, "basic"), ("p3", 100, "pro")],
         "profile_id string, ts_ms long, plan string",
@@ -746,13 +748,15 @@ def test_profile_upsert_writer_merges_latest(spark, tmp_path):
     assert again == got
 
 
-def test_profile_upsert_tie_breaks_to_batch(spark, tmp_path):
+def test_profile_upsert_tie_breaks_to_batch(spark, tmp_path, monkeypatch):
     """Equal order-column values: the incoming batch row must win, not a
     nondeterministic pick."""
+    from pulseboard_spark.streaming import pipeline
     from pulseboard_spark.streaming.pipeline import profile_upsert_writer
 
+    monkeypatch.setattr(pipeline, "PROFILE_STORE_BUCKETS", 2)
     store = str(tmp_path / "profiles_tie")
-    writer = profile_upsert_writer(store, key="profile_id", order=("ts_ms",), n_buckets=2)
+    writer = profile_upsert_writer(store)
     writer(spark.createDataFrame([("p1", 100, "basic")], "profile_id string, ts_ms long, plan string"), 0)
     writer(spark.createDataFrame([("p1", 100, "pro")], "profile_id string, ts_ms long, plan string"), 1)
     rows = spark.read.parquet(store).collect()

@@ -16,8 +16,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, ".")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from pulseboard_spark.registry import ORACLE_SQL, QUERIES  # noqa: E402
 
@@ -39,7 +41,7 @@ def main() -> int:
         )
         bad += 1
 
-    md = open("QUERIES.md").read()
+    md = (ROOT / "QUERIES.md").read_text()
     m = re.search(r"(\d+) queries", md)
     if not m or int(m.group(1)) != len(QUERIES):
         print(
