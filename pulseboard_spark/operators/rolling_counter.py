@@ -20,9 +20,8 @@ the 1-min bucket, ``bucket(ts − 24h) = bucket(ts) − 24h``, so
 strictly smaller (ts, eventId).  Both windows share the partition key, so
 Catalyst plans a single exchange with two sorts.  This form survives scale:
 the earlier self-join twin was Σ k² per key; this is O(n log n) per
-partition with map-side nothing to explode.  The streaming twin is a
-windowed count with watermark eviction (the reference's eviction made
-lossless).
+partition with map-side nothing to explode.  The streaming twin is the
+minute-bucket counter ``profile_apply_stateful`` keeps per profile.
 """
 
 from __future__ import annotations

@@ -9,9 +9,7 @@ engine is expected to answer, as oracle-checked batch queries.
 Scale notes:
   * ``sessionize`` is gaps-and-islands: one shuffle on the entity key, one
     ordered scan (lag + running sum share the same sort), then a partial
-    aggregation on (entity, session_no).  The streaming twin is Spark's
-    built-in ``session_window`` with a watermark — same assignment for the
-    same gap, incremental state eviction for free.
+    aggregation on (entity, session_no).
   * ``funnel`` computes all step timestamps in ONE window pass per step
     over the same per-entity sort (no self-joins — the naive k-way
     step-join explodes on hot entities), then reduces to a k-row summary.

@@ -331,9 +331,9 @@ def event_paths_topk(ev: DataFrame) -> DataFrame:
 
 def micro_units(col) -> "F.Column":
     """THE one micro-quantization expression (duck_round(x·1e6) → int64)
-    shared by the batch CUSUM, its parameter trainer, and the streaming
-    twin — stream/batch equivalence rides on all three quantizing
-    identically, so the expression has a single home."""
+    shared by the batch CUSUM and its parameter trainer — the two agree
+    only if both quantize identically, so the expression has a single
+    home."""
     return duck_round(col.cast("double") * F.lit(1000000.0), 0).cast("long")
 
 
@@ -352,10 +352,8 @@ CUSUM_H_MADS = 5
 
 def cusum_params(ev: DataFrame) -> DataFrame:
     """Per-type CUSUM parameters (type, mu, h) in micro units: truncated
-    micro-mean center, h = CUSUM_H_MADS·max(micro-MAD, 1).  Trained offline on
-    a batch window and handed to the streaming detector
-    (`streaming/stateful.py::cusum_stateful`) — the standard
-    train-offline / detect-online split."""
+    micro-mean center, h = CUSUM_H_MADS·max(micro-MAD, 1), trained on a
+    batch window."""
     from pulseboard_spark.operators.mlprep import _hist_median
 
     # cache(): mu, the median, and the MAD regroup are three independent

@@ -16,8 +16,8 @@ no shuffle beyond the hash partition on (entity_id, type).
 
 Scale posture: one shuffle on (entity_id, type); frames are bounded (≤1 h)
 so state per key is small.  Skewed entities are handled by AQE skew-join
-settings at the shuffle, and the streaming twin bounds state with
-watermarks.
+settings at the shuffle; the streaming twin prunes each key's buffer to
+the 1 h horizon.
 """
 
 from __future__ import annotations
@@ -114,8 +114,7 @@ MINUTE_MS = 60_000
 def minute_counts(df: DataFrame) -> DataFrame:
     """A9 batch twin (`core/StatsService.kt:19-55`): global per-minute
     tumbling event counts — the events/min ops gauge as an event-time table.
-    One partial-aggregated groupBy; the streaming twin is a 1-min windowed
-    count surfaced through ``observe()``."""
+    One partial-aggregated groupBy."""
     m = (F.col("ts_ms") - F.col("ts_ms") % MINUTE_MS).alias("minute_ms")
     return df.groupBy(m).agg(F.count(F.lit(1)).cast("long").alias("n_events"))
 

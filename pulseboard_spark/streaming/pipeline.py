@@ -187,7 +187,11 @@ def entity_alert_stream(events: DataFrame) -> DataFrame:
     ``.writeStream`` (Kafka via :func:`kafka_alert_sink`)."""
     from pulseboard_spark.streaming.stateful import alert_rules_stateful
 
-    prepared = with_dedup(with_admission(events), ["event_id"]).drop("is_late")
+    # W1: duplicate event_ids dropped within the watermark's TTL
+    # (`CdpEventProcessor.kt:181-187`; the reference's cache TTL)
+    prepared = (
+        with_admission(events).dropDuplicatesWithinWatermark(["event_id"]).drop("is_late")
+    )
     return alert_rules_stateful(prepared, set_watermark=False)
 
 
@@ -251,8 +255,8 @@ class CdpIdentityStage:
         return self.spark.read.parquet(self.resolved_dir)
 
 
-#: Event-time watermark delay of every streaming operator here: the
-#: admission grace, and so W1's dedup TTL.
+#: Event-time watermark delay of the admission tier, so W1's dedup TTL,
+#: and of every keyed operator in ``stateful.py`` but reengage.
 WATERMARK_DELAY = "120 seconds"
 
 
@@ -368,58 +372,6 @@ def use_rocksdb_state(spark: SparkSession) -> None:
     )
 
 
-def with_dedup(events: DataFrame, key_cols: list[str] = ("event_id",)) -> DataFrame:
-    """W1: duplicate eventIds dropped within the watermark TTL
-    (`CdpEventProcessor.kt:181-187`; cache TTL ≈ watermark delay)."""
-    return events.dropDuplicatesWithinWatermark(list(key_cols))
-
-
-def streaming_minute_counts(events: DataFrame) -> DataFrame:
-    """A9 streaming twin (`core/StatsService.kt:19-55`): event-time 1-minute
-    tumbling counts — all built-in (windowed agg + watermark state
-    eviction), zero custom state.  Output: minute_ms, n_events."""
-    return (
-        events.withWatermark("ts", WATERMARK_DELAY)
-        .groupBy(F.window("ts", "1 minute").alias("w"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-        .select(F.unix_millis(F.col("w.start")).alias("minute_ms"), "n_events")
-    )
-
-
-def streaming_sessions(events: DataFrame) -> DataFrame:
-    """30-minute gap-session streaming twin of ``operators/sessions.sessionize``
-    via the built-in ``session_window`` — incremental session merge + watermark
-    eviction for free.  Boundary note: the built-in closes a session when
-    the gap is ≥ the threshold (half-open windows) while the batch operator
-    starts a new session only when strictly greater; the two agree on any
-    data without an exact-gap pair.  Output end is the LAST EVENT's window
-    end = last_ts + gap (Spark's convention); subtract the gap to compare
-    with the batch session_end_ms."""
-    return (
-        events.withWatermark("ts", WATERMARK_DELAY)
-        .groupBy("entity_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-        .select(
-            "entity_id",
-            F.unix_millis(F.col("w.start")).alias("session_start_ms"),
-            F.unix_millis(F.col("w.end")).alias("window_end_ms"),
-            "n_events",
-        )
-    )
-
-
-def with_dim_enrichment(events: DataFrame, dim: DataFrame, on: str) -> DataFrame:
-    """Stream-static left enrichment join: attach a slowly-changing dimension
-    (geo metadata, entity allow-lists, model routing tables) to a stream.
-
-    The static side re-resolves per micro-batch — refreshing the dim table
-    on disk updates the stream's enrichment without a restart — and
-    broadcasts, so the stream side never shuffles and no join state
-    accumulates (unlike stream-stream joins, stream-static needs no
-    watermark bookkeeping on the static side)."""
-    return events.join(F.broadcast(dim), on, "left")
-
-
 #: Directory partitions of the :func:`profile_upsert_writer` store.
 PROFILE_STORE_BUCKETS = 16
 
@@ -498,65 +450,5 @@ def profile_upsert_writer(base_path: str):
             .localCheckpoint()  # sever the read-from-base lineage pre-overwrite
         )
         latest.write.mode("overwrite").partitionBy("_bucket").parquet(base_path)
-
-    return write
-
-
-def shed_oldest(batch_df: DataFrame, cap: int) -> tuple[DataFrame, int]:
-    """W9 twin (opt-in): DROP_OLDEST load shedding at micro-batch
-    granularity — when a batch exceeds ``cap`` rows, keep the NEWEST
-    ``cap`` by (ts_ms, event_id) and report the shed count, mirroring the
-    reference's bounded in-memory bus that evicts oldest under pressure.
-
-    The default posture stays LOSSLESS (`maxOffsetsPerTrigger` pacing —
-    strictly better when the source is replayable); this exists for the
-    reference-parity case where the pipeline must bound latency by
-    shedding instead of lagging.  Selection is `orderBy desc → limit`,
-    which plans as TakeOrdered (per-partition heaps + merge, no global
-    sort) — scale-safe for any cap that fits one executor's heap of
-    ``cap`` rows.
-
-    Use inside ``foreachBatch``::
-
-        def sink(batch_df, batch_id):
-            kept, dropped = shed_oldest(batch_df, cap=100_000)
-            ...  # process kept; export `dropped` as a metric
-    """
-    n = batch_df.count()
-    if n <= cap:
-        return batch_df, 0
-    kept = batch_df.orderBy(F.desc("ts_ms"), F.desc("event_id")).limit(cap)
-    return kept, n - cap
-
-
-def idempotent_parquet_writer(base_path: str):
-    """Exactly-once ``foreachBatch`` file writer: each micro-batch lands in
-    its own ``batch_id=N`` directory, and a batch id that already finished
-    (marked by Spark's own _SUCCESS file) is skipped on replay.
-
-    `foreachBatch` is at-least-once — after a crash between the write and
-    the checkpoint commit, the SAME batch id is redelivered on restart.
-    Keying the output by batch id makes the retry overwrite/skip instead
-    of duplicate, which is the canonical route to exactly-once file output
-    when the built-in file sink's layout (flat dir + its own log) doesn't
-    fit — e.g. when each batch must also MERGE into a downstream table.
-
-    Use: ``df.writeStream.foreachBatch(idempotent_parquet_writer(path))``.
-
-    The already-durable probe resolves the path through the Hadoop
-    FileSystem API, so the skip works on HDFS/S3/anything Spark can write
-    to — a plain ``os.path.exists`` would silently never fire off the
-    local FS and every replayed batch would be fully rewritten.
-    """
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        out = f"{base_path}/batch_id={batch_id}"
-        jvm = batch_df.sparkSession._jvm
-        jsc = batch_df.sparkSession._jsc
-        marker = jvm.org.apache.hadoop.fs.Path(f"{out}/_SUCCESS")
-        fs = marker.getFileSystem(jsc.hadoopConfiguration())
-        if fs.exists(marker):
-            return  # replayed batch — already durable, skip
-        batch_df.write.mode("overwrite").parquet(out)
 
     return write

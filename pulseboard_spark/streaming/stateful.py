@@ -22,15 +22,19 @@ state):
   :func:`reengage_stateful` — the CDP apply loop, G4 membership diff
   (`cdp/segments/SegmentEngine.kt:79-119`), and the W10 inactivity timer.
 
-State is bounded: point buffers prune to the largest rule window (1 h;
+State per key is pruned, keys are not evicted: a key's point buffer
+prunes to the largest rule window relative to its newest point (1 h;
 reference horizon is 5 m — `core/WindowStore.kt:46-49` — we keep 1 h
-because R4's avg_1h needs it), so per-key state is O(events/hour), evicted
-by watermark downstream.
+because R4's avg_1h needs it), R3's to its 2 m window, so a live key holds
+O(events/hour).  But every operator except reengage runs ``NoTimeout`` and
+none calls ``state.remove()``: a key that goes idle keeps its last buffer
+after the watermark has passed it, and state grows with every key ever
+seen (ROADMAP direction 3 measured 50 idle keys still held, 0 rows
+removed).
 """
 
 from __future__ import annotations
 
-import bisect
 from collections.abc import Iterator
 from typing import Any
 
@@ -38,8 +42,11 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from pulseboard_spark.operators.profiles import DAY_MS, MINUTE_MS
+from pulseboard_spark.operators.segments import REENGAGE_MS
+from pulseboard_spark.streaming.pipeline import WATERMARK_DELAY
 
 US = 1_000_000
 HORIZON_US = 3600 * US  # largest trailing window (avg_1h)
@@ -198,15 +205,17 @@ def alert_rules_stateful(entity_stream: DataFrame, set_watermark: bool = True) -
     """Streaming R1/R2/R4 alerts over an entity-event stream.
 
     Input needs: entity_id, type, profile, ts_us, ts_ms, value, event_id,
-    plus the timestamp ``ts`` when ``set_watermark`` is on.  Watermark
-    bounds state and admits 120 s of lateness (W2's drop tier,
-    `cdp/runtime/CdpEventProcessor.kt:189-204`); pass
-    ``set_watermark=False`` when the stream already carries one (Spark
-    disallows redefining it).  Only the seven columns the kernel reads
-    reach the operator: PySpark converts each column of each group to
-    pandas on its own, so every extra column is a per-key cost."""
+    plus the timestamp ``ts`` when ``set_watermark`` is on.  The
+    ``WATERMARK_DELAY`` watermark admits 120 s of lateness (W2's drop tier,
+    `cdp/runtime/CdpEventProcessor.kt:189-204`); it does not evict keys
+    (``NoTimeout``: an idle key keeps its pruned buffer, see the module
+    docstring).  Pass ``set_watermark=False`` when the stream already
+    carries one (Spark disallows redefining it).  Only the seven columns
+    the kernel reads reach the operator: PySpark converts each column of
+    each group to pandas on its own, so every extra column is a per-key
+    cost."""
     if set_watermark:
-        entity_stream = entity_stream.withWatermark("ts", "120 seconds")
+        entity_stream = entity_stream.withWatermark("ts", WATERMARK_DELAY)
     return (
         entity_stream
         .select("entity_id", "type", "profile", "ts_us", "ts_ms", "value", "event_id")
@@ -310,7 +319,7 @@ def r3_stateful(entity_stream: DataFrame) -> DataFrame:
     event_id, geo, device and the timestamp ``ts`` (120 s watermark); only
     the columns the kernel reads reach the operator."""
     return (
-        entity_stream.withWatermark("ts", "120 seconds")
+        entity_stream.withWatermark("ts", WATERMARK_DELAY)
         .select("entity_id", "type", "profile", "ts_us", "ts_ms", "event_id", "geo", "device")
         .groupBy("entity_id")
         .applyInPandasWithState(
@@ -334,8 +343,6 @@ _PROFILE_STATE_SCHEMA = (
     "last_seen_ms bigint, bucket_ms array<long>, bucket_cnt array<long>, "
     "prev_hash string"
 )
-DAY_MS = 86_400_000
-MINUTE_MS = 60_000
 
 
 def _lww_key(ts_us: int, event_id: str) -> str:
@@ -424,7 +431,7 @@ def profile_apply_stateful(resolved_stream: DataFrame) -> DataFrame:
     per micro-batch (append).  State is bounded: identifier sets are small
     per profile, the counter holds ≤ 1441 minute buckets."""
     return (
-        resolved_stream.withWatermark("ts", "120 seconds")
+        resolved_stream.withWatermark("ts", WATERMARK_DELAY)
         .groupBy("profile_id")
         .applyInPandasWithState(
             _apply_profiles,
@@ -436,7 +443,6 @@ def profile_apply_stateful(resolved_stream: DataFrame) -> DataFrame:
     )
 
 
-REENGAGE_MS = 600_000
 _REENGAGE_STATE_SCHEMA = "last_seen_ms bigint, in_reengage boolean"
 
 
@@ -516,7 +522,7 @@ def segment_diff_stateful(snapshot_stream: DataFrame) -> DataFrame:
     (profile_id, segments array<string>, ts, ts_ms); output is the
     ENTER/EXIT change stream."""
     return (
-        snapshot_stream.withWatermark("ts", "120 seconds")
+        snapshot_stream.withWatermark("ts", WATERMARK_DELAY)
         .groupBy("profile_id")
         .applyInPandasWithState(
             _diff_segments,
@@ -525,357 +531,4 @@ def segment_diff_stateful(snapshot_stream: DataFrame) -> DataFrame:
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-TRANSITION_SCHEMA = "from_type string, to_type string, ts_ms bigint"
-_TRANSITION_STATE_SCHEMA = "last_type string"
-
-
-def _emit_transitions(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    """Per-entity Markov pair emitter: one (from_type, to_type) row per
-    arriving event that has a predecessor; state is ONLY the last event's
-    type — O(1) per key, the smallest state of any operator in this file
-    (no ordering fields: correctness rests on the W3 per-key in-order
-    drain contract — time-ordered chunk replay + the in-batch
-    (ts_ms, event_id) sort — and storing timestamps would imply an
-    out-of-order guard this operator deliberately does not have)."""
-    batch = pd.concat(list(pdfs), ignore_index=True).sort_values(
-        ["ts_ms", "event_id"], kind="mergesort"
-    )
-    types = batch["type"].tolist()
-    prev = state.get[0] if state.exists else None
-    out_from, out_to = [], []
-    for t in types:
-        if prev is not None:
-            out_from.append(prev)
-            out_to.append(t)
-        prev = t
-    state.update((str(batch.iloc[-1]["type"]),))
-    if out_from:
-        ts = batch["ts_ms"].tolist()[-len(out_from):]
-        yield pd.DataFrame({"from_type": out_from, "to_type": out_to, "ts_ms": ts})
-
-
-def transitions_stateful(entity_stream: DataFrame) -> DataFrame:
-    """Streaming twin of ``operators/timeseries.event_transitions``: emits
-    the raw transition PAIR stream (append mode); the matrix itself is one
-    tiny downstream rollup per sink flush (foreachBatch / the consumer),
-    exactly how the batch operator splits fact-shuffle vs counts-table
-    work.  Input needs: entity_id, type, ts (timestamp, 120 s watermark),
-    ts_ms, event_id."""
-    return (
-        entity_stream.withWatermark("ts", "120 seconds")
-        .select("entity_id", "type", "ts", "ts_ms", "event_id")
-        .groupBy("entity_id")
-        .applyInPandasWithState(
-            _emit_transitions,
-            outputStructType=TRANSITION_SCHEMA,
-            stateStructType=_TRANSITION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-CUSUM_ALARM_SCHEMA = (
-    "entity_id string, type string, ts_ms bigint, event_id bigint, "
-    "direction string, cusum_micro bigint"
-)
-_CUSUM_STATE_SCHEMA = "sp bigint, sm bigint"
-
-
-def _emit_cusum_alarms(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    """Per-(entity, type) two-sided integer CUSUM with O(1) state (the
-    pair of accumulators); emits one row per alarm crossing — the alert
-    stream, not the per-event trace.  Exactly the batch recurrence of
-    `operators/timeseries.cusum_changepoints`, drained per key in
-    (ts_ms, event_id) order (W3)."""
-    entity_id, typ = key
-    sp, sm = state.get if state.exists else (0, 0)
-    # (ts_us, event_id) — the BATCH twin's order; ts_ms ties are real
-    # (sub-ms timestamps share a millisecond) and would fork the S+/S-
-    # trajectory
-    batch = pd.concat(list(pdfs), ignore_index=True).sort_values(
-        ["ts_us", "event_id"], kind="mergesort"
-    )
-    out = {"ts_ms": [], "event_id": [], "direction": [], "cusum_micro": []}
-    for d, h, ts_ms, event_id in zip(
-        batch["d"].tolist(), batch["h"].tolist(), batch["ts_ms"].tolist(), batch["event_id"].tolist()
-    ):
-        sp_raw = max(0, sp + d)
-        sm_raw = max(0, sm - d)
-        if sp_raw > h:
-            out["ts_ms"].append(ts_ms)
-            out["event_id"].append(event_id)
-            out["direction"].append("UP")
-            out["cusum_micro"].append(sp_raw)
-            sp = 0
-        else:
-            sp = sp_raw
-        if sm_raw > h:
-            out["ts_ms"].append(ts_ms)
-            out["event_id"].append(event_id)
-            out["direction"].append("DOWN")
-            out["cusum_micro"].append(sm_raw)
-            sm = 0
-        else:
-            sm = sm_raw
-    state.update((int(sp), int(sm)))
-    if out["ts_ms"]:
-        yield pd.DataFrame(
-            {
-                "entity_id": entity_id,
-                "type": typ,
-                "ts_ms": pd.Series(out["ts_ms"], dtype="int64"),
-                "event_id": pd.Series(out["event_id"], dtype="int64"),
-                "direction": out["direction"],
-                "cusum_micro": pd.Series(out["cusum_micro"], dtype="int64"),
-            }
-        )
-
-
-def cusum_stateful(entity_stream: DataFrame, params: DataFrame) -> DataFrame:
-    """Streaming CUSUM drift detector: the batch-trained per-type
-    (mu, h) parameter table (`operators/timeseries.cusum_params`) joins
-    the stream broadcast (stream-static join), then keyed state carries
-    just the two accumulators per (entity, type) — the train-offline /
-    detect-online deployment of the batch operator.  Emits alarm rows in
-    append mode; per-key alarm counts are pinned equal to the batch
-    summary by ``test_streaming_cusum_matches_batch``."""
-    from pulseboard_spark.operators.timeseries import micro_units
-
-    narrow = (
-        entity_stream.withWatermark("ts", "120 seconds")
-        .filter(F.col("value").isNotNull())
-        .select(
-            "entity_id", "type", "ts", "ts_us", "ts_ms", "event_id",
-            micro_units(F.col("value")).alias("vu"),
-        )
-        .join(F.broadcast(params), "type")
-        .select(
-            "entity_id", "type", "ts", "ts_us", "ts_ms", "event_id",
-            (F.col("vu") - F.col("mu")).alias("d"), "h",
-        )
-    )
-    return narrow.groupBy("entity_id", "type").applyInPandasWithState(
-        _emit_cusum_alarms,
-        outputStructType=CUSUM_ALARM_SCHEMA,
-        stateStructType=_CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-BURST_SCHEMA = (
-    "type string, hour_idx bigint, n_events bigint, prev24_sum bigint, is_burst boolean"
-)
-#: ring buffer of closed (hour_idx, count) pairs CSV-encoded (keyed state
-#: must be a fixed-width struct) + the still-open hour's accumulator +
-#: the type's first-ever hour (the warmup anchor)
-_BURST_STATE_SCHEMA = (
-    "hours string, counts string, cur_hour bigint, cur_n bigint, first_hour bigint"
-)
-
-
-def _emit_bursts(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    """Per-type hourly burst detector with O(24) state: a ring of the
-    trailing 24 closed hour-slot counts plus the open hour's counter.
-    An hour EMITS when a later hour's first event arrives (per-key
-    in-order drain, W3 — same contract as every stateful op here); the
-    verdict is the batch operator's exact integer rule — 24-slot warmup
-    AND ``n·24 ≥ 2·prev24_sum`` — over the identical window, so closed
-    hours match `operators/timeseries.burst_windows` row-for-row.
-
-    An event whose hour is strictly BEFORE the open hour (cross-batch
-    reordering past an hour boundary, possible within the watermark) is
-    DROPPED, not folded into the open hour: its true hour has already
-    emitted, and miscounting the open hour would silently diverge from
-    the batch twin on two rows instead of one."""
-    (typ,) = key
-    if state.exists:
-        hours_s, counts_s, cur_hour, cur_n, first_hour = state.get
-        ring = (
-            [
-                (int(h), int(c))
-                for h, c in zip(hours_s.split(","), counts_s.split(","))
-            ]
-            if hours_s
-            else []
-        )
-    else:
-        ring, cur_hour, cur_n, first_hour = [], -1, 0, -1
-    batch = pd.concat(list(pdfs), ignore_index=True).sort_values(
-        ["ts_ms", "event_id"], kind="mergesort"
-    )
-    out = {"hour_idx": [], "n_events": [], "prev24_sum": [], "is_burst": []}
-    for ts_ms in batch["ts_ms"].tolist():
-        h = ts_ms // 3_600_000
-        if cur_hour == -1:
-            cur_hour, cur_n, first_hour = h, 1, h
-        elif h == cur_hour:
-            cur_n += 1
-        elif h < cur_hour:
-            continue  # strictly late: its hour already emitted — drop
-        else:
-            prev = sum(c for hh, c in ring if cur_hour - 24 <= hh <= cur_hour - 1)
-            out["hour_idx"].append(cur_hour)
-            out["n_events"].append(cur_n)
-            out["prev24_sum"].append(prev)
-            out["is_burst"].append(
-                cur_hour >= first_hour + 24 and prev > 0 and cur_n * 24 >= 2 * prev
-            )
-            ring.append((cur_hour, cur_n))
-            ring = [(hh, c) for hh, c in ring if hh >= h - 24]
-            cur_hour, cur_n = h, 1
-    state.update(
-        (
-            ",".join(str(hh) for hh, _ in ring),
-            ",".join(str(c) for _, c in ring),
-            int(cur_hour),
-            int(cur_n),
-            int(first_hour),
-        )
-    )
-    if out["hour_idx"]:
-        yield pd.DataFrame(
-            {
-                "type": typ,
-                "hour_idx": pd.Series(out["hour_idx"], dtype="int64"),
-                "n_events": pd.Series(out["n_events"], dtype="int64"),
-                "prev24_sum": pd.Series(out["prev24_sum"], dtype="int64"),
-                "is_burst": pd.Series(out["is_burst"], dtype="bool"),
-            }
-        )
-
-
-def burst_stateful(entity_stream: DataFrame) -> DataFrame:
-    """Streaming twin of `operators/timeseries.burst_windows`: hourly
-    volume bursts per event type, detected online with O(24) keyed state
-    instead of a 24-hour batch re-scan.  Each hour's verdict emits as
-    soon as the next hour opens (append mode); closed hours are pinned
-    row-identical to the batch operator by
-    ``test_streaming_burst_matches_batch``."""
-    narrow = entity_stream.withWatermark("ts", "120 seconds").select(
-        "type", "ts", "ts_ms", "event_id"
-    )
-    return narrow.groupBy("type").applyInPandasWithState(
-        _emit_bursts,
-        outputStructType=BURST_SCHEMA,
-        stateStructType=_BURST_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-ATTRIBUTION_SCHEMA = (
-    "entity_id string, event_id bigint, purchase_ms bigint, value double,"
-    " first_touch_type string, last_touch_type string"
-)
-#: CSV of zero-padded "ts|event_id|type" touch keys still inside the
-#: lookback horizon of the newest event seen (lexicographic order on the
-#: padded keys == (ts, event_id) order, the batch operator's tie-break).
-_ATTRIBUTION_STATE_SCHEMA = "touch_keys string, max_ts bigint"
-
-_ATTR_LOOKBACK_MS = 86_400_000
-#: single source for BOTH the stream's withWatermark duration and the
-#: state-prune slack — they must move together, or touches get pruned
-#: before a maximally-late purchase can reach back for them
-_ATTR_WATERMARK_MS = 120_000
-
-
-def _touch_key(ts_ms: int, event_id: int, typ: str) -> str:
-    return f"{ts_ms:015d}|{event_id:012d}|{typ}"
-
-
-def _emit_attribution(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    """Per-entity online first/last-touch attribution with the batch
-    operator's exact RANGE-frame semantics: a purchase is attributed to
-    the min/max zero-padded touch key with ts in
-    ``[purchase_ts - lookback, purchase_ts - 1]`` — strictly before the
-    purchase's own timestamp, ties resolved by event_id via the padded
-    key, identical to `operators/sessions.purchase_attribution`.
-
-    State is the touch keys inside the lookback of the newest event seen
-    (O(events-in-window) per entity, the same bound as W5's exact
-    trailing windows).  The prune horizon is ``newest ts − lookback −
-    watermark``: a purchase may arrive up to the watermark (120 s) late,
-    and its own window reaches ``its`` ts − lookback — pruning against
-    the newest ts alone would drop exactly that watermark-wide sliver of
-    old touches.  A late TOUCH arriving after a newer purchase already
-    emitted cannot retro-change it (append mode) — the one documented
-    batch/stream difference, bounded by the watermark."""
-    (entity_id,) = key
-    if state.exists:
-        keys_s, max_ts = state.get
-        touches = keys_s.split(",") if keys_s else []
-        max_ts = int(max_ts)
-    else:
-        touches, max_ts = [], -1
-    batch = pd.concat(list(pdfs), ignore_index=True).sort_values(
-        ["ts_ms", "event_id"], kind="mergesort"
-    )
-    out = {"event_id": [], "purchase_ms": [], "value": [],
-           "first_touch_type": [], "last_touch_type": []}
-    for ts_ms, event_id, typ, value in zip(
-        batch["ts_ms"].tolist(), batch["event_id"].tolist(),
-        batch["type"].tolist(), batch["value"].tolist(),
-    ):
-        if typ == "purchase":
-            lo = f"{max(ts_ms - _ATTR_LOOKBACK_MS, 0):015d}|"
-            hi = f"{ts_ms:015d}|"
-            eligible = [k for k in touches if lo <= k < hi]
-            first = eligible[0] if eligible else None
-            last = eligible[-1] if eligible else None
-            out["event_id"].append(event_id)
-            out["purchase_ms"].append(ts_ms)
-            out["value"].append(value)
-            # 3rd '|'-field, matching the batch Spark expression and the
-            # DuckDB oracle's split_part(key, '|', 3) exactly
-            out["first_touch_type"].append(first.split("|")[2] if first else None)
-            out["last_touch_type"].append(last.split("|")[2] if last else None)
-        else:
-            # insert in sorted position (a within-watermark late touch
-            # lands mid-list, still visible to future purchases)
-            bisect.insort(touches, _touch_key(ts_ms, event_id, typ))
-        max_ts = max(max_ts, ts_ms)
-    # keep a watermark of slack past the lookback so a late purchase
-    # (bounded by the stream's watermark) still finds its window's head
-    horizon = f"{max(max_ts - _ATTR_LOOKBACK_MS - _ATTR_WATERMARK_MS, 0):015d}|"
-    touches = [k for k in touches if k >= horizon]
-    state.update((",".join(touches), int(max_ts)))
-    if out["event_id"]:
-        yield pd.DataFrame(
-            {
-                "entity_id": entity_id,
-                "event_id": pd.Series(out["event_id"], dtype="int64"),
-                "purchase_ms": pd.Series(out["purchase_ms"], dtype="int64"),
-                # nullable Float64, NaN mapped back to null: a null-valued
-                # purchase must emit null like the batch twin, not the NaN
-                # the Arrow float64 input coerced it to
-                "value": pd.array(
-                    [None if v is None or v != v else v for v in out["value"]],
-                    dtype="Float64",
-                ),
-                "first_touch_type": pd.Series(out["first_touch_type"], dtype="object"),
-                "last_touch_type": pd.Series(out["last_touch_type"], dtype="object"),
-            }
-        )
-
-
-def attribution_stateful(entity_stream: DataFrame) -> DataFrame:
-    """Streaming twin of `operators/sessions.purchase_attribution`:
-    first/last-touch attribution emitted per purchase as it arrives,
-    with keyed touch state bounded by the lookback window.  Pinned
-    row-identical to the batch operator by
-    ``test_streaming_attribution_matches_batch``."""
-    narrow = entity_stream.withWatermark(
-        "ts", f"{_ATTR_WATERMARK_MS // 1000} seconds"
-    ).select("entity_id", "ts", "ts_ms", "event_id", "type", "value")
-    return narrow.groupBy("entity_id").applyInPandasWithState(
-        _emit_attribution,
-        outputStructType=ATTRIBUTION_SCHEMA,
-        stateStructType=_ATTRIBUTION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -222,112 +222,6 @@ def test_kernel_late_arrival_matches_recorded_output():
 
 
 # ---------------------------------------------------------------------------
-# Same harness, two more kernels: transitions and attribution (entity-keyed)
-# ---------------------------------------------------------------------------
-
-from pulseboard_spark.operators.sessions import purchase_attribution  # noqa: E402
-from pulseboard_spark.operators.timeseries import event_transitions  # noqa: E402
-from pulseboard_spark.streaming.stateful import (  # noqa: E402
-    _emit_attribution,
-    _emit_transitions,
-)
-
-ATTR_TYPES = ["view", "click", "purchase"]
-
-
-@st.composite
-def attr_histories(draw):
-    """Entity histories with purchase conversions and value nulls; gaps up
-    to ~40 h so the 24 h attribution lookback boundary is exercised."""
-    n_entities = draw(st.integers(1, 2))
-    rows, eid = [], 0
-    for e in range(n_entities):
-        n = draw(st.integers(2, 20))
-        gap_hi = draw(st.sampled_from([60, 3600, 144_000]))
-        ts = BASE_US // 1000  # ms
-        for _ in range(n):
-            ts += draw(st.integers(0, gap_hi)) * 1000
-            rows.append((eid, ts, f"ent{e}", draw(st.sampled_from(ATTR_TYPES)),
-                         draw(st.sampled_from([1.0, 2.0, None]))))
-            eid += 1
-    rows.sort(key=lambda r: (r[1], r[0]))
-    n_chunks = draw(st.integers(1, 3))
-    cuts = sorted(draw(st.lists(st.integers(0, len(rows)), min_size=n_chunks - 1,
-                                max_size=n_chunks - 1)))
-    return rows, cuts
-
-
-def _replay(kernel, rows, cuts, columns):
-    bounds = [0, *cuts, len(rows)]
-    states: dict = {}
-    out = []
-    for i in range(len(bounds) - 1):
-        chunk = rows[bounds[i]: bounds[i + 1]]
-        if not chunk:
-            continue
-        pdf = pd.DataFrame(chunk, columns=columns)
-        pdf["ts_us"] = pdf["ts_ms"] * 1000
-        pdf["value"] = pdf.get("value", pd.Series(dtype="float64")).astype("float64")
-        for key, grp in pdf.groupby(["entity_id"], sort=False):
-            state = states.setdefault(key, FakeState())
-            out.extend(kernel(key, iter([grp]), state))
-    return pd.concat(out, ignore_index=True) if out else None
-
-
-@pytest.mark.parity  # clean at introduction; gate-budget keeps it in the parity sweep
-@pytest.mark.usefixtures("spark")
-@settings(max_examples=15, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(hist=attr_histories())
-def test_attribution_kernel_equals_batch(spark, hist):
-    rows, cuts = hist
-    df = spark.createDataFrame(
-        rows, "event_id long, ts_ms long, entity_id string, type string, value double"
-    )
-    want = {
-        (r.entity_id, r.event_id, r.purchase_ms, r.value, r.first_touch_type, r.last_touch_type)
-        for r in purchase_attribution(df)
-        .select("entity_id", "event_id", F.col("purchase_ms"), "value",
-                "first_touch_type", "last_touch_type").collect()
-    }
-    res = _replay(_emit_attribution, rows, cuts,
-                  ["event_id", "ts_ms", "entity_id", "type", "value"])
-    got = set()
-    if res is not None:
-        for r in res.itertuples(index=False):
-            v = r.value
-            null = v is None or v is pd.NA or (isinstance(v, float) and v != v)
-            got.add((r.entity_id, r.event_id, r.purchase_ms,
-                     None if null else float(v),
-                     r.first_touch_type, r.last_touch_type))
-    assert got == want
-
-
-@pytest.mark.parity  # clean at introduction; gate-budget keeps it in the parity sweep
-@pytest.mark.usefixtures("spark")
-@settings(max_examples=15, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(hist=attr_histories())
-def test_transitions_kernel_equals_batch(spark, hist):
-    rows, cuts = hist
-    df = spark.createDataFrame(
-        rows, "event_id long, ts_ms long, entity_id string, type string, value double"
-    )
-    # batch matrix: (from, to) -> n
-    want = {
-        (r.from_type, r.to_type): r.n
-        for r in event_transitions(df).select("from_type", "to_type", "n").collect()
-    }
-    res = _replay(_emit_transitions, rows, cuts,
-                  ["event_id", "ts_ms", "entity_id", "type", "value"])
-    got: dict = {}
-    if res is not None:
-        for r in res.itertuples(index=False):
-            got[(r.from_type, r.to_type)] = got.get((r.from_type, r.to_type), 0) + 1
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
 # R3 geo/device kernel vs the range-bucketed batch self-join
 # ---------------------------------------------------------------------------
 
@@ -507,72 +401,6 @@ def test_profiles_kernel_equals_batch(spark, hist):
         want_cnt = sum(1 for t in per_profile_counts.get(pid, [])
                        if t - t % MINUTE_MS >= cutoff)
         assert s["feature_used_24h"] == want_cnt, pid
-
-
-# ---------------------------------------------------------------------------
-# Burst hour-ring kernel vs the batch hourly-window operator
-# ---------------------------------------------------------------------------
-
-from pulseboard_spark.operators.timeseries import burst_windows  # noqa: E402
-from pulseboard_spark.streaming.stateful import _emit_bursts  # noqa: E402
-
-
-@st.composite
-def burst_histories(draw):
-    """Hour-granular event streams: dense and sparse hour gaps (warmup
-    boundary at 24 closed slots), multiple types, in-hour ties."""
-    n_types = draw(st.integers(1, 2))
-    rows, eid = [], 0
-    for t in range(n_types):
-        n = draw(st.integers(5, 60))
-        gap_hi = draw(st.sampled_from([600, 5400, 90_000]))  # sec: sub-hour .. multi-day
-        ts = BASE_MS
-        for _ in range(n):
-            ts += draw(st.integers(0, gap_hi)) * 1000
-            rows.append((eid, ts, "e0", f"type{t}"))
-            eid += 1
-    rows.sort(key=lambda r: (r[1], r[0]))
-    n_chunks = draw(st.integers(1, 3))
-    cuts = sorted(draw(st.lists(st.integers(0, len(rows)), min_size=n_chunks - 1,
-                                max_size=n_chunks - 1)))
-    return rows, cuts
-
-
-@pytest.mark.parity  # clean at introduction; gate-budget keeps it in the parity sweep
-@pytest.mark.usefixtures("spark")
-@settings(max_examples=15, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(hist=burst_histories())
-def test_burst_kernel_equals_batch_on_closed_hours(spark, hist):
-    rows, cuts = hist
-    df = spark.createDataFrame(
-        rows, "event_id long, ts_ms long, entity_id string, type string"
-    ).select("*", F.timestamp_millis(F.col("ts_ms")).alias("ts"),
-             (F.col("ts_ms") * 1000).alias("ts_us"),
-             F.lit(1.0).alias("value"))
-    batch = burst_windows(df).collect()
-    last_hour: dict = {}
-    for r in batch:
-        last_hour[r.type] = max(last_hour.get(r.type, -1), r.hour_idx)
-    want = {
-        (r.type, r.hour_idx): (r.n_events, r.prev24_sum, r.is_burst)
-        for r in batch if r.hour_idx != last_hour[r.type]
-    }
-
-    bounds = [0, *cuts, len(rows)]
-    states: dict = {}
-    got: dict = {}
-    for i in range(len(bounds) - 1):
-        chunk = rows[bounds[i]: bounds[i + 1]]
-        if not chunk:
-            continue
-        pdf = pd.DataFrame(chunk, columns=["event_id", "ts_ms", "entity_id", "type"])
-        for key, grp in pdf.groupby(["type"], sort=False):
-            state = states.setdefault(key, FakeState())
-            for out in _emit_bursts(key, iter([grp]), state):
-                for r in out.itertuples(index=False):
-                    got[(r.type, r.hour_idx)] = (r.n_events, r.prev24_sum, r.is_burst)
-    assert got == want
 
 
 # ---------------------------------------------------------------------------

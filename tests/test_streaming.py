@@ -279,30 +279,36 @@ def test_incremental_identity_stage(spark, sf_dir, tmp_path, small_state):
     assert resolved_ids == valid_ids
 
 
-def test_entity_alert_stream_facade(spark, sf_dir, tmp_path, small_state):
-    """§3.1 facade (admission -> dedup -> stateful rules) must equal the
-    batch alerts on replayed chunks.  The real testdata exercises the
-    admission/dedup volume path but never fires R1/R2/R4, so the firing
-    fixture is unioned in to make the equality non-vacuous."""
+@pytest.fixture(scope="module")
+def firing_chunks_dir(spark, sf_dir, tmp_path_factory):
+    """Entity view plus the rule-firing fixture in 4 time-ordered parquet
+    chunks, and the batch R1/R2/R4 alerts over the same rows.  The real
+    testdata exercises the admission/dedup volume path but never fires
+    R1/R2/R4, so the firing fixture makes an equality non-vacuous."""
     from pulseboard_spark.sources.generator import rule_firing_events
-    from pulseboard_spark.streaming.pipeline import entity_alert_stream
 
     # order by the full arrival key (ts_us, event_id): same-ts peers split
     # across chunks in reversed id order would diverge from batch ties
-    ev = (
-        entity_events(spark, sf_dir)
-        .unionByName(rule_firing_events(spark))
-        .orderBy("ts_us", "event_id")
-    )
-    rows = ev.collect()
-    out = str(tmp_path / "facade_stream")
+    ev = entity_events(spark, sf_dir).unionByName(rule_firing_events(spark))
+    rows = ev.orderBy("ts_us", "event_id").collect()
+    out = str(tmp_path_factory.mktemp("firing_stream"))
     chunk = (len(rows) + 3) // 4
     for i in range(4):
         part = rows[i * chunk : (i + 1) * chunk]
         if part:
             spark.createDataFrame(part, ev.schema).coalesce(1).write.parquet(f"{out}/chunk={i}")
+    batch = rules.alerts(ev).filter(F.col("rule") != "R3_GEO_DEVICE_MISMATCH")
+    return out, ev.schema, {tuple(r) for r in batch.collect()}
+
+
+def test_entity_alert_stream_facade(spark, firing_chunks_dir, small_state):
+    """§3.1 facade (admission -> dedup -> stateful rules) must equal the
+    batch alerts on replayed chunks."""
+    from pulseboard_spark.streaming.pipeline import entity_alert_stream
+
+    out, schema, want = firing_chunks_dir
     stream = (
-        spark.readStream.schema(ev.schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{out}/chunk=*")
     )
@@ -321,11 +327,66 @@ def test_entity_alert_stream_facade(spark, sf_dir, tmp_path, small_state):
         tuple(r)
         for r in spark.sql("SELECT rule, entity_id, ts_ms, severity, event_id FROM facade_alerts").collect()
     }
-    batch = rules.alerts(
-        entity_events(spark, sf_dir).unionByName(rule_firing_events(spark))
-    ).filter(F.col("rule") != "R3_GEO_DEVICE_MISMATCH")
-    want = {tuple(r) for r in batch.collect()}
     assert got == want and got, f"empty or diverged: got={sorted(got)[:5]}"
+
+
+@pytest.mark.parametrize("provider", ["heap", "rocksdb"])
+def test_alert_stream_restart_recovery(spark, firing_chunks_dir, tmp_path, small_state, provider):
+    """Kill-and-restart on the stream that ships: ``entity_alert_stream``
+    with a parquet sink is stopped after two chunks, then restarted from
+    the same checkpoint with all four.  The restart must resume the
+    dedup and keyed rule state — no (rule, event_id) is emitted twice —
+    and the alerts must equal the batch answer.  On RocksDB (changelog
+    checkpointing) the restart rebuilds state from snapshot + changelog
+    replay, the production recovery path."""
+    from pulseboard_spark.streaming.pipeline import (
+        ROCKSDB_PROVIDER,
+        entity_alert_stream,
+        use_rocksdb_state,
+    )
+
+    out, schema, want = firing_chunks_dir
+    sink = str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key, None)
+    if provider == "rocksdb":
+        use_rocksdb_state(spark)
+        assert spark.conf.get(key) == ROCKSDB_PROVIDER
+
+    def run(glob):
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(glob)
+        q = (
+            entity_alert_stream(stream)
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    try:
+        run(f"{out}/chunk={{0,1}}")
+        run(f"{out}/chunk=*")
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+    got = [
+        tuple(r)
+        for r in spark.read.parquet(sink)
+        .select("rule", "entity_id", "ts_ms", "severity", "event_id")
+        .collect()
+    ]
+    keys = [(r[0], r[4]) for r in got]
+    assert len(keys) == len(set(keys)), "restart emitted an alert twice"
+    assert set(got) == want and got, f"empty or diverged: got={sorted(got)[:5]}"
 
 
 def test_r3_stateful_matches_batch(spark, sf_dir, entity_chunks_dir):
@@ -366,71 +427,6 @@ def test_r3_stateful_matches_batch(spark, sf_dir, entity_chunks_dir):
     assert not missing and not extra, f"missing={list(missing)[:3]} extra={list(extra)[:3]}"
 
 
-def test_streaming_minute_counts_match_batch(spark, sf_dir, entity_chunks_dir):
-    """Built-in windowed-agg twin (A9): complete-mode counts == batch
-    tumbling buckets."""
-    from pulseboard_spark.operators.windows import minute_counts
-    from pulseboard_spark.streaming.pipeline import streaming_minute_counts
-
-    out, schema = entity_chunks_dir
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{out}/chunk=*")
-    )
-    q = (
-        streaming_minute_counts(stream)
-        .writeStream.format("memory")
-        .queryName("stream_minutes")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {tuple(r) for r in spark.sql("SELECT minute_ms, n_events FROM stream_minutes").collect()}
-    want = {tuple(r) for r in minute_counts(entity_events(spark, sf_dir)).collect()}
-    assert got == want and got, f"empty or diverged: got={sorted(got)[:5]}"
-
-
-def test_streaming_sessions_match_batch(spark, sf_dir, entity_chunks_dir):
-    """Built-in session_window twin: same (entity, start, size) sessions as
-    the batch gaps-and-islands operator; built-in end = last_ts + gap."""
-    from pulseboard_spark.operators.sessions import sessionize
-    from pulseboard_spark.streaming.pipeline import streaming_sessions
-
-    out, schema = entity_chunks_dir
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{out}/chunk=*")
-    )
-    q = (
-        streaming_sessions(stream)
-        .writeStream.format("memory")
-        .queryName("stream_sessions")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    gap_ms = 30 * 60 * 1000
-    got = {
-        (r.entity_id, r.session_start_ms, r.window_end_ms - gap_ms, r.n_events)
-        for r in spark.sql(
-            "SELECT entity_id, session_start_ms, window_end_ms, n_events FROM stream_sessions"
-        ).collect()
-    }
-    want = {
-        (r.entity_id, r.session_start_ms, r.session_end_ms, r.n_events)
-        for r in sessionize(entity_events(spark, sf_dir)).collect()
-    }
-    assert got == want and got, f"empty or diverged: got={sorted(got)[:5]}"
-
-
 def test_admission_observed_metrics(spark):
     """W2 late-vs-ontime counters ride the scan via observe() — no second
     pass.  Batch form uses Observation; streaming surfaces the same metrics
@@ -453,95 +449,6 @@ def test_admission_observed_metrics(spark):
     got = obs.get
     assert got["n_admitted"] == 4
     assert got["n_late"] == 3
-
-
-def test_minute_counts_on_rocksdb_state(spark, sf_dir, entity_chunks_dir):
-    """The stateful windowed agg produces identical results on the RocksDB
-    state store (the 100 TB-state provider) as on the default heap one."""
-    from pulseboard_spark.operators.windows import minute_counts
-    from pulseboard_spark.streaming.pipeline import streaming_minute_counts, use_rocksdb_state, ROCKSDB_PROVIDER
-
-    out, schema = entity_chunks_dir
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state(spark)
-    assert spark.conf.get("spark.sql.streaming.stateStore.providerClass") == ROCKSDB_PROVIDER
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{out}/chunk=*")
-        )
-        q = (
-            streaming_minute_counts(stream)
-            .writeStream.format("memory")
-            .queryName("rocksdb_minutes")
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    got = {tuple(r) for r in spark.sql("SELECT minute_ms, n_events FROM rocksdb_minutes").collect()}
-    want = {tuple(r) for r in minute_counts(entity_events(spark, sf_dir)).collect()}
-    assert got == want and got, f"empty or diverged: got={sorted(got)[:5]}"
-
-
-def test_checkpoint_restart_recovery(spark, sf_dir, entity_chunks_dir, tmp_path):
-    """Kill-and-restart exactly-once: a windowed-count query with a file
-    sink is stopped after two chunks, then restarted from the same
-    checkpoint with all four available.  The restarted query must resume
-    from state (no duplicated windows in the sink) and the emitted windows
-    must match the batch answer exactly."""
-    from pulseboard_spark.operators.windows import minute_counts
-    from pulseboard_spark.streaming.pipeline import streaming_minute_counts
-
-    out, schema = entity_chunks_dir
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-
-    def start(glob):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(glob)
-        )
-        return (
-            streaming_minute_counts(stream)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
-
-    q = start(f"{out}/chunk={{0,1}}")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    q = start(f"{out}/chunk=*")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = spark.read.parquet(sink).collect()
-    minutes = [r.minute_ms for r in got]
-    assert len(minutes) == len(set(minutes)), "restart duplicated windows"
-
-    # append mode only finalizes windows the watermark has passed; every
-    # emitted window must carry the exact batch count
-    want = {r.minute_ms: r.n_events for r in minute_counts(entity_events(spark, sf_dir)).collect()}
-    assert got, "no windows finalized"
-    for r in got:
-        assert want[r.minute_ms] == r.n_events
 
 
 def test_scheduler_pool_sets_and_restores_property(spark, tmp_path):
@@ -621,95 +528,6 @@ def test_sized_session_binds_state_partitions(spark, tmp_path):
     assert run(spark, None, "parent") == int(parent_before)
 
 
-def test_stream_static_enrichment(spark, sf_dir, entity_chunks_dir, small_state):
-    """Stream-static broadcast join: streaming events enriched with a
-    static geo dim must match the batch join exactly, with no state.
-    (small_state: the complete-mode groupBy re-shuffles every micro-batch;
-    32 shuffle partitions over a few thousand rows was the top single
-    entry in the r10 gate durations at 81s under load.)"""
-    from pulseboard_spark.streaming.pipeline import with_dim_enrichment
-
-    out, schema = entity_chunks_dir
-    dim = spark.createDataFrame(
-        [("US", "amer"), ("CA", "amer"), ("UK", "emea"), ("DE", "emea"), ("FR", "emea")],
-        "geo string, region string",
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{out}/chunk=*")
-    )
-    q = (
-        with_dim_enrichment(stream, dim, "geo")
-        .groupBy("region")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .writeStream.format("memory")
-        .queryName("enriched")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {r.region: r.n for r in spark.sql("SELECT * FROM enriched").collect()}
-    want = {
-        r.region: r.n
-        for r in entity_events(spark, sf_dir)
-        .join(dim, "geo", "left")
-        .groupBy("region")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want and set(got) == {"amer", "emea"}
-
-
-def test_idempotent_foreach_batch_writer(spark, sf_dir, entity_chunks_dir, tmp_path):
-    """Redelivered batch ids must not duplicate output: replaying every
-    batch through the writer a second time leaves the row count unchanged."""
-    from pulseboard_spark.streaming.pipeline import idempotent_parquet_writer
-
-    out, schema = entity_chunks_dir
-    sink = str(tmp_path / "fb_sink")
-    writer = idempotent_parquet_writer(sink)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{out}/chunk=*")
-    )
-    q = (
-        stream.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", str(tmp_path / "fb_ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    first = spark.read.parquet(sink)
-    n1 = first.count()
-    assert n1 == entity_events(spark, sf_dir).count()
-    batch_ids = [r.batch_id for r in first.select("batch_id").distinct().collect()]
-    # crash-replay simulation: redeliver every committed batch
-    for bid in batch_ids:
-        writer(spark.read.parquet(f"{sink}/batch_id={bid}"), bid)
-    assert spark.read.parquet(sink).count() == n1
-
-
-def test_shed_oldest_keeps_newest(spark):
-    """W9 twin: above the cap a batch sheds its OLDEST rows (by ts_ms,
-    event_id) and reports the drop count; below it nothing changes."""
-    from pulseboard_spark.streaming.pipeline import shed_oldest
-
-    rows = [(i, 1000 + i) for i in range(20)]  # event_id, ts_ms
-    df = spark.createDataFrame(rows, "event_id long, ts_ms long")
-    kept, dropped = shed_oldest(df, cap=5)
-    assert dropped == 15
-    assert sorted(r.event_id for r in kept.collect()) == [15, 16, 17, 18, 19]
-    kept_all, dropped0 = shed_oldest(df, cap=100)
-    assert dropped0 == 0 and kept_all.count() == 20
-
-
 def test_profile_upsert_writer_merges_latest(spark, tmp_path, monkeypatch):
     """Bucketed parquet UPSERT: later batches overwrite only touched
     buckets; the store converges to the latest row per profile."""
@@ -761,259 +579,3 @@ def test_profile_upsert_tie_breaks_to_batch(spark, tmp_path, monkeypatch):
     writer(spark.createDataFrame([("p1", 100, "pro")], "profile_id string, ts_ms long, plan string"), 1)
     rows = spark.read.parquet(store).collect()
     assert len(rows) == 1 and rows[0].plan == "pro"
-
-
-def test_streaming_transitions_match_batch(spark, sf_dir, entity_chunks_dir):
-    """The stateful pair emitter, aggregated, must reproduce the batch
-    Markov matrix exactly (counts per (from, to) pair) under in-order
-    chunk replay."""
-    from pulseboard_spark.operators.timeseries import event_transitions
-    from pulseboard_spark.streaming.stateful import transitions_stateful
-
-    out, schema = entity_chunks_dir
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{out}/chunk=*")
-    )
-    q = (
-        transitions_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("stream_transitions")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r.from_type, r.to_type): r.n
-        for r in spark.sql(
-            "SELECT from_type, to_type, count(*) AS n FROM stream_transitions GROUP BY 1, 2"
-        ).collect()
-    }
-    want = {
-        (r.from_type, r.to_type): r.n
-        for r in event_transitions(entity_events(spark, sf_dir)).collect()
-    }
-    assert got == want and got, f"empty or diverged: got={sorted(got)[:5]}"
-
-
-def test_streaming_cusum_matches_batch(spark, sf_dir, entity_chunks_dir, small_state):
-    """Streaming CUSUM alarms (batch-trained params, O(1) keyed state)
-    must reproduce the batch operator's per-key alarm counts exactly
-    under in-order chunk replay."""
-    from pulseboard_spark.operators.timeseries import cusum_changepoints, cusum_params
-    from pulseboard_spark.streaming.stateful import cusum_stateful
-
-    out, schema = entity_chunks_dir
-    batch_ev = entity_events(spark, sf_dir)
-    params = cusum_params(batch_ev).localCheckpoint()
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{out}/chunk=*")
-    )
-    q = (
-        cusum_stateful(stream, params)
-        .writeStream.format("memory")
-        .queryName("stream_cusum")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r.entity_id, r.type): (r.up, r.down)
-        for r in spark.sql(
-            """SELECT entity_id, type,
-                      count(*) FILTER (WHERE direction = 'UP') AS up,
-                      count(*) FILTER (WHERE direction = 'DOWN') AS down
-               FROM stream_cusum GROUP BY 1, 2"""
-        ).collect()
-    }
-    want = {
-        (r.entity_id, r.type): (r.n_alarms_up, r.n_alarms_down)
-        for r in cusum_changepoints(batch_ev).collect()
-        if r.n_alarms_up or r.n_alarms_down
-    }
-    assert got == want and got, f"empty or diverged: got={sorted(got)[:5]}"
-
-
-def test_streaming_burst_matches_batch(spark, sf_dir, entity_chunks_dir):
-    """Streaming hourly burst verdicts (O(24) ring state per type) must
-    reproduce the batch operator row-for-row on every CLOSED hour — the
-    stream's only legitimate difference is each type's final hour, which
-    stays open (no later event has arrived to close it)."""
-    from pulseboard_spark.operators.timeseries import burst_windows
-    from pulseboard_spark.streaming.stateful import burst_stateful
-
-    out, schema = entity_chunks_dir
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{out}/chunk=*")
-    )
-    q = (
-        burst_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("stream_bursts")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r.type, r.hour_idx): (r.n_events, r.prev24_sum, r.is_burst)
-        for r in spark.sql("SELECT * FROM stream_bursts").collect()
-    }
-    batch = burst_windows(entity_events(spark, sf_dir)).collect()
-    last_hour = {}
-    for r in batch:
-        last_hour[r.type] = max(last_hour.get(r.type, -1), r.hour_idx)
-    want = {
-        (r.type, r.hour_idx): (r.n_events, r.prev24_sum, r.is_burst)
-        for r in batch
-        if r.hour_idx != last_hour[r.type]
-    }
-    assert got == want
-    assert len(got) > 0, "replay must close at least one hour per type"
-
-
-def test_streaming_attribution_matches_batch(spark, sf_dir, entity_chunks_dir):
-    """Streaming first/last-touch attribution (touch-key state bounded by
-    the lookback) must reproduce the batch RANGE-frame operator
-    row-for-row: every purchase is attributed once, with identical
-    first/last touch types, across chunked delivery."""
-    from pulseboard_spark.operators.sessions import purchase_attribution
-    from pulseboard_spark.streaming.stateful import attribution_stateful
-
-    out, schema = entity_chunks_dir
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{out}/chunk=*")
-    )
-    q = (
-        attribution_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("stream_attr")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        r.event_id: (r.entity_id, r.purchase_ms, r.first_touch_type, r.last_touch_type)
-        for r in spark.sql("SELECT * FROM stream_attr").collect()
-    }
-    want = {
-        r.event_id: (r.entity_id, r.purchase_ms, r.first_touch_type, r.last_touch_type)
-        for r in purchase_attribution(entity_events(spark, sf_dir)).collect()
-    }
-    assert got == want and got, f"empty or diverged: got={sorted(got)[:5]}"
-
-
-def test_checkpoint_restart_recovery_on_rocksdb(spark, sf_dir, entity_chunks_dir, tmp_path):
-    """Kill-and-restart on the RocksDB provider with changelog
-    checkpointing: the restarted query rebuilds state from the last
-    snapshot plus changelog replay (the production recovery path — the
-    heap twin above only proves offset/state recovery on the default
-    provider).  Same exactness bar: no duplicated windows, every emitted
-    window carries the exact batch count."""
-    from pulseboard_spark.operators.windows import minute_counts
-    from pulseboard_spark.streaming.pipeline import streaming_minute_counts, use_rocksdb_state, ROCKSDB_PROVIDER
-
-    out, schema = entity_chunks_dir
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state(spark)
-    assert spark.conf.get("spark.sql.streaming.stateStore.providerClass") == ROCKSDB_PROVIDER
-
-    def start(glob):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(glob)
-        )
-        return (
-            streaming_minute_counts(stream)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
-
-    try:
-        q = start(f"{out}/chunk={{0,1}}")
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        q = start(f"{out}/chunk=*")
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-    got = spark.read.parquet(sink).collect()
-    minutes = [r.minute_ms for r in got]
-    assert len(minutes) == len(set(minutes)), "restart duplicated windows"
-    want = {r.minute_ms: r.n_events for r in minute_counts(entity_events(spark, sf_dir)).collect()}
-    assert got, "no windows finalized"
-    for r in got:
-        assert want[r.minute_ms] == r.n_events
-
-
-def test_attribution_null_value_purchase_emits_null(spark, tmp_path):
-    """A null-valued purchase must emit a NULL value like the batch twin —
-    the Arrow float64 input coerces null to NaN inside the kernel, and an
-    unmapped NaN diverges from batch in any collected comparison."""
-    from pulseboard_spark.operators.sessions import purchase_attribution
-    from pulseboard_spark.streaming.stateful import attribution_stateful
-
-    base = 1_704_067_200_000
-    rows = [(1, base, "e0", "view", 1.0), (2, base + 1000, "e0", "purchase", None)]
-    df = (
-        spark.createDataFrame(
-            rows, "event_id long, ts_ms long, entity_id string, type string, value double"
-        )
-        .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-        .withColumn("ts_us", F.col("ts_ms") * 1000)
-    )
-    path = str(tmp_path / "src")
-    df.coalesce(1).write.parquet(path)
-    stream = spark.readStream.schema(df.schema).parquet(path)
-    q = (
-        attribution_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("attr_nullv")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [tuple(r) for r in spark.sql(
-        "SELECT event_id, purchase_ms, value, first_touch_type, last_touch_type FROM attr_nullv"
-    ).collect()]
-    want = [tuple(r) for r in purchase_attribution(df).select(
-        "event_id", "purchase_ms", "value", "first_touch_type", "last_touch_type"
-    ).collect()]
-    assert got == want == [(2, base + 1000, None, "view", "view")]
