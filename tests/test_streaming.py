@@ -330,15 +330,12 @@ def test_entity_alert_stream_facade(spark, firing_chunks_dir, small_state):
     assert got == want and got, f"empty or diverged: got={sorted(got)[:5]}"
 
 
-@pytest.mark.parametrize("provider", ["heap", "rocksdb"])
-def test_alert_stream_restart_recovery(spark, firing_chunks_dir, tmp_path, small_state, provider):
+def _alert_stream_restart(spark, firing_chunks_dir, tmp_path, rocksdb):
     """Kill-and-restart on the stream that ships: ``entity_alert_stream``
     with a parquet sink is stopped after two chunks, then restarted from
     the same checkpoint with all four.  The restart must resume the
     dedup and keyed rule state — no (rule, event_id) is emitted twice —
-    and the alerts must equal the batch answer.  On RocksDB (changelog
-    checkpointing) the restart rebuilds state from snapshot + changelog
-    replay, the production recovery path."""
+    and the alerts must equal the batch answer."""
     from pulseboard_spark.streaming.pipeline import (
         ROCKSDB_PROVIDER,
         entity_alert_stream,
@@ -350,7 +347,7 @@ def test_alert_stream_restart_recovery(spark, firing_chunks_dir, tmp_path, small
     ckpt = str(tmp_path / "ckpt")
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key, None)
-    if provider == "rocksdb":
+    if rocksdb:
         use_rocksdb_state(spark)
         assert spark.conf.get(key) == ROCKSDB_PROVIDER
 
@@ -387,6 +384,18 @@ def test_alert_stream_restart_recovery(spark, firing_chunks_dir, tmp_path, small
     keys = [(r[0], r[4]) for r in got]
     assert len(keys) == len(set(keys)), "restart emitted an alert twice"
     assert set(got) == want and got, f"empty or diverged: got={sorted(got)[:5]}"
+
+
+def test_checkpoint_restart_recovery(spark, firing_chunks_dir, tmp_path, small_state):
+    """Restart of the alerts stream on the default (heap) state store."""
+    _alert_stream_restart(spark, firing_chunks_dir, tmp_path, rocksdb=False)
+
+
+def test_checkpoint_restart_recovery_on_rocksdb(spark, firing_chunks_dir, tmp_path, small_state):
+    """Restart of the alerts stream on the RocksDB provider with changelog
+    checkpointing: the restart rebuilds state from snapshot + changelog
+    replay, the production recovery path."""
+    _alert_stream_restart(spark, firing_chunks_dir, tmp_path, rocksdb=True)
 
 
 def test_r3_stateful_matches_batch(spark, sf_dir, entity_chunks_dir):
