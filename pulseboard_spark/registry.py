@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pulseboard_spark.oracle.sql import ORACLE_SQL
-from pulseboard_spark.session import local_df, memo, silver_cache_enabled, tune
+from pulseboard_spark.session import local_df, memo, silver, tune
 from pulseboard_spark.sources.generator import rule_firing_events
 from pulseboard_spark.sources.tables import load_table
 from pulseboard_spark.sources.tables import cdp_events as _cdp_events_raw
@@ -57,37 +57,18 @@ def _dsum(expr) -> F.Column:
 
 
 def entity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity silver; cached per-session unless ``PB_SILVER_CACHE=0``
-    (see :func:`silver_cache_enabled` for the 100 TB rationale).
-    ``cache()`` is lazy — nothing plans or runs at registration — and
-    Spark's CacheManager matches by canonicalized plan, so the one entry
-    serves every query."""
-    if not silver_cache_enabled():
-        return _entity_events_raw(spark, sf_dir)
-    return memo(
-        spark, sf_dir, "silver:entity_events",
-        # select("*"): a fresh Dataset whose canonical plan DIFFERS from the
-        # shared tables-layer view — otherwise (a) the cached and uncached
-        # postures share one object and whichever resolves its (lazy)
-        # query execution first pins the other's plan, and (b) CacheManager
-        # substitutes the registration into PB_SILVER_CACHE=0 plans by
-        # canonical-plan match, hiding the parquet scan the opt-out exists
-        # to expose (both found by test_silver_cache_opt_out, r10)
-        lambda: _entity_events_raw(spark, sf_dir).select("*").cache(),
-        silver=True,
-    )
+    """Entity silver, cached per session (:func:`session.silver`)."""
+    # select("*"): a fresh Dataset whose canonical plan DIFFERS from the
+    # shared tables-layer view, which other readers hold too — otherwise
+    # whichever of them resolves its (lazy) query execution first pins
+    # the other's plan (r10)
+    return silver(spark, sf_dir, "entity_events", lambda: _entity_events_raw(spark, sf_dir).select("*"))
 
 
 def cdp_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw-CDP silver (caching posture as :func:`entity_events`)."""
-    if not silver_cache_enabled():
-        return _cdp_events_raw(spark, sf_dir)
-    return memo(
-        spark, sf_dir, "silver:cdp_events",
-        # select("*"): see entity_events
-        lambda: _cdp_events_raw(spark, sf_dir).select("*").cache(),
-        silver=True,
-    )
+    """Raw-CDP silver, cached as :func:`entity_events`."""
+    # select("*"): see entity_events
+    return silver(spark, sf_dir, "cdp_events", lambda: _cdp_events_raw(spark, sf_dir).select("*"))
 
 
 def _value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,20 +81,12 @@ def _value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the filter once per session.  Only queries whose ENTIRE input is the
     non-null slice ride it; anything that also counts null-value rows
     (R2's count_60s, rfm_scores' n_events, value_stats_per_type,
-    seasonal/weekly counts) keeps the full silver.  Same dual posture as the other silvers: at
-    100 TB this is a predicate-pushed scan of the silver table, not a
-    cache."""
-    if not silver_cache_enabled():
-        return _entity_events_raw(spark, sf_dir).filter(F.col("value").isNotNull())
-    return memo(
-        spark, sf_dir, "silver:value_events",
+    seasonal/weekly counts) keeps the full silver."""
+    return silver(
+        spark, sf_dir, "value_events",
         # built FROM the cached silver (one cheap pass when that is warm);
         # select("*"): see entity_events
-        lambda: entity_events(spark, sf_dir)
-        .filter(F.col("value").isNotNull())
-        .select("*")
-        .cache(),
-        silver=True,
+        lambda: entity_events(spark, sf_dir).filter(F.col("value").isNotNull()).select("*"),
     )
 
 
@@ -1071,11 +1044,7 @@ def _cvalid(spark: SparkSession, sf_dir: str) -> DataFrame:
     validation/normalization expression tree costs ~0.2 s of driver-side
     construction per call on top of the cdp view's ~0.4 s, and a
     long-running engine builds its silver lineage once."""
-    return memo(
-        spark, sf_dir, "silver:cvalid",
-        lambda: valid_cdp_events(cdp_events(spark, sf_dir)).cache(),
-        silver=True,
-    )
+    return silver(spark, sf_dir, "cvalid", lambda: valid_cdp_events(cdp_events(spark, sf_dir)))
 
 
 def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1224,19 +1193,11 @@ def value_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents silver — same dual cache posture as :func:`entity_events`
-    (r10): ~25 text/media/corpus queries scan it per session and each was
-    re-paying the degenerate-parquet spread exchange per action; cached
-    once unless ``PB_SILVER_CACHE=0`` (at 100 TB you scan the corpus
-    table directly so pruning reaches the files)."""
-    if not silver_cache_enabled():
-        return load_table(spark, sf_dir, "documents")
-    return memo(
-        spark, sf_dir, "silver:documents",
-        # select("*"): see entity_events
-        lambda: load_table(spark, sf_dir, "documents").select("*").cache(),
-        silver=True,
-    )
+    """Documents silver, cached as :func:`entity_events` (r10): ~25
+    text/media/corpus queries scan it per session and each was re-paying
+    the degenerate-parquet spread exchange per action."""
+    # select("*"): see entity_events
+    return silver(spark, sf_dir, "documents", lambda: load_table(spark, sf_dir, "documents").select("*"))
 
 
 def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1244,22 +1205,13 @@ def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector — it cannot score, bucket, or vote — so no declared query sees
     one (the numpy kernels would otherwise crash building the matrix, per
     the oracle-fuzz nulls profile).  Every oracle embeddings scan mirrors
-    the same ``WHERE embedding IS NOT NULL``.  Cached under the dual
-    silver posture (r10, see :func:`_docs`) — the similarity family scans
-    this filtered view once per query side on top of the memoized
-    broadcast index."""
-    if not silver_cache_enabled():
-        return load_table(spark, sf_dir, "embeddings").filter(
-            F.col("embedding").isNotNull()
-        )
-    return memo(
-        spark, sf_dir, "silver:embeddings",
+    the same ``WHERE embedding IS NOT NULL``.  Cached as :func:`_docs`
+    (r10) — the similarity family scans this filtered view once per query
+    side on top of the memoized broadcast index."""
+    return silver(
+        spark, sf_dir, "embeddings",
         # select("*"): see entity_events
-        lambda: load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select("*")
-        .cache(),
-        silver=True,
+        lambda: load_table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull()).select("*"),
     )
 
 
@@ -2403,7 +2355,7 @@ QUERIES: dict[str, QueryFn] = {
 
 def _memo_query(name: str, fn: QueryFn) -> QueryFn:
     """Memoize the CONSTRUCTED DataFrame of a declared query per
-    (session, corpus dir, silver-cache posture).
+    (session, corpus dir).
 
     Guide §1.2/§5.3 (driver work), same posture as the table/silver plan
     memos (`739aded`): measured on the warm bench, rebuilding a declared
@@ -2414,18 +2366,16 @@ def _memo_query(name: str, fn: QueryFn) -> QueryFn:
     the memo is that posture.  A PLAN memo, not a result cache: every
     ``count()``/collect/write on the memoized DataFrame still executes
     the full job from the parquet inputs (or the in-session silver IMTS),
-    and a fresh driver process rebuilds everything.  Keyed additionally
-    on :func:`silver_cache_enabled` so the PB_SILVER_CACHE=0 posture
-    builds (and keeps) its own uncached plans."""
+    and a fresh driver process rebuilds everything."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         return memo(
-            spark, sf_dir, f"query:{name}:{silver_cache_enabled()}",
+            spark, sf_dir, f"query:{name}",
             lambda: fn(spark, sf_dir),
         )
 
     wrapped.__name__ = fn.__name__
-    wrapped._raw = fn  # unmemoized builder (probes, construction-cost audits)
+    wrapped._raw = fn  # unmemoized builder (tests, construction-cost audits)
     return wrapped
 
 

@@ -94,8 +94,8 @@ def tune(spark: SparkSession) -> SparkSession:
         try:
             spark.conf.set(k, v)
         except Exception:
-            # Conf not settable at runtime in this build — proceed; loaders
-            # have a pyarrow fallback for the nanos issue.
+            # Conf not settable at runtime in this build — proceed;
+            # tables.load_events reads either ``ts`` encoding.
             pass
     try:
         # Scale-adaptive shuffle width: one reduce partition per task slot
@@ -118,22 +118,6 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def silver_cache_enabled() -> bool:
-    """Bench-scale posture switch for the silver views.
-
-    Default (unset / ``1``): ``cache()`` the silver — ~25 behavioral /
-    rule / time-series queries scan it per session and the projection
-    (regexp tag extraction, geo/device derivation, the degenerate-parquet
-    spread exchange) is worth paying once.  Set ``PB_SILVER_CACHE=0`` when
-    pointing the engine at a cluster-scale directory: at 100 TB you do
-    NOT cache the fact table — the correct twin is a materialized silver
-    table refreshed per corpus snapshot (same posture as ``_cvalid`` for
-    the CDP family), with each query scanning parquet directly so
-    predicate pushdown / partition pruning reach the files instead of an
-    all-columns InMemoryRelation."""
-    return os.environ.get("PB_SILVER_CACHE", "1") != "0"
-
-
 #: The session memo store: (applicationId, abspath(corpus) or None, name) ->
 #: (artifact, silver).  Artifacts are constructed plans (table views, silver
 #: lineages, declared queries' DataFrames), localCheckpointed driver
@@ -150,30 +134,39 @@ _MEMO: dict = {}
 
 def memo(spark: SparkSession, corpus: str | None, name: str, build, silver: bool = False):
     """Return the memoized artifact for (session, corpus, name), building it
-    on a miss.  ``silver=True`` marks a persisted silver.  ``clearCache()``
-    or ``unpersist`` leave a memoized silver valid-but-uncached, silently
-    degrading its consumers to re-scanning parquet, and a hit skips the
-    builders that would persist it, so every hit re-persists any dropped
-    silver of the same (session, corpus) — a storage-level lookup per
-    silver, no job.  Under ``PB_SILVER_CACHE=0`` a hit re-persists only
-    itself (the always-cached ``silver:cvalid``): CacheManager substitutes
-    cached fragments into plans by canonical-plan match, so re-persisting
-    the other silvers would hide the parquet scans that posture exists to
-    expose.  Plan-only entries are never persisted: caching a query's own
-    output plan would serve its warm runs from a result cache."""
+    on a miss.  ``silver=True`` marks a persisted silver (set only by
+    :func:`silver`).  ``clearCache()`` or ``unpersist`` leave a memoized
+    silver valid-but-uncached, silently degrading its consumers to
+    re-scanning parquet, and a hit skips the builders that would persist
+    it, so every hit re-persists any dropped silver of the same (session,
+    corpus) — a storage-level lookup per silver, no job; Spark rebuilds
+    the dropped data from its lineage on the next action.  Plan-only
+    entries are never persisted: caching a query's own output plan would
+    serve its warm runs from a result cache."""
     app = spark.sparkContext.applicationId
     corpus = None if corpus is None else os.path.abspath(corpus)
     entry = _MEMO.get((app, corpus, name))
     if entry is None:
         entry = _MEMO[(app, corpus, name)] = (build(), silver)
         return entry[0]
-    every = silver_cache_enabled()
-    for (a, c, n), (df, is_silver) in list(_MEMO.items()):
-        if is_silver and a == app and c == corpus and (every or n == name):
+    for (a, c, _n), (df, is_silver) in list(_MEMO.items()):
+        if is_silver and a == app and c == corpus:
             sl = df.storageLevel
             if not (sl.useMemory or sl.useDisk):
                 df.persist()
     return entry[0]
+
+
+def silver(spark: SparkSession, corpus: str, name: str, build) -> DataFrame:
+    """The session-cached silver ``name`` of ``corpus``: ``build()``'s plan
+    with ``cache()`` registered, memoized as ``silver:{name}``.  Every
+    silver is persisted here and nowhere else.  ``cache()`` is lazy —
+    nothing plans or runs at registration — and Spark's CacheManager
+    matches by canonicalized plan, so the one entry serves every query
+    that scans the silver.  At cluster scale the same role is played by a
+    materialized silver table refreshed per corpus snapshot, not by this
+    cache."""
+    return memo(spark, corpus, f"silver:{name}", lambda: build().cache(), silver=True)
 
 
 def plan_probe(df: DataFrame, tag: str, compute):
@@ -209,13 +202,11 @@ def local_df(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
     first — OPTIMIZATION_r10.md "worker pool").  Routing the same rows
     through a pandas DataFrame takes the Arrow path instead: batches are
     converted JVM-side, no python worker ever runs.  Falls back to the
-    plain list path when pandas/Arrow is unavailable (identical result,
-    just the old cost).
+    plain list path, with a warning, when the Arrow conversion fails
+    (identical result, just the old cost).
     """
-    try:
-        import pandas as pd
-    except ImportError:  # pandas absent: the old (slower) path is the API
-        return spark.createDataFrame(rows, schema=schema)
+    import pandas as pd
+
     try:
         names = [f.name for f in schema.fields] if hasattr(schema, "fields") else None
         if names is None:  # DDL-string schema: parse via the public API

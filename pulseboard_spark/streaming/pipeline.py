@@ -402,7 +402,6 @@ def profile_upsert_writer(base_path: str):
         if batch_df.isEmpty():
             return  # nothing to upsert — and never create an empty store dir
         spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         bucket = F.pmod(F.xxhash64(F.col("profile_id").cast("string")), F.lit(n_buckets))
         batch = batch_df.withColumn("_bucket", bucket).withColumn("_src", F.lit(1))
         try:
@@ -449,6 +448,13 @@ def profile_upsert_writer(base_path: str):
             .drop("_rn", "_src")
             .localCheckpoint()  # sever the read-from-base lineage pre-overwrite
         )
-        latest.write.mode("overwrite").partitionBy("_bucket").parquet(base_path)
+        # dynamic overwrite on this write only: the batch's session keeps
+        # its own partitionOverwriteMode for every other write
+        (
+            latest.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_bucket")
+            .parquet(base_path)
+        )
 
     return write

@@ -11,12 +11,6 @@ from pulseboard_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("PB_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# The suite's plan tests assert the DEFAULT silver posture (session-cached);
-# an inherited PB_SILVER_CACHE=0 from a user following the 100 TB recipe
-# would fail every InMemoryTableScan assertion with no real regression.
-# The opt-out itself is covered explicitly by test_silver_cache_opt_out.
-os.environ.pop("PB_SILVER_CACHE", None)
-
 
 @pytest.fixture(scope="session")
 def spark():

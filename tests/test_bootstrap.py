@@ -92,19 +92,18 @@ def test_session_workers_run_the_daemon_zip_invalidate(spark):
 
 def test_oracle_fuzz_import_has_no_side_effects():
     """Importing the probe from a script whose first argument is a path
-    neither parses that argument nor changes ``PB_SILVER_CACHE``."""
+    neither parses that argument nor changes the process environment."""
     code = textwrap.dedent(
         """
         import importlib.util, os, sys
-        before = os.environ.get("PB_SILVER_CACHE")
+        before = dict(os.environ)
         spec = importlib.util.spec_from_file_location("oracle_fuzz", sys.argv[2])
         spec.loader.exec_module(importlib.util.module_from_spec(spec))
-        assert os.environ.get("PB_SILVER_CACHE") == before, os.environ.get("PB_SILVER_CACHE")
+        assert dict(os.environ) == before, set(os.environ.items()) ^ set(before.items())
         print("ok")
         """
     )
     probe = os.path.join(ROOT, "tools", "probes", "oracle_fuzz.py")
-    env = {k: v for k, v in os.environ.items() if k != "PB_SILVER_CACHE"}
     res = subprocess.run([sys.executable, "-c", code, "/some/data/dir", probe],
-                         capture_output=True, text=True, env=env, timeout=120)
+                         capture_output=True, text=True, timeout=120)
     assert res.returncode == 0 and res.stdout.strip() == "ok", res.stderr

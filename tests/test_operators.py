@@ -127,17 +127,31 @@ def test_ewma_scan_matches_with_ewma(spark, sf_dir):
 
 def test_ewma_scan_clustered_matches(spark, sf_dir):
     """clustered=True over a window-partitioned input (the R2 shape) must
-    produce the same ewma sequence as the repartitioning form."""
+    produce the same ewma sequence as the repartitioning form — at a
+    shuffle width where AQE coalescing fires under the scan, since key
+    locality surviving the coalesce is what clustered=True relies on."""
+    import re
+
     from pulseboard_spark.operators.ewma import ewma_scan
-    from pulseboard_spark.operators.windows import with_trailing_aggs
     from pulseboard_spark.registry import entity_events
 
-    win = with_trailing_aggs(entity_events(spark, sf_dir))
-    a = ewma_scan(win, carry=["ts_ms", "count_60s"], clustered=True)
-    b = ewma_scan(win, carry=["ts_ms", "count_60s"], clustered=False)
-    ra = sorted(tuple(r) for r in a.select("event_id", "ewma", "count_60s").collect())
-    rb = sorted(tuple(r) for r in b.select("event_id", "ewma", "count_60s").collect())
+    ev = entity_events(spark, sf_dir)  # first: a build calls tune(), which resets the width
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "64")  # a few thousand rows over 64 partitions
+    try:
+        win = with_trailing_aggs(ev)
+        a = ewma_scan(win, carry=["ts_ms", "count_60s"], clustered=True).select("event_id", "ewma", "count_60s")
+        b = ewma_scan(win, carry=["ts_ms", "count_60s"], clustered=False).select("event_id", "ewma", "count_60s")
+        ra = sorted(tuple(r) for r in a.collect())
+        rb = sorted(tuple(r) for r in b.collect())
+    finally:
+        spark.conf.set(key, prev)
     assert ra == rb and len(ra) > 0
+    plan = a._jdf.queryExecution().executedPlan().toString()
+    below_scan = plan[plan.index("MapInPandas"):]
+    read = r"AQEShuffleRead coalesced\s+\+- ShuffleQueryStage \d+\s+\+- Exchange hashpartitioning\(entity_id#\d+, type#\d+, 64\)"
+    assert re.search(read, below_scan), below_scan
 
 
 # --- Window inclusivity (`WindowStoreTest.kt:79-105`) -----------------------

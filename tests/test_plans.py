@@ -21,32 +21,37 @@ def _plan(spark, sf_dir, name: str, phase: str = "executedPlan") -> str:
     return getattr(df._jdf.queryExecution(), phase)().toString()
 
 
-def _plan_uncached(spark, sf_dir, name: str, phase: str = "executedPlan") -> str:
-    """Plan under the PB_SILVER_CACHE=0 (100 TB) posture: scan-level
-    properties — predicate pushdown, ReadSchema pruning, single-scan
-    pipelines — are only observable against parquet FileScans; the
-    default cached posture substitutes an all-columns InMemoryRelation
-    (the documented trade of :func:`session.silver_cache_enabled`)."""
-    import os
-
-    old = os.environ.get("PB_SILVER_CACHE")
-    os.environ["PB_SILVER_CACHE"] = "0"
-    # CacheManager substitutes registered fragments by canonicalized-plan
-    # match regardless of the env var (same caveat as
-    # test_silver_cache_opt_out), so drop registrations first; the next
-    # session-memo hit re-persists the silvers for later tests.
-    spark.catalog.clearCache()
-    try:
-        return _plan(spark, sf_dir, name, phase)
-    finally:
-        if old is None:
-            os.environ.pop("PB_SILVER_CACHE", None)
-        else:
-            os.environ["PB_SILVER_CACHE"] = old
-
-
 def _read_schemas(plan: str) -> list[str]:
     return re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
+
+
+def _operative(plan: str) -> str:
+    """Plan text with each InMemoryRelation's stored build-plan description
+    removed: CacheManager substitution embeds the cached subtree's ORIGINAL
+    plan (its FileScan, its AQE Initial Plan copy) as inert text under the
+    operative InMemoryTableScan, which double-counts scan substrings."""
+    out, skip_indent = [], None
+    for line in plan.splitlines():
+        # tree depth, counting the ':'/'+-' branch-drawing prefix too —
+        # multi-branch treeStrings prefix nested nodes with ':' at column
+        # 0, which plain lstrip() would measure as depth 0
+        indent = len(line) - len(line.lstrip(" :+-*("))
+        if skip_indent is not None:
+            if indent > skip_indent:
+                continue
+            skip_indent = None
+        if "InMemoryRelation" in line:
+            skip_indent = indent
+            continue
+        out.append(line)
+    return "\n".join(out)
+
+
+def _cached_scans(plan: str) -> list[str]:
+    """Column lists of the operative InMemoryTableScans: what a query
+    reads out of the session-cached silvers (pruning and scan counts are
+    properties of these scans, not of the silver's own FileScan)."""
+    return re.findall(r"InMemoryTableScan \[([^\]]*)\]", _operative(plan))
 
 
 PY_NODES = re.compile(r"ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGroupsInPandas")
@@ -96,10 +101,8 @@ def test_ewma_exactly_one_python_seam(spark, sf_dir):
 
 
 def test_profile_aggs_prune_text(spark, sf_dir):
-    # uncached posture: pruning is a parquet-scan property (see _plan_uncached)
-    plan = _plan_uncached(spark, sf_dir, "text_quality")
-    schemas = _read_schemas(plan)
-    assert schemas and all("source" not in s for s in schemas), "unused doc columns pruned"
+    scans = _cached_scans(_plan(spark, sf_dir, "text_quality"))
+    assert scans and all("source" not in s for s in scans), "unused doc columns pruned"
 
 
 def test_top20_is_takeordered(spark, sf_dir):
@@ -138,12 +141,11 @@ def test_q22_anti_join(spark, sf_dir):
 
 
 def test_hash_sample_no_shuffle(spark, sf_dir):
-    """Deterministic sampling is a pure narrow filter below the
-    parallelism repartition — no hash/range shuffle anywhere."""
-    plan = _plan_uncached(spark, sf_dir, "doc_hash_sample")
-    assert _shuffles(plan) == 0
-    assert "Filter" in plan and plan.index("Filter") > plan.index("RoundRobin"), \
-        "filter must sit below the repartition (evaluated before the exchange)"
+    """Deterministic sampling is a pure narrow filter over the cached
+    documents silver — no exchange outside the silver's own plan."""
+    plan = _operative(_plan(spark, sf_dir, "doc_hash_sample"))
+    assert "Exchange" not in plan, plan
+    assert "Filter" in plan and len(_cached_scans(plan)) == 1
 
 
 def test_stratified_sample_one_shuffle(spark, sf_dir):
@@ -311,11 +313,11 @@ def test_rfm_large_path_avoids_global_window(spark, sf_dir, monkeypatch):
     # a fact-sized gather would add SinglePartition exchanges
     assert plan.count("SinglePartition") <= 3, plan.count("SinglePartition")
     assert not PY_NODES.search(plan)
-    # plan size in the uncached posture: the cached one also prints the
-    # silver's own physical plan at every reference, and that text grows
-    # with the core count (the spread repartition fires at >= 4 slots)
-    optimized = _plan_uncached(spark, sf_dir, "rfm_scores", "optimizedPlan")
-    assert "ntile(" not in optimized and len(optimized) <= 20_000, len(optimized)
+    # plan size without the silver's own plan, which the text repeats at
+    # every reference and which grows with the core count (the spread
+    # repartition fires at >= 4 slots): 6,409 chars measured at local[8]
+    optimized = _operative(_plan(spark, sf_dir, "rfm_scores", "optimizedPlan"))
+    assert "ntile(" not in optimized and len(optimized) <= 8_000, len(optimized)
 
 
 def test_doc_split_assign_zero_shuffle(spark, sf_dir):
@@ -383,53 +385,28 @@ def test_event_transitions_single_fact_shuffle(spark, sf_dir):
     assert not PY_NODES.search(plan)
 
 
-def _operative(plan: str) -> str:
-    """Plan text with each InMemoryRelation's stored build-plan description
-    removed: CacheManager substitution embeds the cached subtree's ORIGINAL
-    plan (its FileScan, its AQE Initial Plan copy) as inert text under the
-    operative InMemoryTableScan, which double-counts scan substrings."""
-    out, skip_indent = [], None
-    for line in plan.splitlines():
-        # tree depth, counting the ':'/'+-' branch-drawing prefix too —
-        # multi-branch treeStrings prefix nested nodes with ':' at column
-        # 0, which plain lstrip() would measure as depth 0
-        indent = len(line) - len(line.lstrip(" :+-*("))
-        if skip_indent is not None:
-            if indent > skip_indent:
-                continue
-            skip_indent = None
-        if "InMemoryRelation" in line:
-            skip_indent = indent
-            continue
-        out.append(line)
-    return "\n".join(out)
-
-
 def test_ngram_novelty_single_scan(spark, sf_dir):
     """Ownership is a window over the shingle partitioning, not a
-    groupBy+self-join — one source scan, no join.  The source may appear
-    as the parquet FileScan or, when a shingle-caching query already ran
-    in the session, as the CacheManager-substituted cache
-    (InMemoryTableScan) — exactly one of either, never two branches."""
+    groupBy+self-join — one scan of the documents silver, no join."""
     plan = _operative(_plan(spark, sf_dir, "ngram_novelty"))
-    n_scans = plan.count("FileScan parquet") + plan.count("InMemoryTableScan")
-    assert n_scans == 1, f"novelty must read ONE source, saw {n_scans}"
+    scans = _cached_scans(plan)
+    assert len(scans) == 1, f"novelty must read ONE source, saw {scans}"
     assert "Join" not in plan
     assert not PY_NODES.search(plan)
 
 
 def test_doc_keywords_single_scan_pipeline(spark, sf_dir):
-    plan = _plan_uncached(spark, sf_dir, "doc_keywords")
-    assert plan.count("FileScan parquet") == 1, "tf and df must share one corpus scan"
+    plan = _plan(spark, sf_dir, "doc_keywords")
+    scans = _cached_scans(plan)
+    assert len(scans) == 1, "tf and df must share one corpus scan"
     assert "Join" not in plan, "doc_freq is a count window over tf, not a join"
     assert not PY_NODES.search(plan), "keyword extraction must stay JVM-side"
-    schemas = _read_schemas(plan)
-    assert schemas and all("source" not in s for s in schemas), "unused columns pruned"
+    assert "source" not in scans[0], "unused columns pruned"
 
 
 def test_quality_funnel_single_scan(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "quality_funnel")
-    assert plan.count("FileScan parquet") == 1, "all stage predicates ride one scan"
+    plan = _operative(_plan(spark, sf_dir, "quality_funnel"))
+    assert len(_cached_scans(plan)) == 1, "all stage predicates ride one scan"
     # md5 window shuffle + two-phase global agg; nothing else
     assert plan.count("Exchange") - plan.count("ReusedExchange") <= 3
     assert not PY_NODES.search(plan)
@@ -498,7 +475,7 @@ def test_doc_repetition_single_scan(spark, sf_dir):
     explode) — a regression to two aggregation subtrees doubles text IO,
     which is the whole cost at 100 TB."""
     plan = _plan(spark, sf_dir, "doc_repetition")
-    assert plan.count("FileScan parquet") == 1, "documents must be scanned once"
+    assert len(_cached_scans(plan)) == 1, "documents must be scanned once"
     assert "Join" not in plan, "kinds must split via conditional aggregates, not a join"
     assert not PY_NODES.search(plan)
 
@@ -520,8 +497,8 @@ def test_open_orders_timeline_shape(spark, sf_dir):
 
 
 def test_label_balance_single_scan(spark, sf_dir):
-    plan = _plan_uncached(spark, sf_dir, "label_balance")
-    assert plan.count("FileScan parquet") == 1, "embeddings must be scanned once"
+    plan = _plan(spark, sf_dir, "label_balance")
+    assert len(_cached_scans(plan)) == 1, "embeddings must be scanned once"
     assert not PY_NODES.search(plan)
 
 
@@ -529,7 +506,7 @@ def test_burst_windows_window_over_rollup(spark, sf_dir):
     """The RANGE window must consume the (type, hour) count grid — the
     raw fact must never reach a window frame."""
     plan = _plan(spark, sf_dir, "burst_windows")
-    assert plan.count("FileScan parquet") <= 1 or "InMemoryTableScan" in plan
+    assert len(_cached_scans(plan)) == 1
     # exactly one aggregate below the window
     w = plan.index("Window")
     assert "HashAggregate" in plan[w:], "window must sit above the hourly rollup"
@@ -547,19 +524,21 @@ def test_embedding_dim_stats_one_shuffle(spark, sf_dir):
 def test_split_leakage_reuses_pair_silver(spark, sf_dir):
     """The verified pair graph is the memoized session silver — the plan
     must read the checkpointed RDD, not rebuild MinHash from documents."""
-    plan = _plan_uncached(spark, sf_dir, "split_leakage")
+    plan = _plan(spark, sf_dir, "split_leakage")
     assert "Scan ExistingRDD" in plan, "must consume the localCheckpointed pair silver"
     # every documents scan is id-only (split hashing): a scan reading the
     # text column would mean the MinHash pipeline is being rebuilt
-    for schema in _read_schemas(plan):
-        assert "text" not in schema, f"corpus text rescanned: {schema}"
+    scans = _cached_scans(plan)
+    assert scans
+    for cols in scans:
+        assert "text" not in cols, f"corpus text rescanned: {cols}"
 
 
 def test_mixture_plan_single_corpus_scan(spark, sf_dir):
     """mixture_plan reduces the corpus once; every later step (fair share,
     caps, water-filling) must run over the |sources|-row table only."""
-    plan = _plan_uncached(spark, sf_dir, "mixture_plan")
-    assert plan.count("FileScan parquet") == 1, "allocation math must not rescan the corpus"
+    plan = _plan(spark, sf_dir, "mixture_plan")
+    assert len(_cached_scans(plan)) == 1, "allocation math must not rescan the corpus"
     assert not PY_NODES.search(plan)
 
 
@@ -605,27 +584,6 @@ def test_cohort_ltv_no_broadcast_of_user_table(spark, sf_dir):
     plan = _plan(spark, sf_dir, "cohort_ltv")
     assert "BroadcastHashJoin" not in plan and "BroadcastExchange" not in plan
     assert not PY_NODES.search(plan)
-
-
-def test_silver_cache_opt_out(spark, sf_dir, monkeypatch):
-    """PB_SILVER_CACHE=0 must yield a silver plan with NO InMemoryRelation:
-    the 100 TB posture scans parquet directly (materialized-silver twin)
-    instead of pinning the fact table in executor memory.  Spark's
-    CacheManager substitutes cached fragments by canonicalized-plan match,
-    so the cache must be dropped for the uncached plan to be observable."""
-    from pulseboard_spark import registry
-
-    spark.catalog.clearCache()
-    monkeypatch.setenv("PB_SILVER_CACHE", "0")
-    df = registry.entity_events(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" not in plan and "InMemoryRelation" not in plan
-    assert "FileScan parquet" in plan, "uncached silver must scan parquet directly"
-
-    monkeypatch.setenv("PB_SILVER_CACHE", "1")
-    cached = registry.entity_events(spark, sf_dir)
-    cached_plan = cached._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in cached_plan, "default posture stays cached"
 
 
 def test_amplified_tier_builder_smoke(spark, tmp_path, sf_dir):
@@ -684,40 +642,36 @@ def _second_build_jobs(spark, sf_dir, name: str) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_query_plan_memo_semantics(spark, sf_dir, monkeypatch):
+def test_query_plan_memo_semantics(spark, sf_dir):
     """The final-DF plan memo (r10) must stay a PLAN memo, not a result
-    cache: same session+corpus+posture returns the same constructed
-    DataFrame (skipping ~0.1s of driver-side expression building), every
-    action on it still executes, the PB_SILVER_CACHE=0 posture builds its
-    own plans, and construction-compute queries are never memoized.  The
-    store keys a corpus by its absolute path and one clear drops every
-    entry."""
+    cache: same session+corpus returns the same constructed DataFrame
+    (skipping ~0.1s of driver-side expression building), every action on
+    it still executes, a hit re-persists the dropped silvers, and
+    construction-compute queries are never memoized.  The store keys a
+    corpus by its absolute path and one clear drops every entry."""
     import os
 
     from pulseboard_spark import registry, session
 
-    # (a) memo hit: same object per (session, corpus, posture) — and the
-    # count still runs a real job each time (it's a plan, not a result)
+    # (a) memo hit: same object per (session, corpus) — and the count
+    # still runs a real job each time (it's a plan, not a result)
     a = QUERIES["revenue_wow"](spark, sf_dir)
     b = QUERIES["revenue_wow"](spark, sf_dir)
     assert a is b
     assert a.count() == b.count() > 0
-
-    # (b) posture flip builds a DIFFERENT plan object (uncached lineage)
-    monkeypatch.setenv("PB_SILVER_CACHE", "0")
-    spark.catalog.clearCache()
-    c = QUERIES["revenue_wow"](spark, sf_dir)
-    assert c is not a
-    monkeypatch.setenv("PB_SILVER_CACHE", "1")
-
-    # (c) a memo hit after clearCache re-persists the dropped silvers
-    d = QUERIES["revenue_wow"](spark, sf_dir)  # hit under posture=1
-    assert d is a
     ent = registry.entity_events(spark, sf_dir)
+    sl = ent.storageLevel
+    assert sl.useMemory or sl.useDisk, "the entity silver is persisted"
+
+    # (b) a memo hit after clearCache re-persists the dropped silvers
+    spark.catalog.clearCache()
+    sl = ent.storageLevel
+    assert not (sl.useMemory or sl.useDisk)
+    assert QUERIES["revenue_wow"](spark, sf_dir) is a
     sl = ent.storageLevel
     assert sl.useMemory or sl.useDisk, "silver must be re-persisted on memo hit"
 
-    # (d) construction-compute queries build fresh every call; rfm_scores
+    # (c) construction-compute queries build fresh every call; rfm_scores
     # and value_deciles construct job-free once the session memo is warm
     # (measured on a second raw build), so they memoize like any other
     # query and every action still recomputes from the source
@@ -732,7 +686,7 @@ def test_query_plan_memo_semantics(spark, sf_dir, monkeypatch):
     assert m1 is m2
     assert m1.count() == m2.count() > 0
 
-    # (e) the hit-path re-persist must ONLY restore persisted silvers:
+    # (d) the hit-path re-persist must ONLY restore persisted silvers:
     # the plan-only memos (silver:profiles IS cdp_profiles' own output)
     # must never be persisted — that would serve a query's warm runs from
     # a cache of its own result
@@ -743,14 +697,14 @@ def test_query_plan_memo_semantics(spark, sf_dir, monkeypatch):
             sl = df.storageLevel
             assert not (sl.useMemory or sl.useDisk), f"{kname} must stay plan-only"
 
-    # (f) a relative and an absolute path to one corpus share one entry:
+    # (e) a relative and an absolute path to one corpus share one entry:
     # the identity components are checkpointed once, not twice
     rel = os.path.relpath(sf_dir)
     assert registry._components(spark, rel) is registry._components(
         spark, os.path.abspath(sf_dir)
     )
 
-    # (g) one clear drops every entry, the trained PQ codebooks included
+    # (f) one clear drops every entry, the trained PQ codebooks included
     cb = registry._pq_codebooks(spark, sf_dir)
     assert registry._pq_codebooks(spark, sf_dir) is cb
     session.clear()

@@ -1,8 +1,9 @@
 """Repository gates that need no Spark session: every top-level
 definition in the package has a reader outside the tests, every
 defaulted option of a package function has a caller outside the tests,
-neither allow-list carries a stale entry, and the hand-off consistency
-check (registry ↔ oracle ↔ QUERIES.md) passes."""
+every environment read of the package is a listed deployment setting,
+no allow-list carries a stale entry, and the hand-off consistency check
+(registry ↔ oracle ↔ QUERIES.md) passes."""
 
 from __future__ import annotations
 
@@ -82,6 +83,16 @@ OPTIONS_ALLOWED = {
     "with_admission(observation)": "the admission counters' hook; gate counters build on it",
     "segment_events(segments)": "entry point of the segment DSL",
     "segment_membership(segments)": "entry point of the segment DSL",
+}
+
+
+#: The environment variables the package reads, each with why.  An
+#: environment read is an option no parameter gate sees; only settings of
+#: the deployment, not of the engine's behaviour, belong here.
+ENV_ALLOWED = {
+    "SPARK_GRAFT_CPUS": "local[N] width of get_spark's session: the host's core budget",
+    "PB_DRIVER_MEM": "spark.driver.memory of get_spark's session: the host's memory budget",
+    "PYTHONPATH": "read to prepend the repo root for Spark's Python worker daemon",
 }
 
 
@@ -215,6 +226,37 @@ def test_option_allow_list_is_current():
     """An entry whose option no longer exists, or is now set outside the
     tests, is stale."""
     assert sorted(set(OPTIONS_ALLOWED) - set(unset_options())) == []
+
+
+def environment_reads() -> list[tuple[str, object]]:
+    """(``path:line``, key) of every ``os.environ.get(K)``,
+    ``os.getenv(K)`` and load-context ``os.environ[K]`` in the package;
+    the key is the constant, or None when it is not one."""
+    out = []
+    for path, tree in _trees([PACKAGE]).items():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and node.args and ast.unparse(node.func) in ("os.environ.get", "os.getenv"):
+                key = node.args[0]
+            elif isinstance(node, ast.Subscript) and isinstance(node.ctx, ast.Load) and ast.unparse(node.value) == "os.environ":
+                key = node.slice
+            else:
+                continue
+            out.append((f"{path.relative_to(ROOT)}:{node.lineno}", key.value if isinstance(key, ast.Constant) else None))
+    return out
+
+
+def test_every_environment_read_is_a_deployment_setting():
+    """An environment variable is a dial no parameter gate sees: every
+    read names a constant key on ``ENV_ALLOWED``, with a reason."""
+    bad = [f"{where}: {key}" for where, key in environment_reads() if key not in ENV_ALLOWED]
+    assert bad == []
+    assert all(ENV_ALLOWED.values())
+
+
+def test_environment_allow_list_is_current():
+    """An entry the package no longer reads is stale."""
+    read = {key for _where, key in environment_reads()}
+    assert sorted(set(ENV_ALLOWED) - read) == []
 
 
 def test_consistency_gate_passes(monkeypatch, tmp_path, capsys):

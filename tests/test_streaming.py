@@ -279,26 +279,51 @@ def test_incremental_identity_stage(spark, sf_dir, tmp_path, small_state):
     assert resolved_ids == valid_ids
 
 
+#: Entity of the burst that straddles the restart in _alert_stream_restart.
+STRADDLE = "fire-r1-restart"
+
+
 @pytest.fixture(scope="module")
 def firing_chunks_dir(spark, sf_dir, tmp_path_factory):
     """Entity view plus the rule-firing fixture in 4 time-ordered parquet
     chunks, and the batch R1/R2/R4 alerts over the same rows.  The real
     testdata exercises the admission/dedup volume path but never fires
-    R1/R2/R4, so the firing fixture makes an equality non-vacuous."""
+    R1/R2/R4, so the firing fixture makes an equality non-vacuous.
+
+    The chunks are cut at the time quartiles of those rows, and one more
+    entity, ``STRADDLE``, bursts 20 events 2 s apart across the second
+    cut: 10 in chunk 1, 10 in chunk 2.  Its rate_1m first reaches R1's
+    floor of 20 on its last event, so R1 fires exactly once, and only
+    with all 20 points in one key's state."""
+    import bisect
+
     from pulseboard_spark.sources.generator import rule_firing_events
 
+    base = entity_events(spark, sf_dir).unionByName(rule_firing_events(spark))
+    base_ts = [r.ts_us for r in base.select("ts_us").orderBy("ts_us").collect()]
+    chunk = (len(base_ts) + 3) // 4
+    cuts = [base_ts[min(k * chunk, len(base_ts)) - 1] for k in (1, 2, 3)]
+    burst = spark.range(20).selectExpr(
+        "9000000004000 + id AS event_id", f"timestamp_micros({cuts[1]} + (2 * id - 19) * 1000000) AS ts"
+    ).selectExpr(
+        "event_id", "ts", "unix_micros(ts) AS ts_us", "unix_millis(ts) AS ts_ms", f"'{STRADDLE}' AS entity_id",
+        "'IGAMING' AS profile", "'BET_PLACED' AS type", "1.0D AS value", "'US' AS geo", "'desktop' AS device",
+    )
+    ev = base.unionByName(burst)
     # order by the full arrival key (ts_us, event_id): same-ts peers split
     # across chunks in reversed id order would diverge from batch ties
-    ev = entity_events(spark, sf_dir).unionByName(rule_firing_events(spark))
     rows = ev.orderBy("ts_us", "event_id").collect()
+    ts = [r.ts_us for r in rows]
+    bounds = [0] + [bisect.bisect_right(ts, c) for c in cuts] + [len(rows)]
     out = str(tmp_path_factory.mktemp("firing_stream"))
-    chunk = (len(rows) + 3) // 4
     for i in range(4):
-        part = rows[i * chunk : (i + 1) * chunk]
+        part = rows[bounds[i] : bounds[i + 1]]
         if part:
             spark.createDataFrame(part, ev.schema).coalesce(1).write.parquet(f"{out}/chunk={i}")
     batch = rules.alerts(ev).filter(F.col("rule") != "R3_GEO_DEVICE_MISMATCH")
-    return out, ev.schema, {tuple(r) for r in batch.collect()}
+    want = {tuple(r) for r in batch.collect()}
+    assert [r[0] for r in want if r[1] == STRADDLE] == ["R1_VELOCITY_SPIKE"]
+    return out, ev.schema, want
 
 
 def test_entity_alert_stream_facade(spark, firing_chunks_dir, small_state):
@@ -334,8 +359,10 @@ def _alert_stream_restart(spark, firing_chunks_dir, tmp_path, rocksdb):
     """Kill-and-restart on the stream that ships: ``entity_alert_stream``
     with a parquet sink is stopped after two chunks, then restarted from
     the same checkpoint with all four.  The restart must resume the
-    dedup and keyed rule state — no (rule, event_id) is emitted twice —
-    and the alerts must equal the batch answer."""
+    dedup and keyed rule state — no (rule, event_id) is emitted twice,
+    the ``STRADDLE`` burst fires once and only after the restart, from
+    the half of its points restored from the checkpoint — and the alerts
+    must equal the batch answer."""
     from pulseboard_spark.streaming.pipeline import (
         ROCKSDB_PROVIDER,
         entity_alert_stream,
@@ -366,9 +393,14 @@ def _alert_stream_restart(spark, firing_chunks_dir, tmp_path, rocksdb):
         finally:
             q.stop()
 
+    def straddle_alerts():
+        return spark.read.parquet(sink).filter(F.col("entity_id") == STRADDLE).count()
+
     try:
         run(f"{out}/chunk={{0,1}}")
+        assert straddle_alerts() == 0, "the straddling burst fired before the restart"
         run(f"{out}/chunk=*")
+        assert straddle_alerts() == 1, "the straddling burst must fire once after the restart"
     finally:
         if prev is None:
             spark.conf.unset(key)
@@ -573,6 +605,19 @@ def test_profile_upsert_writer_merges_latest(spark, tmp_path, monkeypatch):
         for r in spark.read.parquet(store).collect()
     }
     assert again == got
+
+
+def test_profile_upsert_writer_keeps_session_conf(spark, tmp_path):
+    """The dynamic partition overwrite is an option of the writer's own
+    write: the session's ``partitionOverwriteMode`` reads the same before
+    and after a call, so later overwrites in the session keep theirs."""
+    from pulseboard_spark.streaming.pipeline import profile_upsert_writer
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)  # Spark's default, STATIC
+    writer = profile_upsert_writer(str(tmp_path / "profiles_conf"))
+    writer(spark.createDataFrame([("p1", 100, "basic")], "profile_id string, ts_ms long, plan string"), 0)
+    assert spark.conf.get(key) == "STATIC"
 
 
 def test_profile_upsert_tie_breaks_to_batch(spark, tmp_path, monkeypatch):

@@ -27,8 +27,6 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[2]))
 
-os.environ["PB_SILVER_CACHE"] = "0"
-
 BASE = os.environ.get("PB_EMPTY_BASE", "/root/testdata/sf0.001")
 
 

@@ -26,14 +26,11 @@ Run: python tools/probes/layout_invariance.py [sf_dir]  (-> SCALE.md)
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[2]))
-
-os.environ["PB_SILVER_CACHE"] = "0"
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 

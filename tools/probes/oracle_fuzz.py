@@ -282,12 +282,11 @@ def make_fuzzed_dir(profile: str, seed: int, sf_src: str, out_root: str) -> str:
 def main(argv: list[str]) -> int:
     """``argv`` = [seed [sf_src [profile...]]].  Runs the parity gate on
     each profile's mutation of sf_src; 1 when any query diverges.  The
-    silvers stay uncached (``PB_SILVER_CACHE=0``): each profile reads a
-    different directory."""
+    memo and the silver cache are cleared between profiles: each profile
+    reads a different directory."""
     seed = int(argv[0]) if argv else DEFAULT_SEED
     sf_src = argv[1] if len(argv) > 1 else DEFAULT_SF_SRC
     profiles = argv[2:] or DEFAULT_PROFILES
-    os.environ["PB_SILVER_CACHE"] = "0"
     from pulseboard_spark.parity import run_all
     from pulseboard_spark.session import clear, get_spark
 

@@ -49,10 +49,6 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[2]))
 
-# Every phase must re-read parquet through the (possibly patched) reader;
-# the silver cache would let later queries skip the injected scan.
-os.environ["PB_SILVER_CACHE"] = "0"
-
 SF_DIR = os.environ.get("PB_RETRY_SF_DIR", "/root/testdata/sf0.01")
 
 # Representative slice: one per execution family — narrow agg, window
@@ -109,12 +105,17 @@ def run_batch(spark) -> list[tuple[str, bool, bool, int, int]]:
     import pyspark.sql.readwriter as rw
 
     from pulseboard_spark.registry import QUERIES
-    from pulseboard_spark.session import clear
+    from pulseboard_spark.session import clear as session_clear
 
     # the session memo keeps localCheckpointed artifacts (components,
-    # near-dup pairs, IVF index) per (app, sf_dir); without clearing it the
-    # injected phase would reuse the clean phase's checkpoint and never
-    # re-read parquet through the patched reader
+    # near-dup pairs, IVF index) and cached silvers per (app, sf_dir);
+    # without clearing both it and the cache the injected phase would
+    # reuse the clean phase's checkpoint or silver and never re-read
+    # parquet through the patched reader
+    def clear():
+        session_clear()
+        spark.catalog.clearCache()
+
     results = []
     orig_parquet = rw.DataFrameReader.parquet
     for name in BATCH_QUERIES:
