@@ -15,9 +15,11 @@ micros — Catalyst evaluates all frames for one partition in a single sort,
 no shuffle beyond the hash partition on (entity_id, type).
 
 Scale posture: one shuffle on (entity_id, type); frames are bounded (≤1 h)
-so state per key is small.  Skewed entities are handled by AQE skew-join
-settings at the shuffle; the streaming twin prunes each key's buffer to
-the 1 h horizon.
+so state per key is small, but a key's whole partition runs on one task.
+AQE splits skewed partitions only for joins (``OptimizeSkewedJoin``) and
+rebalance hints, never for a window, so a hot entity is one straggler task;
+pathological single-key skew needs a salted key (SCALE.md §Trailing
+windows).  The streaming twin prunes each key's buffer to the 1 h horizon.
 """
 
 from __future__ import annotations
@@ -53,8 +55,10 @@ def with_trailing_aggs(df: DataFrame) -> DataFrame:
     bare RANGE frame ordered by ts_us includes all timestamp PEERS, i.e.
     lets an event see same-ts events that arrive after it (found by
     tests/test_fuzz_rules.py), so each aggregate subtracts the
-    contribution of peers with a larger event_id.  At zero ties the
-    adjustments are identically 0/0.0 and every value is bit-unchanged.
+    contribution of peers with a larger event_id, taken from one ROWS
+    frame over the same-ts peers ordered by event_id.  At zero ties that
+    frame is empty, the adjustments are 0/0.0 and every value is exactly the
+    bare RANGE frame's.
 
     Empty value windows are uniformly 0.0: ``sumInRange`` returns 0 when
     nothing (non-null) is in range (`WindowStore.kt:72-84`), so sum_30s
@@ -67,12 +71,13 @@ def with_trailing_aggs(df: DataFrame) -> DataFrame:
     Known tolerance (documented, fuzz-masked by a dyadic value alphabet):
     the batch side computes per-arrival sums as frame-total MINUS the
     later-peer suffix, while the streaming kernel sums the arrival-ordered
-    prefix directly.  For non-dyadic float values the two roundings can
+    prefix directly and the DuckDB oracle takes the suffix as peer total
+    minus running prefix.  For non-dyadic float values the roundings can
     differ by ulps and flip a strict ``>`` at a rule threshold.  This is
     inherent to any subtract-vs-accumulate pair of float plans (the same
     class as Spark partial-agg reordering); rules round evidence columns
     before comparison, and at zero same-ts ties (the driver testdata and
-    every real CDP feed keyed by event_id) the subtraction is exactly 0.0
+    every real CDP feed keyed by event_id) the suffix is the empty sum 0.0
     and the plans are bit-identical.
     """
     cols = ["entity_id", "type"]
@@ -81,30 +86,28 @@ def with_trailing_aggs(df: DataFrame) -> DataFrame:
     w5m = trailing_window(cols, 300)
     w1h = trailing_window(cols, 3600)
     v = F.col("value")
-    # later-peer contributions: whole peer group minus the running
-    # (event_id-ordered) prefix — same hash partitioning, one extra sort
-    peers = Window.partitionBy(*cols, "ts_us")
-    peer_run = (
+    # later-peer suffix: same-ts rows with a larger event_id, as one ROWS
+    # frame; Catalyst groups it into one Window node next to the RANGE node
+    later = (
         Window.partitionBy(*cols, "ts_us")
         .orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
+        .rowsBetween(1, Window.unboundedFollowing)
     )
-    rows_after = F.count(F.lit(1)).over(peers) - F.count(F.lit(1)).over(peer_run)
-    cnt_after = F.count(v).over(peers) - F.count(v).over(peer_run)
-    sum_after = F.coalesce(F.sum(v).over(peers), F.lit(0.0)) - F.coalesce(
-        F.sum(v).over(peer_run), F.lit(0.0)
-    )
+    rows_after = F.count(F.lit(1)).over(later)
+    cnt_after = F.count(v).over(later)
+    sum_after = F.coalesce(F.sum(v).over(later), F.lit(0.0))
 
     def adj_avg(w: WindowSpec) -> Column:
         cnt = F.count(v).over(w) - cnt_after
         return F.when(cnt > 0, (F.sum(v).over(w) - sum_after) / cnt).otherwise(0.0)
 
-    return (
-        df.withColumn("rate_1m", (F.count(F.lit(1)).over(w60) - rows_after).cast("double"))
-        .withColumn("sum_30s", F.coalesce(F.sum(v).over(w30), F.lit(0.0)) - sum_after)
-        .withColumn("count_60s", F.count(v).over(w60) - cnt_after)
-        .withColumn("avg_5m", adj_avg(w5m))
-        .withColumn("avg_1h", adj_avg(w1h))
+    return df.select(
+        "*",
+        (F.count(F.lit(1)).over(w60) - rows_after).cast("double").alias("rate_1m"),
+        (F.coalesce(F.sum(v).over(w30), F.lit(0.0)) - sum_after).alias("sum_30s"),
+        (F.count(v).over(w60) - cnt_after).alias("count_60s"),
+        adj_avg(w5m).alias("avg_5m"),
+        adj_avg(w1h).alias("avg_1h"),
     )
 
 

@@ -240,12 +240,14 @@ members_{tag} AS (
 # Window / rule CTEs over ent
 # ---------------------------------------------------------------------------
 
-# Tie semantics mirror operators/windows.py::with_trailing_aggs: RANGE
+# Tie semantics match operators/windows.py::with_trailing_aggs: RANGE
 # frames include same-ts PEERS, but the engine's arrival order is
 # (ts_us, event_id) — an event must not see later-arriving peers — so each
-# aggregate subtracts the later-peer contribution (peer-group total minus
-# the event_id-ordered running prefix).  At zero ties the adjustments are
-# identically 0/0.0.
+# aggregate subtracts the later-peer contribution.  The engine takes that
+# contribution directly, as one ROWS frame after the current row; this
+# oracle keeps the peer-group total minus the event_id-ordered running
+# prefix on purpose, so it checks the engine's suffix by a different
+# route.  At zero ties both forms are identically 0/0.0.
 WINDOWS_CTE = (
     ENT_CTE
     + """,

@@ -13,7 +13,7 @@ from pulseboard_spark.functions.core import severity
 from pulseboard_spark.functions.ids import normalize_id
 from pulseboard_spark.operators.ewma import with_ewma
 from pulseboard_spark.operators.identity import connected_components
-from pulseboard_spark.operators.windows import with_trailing_aggs
+from pulseboard_spark.operators.windows import US_PER_SEC, with_trailing_aggs
 
 
 # --- F1 normalization (`IdentityGraphTest.kt` normalization cases) ----------
@@ -193,6 +193,43 @@ def test_empty_value_window_sums_are_zero(spark):
     assert got[1]["sum_30s"] == 3.0
     assert got[2]["sum_30s"] == 0.0  # events 0/1 outside the 30 s frame
     assert got[3]["sum_30s"] == 5.0
+
+
+def test_trailing_aggs_per_arrival_ties_match_model(spark):
+    """All five columns against a plain-Python per-arrival model: sort by
+    (ts_us, event_id); each row aggregates the rows at or before it in that
+    order that fall inside [ts - d, ts].  One key, a five-event same-ts
+    group created out of event_id order with NULL values mixed in, and
+    earlier points exactly on and 1 µs past the 30 s, 60 s, 5 m and 1 h
+    edges.  Power-of-two values keep every sum exact in any order."""
+    t = 4_000 * US_PER_SEC
+    rows = [(13, t, None), (10, t, 2.0), (14, t, 8.0), (12, t, 4.0), (11, t, None)]
+    for i, secs in enumerate([30, 60, 300, 3600]):
+        edge = t - secs * US_PER_SEC
+        rows += [(2 * i + 1, edge, 2.0 ** (2 * i + 4)), (2 * i + 2, edge - 1, 2.0 ** (2 * i + 5))]
+    rows += [(9, t - 45 * US_PER_SEC, None), (20, t + 1, 1024.0)]
+    df = (
+        spark.createDataFrame(rows, "event_id long, ts_us long, value double")
+        .withColumn("entity_id", F.lit("e"))
+        .withColumn("type", F.lit("t"))
+    )
+    got = {r["event_id"]: r for r in with_trailing_aggs(df).collect()}
+
+    arrival = sorted(rows, key=lambda r: (r[1], r[0]))
+    for i, (eid, ts, _) in enumerate(arrival):
+        seen = {
+            secs: [r[2] for r in arrival[: i + 1] if r[1] >= ts - secs * US_PER_SEC]
+            for secs in (30, 60, 300, 3600)
+        }
+        vals = {secs: [x for x in seen[secs] if x is not None] for secs in seen}
+        want = {
+            "rate_1m": float(len(seen[60])),
+            "sum_30s": sum(vals[30]),
+            "count_60s": len(vals[60]),
+            "avg_5m": sum(vals[300]) / len(vals[300]) if vals[300] else 0.0,
+            "avg_1h": sum(vals[3600]) / len(vals[3600]) if vals[3600] else 0.0,
+        }
+        assert {c: got[eid][c] for c in want} == want, eid
 
 
 # --- Connected components (`IdentityGraphTest.kt:105-214`) ------------------

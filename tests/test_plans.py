@@ -66,11 +66,22 @@ def test_q1_pushdown_and_pruning(spark, sf_dir):
     assert plan.count("Exchange") - plan.count("ReusedExchange") <= 1
 
 
+def _window_nodes(plan: str) -> int:
+    return len(re.findall(r"\bWindow \[", plan))
+
+
 def test_trailing_windows_single_key_shuffle(spark, sf_dir):
     plan = _plan(spark, sf_dir, "win_trailing_aggs")
     # all five trailing frames share ONE hash partitioning on the key
     hashparts = re.findall(r"hashpartitioning\(entity_id", plan)
     assert len(hashparts) == 1, f"expected one key shuffle, got {len(hashparts)}"
+    # one RANGE node for all the frame aggregates and one ROWS node for the
+    # three later-peer suffixes (11 nodes when each suffix was a whole-peer
+    # window minus a running prefix); the peer node needs one more sort, by
+    # (key, ts_us, event_id), and TransposeWindow keeps it above the RANGE
+    # node, so two sorts is the floor
+    assert _window_nodes(plan) == 2, plan
+    assert len(re.findall(r"\bSort \[", plan)) <= 2, plan
     assert not PY_NODES.search(plan), "window layer must stay JVM-side"
     # the entity silver is session-cached (registry.entity_events): the one
     # props regexp runs in the silver build; every consumer must read the
@@ -78,6 +89,17 @@ def test_trailing_windows_single_key_shuffle(spark, sf_dir):
     assert "InMemoryTableScan" in plan, "must consume the cached entity silver"
     for cols in re.findall(r"InMemoryTableScan \[([^\]]*)\]", plan):
         assert "props" not in cols, "raw props must not be a silver column"
+
+
+def test_alerts_window_group(spark, sf_dir):
+    """alerts unions R1/R2/R4 (each over with_trailing_aggs) with R3: the
+    later-peer suffixes ride the trailing-window group, so alerts plans
+    fewer Window nodes with no extra exchange.  Before that rewrite, at
+    sf0.001 and local[8], the operative plan had 13 Window nodes and 5
+    exchanges (4 shuffles, 1 broadcast); after it, 6 and 5."""
+    plan = _operative(_plan(spark, sf_dir, "alerts"))
+    assert plan.count("Exchange") - plan.count("ReusedExchange") == 5, plan
+    assert _window_nodes(plan) < 13, plan
 
 
 def test_rolling_counter_single_key_shuffle(spark, sf_dir):
