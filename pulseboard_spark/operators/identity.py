@@ -7,11 +7,21 @@ every event's identifier pairs (`cdp/runtime/CdpPipeline.kt:106-119,189-198`).
 Spark-first re-expression: the graph is an edges DataFrame; the canonical id
 is the lexicographic minimum of each connected component (the deterministic
 twin of the reference's tie-breaking; SURVEY §3.2 pins apply-time
-resolution).  :func:`connected_components` is the one CC home: a
-driver-side union-find for broadcast-class edge lists, else min-label
-propagation with path halving (two joins per round, O(log d) rounds — the
-work shape of large-star/small-star).  GraphFrames' connectedComponents is
-a drop-in upgrade when the jar is available.
+resolution).  :func:`_local_components` is the one union-find.  Two routes
+reach it:
+
+* :func:`components_for` (the identity map: every CDP query through the
+  registry memo, the incremental query's prior, the streaming identity
+  stage's first batch) collects the distinct id sets — each a clique of
+  ≤ 3 ids — up to ``MAX_LOCAL_CC_EDGES`` sets and solves them on the driver;
+* :func:`connected_components` (``dedup.near_dup_clusters``,
+  :func:`merge_components` and ``components_for`` above its set cap)
+  collects up to ``MAX_LOCAL_CC_EDGES`` node-incident edges, else runs min-label
+  propagation with path halving (two joins per round, O(log d) rounds — the
+  work shape of large-star/small-star).
+
+GraphFrames' connectedComponents is a drop-in upgrade for the distributed
+route when the jar is available.
 """
 
 from __future__ import annotations
@@ -108,6 +118,9 @@ def identity_nodes(cvalid: DataFrame) -> DataFrame:
 #: graphs are AGGREGATES (distinct ids/pairs), typically orders of
 #: magnitude smaller than the event stream, so most real corpora take the
 #: local path; the distributed fixpoint below is the ≥ threshold path.
+#: :func:`components_for` caps its distinct id SETS by the same number;
+#: a set holds ≤ 3 ids (user, anon, email), so that route holds at most
+#: 3 × the cap ids and 2 × the cap edges on the driver.
 MAX_LOCAL_CC_EDGES = 500_000
 
 #: Round cap of the distributed fixpoint; path halving converges in
@@ -159,9 +172,10 @@ def connected_components(
     solved with a driver-side union-find and the node ids are labelled by
     one broadcast left join (an id on no edge is its own component) — a
     handful of Spark jobs instead of ~2 jobs per fixpoint round, which
-    dominates wall time on small graphs (the identity graph is an
-    aggregate: |distinct ids| ≪ |events|).  The local route ignores
-    ``seed``: union-find needs no head start.  Above the guard the
+    dominates wall time on small graphs.  Callers: ``dedup.near_dup_clusters``,
+    :func:`merge_components`, and :func:`components_for` above its id-set
+    cap (below it the identity map skips this function).  The local route
+    ignores ``seed``: union-find needs no head start.  Above the guard the
     distributed fixpoint below runs unchanged; both paths share the
     min-label contract and are pinned equal by test (which sets the
     constant to 0 to force the distributed path).
@@ -267,12 +281,35 @@ def connected_components(
 
 
 def components_for(cvalid: DataFrame) -> DataFrame:
-    """Identity component map with a clique-min head start: every event's
-    id set is a clique, so labelling each id with the min over its events
-    is exactly one neighbor-min propagation round — computed as one
-    explode+groupBy (no join against the edge list).  Cuts a round off the
-    fixpoint loop at any scale; correctness is the seed contract
-    (label = an id reachable from the node)."""
+    """Identity component map (id, component = min id) of the valid CDP
+    events.  The registry's ``_components`` memo (so every CDP query),
+    ``identity_components_incremental``'s prior and ``CdpIdentityStage``'s
+    first batch all build it here.
+
+    Every event's id set (≤ 3 normalized ids) is a clique, so the distinct
+    sets hold both the nodes and the connectivity.  One collect of up to
+    ``MAX_LOCAL_CC_EDGES + 1`` distinct sets is the size probe and, at or
+    below the cap, the whole input of :func:`_local_components` (nodes:
+    every id; edges: ``(s[0], y)`` for ``y`` in ``s[1:]``).  The labels
+    come back as one partition, so a broadcast of the map reads one block.
+    Driver bound: ≤ 3 × the cap ids.
+
+    Above the cap, :func:`connected_components` runs over the identity
+    nodes and edges with a clique-min head start: labelling each id with
+    the min over its events is exactly one neighbor-min propagation round,
+    computed as one explode+groupBy (no join against the edge list);
+    correctness is the seed contract (label = an id reachable from the
+    node)."""
+    limit = MAX_LOCAL_CC_EDGES
+    if limit > 0:
+        sets = [r[0] for r in cvalid.select(_ids_array()).distinct().limit(limit + 1).collect()]
+        if len(sets) <= limit:
+            rows = _local_components(
+                [(x,) for x in sorted({x for s in sets for x in s})],
+                [(s[0], y) for s in sets for y in s[1:]],
+            )
+            schema = "id string NOT NULL, component string NOT NULL"
+            return local_df(cvalid.sparkSession, rows, schema).coalesce(1)
     clique_min = (
         cvalid.select(_ids_array().alias("__ids"))
         .filter(F.size("__ids") > 1)

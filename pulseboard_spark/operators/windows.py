@@ -93,21 +93,39 @@ def with_trailing_aggs(df: DataFrame) -> DataFrame:
         .orderBy("event_id")
         .rowsBetween(1, Window.unboundedFollowing)
     )
-    rows_after = F.count(F.lit(1)).over(later)
-    cnt_after = F.count(v).over(later)
-    sum_after = F.coalesce(F.sum(v).over(later), F.lit(0.0))
+    # each distinct window aggregate is projected once (Catalyst does not
+    # merge a repeated one: an inline reuse is evaluated again), then the
+    # five columns are derived from the projected values
+    aggs = {
+        "__n60": F.count(F.lit(1)).over(w60),
+        "__s30": F.sum(v).over(w30),
+        "__c60": F.count(v).over(w60),
+        "__c5m": F.count(v).over(w5m),
+        "__s5m": F.sum(v).over(w5m),
+        "__c1h": F.count(v).over(w1h),
+        "__s1h": F.sum(v).over(w1h),
+        "__rows_after": F.count(F.lit(1)).over(later),
+        "__cnt_after": F.count(v).over(later),
+        "__sum_after": F.sum(v).over(later),
+    }
+    cnt_after = F.col("__cnt_after")
+    sum_after = F.coalesce(F.col("__sum_after"), F.lit(0.0))
 
-    def adj_avg(w: WindowSpec) -> Column:
-        cnt = F.count(v).over(w) - cnt_after
-        return F.when(cnt > 0, (F.sum(v).over(w) - sum_after) / cnt).otherwise(0.0)
+    def adj_avg(span: str) -> Column:
+        cnt = F.col(f"__c{span}") - cnt_after
+        return F.when(cnt > 0, (F.col(f"__s{span}") - sum_after) / cnt).otherwise(0.0)
 
-    return df.select(
-        "*",
-        (F.count(F.lit(1)).over(w60) - rows_after).cast("double").alias("rate_1m"),
-        (F.coalesce(F.sum(v).over(w30), F.lit(0.0)) - sum_after).alias("sum_30s"),
-        (F.count(v).over(w60) - cnt_after).alias("count_60s"),
-        adj_avg(w5m).alias("avg_5m"),
-        adj_avg(w1h).alias("avg_1h"),
+    return (
+        df.select("*", *(a.alias(n) for n, a in aggs.items()))
+        .select(
+            "*",
+            (F.col("__n60") - F.col("__rows_after")).cast("double").alias("rate_1m"),
+            (F.coalesce(F.col("__s30"), F.lit(0.0)) - sum_after).alias("sum_30s"),
+            (F.col("__c60") - cnt_after).alias("count_60s"),
+            adj_avg("5m").alias("avg_5m"),
+            adj_avg("1h").alias("avg_1h"),
+        )
+        .drop(*aggs)
     )
 
 

@@ -1051,7 +1051,9 @@ def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """localCheckpointed identity components, memoized per session.  The
     component map is the engine's materialized view (a real deployment
     persists it and refreshes incrementally — SURVEY §4.2 item 3); every
-    CDP query shares one map without re-running the iterative CC fixpoint."""
+    CDP query shares one map.  Below ``MAX_LOCAL_CC_EDGES`` distinct id
+    sets, :func:`components_for` builds it from one collect of those sets
+    and a driver union-find; the checkpoint stores its one partition."""
     return memo(
         spark, sf_dir, "components",
         lambda: components_for(_cvalid(spark, sf_dir)).localCheckpoint(),

@@ -1047,7 +1047,10 @@ class TestExtensions:
     path, scalar UDFs the flagged slow path; both usable from DataFrame
     and SQL after install()."""
 
-    def test_pandas_and_scalar_roundtrip(self, spark):
+    @pytest.fixture(autouse=True, scope="class")
+    def _registered(self):
+        """Both extensions, registered for every test of the class (a test
+        run on its own must not depend on another test's registrations)."""
         from pulseboard_spark.functions import extensions as X
 
         @X.register_pandas("px_double", "double")
@@ -1057,6 +1060,9 @@ class TestExtensions:
         @X.register_scalar("px_shout", "string")
         def px_shout(s):
             return None if s is None else s.upper()
+
+    def test_pandas_and_scalar_roundtrip(self, spark):
+        from pulseboard_spark.functions import extensions as X
 
         names = X.install(spark)
         assert {"px_double", "px_shout"} <= set(names)
@@ -2148,11 +2154,12 @@ def test_connected_components_null_endpoints(spark, cc_route):
 
 
 def test_local_components_take_fixed_jobs(spark, sf_dir, monkeypatch):
-    """The local route reads the node ids once into storage, collects the
-    node-incident edges in one capped probe and labels the ids with one
-    broadcast join: 7 jobs for the sf-dir identity graph (8 with a
-    separate endpoint collect, node semi-join collect and anti-join), and
-    the labels of the distributed route."""
+    """The identity map's local route collects the distinct id sets once
+    and labels them on the driver: with ``cvalid`` cached, at most 3 jobs
+    for the sf-dir identity graph, counting the read-back into storage (7
+    when the route went through ``connected_components``' stored node ids,
+    semi-joined edge probe and broadcast labelling join), one partition,
+    and the labels of the distributed route."""
     import uuid
 
     from pulseboard_spark.operators import identity
@@ -2172,8 +2179,62 @@ def test_local_components_take_fixed_jobs(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(identity, "MAX_LOCAL_CC_EDGES", 0)
     want = {tuple(r) for r in identity.components_for(cvalid).collect()}
     cvalid.unpersist()
-    assert jobs <= 7, jobs
+    assert jobs <= 3, jobs
+    assert local.rdd.getNumPartitions() == 1
     assert {tuple(r) for r in local.collect()} == want and want
+
+
+def _components_route(monkeypatch, cvalid, cap):
+    """(labels, took the connected_components route) of ``components_for``
+    at set cap ``cap``."""
+    from pulseboard_spark.operators import identity
+
+    calls, identity_cc = [], identity.connected_components
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return identity_cc(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(identity, "MAX_LOCAL_CC_EDGES", cap)
+        m.setattr(identity, "connected_components", spy)
+        labels = {tuple(r) for r in identity.components_for(cvalid).collect()}
+    return labels, bool(calls)
+
+
+def test_components_for_set_cap_boundary(spark, sf_dir, monkeypatch):
+    """The ``limit(cap + 1)`` probe: at a cap equal to the distinct id-set
+    count the map is built locally, at one less it goes through
+    ``connected_components``; both give the same labels."""
+    from pulseboard_spark.operators import identity
+    from pulseboard_spark.sources.tables import cdp_events
+
+    cvalid = identity.valid_cdp_events(cdp_events(spark, sf_dir)).cache()
+    n_sets = cvalid.select(identity._ids_array()).distinct().count()
+    at_cap, routed_at = _components_route(monkeypatch, cvalid, n_sets)
+    over_cap, routed_over = _components_route(monkeypatch, cvalid, n_sets - 1)
+    cvalid.unpersist()
+    assert n_sets > 1
+    assert not routed_at and routed_over
+    assert at_cap == over_cap and at_cap
+
+
+@pytest.mark.parametrize("cap", [None, 0], ids=["local", "distributed"])
+def test_components_for_empty_input(spark, sf_dir, monkeypatch, cap):
+    """No valid event gives an empty map on either route (cap 0 forces
+    ``connected_components``' distributed fixpoint), one partition on the
+    local route."""
+    from pulseboard_spark.operators import identity
+    from pulseboard_spark.sources.tables import cdp_events
+
+    if cap is not None:
+        monkeypatch.setattr(identity, "MAX_LOCAL_CC_EDGES", cap)
+    cvalid = identity.valid_cdp_events(cdp_events(spark, sf_dir)).limit(0)
+    comp = identity.components_for(cvalid)
+    assert comp.columns == ["id", "component"]
+    assert comp.collect() == []
+    if cap is None:
+        assert comp.rdd.getNumPartitions() == 1
 
 
 class TestEmbeddingDecon:

@@ -81,6 +81,16 @@ def test_trailing_windows_single_key_shuffle(spark, sf_dir):
     # (key, ts_us, event_id), and TransposeWindow keeps it above the RANGE
     # node, so two sorts is the floor
     assert _window_nodes(plan) == 2, plan
+    # each distinct aggregate is evaluated once: 7 RANGE-frame aggregates
+    # (count(1) over 60 s; count(value) over 60 s, 5 m, 1 h; sum(value) over
+    # 30 s, 5 m, 1 h) and 3 later-peer ones (count(1), count(value),
+    # sum(value)); reusing one as an inline expression listed 9 and 9
+    exprs = sorted(
+        line.count("windowspecdefinition")
+        for line in plan.splitlines()
+        if re.search(r"\bWindow \[", line)
+    )
+    assert exprs == [3, 7], exprs
     assert len(re.findall(r"\bSort \[", plan)) <= 2, plan
     assert not PY_NODES.search(plan), "window layer must stay JVM-side"
     # the entity silver is session-cached (registry.entity_events): the one
