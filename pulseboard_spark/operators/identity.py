@@ -292,7 +292,9 @@ def components_for(cvalid: DataFrame) -> DataFrame:
     below the cap, the whole input of :func:`_local_components` (nodes:
     every id; edges: ``(s[0], y)`` for ``y`` in ``s[1:]``).  The labels
     come back as one partition, so a broadcast of the map reads one block.
-    Driver bound: ≤ 3 × the cap ids.
+    Driver bound: ≤ 3 × the cap ids.  Either route returns a materialized
+    map: driver rows here, a localCheckpoint above the cap, so a caller
+    that reuses the map stores nothing of its own.
 
     Above the cap, :func:`connected_components` runs over the identity
     nodes and edges with a clique-min head start: labelling each id with
@@ -317,7 +319,7 @@ def components_for(cvalid: DataFrame) -> DataFrame:
         .groupBy("id")
         .agg(F.min("m").alias("component"))
     )
-    return connected_components(identity_nodes(cvalid), identity_edges(cvalid), seed=clique_min)
+    return connected_components(identity_nodes(cvalid), identity_edges(cvalid), seed=clique_min).localCheckpoint()
 
 
 def merge_components(

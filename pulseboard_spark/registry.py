@@ -1048,16 +1048,14 @@ def _cvalid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """localCheckpointed identity components, memoized per session.  The
-    component map is the engine's materialized view (a real deployment
-    persists it and refreshes incrementally — SURVEY §4.2 item 3); every
-    CDP query shares one map.  Below ``MAX_LOCAL_CC_EDGES`` distinct id
-    sets, :func:`components_for` builds it from one collect of those sets
-    and a driver union-find; the checkpoint stores its one partition."""
-    return memo(
-        spark, sf_dir, "components",
-        lambda: components_for(_cvalid(spark, sf_dir)).localCheckpoint(),
-    )
+    """Identity components, memoized per session.  The component map is
+    the engine's materialized view (a real deployment persists it and
+    refreshes incrementally — SURVEY §4.2 item 3); every CDP query shares
+    one map.  :func:`components_for` returns it materialized: below
+    ``MAX_LOCAL_CC_EDGES`` distinct id sets as driver rows from one
+    collect of those sets and a driver union-find, above as a
+    localCheckpoint."""
+    return memo(spark, sf_dir, "components", lambda: components_for(_cvalid(spark, sf_dir)))
 
 
 def _evprof(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -89,7 +89,13 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs; idempotent and safe on a foreign session."""
+    """Apply runtime confs; idempotent and safe on a foreign session.
+
+    The shuffle width is set on the first call per session object only:
+    every table loader calls this, and a later call must not undo a width
+    set since (``pipeline.sized_session``'s per-query state-partition
+    count, a test's narrower state).  A ``newSession()`` clone is a new
+    object, so it gets the width on its own first call."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -97,7 +103,8 @@ def tune(spark: SparkSession) -> SparkSession:
             # Conf not settable at runtime in this build — proceed;
             # tables.load_events reads either ``ts`` encoding.
             pass
-    try:
+    if not getattr(spark, "_pulseboard_width_set", False):
+        spark._pulseboard_width_set = True
         # Scale-adaptive shuffle width: one reduce partition per task slot
         # (defaultParallelism = total cores in local mode AND on a cluster)
         # instead of a constant tuned for any one machine.  A foreign
@@ -112,8 +119,6 @@ def tune(spark: SparkSession) -> SparkSession:
             "spark.sql.shuffle.partitions",
             str(spark.sparkContext.defaultParallelism),
         )
-    except Exception:
-        pass
     _ship_package(spark)
     return spark
 

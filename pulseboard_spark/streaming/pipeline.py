@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pulseboard_spark.streaming.stateful import alert_rules_stateful
+
 ENTITY_EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.StringType()),
@@ -184,15 +186,15 @@ def entity_alert_stream(events: DataFrame) -> DataFrame:
     """§3.1 end-to-end streaming shape: admission (W2) → dedup (W1) →
     per-event stateful rule evaluation (W5) over any entity-event stream
     (Kafka, file, memory).  Returns the alert stream; attach a sink with
-    ``.writeStream`` (Kafka via :func:`kafka_alert_sink`)."""
-    from pulseboard_spark.streaming.stateful import alert_rules_stateful
-
+    ``.writeStream`` (Kafka via :func:`kafka_alert_sink`).  Event time is
+    set once, by the admission watermark: the dedup reads it and drops
+    rows behind it, the keyed rule operator downstream reads none."""
     # W1: duplicate event_ids dropped within the watermark's TTL
     # (`CdpEventProcessor.kt:181-187`; the reference's cache TTL)
     prepared = (
         with_admission(events).dropDuplicatesWithinWatermark(["event_id"]).drop("is_late")
     )
-    return alert_rules_stateful(prepared, set_watermark=False)
+    return alert_rules_stateful(prepared)
 
 
 class CdpIdentityStage:
@@ -255,14 +257,18 @@ class CdpIdentityStage:
         return self.spark.read.parquet(self.resolved_dir)
 
 
-#: Event-time watermark delay of the admission tier, so W1's dedup TTL,
-#: and of every keyed operator in ``stateful.py`` but reengage.
+#: Event-time watermark delay of the admission tier (W2's drop tier), so
+#: W1's dedup TTL.  ``with_admission`` is the one place that sets the
+#: entity stream's watermark; the keyed operators in ``stateful.py`` set
+#: none, and reengage's 10 s is its own timer latency.
 WATERMARK_DELAY = "120 seconds"
 
 
 def with_admission(events: DataFrame, observation=None) -> DataFrame:
-    """W2: late-event admission — the ``WATERMARK_DELAY`` watermark gives the drop tier; an
-    is_late tag (event older than 5 s against the micro-batch clock) feeds
+    """W2: late-event admission — the ``WATERMARK_DELAY`` watermark gives
+    the drop tier (rows behind it are dropped by the event-time operator
+    downstream, the dedup in :func:`entity_alert_stream`); an is_late tag
+    (event older than 5 s against the micro-batch clock) feeds
     the late-vs-ontime metrics the reference tracks
     (`CdpEventProcessor.kt:177-230`).
 

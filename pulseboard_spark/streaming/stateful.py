@@ -31,6 +31,15 @@ none calls ``state.remove()``: a key that goes idle keeps its last buffer
 after the watermark has passed it, and state grows with every key ever
 seen (ROADMAP direction 3 measured 50 idle keys still held, 0 rows
 removed).
+
+Event time is the stream's, not the operators': W2's drop tier is the one
+watermark ``pipeline.with_admission`` sets, and only an operator that
+reads event time drops rows behind it (``entity_alert_stream``'s dedup).
+The ``NoTimeout`` operators set no watermark and need no ``ts`` column; a
+late row that reaches one goes through its kernel's late-merge path (the
+rules buffer's merge sort, the per-batch sorts of the others).
+``reengage_stateful`` is the one ``EventTimeTimeout`` operator and keeps
+its own 10 s watermark: that delay is its timer latency.
 """
 
 from __future__ import annotations
@@ -46,7 +55,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from pulseboard_spark.operators.profiles import DAY_MS, MINUTE_MS
 from pulseboard_spark.operators.segments import REENGAGE_MS
-from pulseboard_spark.streaming.pipeline import WATERMARK_DELAY
 
 US = 1_000_000
 HORIZON_US = 3600 * US  # largest trailing window (avg_1h)
@@ -201,21 +209,15 @@ def _eval_rules(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> It
     )
 
 
-def alert_rules_stateful(entity_stream: DataFrame, set_watermark: bool = True) -> DataFrame:
+def alert_rules_stateful(entity_stream: DataFrame) -> DataFrame:
     """Streaming R1/R2/R4 alerts over an entity-event stream.
 
-    Input needs: entity_id, type, profile, ts_us, ts_ms, value, event_id,
-    plus the timestamp ``ts`` when ``set_watermark`` is on.  The
-    ``WATERMARK_DELAY`` watermark admits 120 s of lateness (W2's drop tier,
-    `cdp/runtime/CdpEventProcessor.kt:189-204`); it does not evict keys
-    (``NoTimeout``: an idle key keeps its pruned buffer, see the module
-    docstring).  Pass ``set_watermark=False`` when the stream already
-    carries one (Spark disallows redefining it).  Only the seven columns
-    the kernel reads reach the operator: PySpark converts each column of
-    each group to pandas on its own, so every extra column is a per-key
-    cost."""
-    if set_watermark:
-        entity_stream = entity_stream.withWatermark("ts", WATERMARK_DELAY)
+    Input needs: entity_id, type, profile, ts_us, ts_ms, value, event_id.
+    The operator sets no watermark and drops no row (``NoTimeout``: an idle
+    key keeps its pruned buffer, see the module docstring); a late row is
+    merged into its key's buffer.  Only the seven columns the kernel reads
+    reach the operator: PySpark converts each column of each group to
+    pandas on its own, so every extra column is a per-key cost."""
     return (
         entity_stream
         .select("entity_id", "type", "profile", "ts_us", "ts_ms", "value", "event_id")
@@ -316,10 +318,11 @@ def r3_stateful(entity_stream: DataFrame) -> DataFrame:
     """Streaming R3 geo/device-mismatch alerts, keyed by entity_id (R3 spans
     event types, so it cannot share alert_rules_stateful's (entity_id, type)
     grouping).  Input needs: entity_id, type, profile, ts_us, ts_ms,
-    event_id, geo, device and the timestamp ``ts`` (120 s watermark); only
-    the columns the kernel reads reach the operator."""
+    event_id, geo, device; only the columns the kernel reads reach the
+    operator.  No watermark: a late row is checked against the buffered
+    predecessors still within its window and then buffered itself."""
     return (
-        entity_stream.withWatermark("ts", WATERMARK_DELAY)
+        entity_stream
         .select("entity_id", "type", "profile", "ts_us", "ts_ms", "event_id", "geo", "device")
         .groupBy("entity_id")
         .applyInPandasWithState(
@@ -426,12 +429,14 @@ def profile_apply_stateful(resolved_stream: DataFrame) -> DataFrame:
     """Streaming profile materialization: the stateful twin of
     operators/profiles.build_profiles over canonical-id-tagged CDP events.
 
-    Input: profile_id, ts (timestamp), ts_us, ts_ms, event_id, ctype, name,
-    plan, country, nuser, nanon, nemail.  Output: changed profile snapshots
-    per micro-batch (append).  State is bounded: identifier sets are small
-    per profile, the counter holds ≤ 1441 minute buckets."""
+    Input: profile_id, ts_us, ts_ms, event_id, ctype, name, plan, country,
+    nuser, nanon, nemail.  Output: changed profile snapshots per
+    micro-batch (append).  State is bounded: identifier sets are small per
+    profile, the counter holds ≤ 1441 minute buckets.  No watermark: a late
+    row is applied like any other (LWW keys and lastSeen max ignore arrival
+    order)."""
     return (
-        resolved_stream.withWatermark("ts", WATERMARK_DELAY)
+        resolved_stream
         .groupBy("profile_id")
         .applyInPandasWithState(
             _apply_profiles,
@@ -519,10 +524,11 @@ def _diff_segments(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) ->
 
 def segment_diff_stateful(snapshot_stream: DataFrame) -> DataFrame:
     """G4 as a keyed-state stream: input rows are membership snapshots
-    (profile_id, segments array<string>, ts, ts_ms); output is the
-    ENTER/EXIT change stream."""
+    (profile_id, segments array<string>, ts_ms); output is the ENTER/EXIT
+    change stream.  No watermark: a late snapshot is diffed against the
+    key's last one like any other."""
     return (
-        snapshot_stream.withWatermark("ts", WATERMARK_DELAY)
+        snapshot_stream
         .groupBy("profile_id")
         .applyInPandasWithState(
             _diff_segments,

@@ -135,7 +135,7 @@ def test_ewma_scan_clustered_matches(spark, sf_dir):
     from pulseboard_spark.operators.ewma import ewma_scan
     from pulseboard_spark.registry import entity_events
 
-    ev = entity_events(spark, sf_dir)  # first: a build calls tune(), which resets the width
+    ev = entity_events(spark, sf_dir)
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     spark.conf.set(key, "64")  # a few thousand rows over 64 partitions
@@ -2156,7 +2156,7 @@ def test_connected_components_null_endpoints(spark, cc_route):
 def test_local_components_take_fixed_jobs(spark, sf_dir, monkeypatch):
     """The identity map's local route collects the distinct id sets once
     and labels them on the driver: with ``cvalid`` cached, at most 3 jobs
-    for the sf-dir identity graph, counting the read-back into storage (7
+    for the sf-dir identity graph, counting a first read of the map (7
     when the route went through ``connected_components``' stored node ids,
     semi-joined edge probe and broadcast labelling join), one partition,
     and the labels of the distributed route."""
@@ -2171,7 +2171,8 @@ def test_local_components_take_fixed_jobs(spark, sf_dir, monkeypatch):
     group = f"local-cc:{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
-        local = identity.components_for(cvalid).localCheckpoint()
+        local = identity.components_for(cvalid)
+        got = {tuple(r) for r in local.collect()}
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -2181,7 +2182,7 @@ def test_local_components_take_fixed_jobs(spark, sf_dir, monkeypatch):
     cvalid.unpersist()
     assert jobs <= 3, jobs
     assert local.rdd.getNumPartitions() == 1
-    assert {tuple(r) for r in local.collect()} == want and want
+    assert got == want and want
 
 
 def _components_route(monkeypatch, cvalid, cap):

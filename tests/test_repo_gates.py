@@ -2,8 +2,9 @@
 definition in the package has a reader outside the tests, every
 defaulted option of a package function has a caller outside the tests,
 every environment read of the package is a listed deployment setting,
-no allow-list carries a stale entry, and the hand-off consistency check
-(registry ↔ oracle ↔ QUERIES.md) passes."""
+every stream watermark is set at a listed site, no allow-list carries a
+stale entry, and the hand-off consistency check (registry ↔ oracle ↔
+QUERIES.md) passes."""
 
 from __future__ import annotations
 
@@ -93,6 +94,14 @@ ENV_ALLOWED = {
     "SPARK_GRAFT_CPUS": "local[N] width of get_spark's session: the host's core budget",
     "PB_DRIVER_MEM": "spark.driver.memory of get_spark's session: the host's memory budget",
     "PYTHONPATH": "read to prepend the repo root for Spark's Python worker daemon",
+}
+
+#: The package functions that may call ``.withWatermark(``, each with why.
+#: A stream's event time is declared once, upstream of its stateful
+#: operators; only an operator that reads event time drops rows behind it.
+WATERMARK_SITES = {
+    "with_admission": "W2 admission: the entity stream's one watermark, W1 dedup's TTL",
+    "reengage_stateful": "the EventTimeTimeout operator: its 10 s delay is the timer latency",
 }
 
 
@@ -257,6 +266,37 @@ def test_environment_allow_list_is_current():
     """An entry the package no longer reads is stale."""
     read = {key for _where, key in environment_reads()}
     assert sorted(set(ENV_ALLOWED) - read) == []
+
+
+def watermark_sites() -> list[str]:
+    """``path::function`` of every ``.withWatermark(`` call in the package,
+    named by the top-level function that holds it (``<module>`` for a
+    call outside one, a class body included)."""
+    out = []
+    for path, tree in _trees([PACKAGE]).items():
+        for top in tree.body:
+            name = top.name if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)) else "<module>"
+            out.extend(
+                f"{path.relative_to(ROOT)}::{name}"
+                for node in ast.walk(top)
+                if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "withWatermark"
+            )
+    return sorted(out)
+
+
+def test_every_watermark_is_set_at_a_listed_site():
+    """A watermark on a keyed operator that reads no event time drops
+    nothing and duplicates the admission policy: every call sits in a
+    function on ``WATERMARK_SITES``, with a reason."""
+    assert [s for s in watermark_sites() if s.rsplit("::", 1)[1] not in WATERMARK_SITES] == []
+    assert all(WATERMARK_SITES.values())
+
+
+def test_watermark_site_list_is_current():
+    """An entry whose function no longer sets a watermark is stale."""
+    sites = {s.rsplit("::", 1)[1] for s in watermark_sites()}
+    assert sorted(set(WATERMARK_SITES) - sites) == []
 
 
 def test_consistency_gate_passes(monkeypatch, tmp_path, capsys):

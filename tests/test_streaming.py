@@ -97,9 +97,7 @@ def test_segment_diff_stateful(spark, tmp_path):
         ("p2", [], 1_500),
         ("p2", ["reengage"], 2_500),
     ]
-    df = spark.createDataFrame(
-        [(p, s, t, t) for p, s, t in rows], "profile_id string, segments array<string>, ts_ms bigint, t long"
-    ).withColumn("ts", F.timestamp_millis(F.col("t"))).drop("t")
+    df = spark.createDataFrame(rows, "profile_id string, segments array<string>, ts_ms bigint")
     path = str(tmp_path / "snapshots")
     df.coalesce(1).write.parquet(path)
     stream = spark.readStream.schema(df.schema).parquet(path)
@@ -137,8 +135,8 @@ def test_profile_apply_stateful_matches_batch(spark, sf_dir, tmp_path, small_sta
     from pulseboard_spark.streaming.stateful import profile_apply_stateful
 
     ev = _evprof(spark, sf_dir).select(
-        "profile_id", F.timestamp_micros(F.col("ts_us")).alias("ts"), "ts_us", "ts_ms",
-        "event_id", "ctype", "name", "plan", "country", "nuser", "nanon", "nemail",
+        "profile_id", "ts_us", "ts_ms", "event_id", "ctype", "name", "plan", "country",
+        "nuser", "nanon", "nemail",
     ).orderBy("ts_us", "event_id")
     rows = ev.collect()
     out = str(tmp_path / "cdp_stream")
@@ -492,6 +490,52 @@ def test_admission_observed_metrics(spark):
     assert got["n_late"] == 3
 
 
+def test_admission_watermark_drop_tier(spark, tmp_path, small_state):
+    """W2's drop tier on the stream that ships: the first file sets the
+    admission watermark, then a file holding one row of a new entity
+    10,000 s behind it arrives.  The dedup, the one event-time operator,
+    drops the row; the keyed rule operator drops nothing and never sees
+    it, so no alert and no state row exists for that entity."""
+    import datetime as dt
+    import json
+    import os
+
+    from pulseboard_spark.sources.generator import rule_firing_events
+    from pulseboard_spark.streaming.pipeline import entity_alert_stream
+
+    schema = rule_firing_events(spark).schema
+    t0 = 1_704_070_800  # 2024-01-01 01:00:00 UTC
+
+    def rows(*events):
+        return spark.createDataFrame([
+            (eid, dt.datetime.fromtimestamp(sec, dt.timezone.utc).replace(tzinfo=None), sec * 10**6,
+             sec * 1000, entity, "IGAMING", "BET_PLACED", 1.0, "US", "desktop")
+            for eid, sec, entity in events
+        ], schema).coalesce(1)
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    rows((1, t0, "on-time"), (2, t0 + 1, "on-time")).write.parquet(f"{src}/f=0")
+    rows((3, t0 - 10_000, "late")).write.parquet(str(tmp_path / "staged"))
+    q = (
+        entity_alert_stream(spark.readStream.schema(schema).parquet(f"{src}/f=*"))
+        .writeStream.format("memory").queryName("drop_tier_alerts").outputMode("append")
+        .option("checkpointLocation", ckpt).start()
+    )
+    try:
+        q.processAllAvailable()  # the first file, then the batch that moves the watermark
+        os.rename(tmp_path / "staged", f"{src}/f=1")
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    late = [json.loads(p.json) for p in q.recentProgress if p.numInputRows == 1]
+    assert len(late) == 1
+    dropped = {o["operatorName"]: o["numRowsDroppedByWatermark"] for o in late[0]["stateOperators"]}
+    assert dropped == {"dedupeWithinWatermark": 1, "applyInPandasWithState": 0}
+    assert spark.sql("SELECT * FROM drop_tier_alerts WHERE entity_id = 'late'").count() == 0
+    keyed = spark.read.format("statestore").option("operatorId", 0).load(ckpt)
+    assert {r.key.entity_id for r in keyed.collect()} == {"on-time"}
+
+
 def test_scheduler_pool_sets_and_restores_property(spark, tmp_path):
     """scheduler_pool pins spark.scheduler.pool around start() and
     restores the previous value (nesting-safe); under the default FIFO
@@ -524,6 +568,23 @@ def test_scheduler_pool_sets_and_restores_property(spark, tmp_path):
     assert sc.getLocalProperty("spark.scheduler.pool") is None
     got = {r["id"]: r["count"] for r in spark.sql("SELECT * FROM pool_counts_q").collect()}
     assert got == {0: 10, 1: 10, 2: 10}
+
+
+def test_tune_sets_the_shuffle_width_once_per_session(spark, sf_dir):
+    """A table loader calls ``tune``; it must not undo ``sized_session``'s
+    per-query width, while a fresh ``newSession()`` clone still gets the
+    scale-adaptive width on its first ``tune``."""
+    from pulseboard_spark.session import tune
+    from pulseboard_spark.streaming.pipeline import sized_session
+
+    key = "spark.sql.shuffle.partitions"
+    sized = sized_session(spark, 2)
+    entity_events(sized, sf_dir)
+    assert sized.conf.get(key) == "2"
+    clone = spark.newSession()
+    clone.conf.set(key, "5")
+    tune(clone)
+    assert clone.conf.get(key) == str(spark.sparkContext.defaultParallelism) != "5"
 
 
 def test_sized_session_binds_state_partitions(spark, tmp_path):

@@ -58,8 +58,8 @@ def _write_sources(spark, work: str):
     out["alerts"] = (f"{work}/entity", ev.schema, ev.count())
 
     prof = _evprof(spark, SF_DIR).select(
-        "profile_id", F.timestamp_micros(F.col("ts_us")).alias("ts"), "ts_us", "ts_ms",
-        "event_id", "ctype", "name", "plan", "country", "nuser", "nanon", "nemail",
+        "profile_id", "ts_us", "ts_ms", "event_id", "ctype", "name", "plan", "country",
+        "nuser", "nanon", "nemail",
     )
     prof.write.parquet(f"{work}/cdp")
     out["profiles"] = (f"{work}/cdp", prof.schema, prof.count())
@@ -76,9 +76,7 @@ def _write_sources(spark, work: str):
         m = with_segments_array(
             segment_membership(e.filter(F.col("ts_ms") <= as_of), F.lit(as_of).cast("long"))
         ).select(
-            "profile_id", "segments",
-            F.lit(as_of).cast("long").alias("ts_ms"),
-            F.timestamp_millis(F.lit(as_of).cast("long")).alias("ts"),
+            "profile_id", "segments", F.lit(as_of).cast("long").alias("ts_ms"),
         )
         m.coalesce(1).write.parquet(f"{work}/snaps/chunk={i}")
         snaps.append(m)
