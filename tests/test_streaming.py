@@ -34,23 +34,41 @@ def small_state(spark):
     spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def _write_chunks(df, out: str, n: int) -> None:
+    """Write ``df`` in arrival order as ``n`` equal parquet files
+    ``out/chunk=i``.  (ts_us, event_id) is the engine's arrival order —
+    ordering by ts_us alone is unstable across same-ts peers, and a
+    reversed-peer chunk split would let the kernel see a "later" arrival
+    batch excludes."""
+    rows = df.orderBy("ts_us", "event_id").collect()
+    size = (len(rows) + n - 1) // n
+    for i in range(n):
+        if part := rows[i * size : (i + 1) * size]:
+            df.sparkSession.createDataFrame(part, df.schema).coalesce(1).write.parquet(f"{out}/chunk={i}")
+
+
+def _replay(spark, out: str, schema):
+    """The chunks under ``out`` as a stream, one file per micro-batch."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(f"{out}/chunk=*")
+
+
+def _drain(stream, name: str):
+    """Run ``stream`` into the memory sink ``name`` until its input is
+    drained; return the sink as a table."""
+    q = stream.writeStream.format("memory").queryName(name).outputMode("append").start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return stream.sparkSession.table(name)
+
+
 @pytest.fixture(scope="module")
 def entity_chunks_dir(spark, sf_dir, tmp_path_factory):
     """Entity view split into 4 time-ordered parquet chunks."""
     out = str(tmp_path_factory.mktemp("entity_stream"))
-    # (ts_us, event_id) is the engine's arrival order — ordering by ts_us
-    # alone is unstable across same-ts peers, and a reversed-peer chunk
-    # split would let the kernel see a "later" arrival batch excludes
-    df = entity_events(spark, sf_dir).orderBy("ts_us", "event_id")
-    n = df.count()
-    chunk = (n + 3) // 4
-    rows = df.collect()
-    for i in range(4):
-        part = rows[i * chunk : (i + 1) * chunk]
-        if part:
-            spark.createDataFrame(part, df.schema).coalesce(1).write.mode("overwrite").parquet(
-                f"{out}/chunk={i}"
-            )
+    df = entity_events(spark, sf_dir)
+    _write_chunks(df, out, 4)
     return out, df.schema
 
 
@@ -59,27 +77,8 @@ def test_streaming_alerts_match_batch(spark, sf_dir, entity_chunks_dir, small_st
     driver data never trips R1/R2/R4 (every alert is R3), so both sides
     are empty.  The non-vacuous positive-path twin equality runs on the
     engineered firing fixture in tests/test_rule_firing.py."""
-    out, schema = entity_chunks_dir
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{out}/chunk=*")
-    )
-    alerts = alert_rules_stateful(stream)
-    q = (
-        alerts.writeStream.format("memory")
-        .queryName("stream_alerts")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        tuple(r)
-        for r in spark.sql("SELECT rule, entity_id, ts_ms, severity, event_id FROM stream_alerts").collect()
-    }
+    alerts = _drain(alert_rules_stateful(_replay(spark, *entity_chunks_dir)), "stream_alerts")
+    got = {tuple(r) for r in alerts.select("rule", "entity_id", "ts_ms", "severity", "event_id").collect()}
 
     batch = rules.alerts(entity_events(spark, sf_dir)).filter(F.col("rule") != "R3_GEO_DEVICE_MISMATCH")
     want = {tuple(r) for r in batch.collect()}
@@ -100,22 +99,8 @@ def test_segment_diff_stateful(spark, tmp_path):
     df = spark.createDataFrame(rows, "profile_id string, segments array<string>, ts_ms bigint")
     path = str(tmp_path / "snapshots")
     df.coalesce(1).write.parquet(path)
-    stream = spark.readStream.schema(df.schema).parquet(path)
-    q = (
-        segment_diff_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("seg_events")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r.profile_id, r.segment, r.action, r.ts_ms)
-        for r in spark.sql("SELECT * FROM seg_events").collect()
-    }
+    seg = _drain(segment_diff_stateful(spark.readStream.schema(df.schema).parquet(path)), "seg_events")
+    got = {(r.profile_id, r.segment, r.action, r.ts_ms) for r in seg.collect()}
     want = {
         ("p1", "pro_plan", "ENTER", 1_000),
         ("p1", "power_user", "ENTER", 2_000),
@@ -137,29 +122,10 @@ def test_profile_apply_stateful_matches_batch(spark, sf_dir, tmp_path, small_sta
     ev = _evprof(spark, sf_dir).select(
         "profile_id", "ts_us", "ts_ms", "event_id", "ctype", "name", "plan", "country",
         "nuser", "nanon", "nemail",
-    ).orderBy("ts_us", "event_id")
-    rows = ev.collect()
-    out = str(tmp_path / "cdp_stream")
-    chunk = (len(rows) + 2) // 3
-    for i in range(3):
-        part = rows[i * chunk : (i + 1) * chunk]
-        if part:
-            spark.createDataFrame(part, ev.schema).coalesce(1).write.parquet(f"{out}/chunk={i}")
-
-    stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1").parquet(f"{out}/chunk=*")
-    q = (
-        profile_apply_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("profile_snaps")
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    snaps = spark.sql("SELECT * FROM profile_snaps").collect()
+    out = str(tmp_path / "cdp_stream")
+    _write_chunks(ev, out, 3)
+    snaps = _drain(profile_apply_stateful(_replay(spark, out, ev.schema)), "profile_snaps").collect()
     assert snaps, "no snapshots emitted"
     last = {}
     for r in snaps:  # memory sink appends in batch order; later batch wins
@@ -214,22 +180,10 @@ def test_reengage_event_time_timer(spark, tmp_path, small_state):
             .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
         )
         df.coalesce(1).write.parquet(f"{out}/chunk={i}")
-    full_schema = spark.read.parquet(f"{out}/chunk=0").schema
-    stream = spark.readStream.schema(full_schema).option("maxFilesPerTrigger", "1").parquet(f"{out}/chunk=*")
-    q = (
-        reengage_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("reengage_events")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    stream = _replay(spark, out, spark.read.parquet(f"{out}/chunk=0").schema)
     got = {
         (r.profile_id, r.segment, r.action, r.ts_ms)
-        for r in spark.sql("SELECT * FROM reengage_events").collect()
+        for r in _drain(reengage_stateful(stream), "reengage_events").collect()
     }
     want = {
         ("p1", "reengage", "ENTER", 60 * S + 600_000 + 1),
@@ -247,19 +201,12 @@ def test_incremental_identity_stage(spark, sf_dir, tmp_path, small_state):
     from pulseboard_spark.operators.identity import components_for, valid_cdp_events
     from pulseboard_spark.streaming.pipeline import CdpIdentityStage
 
-    raw = cdp_events(spark, sf_dir).orderBy("ts_us", "event_id")
-    rows = raw.collect()
+    raw = cdp_events(spark, sf_dir)
     out = str(tmp_path / "cdp_raw")
-    chunk = (len(rows) + 2) // 3
-    for i in range(3):
-        part = rows[i * chunk : (i + 1) * chunk]
-        if part:
-            spark.createDataFrame(part, raw.schema).coalesce(1).write.parquet(f"{out}/chunk={i}")
-
-    stream = spark.readStream.schema(raw.schema).option("maxFilesPerTrigger", "1").parquet(f"{out}/chunk=*")
+    _write_chunks(raw, out, 3)
     stage = CdpIdentityStage(spark, str(tmp_path / "idstate"))
     q = (
-        stream.writeStream.foreachBatch(stage.process_batch)
+        _replay(spark, out, raw.schema).writeStream.foreachBatch(stage.process_batch)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
@@ -330,26 +277,8 @@ def test_entity_alert_stream_facade(spark, firing_chunks_dir, small_state):
     from pulseboard_spark.streaming.pipeline import entity_alert_stream
 
     out, schema, want = firing_chunks_dir
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{out}/chunk=*")
-    )
-    q = (
-        entity_alert_stream(stream)
-        .writeStream.format("memory")
-        .queryName("facade_alerts")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        tuple(r)
-        for r in spark.sql("SELECT rule, entity_id, ts_ms, severity, event_id FROM facade_alerts").collect()
-    }
+    alerts = _drain(entity_alert_stream(_replay(spark, out, schema)), "facade_alerts")
+    got = {tuple(r) for r in alerts.select("rule", "entity_id", "ts_ms", "severity", "event_id").collect()}
     assert got == want and got, f"empty or diverged: got={sorted(got)[:5]}"
 
 
@@ -433,24 +362,7 @@ def test_r3_stateful_matches_batch(spark, sf_dir, entity_chunks_dir):
     exactly the batch r3_geo_device_eval rows on an in-order replay."""
     from pulseboard_spark.streaming.stateful import r3_stateful
 
-    out, schema = entity_chunks_dir
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{out}/chunk=*")
-    )
-    q = (
-        r3_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("stream_r3")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {tuple(r) for r in spark.sql("SELECT * FROM stream_r3").collect()}
+    got = {tuple(r) for r in _drain(r3_stateful(_replay(spark, *entity_chunks_dir)), "stream_r3").collect()}
     want = {
         tuple(r)
         for r in rules.r3_geo_device_eval(entity_events(spark, sf_dir))
@@ -570,29 +482,13 @@ def test_scheduler_pool_sets_and_restores_property(spark, tmp_path):
     assert got == {0: 10, 1: 10, 2: 10}
 
 
-def test_tune_sets_the_shuffle_width_once_per_session(spark, sf_dir):
-    """A table loader calls ``tune``; it must not undo ``sized_session``'s
-    per-query width, while a fresh ``newSession()`` clone still gets the
-    scale-adaptive width on its first ``tune``."""
-    from pulseboard_spark.session import tune
-    from pulseboard_spark.streaming.pipeline import sized_session
-
-    key = "spark.sql.shuffle.partitions"
-    sized = sized_session(spark, 2)
-    entity_events(sized, sf_dir)
-    assert sized.conf.get(key) == "2"
-    clone = spark.newSession()
-    clone.conf.set(key, "5")
-    tune(clone)
-    assert clone.conf.get(key) == str(spark.sparkContext.defaultParallelism) != "5"
-
-
-def test_sized_session_binds_state_partitions(spark, tmp_path):
+def test_sized_session_binds_state_partitions(spark, sf_dir, tmp_path):
     """sized_session pins a PER-QUERY state-store partition count (the
     measured latency dial, SCALE.md): two stateful queries started from
     differently-sized clones bind 3- and 8-partition state stores — the
     checkpoint's state/0/ layout is the ground truth Spark itself replays
-    from — while the parent session's conf stays untouched and a
+    from — even after a table loader ran on the clone (loaders call
+    ``tune``), while the parent session's conf stays untouched and a
     concurrent query on the parent still binds the parent's count."""
     import json
 
@@ -624,7 +520,9 @@ def test_sized_session_binds_state_partitions(spark, tmp_path):
             if p.is_dir() and p.name.isdigit()
         )
 
-    assert run(sized_session(spark, 3), 3, "s3") == 3
+    sized = sized_session(spark, 3)
+    entity_events(sized, sf_dir)
+    assert run(sized, 3, "s3") == 3
     assert run(sized_session(spark, 8), 8, "s8") == 8
     assert spark.conf.get("spark.sql.shuffle.partitions") == parent_before
     assert run(spark, None, "parent") == int(parent_before)
